@@ -307,7 +307,7 @@ def main() -> None:
         release_staged()
 
     # --- extraction headline (north rule): synthetic corpus incl.
-    # mega-docs, materialized first so the two-branch pipeline scans
+    # mega-docs, materialized first so the pipeline scans
     # parquet (the real deployment shape)
     corpus_path = f"/tmp/bench_docs_{N_DOCS}.parquet"
     t0 = time.time()

@@ -31,6 +31,53 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def open_oracle(sf: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per input table of ``sf``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    return con
+
+
+def check_query(spark, con, sf: str, name: str, query, sql: str | None) -> tuple[bool, str]:
+    """Run one gate on Spark and, when it has oracle ``sql``, on DuckDB;
+    compare exactly. Returns (ok, report lines)."""
+    from stirling_pdf_spark.runtime.staging import release_staged
+
+    t0 = time.time()
+    try:
+        sdf = query(spark, sf).toPandas()
+        release_staged()
+    except Exception as exc:
+        return False, f"FAIL {name}: spark error: {exc}"
+    warn = f"\nWARN {name}: 0 rows" if len(sdf) == 0 else ""
+    if sql is None:
+        return True, (f"ok   {name}: rows-only, {len(sdf)} rows "
+                      f"({time.time() - t0:.1f}s)" + warn)
+    try:
+        odf = con.execute(sql).df()
+    except Exception as exc:
+        return False, f"FAIL {name}: duckdb error: {exc}"
+    if set(sdf.columns) != set(odf.columns):
+        return False, (f"FAIL {name}: columns {sorted(sdf.columns)} vs "
+                       f"{sorted(odf.columns)}")
+    if len(sdf) != len(odf):
+        return False, f"FAIL {name}: rows {len(sdf)} vs {len(odf)}"
+    a, b = normalize(sdf), normalize(odf)
+    # dtype report (schema gate is strict-ish in the driver)
+    dt_mismatch = [
+        f"{c}: {a[c].dtype} vs {b[c].dtype}"
+        for c in a.columns if str(a[c].dtype) != str(b[c].dtype)
+    ]
+    try:
+        pd.testing.assert_frame_equal(a, b, check_dtype=False,
+                                      check_exact=True)
+    except AssertionError as exc:
+        return False, f"FAIL {name}: values differ: {str(exc)[:500]}"
+    note = f" [dtypes: {'; '.join(dt_mismatch)}]" if dt_mismatch else ""
+    return True, f"ok   {name}: {len(sdf)} rows ({time.time() - t0:.1f}s){note}" + warn
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -41,65 +88,17 @@ def main() -> int:
     from stirling_pdf_spark.session import get_spark
 
     spark = get_spark("check_queries", cores=8, shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'"
-        )
-
-    from stirling_pdf_spark.runtime.staging import release_staged
-
+    con = open_oracle(args.sf)
     qs = E.queries()
     sqls = E.oracle_sql()
     names = args.names or list(qs)
     failed = []
     for name in names:
-        t0 = time.time()
-        try:
-            sdf = qs[name](spark, args.sf).toPandas()
-            release_staged()
-        except Exception as exc:
-            print(f"FAIL {name}: spark error: {exc}")
+        ok, report = check_query(spark, con, args.sf, name, qs[name],
+                                 sqls.get(name))
+        print(report)
+        if not ok:
             failed.append(name)
-            continue
-        if name not in sqls:
-            print(f"ok   {name}: rows-only, {len(sdf)} rows "
-                  f"({time.time() - t0:.1f}s)")
-            if len(sdf) == 0:
-                print(f"WARN {name}: 0 rows")
-            continue
-        try:
-            odf = con.execute(sqls[name]).df()
-        except Exception as exc:
-            print(f"FAIL {name}: duckdb error: {exc}")
-            failed.append(name)
-            continue
-        if set(sdf.columns) != set(odf.columns):
-            print(f"FAIL {name}: columns {sorted(sdf.columns)} vs "
-                  f"{sorted(odf.columns)}")
-            failed.append(name)
-            continue
-        if len(sdf) != len(odf):
-            print(f"FAIL {name}: rows {len(sdf)} vs {len(odf)}")
-            failed.append(name)
-            continue
-        a, b = normalize(sdf), normalize(odf)
-        # dtype report (schema gate is strict-ish in the driver)
-        dt_mismatch = [
-            f"{c}: {a[c].dtype} vs {b[c].dtype}"
-            for c in a.columns if str(a[c].dtype) != str(b[c].dtype)
-        ]
-        try:
-            pd.testing.assert_frame_equal(a, b, check_dtype=False,
-                                          check_exact=True)
-        except AssertionError as exc:
-            print(f"FAIL {name}: values differ: {str(exc)[:500]}")
-            failed.append(name)
-            continue
-        note = f" [dtypes: {'; '.join(dt_mismatch)}]" if dt_mismatch else ""
-        print(f"ok   {name}: {len(sdf)} rows ({time.time() - t0:.1f}s){note}")
-        if len(sdf) == 0:
-            print(f"WARN {name}: 0 rows")
     if failed:
         print(f"\n{len(failed)} FAILED: {failed}")
         return 1

@@ -1,11 +1,10 @@
 """Pure-Python extraction kernel (UDF body == test oracle)."""
 
-from .extract import extract_doc, extract_doc_tuples
+from .extract import extract_doc
 from .model import MediaDraw, RawSpan, Span, TextRun
 
 __all__ = [
     "extract_doc",
-    "extract_doc_tuples",
     "MediaDraw",
     "RawSpan",
     "Span",

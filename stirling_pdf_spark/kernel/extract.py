@@ -155,6 +155,27 @@ def extract_doc(raw_spans, chunk_budget: int | None = MAX_CHUNKS_PER_DOC) -> lis
     return out
 
 
-def extract_doc_tuples(raw_spans) -> list[tuple[str, str, str, int]]:
-    """Same as extract_doc but returns plain tuples (Arrow-friendly)."""
-    return [tuple(s) for s in extract_doc(raw_spans)]
+# Reading-order segments: the one rule for splitting a document so that
+# extract_doc over the whole equals the concatenation, in ascending
+# segment order, of extract_doc(chunk_budget=None) over each segment's
+# raw spans, with the text-chunk budget then applied across the whole
+# (the salted mega-doc path, operators/extract_pipeline.py). It follows
+# the output order above: metadata; AcroForm fields, which open segment
+# 0; page-scoped kinds by wire page // pages_per_bucket (a kind's page
+# is the first "|" field of its text); html blocks; bookmarks;
+# attachments. Any other kind falls in segment 0.
+PAGE_KINDS = ("text", "media", "rule", "pagemeta", "annotation")
+FIXED_SEGMENTS = {
+    "meta": -1,
+    "html": (1 << 30) - 1,
+    "htmlbody": (1 << 30) - 1,
+    "bookmark": 1 << 30,
+    "attachment": (1 << 30) + 1,
+}
+
+
+def segment_of(kind: str, text: str, pages_per_bucket: int) -> int:
+    """Reading-order segment of one raw span (see PAGE_KINDS)."""
+    if kind in PAGE_KINDS:
+        return int(text.split("|", 1)[0]) // pages_per_bucket
+    return FIXED_SEGMENTS.get(kind, 0)

@@ -1,58 +1,45 @@
 """The distributed extraction pipeline (the north-rule job).
 
-Shape (SURVEY.md §3.1 "Spark equivalent"):
+Shape (SURVEY.md §3.1 "Spark equivalent"), one plan every doc takes:
 
-    read docs -> repartition(hash(doc_id))
-              -> mapInArrow(route):                       ONE source scan
-                   small doc -> extracted spans (final)
-                   mega doc  -> raw page-range bucket rows (salt)
-              -> persist (spill-safe staging of the routed stage)
-              -> [final] project                           (no more work)
-                 [mega]   repartition(doc_id, bucket)
-                          -> mapInArrow(kernel, unbudgeted)
-                          -> groupBy(doc_id) applyInPandas(reassemble+budget)
-    -> unionByName -> write spans_out + metrics + lineage
+    read docs -> key (doc_id, bucket):               ONE source scan
+                   doc <= salt_threshold spans -> one row, bucket 0
+                   larger doc -> one row per reading-order segment
+              -> repartition(doc_id, bucket)
+              -> mapInArrow(_extract_sub: kernel per row; unsalted rows
+                            budgeted, segment rows unbudgeted)
+              -> groupBy(doc_id) applyInArrow(_finish_doc: an unsalted doc
+                   passes through; a salted doc's segments concatenate
+                   in order, the 2000-chunk budget re-applied and order
+                   renumbered, in _reassemble)
+    -> write spans_out + metrics + lineage
 
 Why salting: one 1500-page PDF in a hash-partitioned batch of 1-page
 docs is exactly the skew the reference never faces (one doc == one HTTP
 request there; SURVEY.md §4 "Skew handling"). At 100 TB a single
 straggler partition dominates the stage, so mega-docs are split into
-page-range sub-documents (salt = page bucket), extracted independently
+page-range sub-documents (salt = segment), extracted independently
 (page-local semantics: line clustering and column layout never cross
 pages), and reassembled with the global 2000-text-chunk budget
-re-applied — bit-identical to the unsalted kernel output.
+re-applied — bit-identical to the unsalted kernel output. The segment
+rule has one owner, ``kernel.extract.segment_of``; the keying below is
+built from its declaration and computes each span's segment once.
 
-All per-document work happens inside mapInArrow stages with columnar
-span decode/encode (no per-row Spark Python UDFs); the only shuffles
-are the repartition by doc_id and the (mega-doc-only) bucket shuffle +
-regroup, both on keys that are unique or salted — no hot keys by
-construction.
-
-Why the staging persist is CONDITIONAL: the routed stage feeds two
-branches (final docs and mega-doc buckets). Without a persist Catalyst
-computes each branch as its own subtree — twice the source scan and
-twice the kernel work, which is disastrous when the input is an
-expensive derivation (corpus synthesis, a join). But when the input is
-a plain Parquet/Iceberg scan, two pruned scans are CHEAPER than writing
-the whole routed output through the memory store (measured: the
-unconditional persist cost ~40% wall at local[8] on a
-memory-bandwidth-bound box). So ``stage=None`` auto-detects: inputs
-whose plan contains a Python stage (mapInPandas/mapInArrow/UDF) are
-staged once (persist MEMORY_AND_DISK — spills instead of OOMing, and
-the ContextCleaner drops the cache when the DataFrame is collected);
-plain scans take the two-branch filter shape where each branch reads
-the source directly.
+All per-document work happens inside Arrow stages with columnar span
+decode/encode (no per-row Spark Python UDFs); the shuffles are the
+repartition by (doc_id, bucket) and the regroup by doc_id, both on keys
+that are unique or salted — no hot keys by construction.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel.extract import extract_doc
+from ..kernel.extract import FIXED_SEGMENTS, PAGE_KINDS, extract_doc
 from ..kernel.model import MAX_CHUNKS_PER_DOC
 
 OUT_SPAN_STRUCT = T.StructType([
@@ -68,28 +55,18 @@ SPANS_OUT_SCHEMA = T.StructType([
 _SUB_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("bucket", T.LongType(), False),
+    T.StructField("salted", T.BooleanType(), False),
     T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT), False),
-])
-# routed stage: final docs carry extracted spans; mega-doc bucket rows
-# carry RAW spans (the struct's 4th field then holds the raw offset)
-_ROUTED_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("bucket", T.LongType(), False),
-    T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT), False),
-    T.StructField("final", T.BooleanType(), False),
 ])
 
 # spans-per-doc threshold above which a doc takes the salted path; a
 # mega-doc per FIXTURES.md has >= 3000 raw spans, normal docs < 1200
 DEFAULT_SALT_THRESHOLD = 4000
 PAGES_PER_BUCKET = 100
-_HTML_BUCKET = (1 << 30) - 1   # html blocks read after all pages
-_BOOKMARK_BUCKET = 1 << 30     # bookmark tree after html (kernel contract)
-_ATTACH_BUCKET = (1 << 30) + 1  # attachments read last (kernel contract)
 
 
-def _decode_span_lists(col: "pa.Array", off_field: str = "offset") -> list[list[tuple]]:
-    """Columnar decode of array<struct<kind,text,media_ref,{off_field}>>:
+def _decode_span_lists(col: "pa.Array") -> list[list[tuple]]:
+    """Columnar decode of array<struct<kind,text,media_ref,offset>>:
     four flat to_pylist() calls (C speed) + one zip, instead of a dict
     per span — the dominant cost of the UDF boundary at scale."""
     lst = col.combine_chunks() if hasattr(col, "combine_chunks") else col
@@ -98,7 +75,7 @@ def _decode_span_lists(col: "pa.Array", off_field: str = "offset") -> list[list[
         vals.field("kind").to_pylist(),
         vals.field("text").to_pylist(),
         vals.field("media_ref").to_pylist(),
-        vals.field(off_field).to_pylist(),
+        vals.field("offset").to_pylist(),
     ))
     offs = lst.offsets.to_pylist()
     return [flat[offs[i]:offs[i + 1]] for i in range(len(offs) - 1)]
@@ -119,126 +96,86 @@ def _encode_span_lists(span_lists: list[list[tuple]]) -> "pa.ListArray":
     return pa.ListArray.from_arrays(pa.array(offs, pa.int32()), struct)
 
 
-def _bucket_of(kind: str, text: str, pages_per_bucket: int) -> int:
-    """Salt bucket of one raw span — the Python mirror of the routing
-    the kernel's reading order implies (meta first, pages ascending,
-    html -> bookmarks -> attachments last)."""
-    if kind == "meta":
-        return -1
-    if kind == "attachment":
-        return _ATTACH_BUCKET
-    if kind == "bookmark":
-        return _BOOKMARK_BUCKET
-    if kind == "html":
-        return _HTML_BUCKET
-    if kind in ("text", "media", "rule", "pagemeta"):
-        return int(text.split("|", 1)[0]) // pages_per_bucket
-    return 0
+def _segment(span: Column, pages_per_bucket: int) -> Column:
+    """``kernel.extract.segment_of`` as a Spark expression."""
+    kind = span["kind"]
+    page = F.substring_index(span["text"], "|", 1).cast("long")
+    seg = F.when(kind.isin(*PAGE_KINDS), F.floor(page / pages_per_bucket))
+    for k, fixed in FIXED_SEGMENTS.items():
+        seg = seg.when(kind == k, F.lit(fixed))
+    return seg.otherwise(F.lit(0))
 
 
-def _route_factory(salt_threshold: int, pages_per_bucket: int):
-    def route(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            out_ids: list[str] = []
-            out_buckets: list[int] = []
-            out_spans: list[list[tuple]] = []
-            out_final: list[bool] = []
-            for did, spans in zip(ids, raw):
-                if len(spans) <= salt_threshold:
-                    out_ids.append(did)
-                    out_buckets.append(0)
-                    out_spans.append(extract_doc(spans))
-                    out_final.append(True)
-                else:
-                    by_bucket: dict[int, list[tuple]] = {}
-                    for s in spans:
-                        by_bucket.setdefault(
-                            _bucket_of(s[0], s[1], pages_per_bucket), []
-                        ).append(s)
-                    for b, sub in by_bucket.items():
-                        out_ids.append(did)
-                        out_buckets.append(b)
-                        out_spans.append(sub)
-                        out_final.append(False)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, pa.string()),
-                 pa.array(out_buckets, pa.int64()),
-                 _encode_span_lists(out_spans),
-                 pa.array(out_final, pa.bool_())],
-                names=["doc_id", "bucket", "spans", "final"],
-            )
-
-    return route
-
-
-def _extract_small(batches):
-    for rb in batches:
-        names = rb.schema.names
-        raw = _decode_span_lists(rb.column(names.index("spans")))
-        out = [extract_doc(spans) for spans in raw]
-        yield pa.RecordBatch.from_arrays(
-            [rb.column(names.index("doc_id")), _encode_span_lists(out)],
-            names=["doc_id", "spans"],
-        )
+def _key(docs: DataFrame, salt_threshold: int, pages_per_bucket: int) -> DataFrame:
+    """docs -> (doc_id, bucket, salted, spans): a doc at or under the
+    threshold stays one unsalted row in bucket 0; a larger doc becomes
+    one salted row per reading-order segment it has spans in."""
+    tagged = docs.select(
+        "doc_id", "spans",
+        F.when(F.size("spans") > salt_threshold, F.transform(
+            "spans", lambda s: F.struct(
+                _segment(s, pages_per_bucket).alias("seg"), s.alias("span")),
+        )).alias("tagged"),
+    )
+    whole = F.array(F.struct(F.lit(0).cast("long").alias("bucket"),
+                             F.lit(False).alias("salted"),
+                             F.col("spans").alias("spans")))
+    segments = F.transform(
+        F.array_distinct(F.transform("tagged", lambda x: x["seg"])),
+        lambda b: F.struct(
+            b.alias("bucket"), F.lit(True).alias("salted"),
+            F.transform(F.filter("tagged", lambda x: x["seg"] == b),
+                        lambda x: x["span"]).alias("spans")),
+    )
+    rows = F.when(F.col("tagged").isNull(), whole).otherwise(segments)
+    return tagged.select("doc_id", F.inline(rows))
 
 
 def _extract_sub(batches):
-    # unbudgeted: the 2000-chunk cap is global per doc, applied at
-    # reassembly (see module docstring). The raw offsets of the bucket
-    # rows travel in the struct's 'order' field.
+    # salted rows are extracted unbudgeted: the 2000-chunk cap is global
+    # per doc, applied at reassembly (see module docstring)
     for rb in batches:
         names = rb.schema.names
-        raw = _decode_span_lists(rb.column(names.index("spans")), "order")
-        out = [extract_doc(spans, chunk_budget=None) for spans in raw]
+        raw = _decode_span_lists(rb.column(names.index("spans")))
+        salted = rb.column(names.index("salted")).to_pylist()
+        out = [extract_doc(spans, chunk_budget=None) if s else extract_doc(spans)
+               for spans, s in zip(raw, salted)]
         yield pa.RecordBatch.from_arrays(
             [rb.column(names.index("doc_id")),
              rb.column(names.index("bucket")),
+             rb.column(names.index("salted")),
              _encode_span_lists(out)],
-            names=["doc_id", "bucket", "spans"],
+            names=["doc_id", "bucket", "salted", "spans"],
         )
 
 
-def _reassemble(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("bucket")
-    merged: list[dict] = []
-    n_text = 0
-    for arr in pdf["spans"]:
-        for d in arr:
-            if d["kind"] == "text":
-                if n_text >= MAX_CHUNKS_PER_DOC:
-                    continue
-                n_text += 1
-            merged.append(
-                {"kind": d["kind"], "text": d["text"],
-                 "media_ref": d["media_ref"], "order": len(merged)}
-            )
-    return pd.DataFrame({"doc_id": [pdf["doc_id"].iloc[0]], "spans": [merged]})
+def _finish_doc(group: pa.Table) -> pa.Table:
+    """One doc_id's rows -> its spans_out row: an unsalted doc passes
+    through, a salted doc is reassembled."""
+    if pc.any(group.column("salted")).as_py():
+        return _reassemble(group)
+    return group.select(["doc_id", "spans"])
 
 
-_PY_STAGE_MARKERS = ("MapInPandas", "MapInArrow", "PythonMapInArrow",
-                     "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas")
-# higher-order functions over the span arrays (docs-table transforms
-# like set_outline / add_page_numbers / attachment CRUD): cheap per
-# row, but re-computing them per extraction branch doubles real work —
-# measured 19 s vs 2.6 s on the ×32 repeat corpus at local[32] when
-# the set_outline transform was evaluated by both salt branches
-_EXPR_STAGE_MARKERS = ("lambdafunction",)
-
-
-def _has_python_stage(df: DataFrame) -> bool:
-    """True when the input plan would re-run real work per consumer —
-    a Python evaluation stage (user code) or a higher-order span
-    transform (nested-array rewrite), as opposed to a plain file scan.
-    Conservative (stage) if the plan can't be read."""
-    try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return True
-    return any(m in plan for m in _PY_STAGE_MARKERS) or \
-        any(m in plan for m in _EXPR_STAGE_MARKERS)
+def _reassemble(group: pa.Table) -> pa.Table:
+    """A salted doc's segment rows concatenated in bucket order, with the
+    text-chunk budget re-applied and ``order`` renumbered."""
+    spans = pc.list_flatten(group.sort_by("bucket").column("spans")).combine_chunks()
+    is_text = pc.equal(spans.field("kind"), "text")
+    n_text = pc.cumulative_sum(is_text.cast(pa.int32()))
+    spans = spans.filter(pc.or_(pc.invert(is_text),
+                                pc.less_equal(n_text, MAX_CHUNKS_PER_DOC)))
+    list_type = group.schema.field("spans").type
+    spans = pa.StructArray.from_arrays(
+        [spans.field("kind"), spans.field("text"), spans.field("media_ref"),
+         pa.array(range(len(spans)), pa.int32())],
+        fields=list(list_type.value_type),
+    )
+    return pa.table({
+        "doc_id": group.column("doc_id").slice(0, 1),
+        "spans": pa.ListArray.from_arrays(pa.array([0, len(spans)], pa.int32()),
+                                          spans, type=list_type),
+    })
 
 
 def extract_spans(
@@ -246,53 +183,19 @@ def extract_spans(
     num_partitions: int | None = None,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     pages_per_bucket: int = PAGES_PER_BUCKET,
-    stage: bool | None = None,
 ) -> DataFrame:
     """docs(doc_id, spans: array<raw span struct>) ->
     spans_out(doc_id, spans: array<(kind,text,media_ref,order)>).
-
-    ``stage``: None = auto (persist the routed stage iff the input plan
-    contains a Python stage); True/False force. Both paths are
-    bit-identical (pinned in tests)."""
+    Consumes ``docs`` once."""
     if num_partitions is None:
         num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-    if stage is None:
-        stage = _has_python_stage(docs)
-
-    if stage:
-        from ..runtime.staging import stage as stage_df
-
-        routed = stage_df(
-            docs.repartition(num_partitions, "doc_id")
-            .mapInArrow(_route_factory(salt_threshold, pages_per_bucket),
-                        _ROUTED_SCHEMA)
-        )
-        small_out = routed.filter(F.col("final")).select("doc_id", "spans")
-        sub_src = routed.filter(~F.col("final")).select(
-            "doc_id", "bucket", "spans")
-    else:
-        # plain-scan input: two pruned scans beat a full memory-store
-        # write; route only the (rare) mega docs through the splitter
-        n_spans = F.size("spans")
-        small_out = (
-            docs.filter(n_spans <= salt_threshold)
-            .repartition(num_partitions, "doc_id")
-            .mapInArrow(_extract_small, SPANS_OUT_SCHEMA)
-        )
-        sub_src = (
-            docs.filter(n_spans > salt_threshold)
-            .repartition(num_partitions, "doc_id")
-            .mapInArrow(_route_factory(0, pages_per_bucket), _ROUTED_SCHEMA)
-            .select("doc_id", "bucket", "spans")
-        )
-
-    sub = (
-        sub_src.repartition(num_partitions, "doc_id", "bucket")
+    return (
+        _key(docs, salt_threshold, pages_per_bucket)
+        .repartition(num_partitions, "doc_id", "bucket")
         .mapInArrow(_extract_sub, _SUB_SCHEMA)
+        .groupBy("doc_id")
+        .applyInArrow(_finish_doc, SPANS_OUT_SCHEMA)
     )
-    big_out = sub.groupBy("doc_id").applyInPandas(_reassemble, SPANS_OUT_SCHEMA)
-
-    return small_out.unionByName(big_out)
 
 
 def explode_spans(spans_out: DataFrame) -> DataFrame:

@@ -31,6 +31,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,10 +39,15 @@ from ..operators.extract_pipeline import extract_spans
 
 
 def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table at ``path``, or None when it does not exist yet (first
+    run). Any other failure — e.g. a corrupt lineage file — raises:
+    reading it as "first run" would silently re-extract every doc."""
     try:
         return spark.read.parquet(path)
-    except Exception:
-        return None  # first run: directory doesn't exist yet
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def committed_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -106,7 +112,13 @@ def run_extract_with_checkpoint(
         .withColumn("run_id", F.lit(run_id))
         .withColumn("wall_ms", F.lit(wall_ms))
     )
-    metrics.write.mode("append").parquet(f"{out_dir}/metrics")
+    # one row per partition: collect once, write those rows and sum them,
+    # rather than aggregating the span output a second time for the
+    # totals. The rows travel as pandas so that the write goes through
+    # Arrow; a list of Rows would start a second Python worker pool.
+    metric_rows = metrics.toPandas()
+    spark.createDataFrame(metric_rows, metrics.schema) \
+        .write.mode("append").parquet(f"{out_dir}/metrics")
 
     lineage = (
         back.select("doc_id", "partition_id")
@@ -115,13 +127,10 @@ def run_extract_with_checkpoint(
     )
     lineage.write.mode("append").parquet(f"{out_dir}/lineage")  # COMMIT
 
-    stats = metrics.agg(
-        F.sum("doc_count").alias("d"), F.sum("span_count").alias("s")
-    ).collect()[0]
     return {
         "run_id": run_id,
-        "docs_done": stats["d"] or 0,
-        "spans_done": stats["s"] or 0,
+        "docs_done": int(metric_rows["doc_count"].sum()),
+        "spans_done": int(metric_rows["span_count"].sum()),
         "wall_ms": wall_ms,
     }
 

@@ -1,7 +1,7 @@
 """Session-scoped lifecycle for staged (persisted) intermediates.
 
 Operators that persist an intermediate shared by several consumers
-(the minhash inverted index, the routed extraction stage) register the
+(e.g. the minhash inverted index) register the
 frame here instead of leaking it to the ContextCleaner: a long-lived
 session running many queries calls ``release_staged()`` between
 queries (bench.py / scripts/check_queries.py do) and the memory store

@@ -6,6 +6,11 @@ import sys
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# Bound the driver heap of the one session-wide JVM. At the session
+# default (48g) it grows until the host runs out before collecting: over
+# the full suite on a 4-core, 15 GB host it reached ~15 GB RSS and was
+# OOM-killed; at 6g the suite passes with a ~5 GB peak.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 from stirling_pdf_spark.session import get_spark  # noqa: E402
 

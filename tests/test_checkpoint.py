@@ -102,6 +102,29 @@ def test_metrics_account_for_all_docs(spark, docs, tmp_path):
     )
     assert agg["s"] == direct_spans == summary["spans_done"]
     assert metrics.filter(F.col("text_bytes") <= 0).count() == 0
+    assert metrics.dtypes == [
+        ("partition_id", "int"), ("doc_count", "bigint"),
+        ("span_count", "bigint"), ("text_bytes", "bigint"),
+        ("run_id", "string"), ("wall_ms", "int")]
+
+
+def test_corrupt_lineage_raises(spark, docs, tmp_path):
+    """An unreadable lineage table is an error, not a first run: reading
+    it as missing would re-extract and re-commit every doc."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "ckpt")
+    run_extract_with_checkpoint(spark, docs, out, run_id="r1",
+                                num_partitions=4)
+    shutil.rmtree(f"{out}/lineage")
+    os.makedirs(f"{out}/lineage")
+    with open(f"{out}/lineage/part-00000.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_extract_with_checkpoint(spark, docs, out, run_id="r2",
+                                    num_partitions=4)
+    assert not os.path.exists(f"{out}/spans/run_id=r2")
 
 
 def test_compact_checkpoint_tables(spark, docs, tmp_path):

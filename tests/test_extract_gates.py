@@ -1,0 +1,37 @@
+"""Every ``extract_*`` gate of the query registry against its DuckDB
+oracle at the smoke scale factor, through the same comparison as
+``scripts/check_queries.py`` — so a plain pytest run catches an oracle
+break in the extraction plan without the full sweep."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+import pytest
+
+import __spark_entry__ as E
+
+_SCRIPT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "scripts", "check_queries.py")
+_spec = importlib.util.spec_from_file_location("check_queries", _SCRIPT)
+check_queries = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(check_queries)
+
+QUERIES = E.queries()
+ORACLES = E.oracle_sql()
+EXTRACT_GATES = [n for n in QUERIES if n.startswith("extract_")]
+
+
+@pytest.fixture(scope="module")
+def oracle(sf_smoke):
+    if not os.path.isdir(sf_smoke):
+        pytest.skip(f"test data not found: {sf_smoke}")
+    return check_queries.open_oracle(sf_smoke)
+
+
+@pytest.mark.parametrize("name", EXTRACT_GATES)
+def test_extract_gate_matches_oracle(spark, oracle, sf_smoke, name):
+    ok, report = check_queries.check_query(
+        spark, oracle, sf_smoke, name, QUERIES[name], ORACLES.get(name))
+    assert ok, report

@@ -72,16 +72,36 @@ def test_skew_torture_one_mega_among_tiny(spark):
     one-pagers. The salted path must (a) split the mega doc into
     page-range buckets whose sizes stay balanced — no single task ever
     holds the whole document — and (b) reproduce the unsalted kernel
-    output bit-for-bit after reassembly."""
+    output bit-for-bit after reassembly, for every raw kind the kernel
+    reads (the segment rule must place each kind where the kernel's
+    reading order does)."""
     import statistics
 
     from stirling_pdf_spark.corpus.synth import synth_from_text
-    from stirling_pdf_spark.operators.extract_pipeline import _bucket_of
+    from stirling_pdf_spark.kernel.extract import PAGE_KINDS, segment_of
 
-    words = [f"w{i}" for i in range(200 * 40 * 8)]   # 200 pages
-    mega_id, mega_spans = synth_from_text("mega-0", " ".join(words))
-    rows = [(mega_id, [dict(kind=k, text=t, media_ref=m, offset=o)
-                       for k, t, m, o in mega_spans])]
+    def every_kind(doc_id: str, n_pages: int):
+        words = [f"w{i}" for i in range(n_pages * 40 * 8)]
+        did, spans = synth_from_text(doc_id, " ".join(words))
+        n = len(spans)
+        return did, [
+            ("meta", "Title|Mega", "", n),
+            ("formfield", "name|text|Ada", "", n + 1),
+            ("annotation", "20|10.0|20.0|30.0|40.0\tText|note on p20|a|s",
+             "", n + 2),
+            ("html", "<html><body><p>html block</p></body></html>", "", n + 3),
+            ("htmlbody", "<p>eml body block</p>", "", n + 4),
+            ("bookmark", "0|Chapter 1", "", n + 5),
+            ("attachment", "notes.txt", "media-notes", n + 6),
+        ] + spans
+
+    # 200 pages; the 40-page doc stays under the 2000-chunk budget, so
+    # its html blocks reach the output too
+    mega_id, mega_spans = every_kind("mega-0", 200)
+    mid_id, mid_spans = every_kind("mid-0", 40)
+    rows = [(did, [dict(kind=k, text=t, media_ref=m, offset=o)
+                   for k, t, m, o in spans])
+            for did, spans in ((mega_id, mega_spans), (mid_id, mid_spans))]
     for i in range(300):
         did, spans = synth_from_text(f"tiny-{i}", f"tiny doc {i} body")
         rows.append((did, [dict(kind=k, text=t, media_ref=m, offset=o)
@@ -97,36 +117,43 @@ def test_skew_torture_one_mega_among_tiny(spark):
                           s["order"]) for s in r["spans"]]
            for r in out.collect()}
     assert got[mega_id] == [tuple(s) for s in extract_doc(mega_spans)]
+    assert got[mid_id] == [tuple(s) for s in extract_doc(mid_spans)]
+    assert ("text", "eml body block", "") in [s[:3] for s in got[mid_id]]
     assert got["tiny-7"] == [tuple(s) for s in extract_doc(
         synth_from_text("tiny-7", "tiny doc 7 body")[1])]
 
-    # bucket balance: the mega doc's spans group by page range; the
+    # bucket balance: the mega doc's page spans group by page range; the
     # largest bucket must not dominate (max/median < 2) and the doc
     # must split into enough buckets to spread across a wave of tasks
     counts: dict[int, int] = {}
     for k, t, _m, _o in mega_spans:
-        b = _bucket_of(k, t, ppb)
-        counts[b] = counts.get(b, 0) + 1
-    page_buckets = [v for b, v in counts.items() if b >= 0]
+        if k in PAGE_KINDS:
+            b = segment_of(k, t, ppb)
+            counts[b] = counts.get(b, 0) + 1
+    page_buckets = list(counts.values())
     assert len(page_buckets) >= 16
     assert max(page_buckets) / statistics.median(page_buckets) < 2.0
 
 
-def test_stage_paths_bit_identical(spark, tmp_path):
-    """The staged (persist) and plain-scan routing paths must produce
-    identical spans; auto-detection picks by input plan shape."""
-    from stirling_pdf_spark.corpus.spark_synth import synth_docs_df
-    from stirling_pdf_spark.operators.extract_pipeline import (
-        _has_python_stage, extract_spans,
-    )
+def _plan_text(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
+
+def test_input_consumed_once(spark, tmp_path):
+    """One plan for every input: the extraction never persists its
+    input and evaluates the input subtree once — one file scan for a
+    parquet source, one generator stage for a derived (mapInArrow)
+    source — with salted docs in the mix."""
     docs = synth_docs_df(spark, 60, seed=42, mega_pages=(30, 40),
                          num_partitions=4)
     path = str(tmp_path / "docs.parquet")
     docs.write.parquet(path)
     pq = spark.read.parquet(path)
-    a = extract_spans(pq, num_partitions=4, salt_threshold=150, stage=False)
-    b = extract_spans(pq, num_partitions=4, salt_threshold=150, stage=True)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert _has_python_stage(pq) is False      # plain scan: no persist
-    assert _has_python_stage(docs) is True     # derivation: staged once
+    for src, leaf in ((pq, "FileScan"), (docs, "Range (")):
+        assert _plan_text(src).count(leaf) == 1
+        out = extract_spans(src, num_partitions=4, salt_threshold=150)
+        assert out.count() == 60
+        plan = _plan_text(out)
+        assert plan.count(leaf) == 1, plan
+        assert "InMemoryRelation" not in plan, plan
+        assert "InMemoryTableScan" not in plan, plan
