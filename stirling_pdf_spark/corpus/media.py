@@ -68,21 +68,30 @@ def media_refs(docs: DataFrame) -> DataFrame:
     return refs.repartition(par, "media_ref")
 
 
-def media_table(docs: DataFrame) -> DataFrame:
-    """media(media_ref, fmt, payload) for every ref in the corpus.
-    Generation is distributed (mapInArrow over the distinct refs)."""
+def _ref_table(docs: DataFrame, fmt_of, payload_of) -> DataFrame:
+    """(media_ref, fmt, payload) for every distinct corpus ref, generated
+    distributed (mapInArrow over ``media_refs``). ``fmt_of`` is a fixed
+    format string or a function of the ref; ``payload_of`` maps a ref
+    to its payload bytes."""
+    fmt = fmt_of if callable(fmt_of) else (lambda _r: fmt_of)
 
     def gen(batches):
         for rb in batches:
             refs = rb.column(0).to_pylist()
             yield pa.RecordBatch.from_arrays(
                 [pa.array(refs, pa.string()),
-                 pa.array([fmt_for_ref(r) for r in refs], pa.string()),
-                 pa.array([payload_for_ref(r) for r in refs], pa.binary())],
+                 pa.array([fmt(r) for r in refs], pa.string()),
+                 pa.array([payload_of(r) for r in refs], pa.binary())],
                 names=["media_ref", "fmt", "payload"],
             )
 
     return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+
+
+def media_table(docs: DataFrame) -> DataFrame:
+    """media(media_ref, fmt, payload) for every ref in the corpus.
+    Generation is distributed (mapInArrow over the distinct refs)."""
+    return _ref_table(docs, fmt_for_ref, payload_for_ref)
 
 
 # --- real raster payloads (uncompressed formats, no codec libs needed)
@@ -238,38 +247,14 @@ def jpeg_table(docs: DataFrame) -> DataFrame:
     """jpeg(media_ref, fmt='jpg', payload) with real baseline-JPEG
     payloads for every ref in the corpus — the compressed-codec decode
     gate's input."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["jpg"] * len(refs), pa.string()),
-                 pa.array([jpeg_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "jpg", jpeg_payload_for_ref)
 
 
 def image_table(docs: DataFrame) -> DataFrame:
     """image(media_ref, fmt, payload) with REAL decodable raster
     payloads for every ref in the corpus — the decode-stage input."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array([image_dims_for_ref(r)[0] for r in refs],
-                          pa.string()),
-                 pa.array([image_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, lambda r: image_dims_for_ref(r)[0],
+                      image_payload_for_ref)
 
 
 # --- dHash fixtures: cell-constant rasters with CONTROLLED near-dups
@@ -333,19 +318,7 @@ def dhash_payload_for_ref(ref: str) -> bytes:
 def dhash_image_table(docs: DataFrame) -> DataFrame:
     """dhash fixtures (media_ref, fmt='ppm', payload) for every corpus
     ref — the visual near-dup gate's input."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["ppm"] * len(refs), pa.string()),
-                 pa.array([dhash_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "ppm", dhash_payload_for_ref)
 
 
 # --- aHash fixtures: 8x8 cell-constant rasters with CONTROLLED
@@ -397,19 +370,7 @@ def ahash_payload_for_ref(ref: str) -> bytes:
 def ahash_image_table(docs: DataFrame) -> DataFrame:
     """aHash fixtures (media_ref, fmt='ppm', payload) for every
     corpus ref - the average-hash near-dup gate's input."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["ppm"] * len(refs), pa.string()),
-                 pa.array([ahash_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "ppm", ahash_payload_for_ref)
 
 
 def gif_dims_for_ref(ref: str) -> tuple[int, int]:
@@ -443,19 +404,7 @@ def gif_payload_for_ref(ref: str) -> bytes:
 
 def gif_table(docs: DataFrame) -> DataFrame:
     """gif(media_ref, fmt='gif', payload) for every corpus ref."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["gif"] * len(refs), pa.string()),
-                 pa.array([gif_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "gif", gif_payload_for_ref)
 
 
 def tiff_dims_for_ref(ref: str) -> tuple[int, int, int, int, int, str]:
@@ -499,19 +448,7 @@ def tiff_payload_for_ref(ref: str) -> bytes:
 
 def tiff_table(docs: DataFrame) -> DataFrame:
     """tiff(media_ref, fmt='tiff', payload) for every corpus ref."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["tiff"] * len(refs), pa.string()),
-                 pa.array([tiff_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "tiff", tiff_payload_for_ref)
 
 
 def wav_dims_for_ref(ref: str) -> tuple[int, int, int, int]:
@@ -548,19 +485,7 @@ def wav_payload_for_ref(ref: str) -> bytes:
 
 def wav_table(docs: DataFrame) -> DataFrame:
     """wav(media_ref, fmt='wav', payload) for every corpus ref."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["wav"] * len(refs), pa.string()),
-                 pa.array([wav_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "wav", wav_payload_for_ref)
 
 
 def wav_silence_pad_for_ref(ref: str) -> int:
@@ -590,19 +515,7 @@ def wav_silence_payload_for_ref(ref: str) -> bytes:
 def wav_silence_table(docs: DataFrame) -> DataFrame:
     """wav(media_ref, fmt='wav', payload) silence-padded fixtures for
     every corpus ref."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["wav"] * len(refs), pa.string()),
-                 pa.array([wav_silence_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "wav", wav_silence_payload_for_ref)
 
 
 def mp4_dims_for_ref(ref: str) -> tuple[str, int, int, int, int, int]:
@@ -635,19 +548,7 @@ def mp4_payload_for_ref(ref: str) -> bytes:
 
 def mp4_table(docs: DataFrame) -> DataFrame:
     """mp4(media_ref, fmt='mp4', payload) for every corpus ref."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["mp4"] * len(refs), pa.string()),
-                 pa.array([mp4_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "mp4", mp4_payload_for_ref)
 
 
 def corrupt_mode_for_ref(ref: str) -> int:
@@ -682,20 +583,8 @@ def corrupted_payload_for_ref(ref: str) -> bytes:
 def corrupted_media_table(docs: DataFrame) -> DataFrame:
     """corrupted(media_ref, fmt, payload) — fmt carries the mode as
     'bad0'..'bad3' so consumers can route audio vs video probes."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array([f"bad{corrupt_mode_for_ref(r)}" for r in refs],
-                          pa.string()),
-                 pa.array([corrupted_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, lambda r: f"bad{corrupt_mode_for_ref(r)}",
+                      corrupted_payload_for_ref)
 
 
 def png_text_table(docs: DataFrame) -> DataFrame:
@@ -704,23 +593,13 @@ def png_text_table(docs: DataFrame) -> DataFrame:
     Author = 'author ' + the ref's last 4 chars — so the tEXt
     extraction stage has a closed-form oracle."""
 
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            payloads = [
-                png_encode(4, 3, _pixel_stream(r, 36), texts=(
-                    ("Title", f"title {r}"),
-                    ("Author", f"author {r[-4:]}"),
-                )) for r in refs
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["png"] * len(refs), pa.string()),
-                 pa.array(payloads, pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
+    def payload(r: str) -> bytes:
+        return png_encode(4, 3, _pixel_stream(r, 36), texts=(
+            ("Title", f"title {r}"),
+            ("Author", f"author {r[-4:]}"),
+        ))
 
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "png", payload)
 
 
 def exif_params_for_ref(ref: str) -> dict:
@@ -748,23 +627,13 @@ def exif_jpeg_table(docs: DataFrame) -> DataFrame:
     metadata gate's input; both byte orders appear across the corpus."""
     from ..kernel.exif import build_exif_jpeg
 
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            payloads = []
-            for r in refs:
-                p = exif_params_for_ref(r)
-                payloads.append(build_exif_jpeg(
-                    p["endian"], p["make"], p["model"], p["orientation"],
-                    p["xres"], p["datetime_original"], p["pixel_x"]))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["jpg"] * len(refs), pa.string()),
-                 pa.array(payloads, pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
+    def payload(r: str) -> bytes:
+        p = exif_params_for_ref(r)
+        return build_exif_jpeg(
+            p["endian"], p["make"], p["model"], p["orientation"],
+            p["xres"], p["datetime_original"], p["pixel_x"])
 
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "jpg", payload)
 
 
 def tiff_n_pages_for_ref(ref: str) -> int:
@@ -811,19 +680,7 @@ def tiff_multipage_payload_for_ref(ref: str) -> bytes:
 
 def tiff_multipage_table(docs: DataFrame) -> DataFrame:
     """tiff_mp(media_ref, fmt='tiff', payload) for every corpus ref."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["tiff"] * len(refs), pa.string()),
-                 pa.array([tiff_multipage_payload_for_ref(r)
-                           for r in refs], pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "tiff", tiff_multipage_payload_for_ref)
 
 
 # --- pHash fixtures: rasters SYNTHESIZED IN THE DCT DOMAIN with
@@ -908,16 +765,4 @@ def phash_payload_for_ref(ref: str) -> bytes:
 def phash_image_table(docs: DataFrame) -> DataFrame:
     """phash fixtures (media_ref, fmt='ppm', payload) for every
     corpus ref — the DCT-hash near-dup gate's input."""
-
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array(["ppm"] * len(refs), pa.string()),
-                 pa.array([phash_payload_for_ref(r) for r in refs],
-                          pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
-
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return _ref_table(docs, "ppm", phash_payload_for_ref)

@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
+from . import wire
 from .model import CHAR_WIDTH_FACTOR, LINE_Y_TOLERANCE, TextRun
 
 RULE_JOIN_TOLERANCE = 0.5   # pt — rules whose bboxes come this close join
@@ -51,6 +52,22 @@ class Rule(NamedTuple):
 def parse_rule(text: str) -> Rule:
     p, x1, y1, x2, y2 = text.split("|", 4)
     return Rule(int(p), float(x1), float(y1), float(x2), float(y2))
+
+
+def by_page(raw_spans: list[tuple]) -> tuple[dict[int, list[TextRun]],
+                                             dict[int, list[Rule]]]:
+    """A doc's raw spans in offset order, parsed and grouped by page:
+    (text runs by page, ruled lines by page); other kinds are skipped."""
+    runs: dict[int, list[TextRun]] = {}
+    rules: dict[int, list[Rule]] = {}
+    for kind, text, _ref, _off in sorted(raw_spans, key=lambda s: s[3]):
+        if kind == "text":
+            r = wire.parse_text_run(text)
+            runs.setdefault(r.page, []).append(r)
+        elif kind == "rule":
+            rl = parse_rule(text)
+            rules.setdefault(rl.page, []).append(rl)
+    return runs, rules
 
 
 def encode_rule(rule: Rule) -> str:

@@ -21,13 +21,12 @@ from __future__ import annotations
 
 import re
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from ..kernel import wire
 from ..kernel.columns import reading_order
 from ..kernel.lines import cluster_lines
-from .extract_pipeline import _decode_span_lists, _encode_span_lists
+from ..kernel.tables import by_page
+from .extract_pipeline import map_docs
 
 ANCHOR_ICON_SIZE = 20.0
 _NON_ALNUM = re.compile(r"[^A-Za-z0-9]")
@@ -38,8 +37,7 @@ def _normalize(s: str) -> str:
 
 
 def add_comments(docs: DataFrame, comments: list[dict],
-                 page_h: float = 792.0,
-                 num_partitions: int | None = None) -> DataFrame:
+                 page_h: float = 792.0) -> DataFrame:
     """docs(doc_id, raw spans) -> docs with one Text annotation per
     applicable spec appended (offset order = spec order)."""
     specs = []
@@ -54,53 +52,32 @@ def add_comments(docs: DataFrame, comments: list[dict],
             if d.get("anchorText") and str(d["anchorText"]).strip()
             else None,
         ))
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
 
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            out_spans = []
-            for spans in raw:
-                runs_by_page: dict[int, list] = {}
-                for kind, text, _m, _off in sorted(spans,
-                                                   key=lambda s: s[3]):
-                    if kind == "text":
-                        r = wire.parse_text_run(text)
-                        runs_by_page.setdefault(r.page, []).append(r)
-                pages = sorted(runs_by_page)
-                new_spans = list(spans)
-                for (pidx, x, y, w, h, text, author, subject,
-                     needle) in specs:
-                    if pidx < 0 or pidx >= len(pages):
-                        continue
-                    page = pages[pidx]
-                    loc = None
-                    if needle:
-                        lines = reading_order(cluster_lines(
-                            runs_by_page[page]))
-                        for ln in lines:
-                            if needle in _normalize(ln.text()):
-                                # icon at the matched line's top-left
-                                loc = (ln.x1, ln.y1, ANCHOR_ICON_SIZE,
-                                       ANCHOR_ICON_SIZE)
-                                break
-                    if loc is None:
-                        # fallback coords arrive in PDF user space
-                        # (bottom-left origin) -> screen top edge
-                        loc = (x, page_h - y - h, w, h)
-                    ax, ay, aw, ah = loc
-                    body = (f"{page}|{ax!r}|{ay!r}|{aw!r}|{ah!r}"
-                            f"\tText|{text}|{author}|{subject}")
-                    new_spans.append(("annotation", body, "",
-                                      len(new_spans)))
-                out_spans.append(new_spans)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(names.index("doc_id")),
-                 _encode_span_lists(out_spans)],
-                names=["doc_id", "spans"],
-            )
+    def annotate(did, spans):
+        runs_by_page, _ = by_page(spans)
+        pages = sorted(runs_by_page)
+        new_spans = list(spans)
+        for pidx, x, y, w, h, text, author, subject, needle in specs:
+            if pidx < 0 or pidx >= len(pages):
+                continue
+            page = pages[pidx]
+            loc = None
+            if needle:
+                lines = reading_order(cluster_lines(runs_by_page[page]))
+                for ln in lines:
+                    if needle in _normalize(ln.text()):
+                        # icon at the matched line's top-left
+                        loc = (ln.x1, ln.y1, ANCHOR_ICON_SIZE,
+                               ANCHOR_ICON_SIZE)
+                        break
+            if loc is None:
+                # fallback coords arrive in PDF user space
+                # (bottom-left origin) -> screen top edge
+                loc = (x, page_h - y - h, w, h)
+            ax, ay, aw, ah = loc
+            body = (f"{page}|{ax!r}|{ay!r}|{aw!r}|{ah!r}"
+                    f"\tText|{text}|{author}|{subject}")
+            new_spans.append(("annotation", body, "", len(new_spans)))
+        return [(did, new_spans)]
 
-    return docs.repartition(num_partitions, "doc_id").mapInArrow(
-        run, docs.schema)
+    return map_docs(docs, annotate, docs.schema)

@@ -79,6 +79,14 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     )
 
 
+def _shingle_index(index: DataFrame) -> DataFrame:
+    """A caller-built shingle index, checked for the (id, sh) shape."""
+    if index.columns != ["id", "sh"]:
+        raise ValueError(
+            f"index must have columns ['id', 'sh'], got {index.columns}")
+    return index
+
+
 # ---------------------------------------------------------------- exact
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id",
@@ -115,9 +123,12 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     corpus twice). Sizes then come from a per-id count over the index
     — identical values, since shingles are distinct per doc, and docs
     with zero shingles can never reach the inner pair join either way.
+    An index whose columns are not exactly ``["id", "sh"]`` raises
+    ValueError; it must have been built with this call's ``n`` and text
+    column, which the frame cannot show.
     """
     if index is not None:
-        inv = index
+        inv = _shingle_index(index)
         sizes = inv.groupBy("id").agg(F.count("*").cast("long")
                                       .alias("sz"))
     else:
@@ -195,14 +206,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
 
     ``index``: optional pre-built (id, sh) exploded distinct-shingle
     index, expected already persisted by the caller (see
-    ngram_jaccard_pairs).
+    ngram_jaccard_pairs; same ``["id", "sh"]`` check).
     """
     from ..runtime.staging import stage
 
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes
     if index is not None:
-        exploded = index
+        exploded = _shingle_index(index)
     else:
         sh = _shingled(df, id_col, text_col, n)
         # the exploded inverted index feeds FOUR consumers (signatures,
@@ -344,10 +355,14 @@ def connected_components(pairs: DataFrame, nodes: DataFrame | None = None,
     ``count()`` is inherent to convergence detection). At 100 TB the
     same loop runs with the edge list bucketed by src.
 
-    Raises RuntimeError when ``max_iter`` rounds pass without reaching
-    a fixed point — a silent fall-through would return SPLIT
-    components; with pointer jumping, 12 rounds cover diameters to
-    ~2^12, far beyond any near-dup cluster.
+    Round accounting: round 0 (one min-neighbor step against the
+    identity labeling, no pointer jump) is folded into the seed labels,
+    so ``max_iter`` counts the propagate-and-jump rounds AFTER it — the
+    default 12 allows 13 propagation steps in all (the seed step plus 12
+    rounds). Raises RuntimeError when the last of those ``max_iter``
+    rounds still changed a label — a silent fall-through would return
+    SPLIT components; with pointer jumping, 12 rounds cover diameters
+    to ~2^12, far beyond any near-dup cluster.
 
     ``pairs``: (id_a, id_b). ``nodes``: optional (id) universe so
     singletons appear in the output; defaults to ids present in pairs.

@@ -10,14 +10,13 @@ serializes into PdfJsonTextElement/PdfJsonImageElement.
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..kernel import wire
 from ..kernel.coalesce import coalesce_runs
 from ..kernel.model import IMAGE_Z_BASE, TEXT_Z_BASE
-from .extract_pipeline import _decode_span_lists
+from .extract_pipeline import map_docs
 
 ELEMENTS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -33,8 +32,6 @@ ELEMENTS_SCHEMA = T.StructType([
     T.StructField("z_order", T.IntegerType(), False),
     T.StructField("seq", T.IntegerType(), False),
 ])
-
-_COLS = [f.name for f in ELEMENTS_SCHEMA]
 
 
 def _doc_elements(doc_id: str, raw_spans: list[tuple]) -> list[tuple]:
@@ -89,33 +86,10 @@ def page_text(elements: DataFrame, budget: int | None = None) -> DataFrame:
     )
 
 
-def extract_elements(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def extract_elements(docs: DataFrame) -> DataFrame:
     """docs(doc_id, spans raw) -> one row per element, mergeDrawables
     order encoded by (page, z_order, seq)."""
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-
-    def run(batches):
-        for rb in batches:
-            ids = rb.column(rb.schema.names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(rb.schema.names.index("spans")))
-            rows: list[tuple] = []
-            for doc_id, spans in zip(ids, raw):
-                rows.extend(_doc_elements(doc_id, spans))
-            cols = list(zip(*rows)) if rows else [[] for _ in _COLS]
-            arrays = [
-                pa.array(cols[0], pa.string()), pa.array(cols[1], pa.int32()),
-                pa.array(cols[2], pa.string()), pa.array(cols[3], pa.string()),
-                pa.array(cols[4], pa.string()), pa.array(cols[5], pa.string()),
-                pa.array(cols[6], pa.float64()), pa.array(cols[7], pa.float64()),
-                pa.array(cols[8], pa.float64()), pa.array(cols[9], pa.float64()),
-                pa.array(cols[10], pa.int32()), pa.array(cols[11], pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=_COLS)
-
-    return docs.repartition(num_partitions, "doc_id").mapInArrow(
-        run, ELEMENTS_SCHEMA
-    )
+    return map_docs(docs, _doc_elements, ELEMENTS_SCHEMA)
 
 
 def font_info(docs: DataFrame) -> DataFrame:

@@ -29,6 +29,11 @@ All per-document work happens inside Arrow stages with columnar span
 decode/encode (no per-row Spark Python UDFs); the shuffles are the
 repartition by (doc_id, bucket) and the regroup by doc_id, both on keys
 that are unique or salted — no hot keys by construction.
+
+``map_docs`` is the one per-document Arrow stage every other raw-docs
+operator (exports, tables, search, elements, comments, edit-text) runs
+through: repartition on doc_id, decode the spans columnar, call the
+operator's per-doc function, build the output batch column by column.
 """
 
 from __future__ import annotations
@@ -38,6 +43,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel.extract import FIXED_SEGMENTS, PAGE_KINDS, extract_doc
 from ..kernel.model import MAX_CHUNKS_PER_DOC
@@ -94,6 +100,30 @@ def _encode_span_lists(span_lists: list[list[tuple]]) -> "pa.ListArray":
         names=["kind", "text", "media_ref", "order"],
     )
     return pa.ListArray.from_arrays(pa.array(offs, pa.int32()), struct)
+
+
+def map_docs(docs: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """The per-document Arrow stage over raw ``docs(doc_id, spans)``:
+    ``fn(doc_id, raw_spans)`` yields output rows as tuples in ``schema``
+    order (any number per doc, none for a doc that emits nothing). One
+    repartition on doc_id, then one mapInArrow; per batch the rows are
+    transposed and each column built with one ``pa.array`` of its Arrow
+    type, nested ``list<struct>`` columns included."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        for rb in batches:
+            names = rb.schema.names
+            ids = rb.column(names.index("doc_id")).to_pylist()
+            raw = _decode_span_lists(rb.column(names.index("spans")))
+            rows = [row for did, spans in zip(ids, raw) for row in fn(did, spans)]
+            cols = list(zip(*rows)) if rows else [[]] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema)
+
+    n = docs.sparkSession.sparkContext.defaultParallelism * 2
+    return docs.repartition(n, "doc_id").mapInArrow(run, schema)
 
 
 def _segment(span: Column, pages_per_bucket: int) -> Column:

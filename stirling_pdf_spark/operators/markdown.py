@@ -1,21 +1,19 @@
 """PDF -> Markdown export operator (PdfMarkdownConverter.java).
 
-One Arrow stage over the raw docs table — the same
-repartition-then-mapInArrow contract as the extraction pipeline: the
-whole conversion is per-document kernel work (kernel/markdown.py), no
-shuffle inside, empty documents emit no row (the reference returns an
-empty body for a pageless doc; absence keeps the gate aligned with
-the e1-style full-text queries).
+Every export here is one ``map_docs`` stage over the raw docs table
+(operators/extract_pipeline.py): the whole conversion is per-document
+kernel work (kernel/markdown.py), and empty documents emit no row (the
+reference returns an empty body for a pageless doc; absence keeps the
+gate aligned with the e1-style full-text queries).
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..kernel.markdown import markdown_doc
-from .extract_pipeline import _decode_span_lists
+from .extract_pipeline import map_docs
 
 MARKDOWN_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -29,8 +27,16 @@ HTML_SCHEMA = T.StructType([
 ])
 
 
-def to_html(docs: DataFrame,
-            num_partitions: int | None = None) -> DataFrame:
+def _render(docs: DataFrame, render, schema: T.StructType) -> DataFrame:
+    """(doc_id, one rendered string) per doc whose render is non-empty."""
+    def rows(did, spans):
+        out = render(spans)
+        return [(did, out)] if out else []
+
+    return map_docs(docs, rows, schema)
+
+
+def to_html(docs: DataFrame) -> DataFrame:
     """PDF -> standalone HTML (/convert/pdf/html; the reference
     delegates to the external pdftohtml binary, PDFToFile.java:99,
     172-201 — here the proven Markdown block pipeline re-emits as
@@ -38,28 +44,7 @@ def to_html(docs: DataFrame,
     (doc_id, html); empty documents emit no row."""
     from ..kernel.html_export import html_doc
 
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            out_id, out_html = [], []
-            for did, spans in zip(ids, raw):
-                doc = html_doc(spans)
-                if doc:
-                    out_id.append(did)
-                    out_html.append(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, pa.string()),
-                 pa.array(out_html, pa.string())],
-                names=["doc_id", "html"],
-            )
-
-    return docs.repartition(num_partitions, "doc_id").mapInArrow(
-        run, HTML_SCHEMA)
+    return _render(docs, html_doc, HTML_SCHEMA)
 
 
 XML_SCHEMA = T.StructType([
@@ -68,8 +53,7 @@ XML_SCHEMA = T.StructType([
 ])
 
 
-def to_xml(docs: DataFrame,
-           num_partitions: int | None = None) -> DataFrame:
+def to_xml(docs: DataFrame) -> DataFrame:
     """PDF -> structural XML (/convert/pdf/xml; the reference
     delegates to the out-of-scope LibreOffice binary,
     PDFToFile.java:256,334-335 — here the proven block pipeline
@@ -78,55 +62,12 @@ def to_xml(docs: DataFrame,
     no row."""
     from ..kernel.xml_export import xml_doc
 
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            out_id, out_xml = [], []
-            for did, spans in zip(ids, raw):
-                doc = xml_doc(spans)
-                if doc:
-                    out_id.append(did)
-                    out_xml.append(doc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, pa.string()),
-                 pa.array(out_xml, pa.string())],
-                names=["doc_id", "xml"],
-            )
-
-    return docs.repartition(num_partitions, "doc_id").mapInArrow(
-        run, XML_SCHEMA)
+    return _render(docs, xml_doc, XML_SCHEMA)
 
 
-def to_markdown(docs: DataFrame,
-                num_partitions: int | None = None) -> DataFrame:
+def to_markdown(docs: DataFrame) -> DataFrame:
     """docs(doc_id, spans raw) -> (doc_id, markdown)."""
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            out_id, out_md = [], []
-            for did, spans in zip(ids, raw):
-                md = markdown_doc(spans)
-                if md:
-                    out_id.append(did)
-                    out_md.append(md)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, pa.string()),
-                 pa.array(out_md, pa.string())],
-                names=["doc_id", "markdown"],
-            )
-
-    return docs.repartition(num_partitions, "doc_id").mapInArrow(
-        run, MARKDOWN_SCHEMA)
+    return _render(docs, markdown_doc, MARKDOWN_SCHEMA)
 
 
 EPUB_SCHEMA = T.StructType([
@@ -137,41 +78,16 @@ EPUB_SCHEMA = T.StructType([
 ])
 
 
-def _to_members(docs: DataFrame, members_fn,
-                num_partitions: int | None = None) -> DataFrame:
+def _to_members(docs: DataFrame, members_fn) -> DataFrame:
     """Shared container-export stage: per-document kernel fn
     ``(doc_id, spans) -> [(order, member, content)]`` fanned into one
-    row per member. One narrow Arrow stage after the doc_id
-    repartition, no shuffle inside; empty docs emit no rows."""
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            out = ([], [], [], [])
-            for did, spans in zip(ids, raw):
-                for order, member, content in members_fn(did, spans):
-                    out[0].append(did)
-                    out[1].append(order)
-                    out[2].append(member)
-                    out[3].append(content)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out[0], pa.string()),
-                 pa.array(out[1], pa.int32()),
-                 pa.array(out[2], pa.string()),
-                 pa.array(out[3], pa.string())],
-                names=["doc_id", "ord", "member", "content"],
-            )
-
-    return docs.repartition(num_partitions, "doc_id").mapInArrow(
-        run, EPUB_SCHEMA)
+    row per member; empty docs emit no rows."""
+    return map_docs(
+        docs, lambda did, spans: ((did, *m) for m in members_fn(did, spans)),
+        EPUB_SCHEMA)
 
 
-def to_epub(docs: DataFrame,
-            num_partitions: int | None = None) -> DataFrame:
+def to_epub(docs: DataFrame) -> DataFrame:
     """PDF -> EPUB structural export (/convert/pdf/epub; the reference
     delegates to Calibre's ebook-convert binary,
     ConvertPDFToEpubController.java:34-60 — here the OCF members are
@@ -181,11 +97,10 @@ def to_epub(docs: DataFrame,
     one row per container member (doc_id, ord, member, content)."""
     from ..kernel.epub_export import epub_members
 
-    return _to_members(docs, epub_members, num_partitions)
+    return _to_members(docs, epub_members)
 
 
-def to_pptx(docs: DataFrame,
-            num_partitions: int | None = None) -> DataFrame:
+def to_pptx(docs: DataFrame) -> DataFrame:
     """PDF -> PPTX structural export (/convert/pdf/presentation; the
     reference delegates to LibreOffice, PDFToFile.java:99 — here the
     OOXML package members emit deterministically with ONE SLIDE PER
@@ -193,11 +108,10 @@ def to_pptx(docs: DataFrame,
     docs(doc_id, spans raw) -> one row per OPC member."""
     from ..kernel.pptx_export import pptx_members
 
-    return _to_members(docs, pptx_members, num_partitions)
+    return _to_members(docs, pptx_members)
 
 
-def to_docx(docs: DataFrame,
-            num_partitions: int | None = None) -> DataFrame:
+def to_docx(docs: DataFrame) -> DataFrame:
     """PDF -> DOCX structural export (/convert/pdf/word; the reference
     delegates to LibreOffice, PDFToFile.java:99 — here the OOXML
     package members emit deterministically over the shared block
@@ -205,4 +119,4 @@ def to_docx(docs: DataFrame,
     row per OPC member (doc_id, ord, member, content)."""
     from ..kernel.docx_export import docx_members
 
-    return _to_members(docs, docx_members, num_partitions)
+    return _to_members(docs, docx_members)

@@ -13,10 +13,12 @@ CHAR_WIDTH_FACTOR), so match bboxes are exact, not estimated:
 Whole-word mode brackets the pattern exactly like the reference
 (TextFinder.java:79-88), including the 1-character lookaround variants
 (digit terms must not match inside "3.5" — see kernel.textfind
-.build_pattern, the single source of truth for pattern construction). Everything is column expressions —
-extract once, search many times without re-parsing (SURVEY.md §3.2:
-the reference re-runs TextFinder per request; the span table makes
-search a DataFrame filter).
+.build_pattern, the single source of truth for pattern construction).
+Everything is column expressions — extract once, search many times
+without re-parsing (SURVEY.md §3.2: the reference re-runs TextFinder
+per request; the span table makes search a DataFrame filter). The
+raw-docs variant, ``text_search_pages``, runs the full TextFinder page
+semantics as one ``map_docs`` stage (operators/extract_pipeline.py).
 
 S12 (RedactController / RedactExecuteService.java:125,493-657): search
 matches -> remove/mask the matched text. Here redaction is a column
@@ -29,10 +31,24 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..kernel.textfind import build_pattern as _pattern
+from ..kernel.tables import by_page
+from ..kernel.textfind import build_pattern as _pattern, find_matches
+from .extract_pipeline import map_docs
 
 MASK_CHAR = "█"  # full block
+
+SEARCH_PAGES_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType(), False),
+    T.StructField("page", T.LongType(), False),
+    T.StructField("match_no", T.LongType(), False),
+    T.StructField("x1", T.DoubleType(), False),
+    T.StructField("y1", T.DoubleType(), False),
+    T.StructField("x2", T.DoubleType(), False),
+    T.StructField("y2", T.DoubleType(), False),
+    T.StructField("match", T.StringType(), False),
+])
 
 
 def text_search_elements(elements: DataFrame, term: str,
@@ -102,74 +118,22 @@ def match_offsets(elements: DataFrame, term: str, regex: bool = False,
 
 
 def text_search_pages(docs: DataFrame, term: str, regex: bool = False,
-                      whole_word: bool = False,
-                      num_partitions: int | None = None) -> DataFrame:
+                      whole_word: bool = False) -> DataFrame:
     """Full TextFinder semantics over the RAW docs table
     (TextFinder.java:21-193): page text accumulated with separator
     nulls, per-match glyph-union bboxes, and the ±5 nearby-position
     fallback for matches that land entirely on inserted separators
-    (:139-158). One Arrow stage, no shuffle inside.
+    (:139-158). One ``map_docs`` stage.
 
     Output: (doc_id, page, match_no, x1, y1, x2, y2, match)."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
+    def rows(did, spans):
+        runs_by_page, _ = by_page(spans)
+        for page in sorted(runs_by_page):
+            for i, m in enumerate(find_matches(runs_by_page[page], term,
+                                               regex, whole_word)):
+                yield did, page, i, m.x1, m.y1, m.x2, m.y2, m.text
 
-    from ..kernel import wire
-    from ..kernel.textfind import find_matches
-    from .extract_pipeline import _decode_span_lists
-
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
-    schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("page", T.LongType(), False),
-        T.StructField("match_no", T.LongType(), False),
-        T.StructField("x1", T.DoubleType(), False),
-        T.StructField("y1", T.DoubleType(), False),
-        T.StructField("x2", T.DoubleType(), False),
-        T.StructField("y2", T.DoubleType(), False),
-        T.StructField("match", T.StringType(), False),
-    ])
-
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            cols = {n: [] for n in
-                    ("doc_id", "page", "match_no", "x1", "y1", "x2", "y2",
-                     "match")}
-            for did, spans in zip(ids, raw):
-                runs_by_page: dict[int, list] = {}
-                for kind, text, _ref, _off in sorted(spans,
-                                                     key=lambda s: s[3]):
-                    if kind == "text":
-                        r = wire.parse_text_run(text)
-                        runs_by_page.setdefault(r.page, []).append(r)
-                for page in sorted(runs_by_page):
-                    for i, m in enumerate(find_matches(
-                            runs_by_page[page], term, regex, whole_word)):
-                        cols["doc_id"].append(did)
-                        cols["page"].append(page)
-                        cols["match_no"].append(i)
-                        cols["x1"].append(m.x1)
-                        cols["y1"].append(m.y1)
-                        cols["x2"].append(m.x2)
-                        cols["y2"].append(m.y2)
-                        cols["match"].append(m.text)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["doc_id"], pa.string()),
-                 pa.array(cols["page"], pa.int64()),
-                 pa.array(cols["match_no"], pa.int64()),
-                 pa.array(cols["x1"], pa.float64()),
-                 pa.array(cols["y1"], pa.float64()),
-                 pa.array(cols["x2"], pa.float64()),
-                 pa.array(cols["y2"], pa.float64()),
-                 pa.array(cols["match"], pa.string())],
-                names=list(cols),
-            )
-
-    return docs.repartition(num_partitions, "doc_id").mapInArrow(run, schema)
+    return map_docs(docs, rows, SEARCH_PAGES_SCHEMA)
 
 
 def mask_matches(text: Column, pattern: str,

@@ -7,20 +7,19 @@ mode per request), so it is a standalone Arrow stage over the RAW docs
 table here: one output row per page that forms a whitespace-column
 table.
 
-Scale shape: repartition by doc_id then a single mapInArrow pass — the
-same no-shuffle-inside contract as the extraction pipeline; pages
-cluster locally per document, nothing is collected driver-side.
+Scale shape: each operator is one ``map_docs`` stage
+(operators/extract_pipeline.py); pages cluster locally per document,
+nothing is collected driver-side.
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..kernel import wire
-from ..kernel.tables import stream_table_csv
-from .extract_pipeline import _decode_span_lists
+from ..kernel.tables import (by_page, extract_table_csvs, extract_table_grids,
+                             stream_table_csv)
+from .extract_pipeline import map_docs
 
 STREAM_TABLES_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -29,42 +28,17 @@ STREAM_TABLES_SCHEMA = T.StructType([
 ])
 
 
-def tables_stream(docs: DataFrame,
-                  num_partitions: int | None = None) -> DataFrame:
+def tables_stream(docs: DataFrame) -> DataFrame:
     """docs(doc_id, spans raw) -> (doc_id, page, csv) — Tabula STREAM
     (whitespace-column) tables, one row per detected table page."""
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
+    def rows(did, spans):
+        runs_by_page, _ = by_page(spans)
+        for page in sorted(runs_by_page):
+            csv = stream_table_csv(runs_by_page[page])
+            if csv is not None:
+                yield did, page, csv
 
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            out_id, out_page, out_csv = [], [], []
-            for did, spans in zip(ids, raw):
-                runs_by_page: dict[int, list] = {}
-                for kind, text, _ref, _off in sorted(spans, key=lambda s: s[3]):
-                    if kind == "text":
-                        r = wire.parse_text_run(text)
-                        runs_by_page.setdefault(r.page, []).append(r)
-                for page in sorted(runs_by_page):
-                    csv = stream_table_csv(runs_by_page[page])
-                    if csv is not None:
-                        out_id.append(did)
-                        out_page.append(page)
-                        out_csv.append(csv)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, pa.string()),
-                 pa.array(out_page, pa.int64()),
-                 pa.array(out_csv, pa.string())],
-                names=["doc_id", "page", "csv"],
-            )
-
-    return (
-        docs.repartition(num_partitions, "doc_id")
-        .mapInArrow(run, STREAM_TABLES_SCHEMA)
-    )
+    return map_docs(docs, rows, STREAM_TABLES_SCHEMA)
 
 
 PDF_TO_CSV_SCHEMA = T.StructType([
@@ -76,8 +50,7 @@ PDF_TO_CSV_SCHEMA = T.StructType([
 ])
 
 
-def pdf_to_csv(docs: DataFrame,
-               num_partitions: int | None = None) -> DataFrame:
+def pdf_to_csv(docs: DataFrame) -> DataFrame:
     """pdf->csv export (ExtractCSVController.java:60-133): per page,
     parse tables — LATTICE when the page carries ruled lines, STREAM
     (whitespace columns) otherwise, mirroring TabulaTableParser's
@@ -90,59 +63,24 @@ def pdf_to_csv(docs: DataFrame,
     Entry names follow generateEntryName (:123-126):
     '{base}_p{page}_t{idx}.csv', page and table index 1-based.
 
-    Scale shape: same contract as tables_stream — repartition by
-    doc_id then one mapInArrow pass, pages local to their document,
-    nothing driver-side; the multi-entry zip packaging in the
-    controller is presentation, the table here IS the zip manifest."""
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
+    Scale shape: same as tables_stream — one ``map_docs`` stage, pages
+    local to their document, nothing driver-side; the multi-entry zip
+    packaging in the controller is presentation, the table here IS the
+    zip manifest."""
+    def rows(did, spans):
+        runs_by_page, rules_by_page = by_page(spans)
+        for page in sorted(set(runs_by_page) | set(rules_by_page)):
+            if page in rules_by_page:
+                csvs = extract_table_csvs(rules_by_page[page],
+                                          runs_by_page.get(page, []))
+            else:
+                one = stream_table_csv(runs_by_page[page])
+                csvs = [one] if one is not None else []
+            for idx, csv in enumerate(csvs, start=1):
+                yield (did, page, idx, f"{did}_p{page}_t{idx}.csv",
+                       csv.replace("\n", "\r\n") + "\r\n")
 
-    from ..kernel.tables import extract_table_csvs, parse_rule
-
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            o_id, o_page, o_tno, o_name, o_csv = [], [], [], [], []
-            for did, spans in zip(ids, raw):
-                runs_by_page: dict[int, list] = {}
-                rules_by_page: dict[int, list] = {}
-                for kind, text, _ref, _off in sorted(spans,
-                                                     key=lambda s: s[3]):
-                    if kind == "text":
-                        r = wire.parse_text_run(text)
-                        runs_by_page.setdefault(r.page, []).append(r)
-                    elif kind == "rule":
-                        rl = parse_rule(text)
-                        rules_by_page.setdefault(rl.page, []).append(rl)
-                for page in sorted(set(runs_by_page) | set(rules_by_page)):
-                    if page in rules_by_page:
-                        csvs = extract_table_csvs(
-                            rules_by_page[page],
-                            runs_by_page.get(page, []))
-                    else:
-                        one = stream_table_csv(runs_by_page[page])
-                        csvs = [one] if one is not None else []
-                    for idx, csv in enumerate(csvs, start=1):
-                        o_id.append(did)
-                        o_page.append(page)
-                        o_tno.append(idx)
-                        o_name.append(f"{did}_p{page}_t{idx}.csv")
-                        o_csv.append(csv.replace("\n", "\r\n") + "\r\n")
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, pa.string()),
-                 pa.array(o_page, pa.int64()),
-                 pa.array(o_tno, pa.int64()),
-                 pa.array(o_name, pa.string()),
-                 pa.array(o_csv, pa.string())],
-                names=["doc_id", "page", "table_no", "filename", "csv"],
-            )
-
-    return (
-        docs.repartition(num_partitions, "doc_id")
-        .mapInArrow(run, PDF_TO_CSV_SCHEMA)
-    )
+    return map_docs(docs, rows, PDF_TO_CSV_SCHEMA)
 
 
 PDF_TO_XLSX_SCHEMA = T.StructType([
@@ -186,8 +124,7 @@ def _unique_sheet_name(base: str, used: set[str]) -> str:
     return name
 
 
-def pdf_to_xlsx(docs: DataFrame,
-                num_partitions: int | None = None) -> DataFrame:
+def pdf_to_xlsx(docs: DataFrame) -> DataFrame:
     """pdf->xlsx export (ConvertPDFToExcelController.java:51-137): the
     workbook model of the reference's /pdf/xlsx converter. Tables come
     from Tabula's SpreadsheetExtractionAlgorithm — LATTICE ONLY (ruled
@@ -199,64 +136,22 @@ def pdf_to_xlsx(docs: DataFrame,
     'Page {p} Table {t}' (1-based), made workbook-unique through
     createSafeSheetName + the ' (n)' suffix loop (:124-137).
 
-    Scale shape: identical to pdf_to_csv — repartition by doc_id then
-    one mapInArrow pass; a workbook's sheets live inside one document
-    so uniqueness needs no cross-partition state; nothing driver-side.
-    The XLSX zip container is presentation — this table IS the
-    workbook manifest."""
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
+    Scale shape: identical to pdf_to_csv — one ``map_docs`` stage; a
+    workbook's sheets live inside one document so uniqueness needs no
+    cross-partition state; nothing driver-side. The XLSX zip container
+    is presentation — this table IS the workbook manifest."""
+    def rows(did, spans):
+        runs_by_page, rules_by_page = by_page(spans)
+        used: set[str] = set()
+        for page in sorted(rules_by_page):
+            grids = extract_table_grids(rules_by_page[page],
+                                        runs_by_page.get(page, []))
+            for tno, grid in enumerate(grids, start=1):
+                base = (f"Page {page}" if len(grids) == 1
+                        else f"Page {page} Table {tno}")
+                sheet = _unique_sheet_name(base, used)
+                for ri, row in enumerate(grid):
+                    for ci, val in enumerate(row):
+                        yield did, page, tno, sheet, ri, ci, val
 
-    from ..kernel.tables import extract_table_grids, parse_rule
-
-    def run(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            o_id, o_page, o_tno = [], [], []
-            o_sheet, o_row, o_col, o_val = [], [], [], []
-            for did, spans in zip(ids, raw):
-                runs_by_page: dict[int, list] = {}
-                rules_by_page: dict[int, list] = {}
-                for kind, text, _ref, _off in sorted(spans,
-                                                     key=lambda s: s[3]):
-                    if kind == "text":
-                        r = wire.parse_text_run(text)
-                        runs_by_page.setdefault(r.page, []).append(r)
-                    elif kind == "rule":
-                        rl = parse_rule(text)
-                        rules_by_page.setdefault(rl.page, []).append(rl)
-                used: set[str] = set()
-                for page in sorted(rules_by_page):
-                    grids = extract_table_grids(
-                        rules_by_page[page], runs_by_page.get(page, []))
-                    for tno, grid in enumerate(grids, start=1):
-                        base = (f"Page {page}" if len(grids) == 1
-                                else f"Page {page} Table {tno}")
-                        sheet = _unique_sheet_name(base, used)
-                        for ri, row in enumerate(grid):
-                            for ci, val in enumerate(row):
-                                o_id.append(did)
-                                o_page.append(page)
-                                o_tno.append(tno)
-                                o_sheet.append(sheet)
-                                o_row.append(ri)
-                                o_col.append(ci)
-                                o_val.append(val)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(o_id, pa.string()),
-                 pa.array(o_page, pa.int64()),
-                 pa.array(o_tno, pa.int64()),
-                 pa.array(o_sheet, pa.string()),
-                 pa.array(o_row, pa.int64()),
-                 pa.array(o_col, pa.int64()),
-                 pa.array(o_val, pa.string())],
-                names=["doc_id", "page", "table_no", "sheet_name",
-                       "row_idx", "col_idx", "value"],
-            )
-
-    return (
-        docs.repartition(num_partitions, "doc_id")
-        .mapInArrow(run, PDF_TO_XLSX_SCHEMA)
-    )
+    return map_docs(docs, rows, PDF_TO_XLSX_SCHEMA)

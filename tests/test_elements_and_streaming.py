@@ -68,7 +68,7 @@ def test_coalesce_width_formula():
 def test_extract_elements_order_and_zorder(spark):
     docs = synth_docs_df(spark, 24, seed=42, mega_pages=(6, 9),
                          num_partitions=4)
-    els = extract_elements(docs, num_partitions=4)
+    els = extract_elements(docs)
     rows = els.filter(F.col("doc_id") == els.select("doc_id").first()[0]) \
               .orderBy("page", "seq").collect()
     assert rows, "no elements"

@@ -1,7 +1,9 @@
-"""Every ``extract_*`` gate of the query registry against its DuckDB
-oracle at the smoke scale factor, through the same comparison as
-``scripts/check_queries.py`` — so a plain pytest run catches an oracle
-break in the extraction plan without the full sweep."""
+"""Every ``extract_*`` gate of the query registry, and every gate whose
+query runs a ``map_docs`` stage (exports, tables, search, elements,
+comments, edit-text), against its DuckDB oracle at the smoke scale
+factor, through the same comparison as ``scripts/check_queries.py`` —
+so a plain pytest run catches an oracle break in the extraction plan or
+a per-document Arrow stage without the full sweep."""
 
 from __future__ import annotations
 
@@ -20,7 +22,14 @@ _spec.loader.exec_module(check_queries)
 
 QUERIES = E.queries()
 ORACLES = E.oracle_sql()
-EXTRACT_GATES = [n for n in QUERIES if n.startswith("extract_")]
+MAP_DOCS_GATES = [
+    "e2_page_text", "e13_search_positions", "e14_stream_table",
+    "e17_doc_info", "e17_page_info", "e17_full_info", "e18_title_inference",
+    "add_image_stamp", "to_xlsx", "to_html", "to_html_tables", "to_xml",
+    "to_xml_tables", "to_markdown", "to_markdown_tables", "to_epub",
+    "to_docx", "to_pptx", "edit_text", "add_comments",
+]
+GATES = [n for n in QUERIES if n.startswith("extract_")] + MAP_DOCS_GATES
 
 
 @pytest.fixture(scope="module")
@@ -30,7 +39,7 @@ def oracle(sf_smoke):
     return check_queries.open_oracle(sf_smoke)
 
 
-@pytest.mark.parametrize("name", EXTRACT_GATES)
+@pytest.mark.parametrize("name", GATES)
 def test_extract_gate_matches_oracle(spark, oracle, sf_smoke, name):
     ok, report = check_queries.check_query(
         spark, oracle, sf_smoke, name, QUERIES[name], ORACLES.get(name))

@@ -125,7 +125,7 @@ def test_operator_over_spark(spark):
 
     docs = synth_docs_df(spark, 24, seed=3, mega_pages=(4, 6),
                          num_partitions=4)
-    out = to_markdown(docs, num_partitions=4)
+    out = to_markdown(docs)
     rows = out.collect()
     assert 0 < len(rows) <= 24
     assert all(r["markdown"] for r in rows)

@@ -580,10 +580,10 @@ def test_page_text_budget_binds(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    row = page_text(extract_elements(df, num_partitions=2)).collect()[0]
+    row = page_text(extract_elements(df)).collect()[0]
     assert row["n_lines"] == 30
     assert len(row["text"]) == 4000
-    row2 = page_text(extract_elements(df, num_partitions=2),
+    row2 = page_text(extract_elements(df),
                      budget=100).collect()[0]
     assert len(row2["text"]) == 100
 

@@ -196,7 +196,7 @@ def test_text_search_pages_operator(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    rows = text_search_pages(df, "needle", num_partitions=2).collect()
+    rows = text_search_pages(df, "needle").collect()
     assert len(rows) == 4  # 2 per page
     by_page = {}
     for r in rows:

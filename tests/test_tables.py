@@ -122,7 +122,7 @@ def test_stream_mode_spark_operator(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    got = {r["doc_id"]: r for r in tables_stream(df, num_partitions=4).collect()}
+    got = {r["doc_id"]: r for r in tables_stream(df).collect()}
     assert len(got) == 12
     for i in range(12):
         r = got[f"doc-{i}"]
@@ -165,7 +165,7 @@ def test_pdf_to_csv_mode_selection_and_dialect(spark):
         "media_ref:string,offset:int>>",
     )
     got = {(r["doc_id"], r["table_no"]): r
-           for r in pdf_to_csv(df, num_partitions=2).collect()}
+           for r in pdf_to_csv(df).collect()}
     # lattice doc: two ruled grids -> two entries on page 1
     assert set(got) == {("doc-lat", 1), ("doc-lat", 2), ("doc-str", 1)}
     lat1 = got[("doc-lat", 1)]
@@ -195,7 +195,7 @@ def test_pdf_to_csv_prose_only_pages_yield_nothing(spark):
         "media_ref:string,offset:int>>",
     )
     # one short prose line: stream needs >= 2 rows AND >= 2 columns
-    assert pdf_to_csv(df, num_partitions=1).count() == 0
+    assert pdf_to_csv(df).count() == 0
 
 
 def test_xlsx_sheet_name_helpers():
@@ -240,7 +240,7 @@ def test_pdf_to_xlsx_lattice_only_and_naming(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    out = pdf_to_xlsx(df, num_partitions=2).collect()
+    out = pdf_to_xlsx(df).collect()
     assert not [r for r in out if r["doc_id"] == "doc-str"]
     sheets = {(r["doc_id"], r["sheet_name"]) for r in out}
     assert sheets == {("doc-two", "Page 1 Table 1"),

@@ -36,7 +36,7 @@ def test_infer_titles_merges_adjacent_same_size(spark):
     ]
     spans = [(k, t, m, i) for i, (k, t, m, _o) in enumerate(spans)]
     df = spark.createDataFrame([_doc("d", spans)], SCHEMA)
-    row = infer_titles(extract_elements(df, num_partitions=2)).collect()[0]
+    row = infer_titles(extract_elements(df)).collect()[0]
     assert row["title"] == "Big Title Continued"
     assert row["title_fs_x100"] == 1800
     assert row["usable"] == 1
@@ -49,7 +49,7 @@ def test_infer_titles_overlong_not_usable(spark):
     spans = [_text(1, 40.0, 20.0, "x" * 300)]
     spans = [(k, t, m, 0) for (k, t, m, _o) in spans]
     df = spark.createDataFrame([_doc("d", spans)], SCHEMA)
-    row = infer_titles(extract_elements(df, num_partitions=2)).collect()[0]
+    row = infer_titles(extract_elements(df)).collect()[0]
     assert row["usable"] == 0  # AutoRenameController.java:146 (< 255)
 
 

@@ -63,6 +63,14 @@ def test_minhash_lsh_finds_identical_and_near_dups(docs_df):
     assert pairs <= exact
 
 
+@pytest.mark.parametrize("pairs", [D.ngram_jaccard_pairs, D.minhash_lsh_pairs])
+def test_misshaped_shingle_index_raises(docs_df, pairs):
+    # a shared index must be the (id, sh) exploded shingle frame
+    bad = docs_df.withColumnRenamed("doc_id", "id")
+    with pytest.raises(ValueError, match="index must have columns"):
+        pairs(docs_df, index=bad)
+
+
 def test_simhash_order_insensitive(spark):
     rows = [
         (1, "alpha beta gamma delta"),
