@@ -6,10 +6,19 @@ deployment shape):
         scripts/run_extract_job.py \
         --input /root/testdata/sf0.01 --out /tmp/extract_out --run-id r1
 
-On a real cluster the same invocation works with --master yarn/k8s and
-N or 4N executors; locally the session factory builds local[$CPUS].
+On a real cluster whose executor image has the package installed
+(below), the same invocation works with --master yarn/k8s and N or 4N
+executors; locally the session factory builds local[$CPUS].
 The job is resumable: re-running with the same --out skips committed
 docs (see runtime/checkpoint.py).
+
+Workers of a ``get_spark`` session import the package from its source
+directory: the session puts the package root on the executors'
+PYTHONPATH and starts them through the ``stirling_pdf_spark.runtime.pyworker``
+daemon. On a cluster, install the package in the executor image: the
+daemon module has to be importable when the daemon starts, and
+``--py-files`` only reaches tasks. Locally the ``--py-files`` archive
+is not needed.
 """
 
 from __future__ import annotations

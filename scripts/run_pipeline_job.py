@@ -13,8 +13,17 @@ stopwords, so the stop rule rejects every raw doc; real corpora keep
 it on) -> first-occurrence exact dedup -> train hash-slice ->
 512-token sequence packing, written as partitioned parquet plus a
 JSONL sidecar of the surviving documents. Prints one JSON summary
-line. On a real cluster the same invocation works with --master
-yarn/k8s at N or 4N executors.
+line. On a real cluster whose executor image has the package installed
+(below), the same invocation works with --master yarn/k8s at N or 4N
+executors.
+
+Workers of a ``get_spark`` session import the package from its source
+directory: the session puts the package root on the executors'
+PYTHONPATH and starts them through the ``stirling_pdf_spark.runtime.pyworker``
+daemon. On a cluster, install the package in the executor image: the
+daemon module has to be importable when the daemon starts, and
+``--py-files`` only reaches tasks. Locally the ``--py-files`` archive
+is not needed.
 """
 
 from __future__ import annotations

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..kernel import wire
 from ..kernel.model import TextRun
+from ..operators.extract_pipeline import pylist
 from ..sources.tables import DOCS_SCHEMA, read_table
 from .synth import synth_doc, synth_from_text
 
@@ -69,7 +70,7 @@ def synth_docs_df(
     def gen(batches):
         for rb in batches:
             rows = [synth_doc(int(i), seed, mega_pages)
-                    for i in rb.column(0).to_pylist()]
+                    for i in pylist(rb.column(0))]
             yield _spans_batch([r[0] for r in rows], [r[2] for r in rows])
 
     return (
@@ -130,8 +131,8 @@ def _derive_docs(spark: SparkSession, sf_dir: str, derive) -> DataFrame:
     def gen(batches):
         for rb in batches:
             names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
-            texts = rb.column(names.index("text")).to_pylist()
+            ids = pylist(rb.column(names.index("doc_id")))
+            texts = pylist(rb.column(names.index("text")))
             out_ids, out_spans = [], []
             for doc_id, text in zip(ids, texts):
                 did, spans = derive(f"doc-{doc_id}", text or "")

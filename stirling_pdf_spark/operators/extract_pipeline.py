@@ -71,20 +71,34 @@ DEFAULT_SALT_THRESHOLD = 4000
 PAGES_PER_BUCKET = 100
 
 
+def pylist(col: "pa.Array | pa.ChunkedArray") -> list:
+    """``col.to_pylist()``, through numpy where that gives the same
+    values and types: string columns, and bool/int/float columns without
+    nulls (numpy would turn a null int into NaN, so those keep
+    ``to_pylist``)."""
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or (
+            not col.null_count and (pa.types.is_boolean(t) or pa.types.is_integer(t)
+                                    or pa.types.is_floating(t))):
+        return col.to_numpy(zero_copy_only=False).tolist()
+    return col.to_pylist()
+
+
 def _decode_span_lists(col: "pa.Array") -> list[list[tuple]]:
     """Columnar decode of array<struct<kind,text,media_ref,offset>>:
-    four flat to_pylist() calls (C speed) + one zip, instead of a dict
-    per span — the dominant cost of the UDF boundary at scale."""
+    four flat column reads (``pylist``) + one zip, instead of a dict per
+    span — the dominant cost of the UDF boundary at scale."""
     lst = col.combine_chunks() if hasattr(col, "combine_chunks") else col
     vals = lst.flatten()
     flat = list(zip(
-        vals.field("kind").to_pylist(),
-        vals.field("text").to_pylist(),
-        vals.field("media_ref").to_pylist(),
-        vals.field("offset").to_pylist(),
+        pylist(vals.field("kind")),
+        pylist(vals.field("text")),
+        pylist(vals.field("media_ref")),
+        pylist(vals.field("offset")),
     ))
-    offs = lst.offsets.to_pylist()
-    return [flat[offs[i]:offs[i + 1]] for i in range(len(offs) - 1)]
+    offs = pylist(lst.offsets)
+    base = offs[0]
+    return [flat[offs[i] - base:offs[i + 1] - base] for i in range(len(offs) - 1)]
 
 
 def _encode_span_lists(span_lists: list[list[tuple]]) -> "pa.ListArray":
@@ -114,7 +128,7 @@ def map_docs(docs: DataFrame, fn, schema: T.StructType) -> DataFrame:
     def run(batches):
         for rb in batches:
             names = rb.schema.names
-            ids = rb.column(names.index("doc_id")).to_pylist()
+            ids = pylist(rb.column(names.index("doc_id")))
             raw = _decode_span_lists(rb.column(names.index("spans")))
             rows = [row for did, spans in zip(ids, raw) for row in fn(did, spans)]
             cols = list(zip(*rows)) if rows else [[]] * len(arrow_schema)
@@ -167,7 +181,7 @@ def _extract_sub(batches):
     for rb in batches:
         names = rb.schema.names
         raw = _decode_span_lists(rb.column(names.index("spans")))
-        salted = rb.column(names.index("salted")).to_pylist()
+        salted = pylist(rb.column(names.index("salted")))
         out = [extract_doc(spans, chunk_budget=None) if s else extract_doc(spans)
                for spans, s in zip(raw, salted)]
         yield pa.RecordBatch.from_arrays(

@@ -1,1 +1,1 @@
-"""Runtime: metrics, lineage, resume."""
+"""Runtime: metrics, lineage, resume, the Python worker daemon."""

@@ -5,6 +5,12 @@ per-executor: AQE on (runtime re-plan + skew-join splitting), shuffle
 partitions ~ cores (not the 200 default), Arrow enabled for the
 pandas/Arrow UDF extraction stage, UTC session TZ so results compare
 bit-for-bit against the DuckDB oracle.
+
+Python workers import this package from its source directory: the
+session puts the package root on the executors' ``PYTHONPATH`` and starts
+them through ``runtime.pyworker``, which also keeps pyspark's per-task
+import-cache reset cheap. ``package_zip`` builds the ``--py-files``
+archive for sessions this module did not create.
 """
 
 from __future__ import annotations
@@ -14,6 +20,8 @@ import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def package_zip() -> str:
@@ -65,13 +73,13 @@ def get_spark(app_name: str = "stirling_pdf_spark",
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # workers import the package from its directory, through the
+        # archive-free daemon (see module docstring)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        .config("spark.python.daemon.module", "stirling_pdf_spark.runtime.pyworker")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # ship the package to Python workers (spark-submit --py-files shape);
-    # without this, jobs launched outside the repo root fail with
-    # ModuleNotFoundError in the Arrow UDF stages
-    spark.sparkContext.addPyFile(package_zip())
     return spark

@@ -2,10 +2,17 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pytest
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from stirling_pdf_spark.sources.tables import DOCS_SCHEMA
-from stirling_pdf_spark.operators.extract_pipeline import map_docs
+from stirling_pdf_spark.sources.tables import DOCS_SCHEMA, RAW_SPAN_STRUCT
+from stirling_pdf_spark.operators.extract_pipeline import (
+    _decode_span_lists,
+    map_docs,
+    pylist,
+)
 
 DOCS = [
     ("a", [("text", "1|72.0|90.0|12.0|Helv\tHello", "", 0),
@@ -14,6 +21,30 @@ DOCS = [
     ("b", []),
     ("c", [("text", "2|1.5|2.5|9.0|Mono\tx", None, 0)]),
 ]
+# raw spans with a nullable offset, one of them null
+NULL_OFFSET_DOCS = [
+    ("d", [("meta", "title\tT", None, None), ("text", None, "", 7)]),
+    ("e", []),
+]
+_NULLABLE = T.StructType([
+    T.StructField(f.name, f.dataType, True) for f in RAW_SPAN_STRUCT.fields])
+NULLABLE_DOCS_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType(), False),
+    T.StructField("spans", T.ArrayType(_NULLABLE), False),
+])
+SPANS_TYPE = to_arrow_schema(NULLABLE_DOCS_SCHEMA).field("spans").type
+
+
+def _spans(docs) -> pa.Array:
+    return pa.array([[dict(zip(_NULLABLE.names, s)) for s in spans]
+                     for _, spans in docs], SPANS_TYPE)
+
+
+def _typed(v):
+    """``v`` with the type of every leaf value, so 1 != 1.0 and None != NaN."""
+    if isinstance(v, (list, tuple)):
+        return [_typed(x) for x in v]
+    return type(v), v
 
 
 def test_no_rows_emitted_gives_empty_result_of_schema(spark):
@@ -30,7 +61,34 @@ def test_no_rows_emitted_gives_empty_result_of_schema(spark):
 
 
 def test_span_list_column_round_trips(spark):
-    docs = spark.createDataFrame(DOCS, DOCS_SCHEMA)
+    docs = spark.createDataFrame(DOCS + NULL_OFFSET_DOCS, NULLABLE_DOCS_SCHEMA)
     out = map_docs(docs, lambda did, spans: [(did, spans)], docs.schema)
     got = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in out.collect()}
-    assert got == dict(DOCS)
+    assert got == dict(DOCS + NULL_OFFSET_DOCS)
+
+
+@pytest.mark.parametrize("col", [
+    _spans(DOCS),
+    _spans(NULL_OFFSET_DOCS),
+    pa.chunked_array([_spans(DOCS), _spans(NULL_OFFSET_DOCS)]),
+    _spans(DOCS + NULL_OFFSET_DOCS).slice(1, 3),
+], ids=["plain", "null-offset", "two-chunks", "sliced"])
+def test_decode_matches_to_pylist(col):
+    want = [[tuple(s.values()) for s in spans] for spans in col.to_pylist()]
+    assert _typed(_decode_span_lists(col)) == _typed(want)
+
+
+@pytest.mark.parametrize("col", [
+    pa.array([1, None, 3], pa.int32()),
+    pa.array([1, 2, 3], pa.int64()),
+    pa.array([1.5, None]),
+    pa.array([True, False]),
+    pa.array([True, None]),
+    pa.array(["a", None, ""]),
+    pa.chunked_array([pa.array(["x"]), pa.array([None], pa.string())]),
+    pa.chunked_array([pa.array([4], pa.int64()), pa.array([None], pa.int64())]),
+    pa.chunked_array([], pa.int64()),
+], ids=["int32-null", "int64", "double-null", "bool", "bool-null", "string-null",
+        "chunked-string-null", "chunked-int64-null", "chunked-empty"])
+def test_pylist_matches_to_pylist(col):
+    assert _typed(pylist(col)) == _typed(col.to_pylist())
