@@ -4484,17 +4484,19 @@ def q_retrieval_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north rule's observability surface driven end-to-end:
     run-1 extracts the full corpus through the checkpointed commit
-    protocol (runtime/checkpoint.py — spans, then per-partition
-    metrics, then lineage LAST as the commit point); run-2 under a new
-    run_id resumes against the committed lineage, finds an EMPTY
-    pending set and must write NO metrics row. The gate rolls the
-    metrics table up per run_id — idempotency is visible as the
-    absence of a second run, and the run-1 totals must equal the
-    span-counts oracle summed over every kind."""
+    protocol (runtime/checkpoint.py — spans, then lineage LAST as the
+    commit point); run-2 under a new run_id resumes against the
+    committed lineage, finds an EMPTY pending set and so has no
+    metrics row. The gate rolls the per-partition metrics view
+    (read_metrics, derived from the committed spans) up per run_id —
+    idempotency is visible as the absence of a second run, and the
+    run-1 totals must equal the span-counts oracle summed over every
+    kind."""
     import shutil
     import tempfile
 
     from stirling_pdf_spark.runtime.checkpoint import (
+        read_metrics,
         run_extract_with_checkpoint,
     )
 
@@ -4504,7 +4506,7 @@ def q_extract_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = docs_from_documents_table(spark, sf_dir)
         run_extract_with_checkpoint(spark, docs, base, run_id="run-1")
         run_extract_with_checkpoint(spark, docs, base, run_id="run-2")
-        m = spark.read.parquet(f"{base}/metrics")
+        m = read_metrics(spark, base)
         out = m.groupBy("run_id").agg(
             F.sum("doc_count").cast("long").alias("docs"),
             F.sum("span_count").cast("long").alias("spans"),

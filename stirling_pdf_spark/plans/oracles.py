@@ -5327,11 +5327,11 @@ QUALITY_CLASSIFIER_TRAINED_SCORE = _qc_trained_score_sql()
 
 # ------------------------------------------------- round 5, sixth session
 
-# Run-level rollup of the checkpoint runtime's metrics table
-# (runtime/checkpoint.py): run-1 extracts the full corpus, the
-# immediately repeated run-2 resumes to an EMPTY pending set and must
-# write NO metrics row — idempotency is visible as the absence of a
-# second run_id. docs = every corpus row (extract emits one span row
+# Run-level rollup of the checkpoint runtime's metrics view
+# (runtime/checkpoint.py read_metrics): run-1 extracts the full corpus,
+# the immediately repeated run-2 resumes to an EMPTY pending set and
+# has no metrics row for run-2 — idempotency is visible as the absence
+# of a second run_id. docs = every corpus row (extract emits one span row
 # per doc, empty-span docs included); spans = the span-counts oracle
 # summed over all kinds.
 EXTRACT_LINEAGE_METRICS = f"""

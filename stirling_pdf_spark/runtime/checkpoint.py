@@ -6,20 +6,21 @@ production analogue is an Iceberg table per dataset, where the lineage
 commit below corresponds to an Iceberg snapshot commit):
 
     spans/run_id=<run_id>/    (doc_id, spans, partition_id)
-    metrics/                  (run_id, partition_id, doc_count,
-                               span_count, text_bytes, wall_ms)
     lineage/                  (doc_id, run_id, partition_id, committed_at)
 
 Commit protocol — lineage is written LAST and is the commit point:
   1. pending = docs ANTI JOIN lineage ON doc_id   (resume)
   2. extract -> write spans/run_id=...            (data, not yet visible)
-  3. write metrics                                 (observability)
-  4. write lineage                                 (COMMIT)
-A crash between 2 and 4 leaves orphan span files that are never joined
+  3. write lineage from the written (doc_id, partition_id)   (COMMIT)
+A crash between 2 and 3 leaves orphan span files that are never joined
 by readers (``read_committed_spans`` inner-joins lineage), and the next
 run re-extracts those docs under a new run_id — exactly-once *visible*
 output with at-least-once execution, the same contract Iceberg
 snapshots give.
+
+Per-partition metrics are not stored: ``read_metrics`` derives them
+from the committed span rows, so they cannot disagree with the output
+and a crashed run never shows up in them.
 
 The reference restarts failed jobs from scratch (TaskManager /
 JobExecutorService have no persistence of partial results); this module
@@ -32,7 +33,7 @@ import time
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract_pipeline import extract_spans
@@ -50,21 +51,16 @@ def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def committed_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
+def pending_docs(spark: SparkSession, docs: DataFrame, out_dir: str) -> DataFrame:
+    """Resume filter: drop docs already committed by any previous run;
+    ``docs`` itself when nothing is committed yet. One shuffle on
+    doc_id (the anti-join ignores duplicate lineage keys); at scale the
+    lineage side is a bloom-filter or broadcast candidate when much
+    smaller than the corpus."""
     lineage = _try_read(spark, f"{out_dir}/lineage")
     if lineage is None:
-        return None
-    return lineage.select("doc_id").distinct()
-
-
-def pending_docs(spark: SparkSession, docs: DataFrame, out_dir: str) -> DataFrame:
-    """Resume filter: drop docs already committed by any previous run.
-    One shuffle on doc_id; at scale the lineage side is a bloom-filter
-    or broadcast candidate when much smaller than the corpus."""
-    committed = committed_doc_ids(spark, out_dir)
-    if committed is None:
         return docs
-    return docs.join(committed, "doc_id", "left_anti")
+    return docs.join(lineage.select("doc_id"), "doc_id", "left_anti")
 
 
 def run_extract_with_checkpoint(
@@ -75,31 +71,77 @@ def run_extract_with_checkpoint(
     **extract_kwargs,
 ) -> dict:
     """Execute one resumable extraction run. Returns a summary dict
-    {run_id, docs_done, spans_done, wall_ms, resumed_skipped}."""
+    {run_id, docs_done, spans_done, wall_ms}; the counts are observed
+    on the span write itself."""
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
 
     pending = pending_docs(spark, docs, out_dir)
-    if pending.isEmpty():
-        # nothing uncommitted — crucial for replayed run_ids (e.g. a
-        # re-triggered streaming micro-batch whose lineage already
-        # committed): we must NOT touch the committed span files
+    # pending is docs itself when no lineage exists: nothing is committed,
+    # so nothing needs protecting. With lineage and nothing uncommitted
+    # (e.g. a replayed streaming micro-batch whose lineage already
+    # committed) we must NOT touch the committed span files.
+    if pending is not docs and pending.isEmpty():
         return {"run_id": run_id, "docs_done": 0, "spans_done": 0,
                 "wall_ms": int((time.time() - t0) * 1000)}
+    counts = Observation()
     out = (
         extract_spans(pending, **extract_kwargs)
         .withColumn("partition_id", F.spark_partition_id())
+        .observe(counts, F.count(F.lit(1)).alias("docs"),
+                 F.sum(F.size("spans")).alias("spans"))
     )
     span_path = f"{out_dir}/spans/run_id={run_id}"
     # overwrite: a crashed attempt under the same run_id left orphan
     # files that lineage never committed — safe to replace
     out.write.mode("overwrite").parquet(span_path)
 
-    back = spark.read.parquet(span_path)
-    wall_ms = int((time.time() - t0) * 1000)
+    (spark.read.parquet(span_path)
+     .select("doc_id", "partition_id")
+     .withColumn("run_id", F.lit(run_id))
+     .withColumn("committed_at", F.current_timestamp())
+     .write.mode("append").parquet(f"{out_dir}/lineage"))  # COMMIT
 
-    metrics = (
-        back.groupBy("partition_id")
+    done = counts.get
+    return {
+        "run_id": run_id,
+        "docs_done": done["docs"],
+        "spans_done": done["spans"] or 0,
+        "wall_ms": int((time.time() - t0) * 1000),
+    }
+
+
+def _read_spans(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every span row under ``out_dir``, committed or not, with run_id."""
+    return spark.read.option("basePath", f"{out_dir}/spans").parquet(
+        f"{out_dir}/spans"
+    )
+
+
+def read_committed_spans(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Visible output = span rows whose (doc_id, run_id) is committed in
+    lineage. Orphans from crashed runs are excluded; if a doc was
+    committed twice (re-run after a lineage-write race), the latest
+    committed_at wins."""
+    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    latest = (
+        lineage.groupBy("doc_id")
+        .agg(F.max_by("run_id", "committed_at").alias("run_id"))
+    )
+    return _read_spans(spark, out_dir).join(
+        latest, ["doc_id", "run_id"], "inner").select("doc_id", "spans")
+
+
+def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Per-(run_id, partition_id) docs, spans and UTF-8 text bytes of the
+    committed span rows: a view, so an uncommitted (crashed) run has no
+    row."""
+    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    return (
+        _read_spans(spark, out_dir)
+        .join(lineage.select("doc_id", "run_id"), ["doc_id", "run_id"],
+              "left_semi")
+        .groupBy("run_id", "partition_id")
         .agg(
             F.count("*").alias("doc_count"),
             F.sum(F.size("spans")).alias("span_count"),
@@ -109,59 +151,14 @@ def run_extract_with_checkpoint(
                                                 F.lit(0)),
             )).alias("text_bytes"),
         )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("wall_ms", F.lit(wall_ms))
     )
-    # one row per partition: collect once, write those rows and sum them,
-    # rather than aggregating the span output a second time for the
-    # totals. The rows travel as pandas so that the write goes through
-    # Arrow; a list of Rows would start a second Python worker pool.
-    metric_rows = metrics.toPandas()
-    spark.createDataFrame(metric_rows, metrics.schema) \
-        .write.mode("append").parquet(f"{out_dir}/metrics")
-
-    lineage = (
-        back.select("doc_id", "partition_id")
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("committed_at", F.current_timestamp())
-    )
-    lineage.write.mode("append").parquet(f"{out_dir}/lineage")  # COMMIT
-
-    return {
-        "run_id": run_id,
-        "docs_done": int(metric_rows["doc_count"].sum()),
-        "spans_done": int(metric_rows["span_count"].sum()),
-        "wall_ms": wall_ms,
-    }
-
-
-def read_committed_spans(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Visible output = span rows whose (doc_id, run_id) is committed in
-    lineage. Orphans from crashed runs are excluded; if a doc was
-    committed twice (re-run after a lineage-write race), the latest
-    committed_at wins."""
-    spans = spark.read.option("basePath", f"{out_dir}/spans").parquet(
-        f"{out_dir}/spans"
-    )
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
-    latest = (
-        lineage.groupBy("doc_id")
-        .agg(F.max_by("run_id", "committed_at").alias("run_id"))
-    )
-    return spans.join(latest, ["doc_id", "run_id"], "inner").select(
-        "doc_id", "spans"
-    )
-
-
-def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/metrics")
 
 
 def compact_small_files(spark: SparkSession, path: str,
                         target_file_bytes: int = 128 << 20) -> dict:
     """Bin-packing rewrite of a parquet table directory — the
-    small-files maintenance pass for the append-heavy lineage/metrics
-    tables (each run appends a handful of tiny files; after 10^4 runs
+    small-files maintenance pass for the append-heavy lineage table
+    (each run appends a handful of tiny files; after 10^4 runs
     the listing, not the data, dominates read cost — the same reason
     Iceberg ships rewrite_data_files).
 
@@ -195,20 +192,6 @@ def compact_small_files(spark: SparkSession, path: str,
     shutil.rmtree(old)
     return {"files_before": len(before),
             "files_after": len(parquet_files(path)), "bytes": total}
-
-
-def compact_checkpoint_tables(spark: SparkSession, out_dir: str,
-                              target_file_bytes: int = 128 << 20) -> dict:
-    """Compact the lineage and metrics tables of a checkpointed output
-    root. Span data is left alone — it is partitioned by run_id and
-    committed; rewriting it would invalidate nothing but gains little
-    (extraction already writes full-size files)."""
-    return {
-        "lineage": compact_small_files(
-            spark, f"{out_dir}/lineage", target_file_bytes),
-        "metrics": compact_small_files(
-            spark, f"{out_dir}/metrics", target_file_bytes),
-    }
 
 
 def expire_orphan_runs(spark: SparkSession, out_dir: str) -> list[str]:

@@ -1,5 +1,5 @@
 """Checkpoint/resume semantics: anti-join resume, lineage commit point,
-orphan invisibility, metrics accounting."""
+orphan invisibility, the metrics view."""
 
 from __future__ import annotations
 
@@ -26,6 +26,14 @@ def test_resume_skips_committed(spark, docs, tmp_path):
     r1 = run_extract_with_checkpoint(spark, first_half, out, run_id="r1",
                                      num_partitions=4)
     assert r1["docs_done"] == first_half.count() > 0
+    # a doc whose lineage holds two rows (a re-appended commit): the
+    # resume skips it and readers see it once
+    lineage = spark.read.parquet(f"{out}/lineage")
+    twice = lineage.orderBy("doc_id").first()["doc_id"]
+    lineage.filter(F.col("doc_id") == twice).localCheckpoint() \
+        .write.mode("append").parquet(f"{out}/lineage")
+    assert spark.read.parquet(f"{out}/lineage").filter(
+        F.col("doc_id") == twice).count() == 2
 
     r2 = run_extract_with_checkpoint(spark, docs, out, run_id="r2",
                                      num_partitions=4)
@@ -33,6 +41,7 @@ def test_resume_skips_committed(spark, docs, tmp_path):
 
     committed = read_committed_spans(spark, out)
     assert committed.count() == 40
+    assert committed.filter(F.col("doc_id") == twice).count() == 1
     # committed output == direct full extraction (same spans per doc)
     direct = extract_spans(docs, num_partitions=4)
     joined = committed.alias("a").join(direct.alias("b"), "doc_id")
@@ -89,10 +98,19 @@ def test_kill_and_resume_recovers_crashed_docs(spark, docs, tmp_path):
 
 
 def test_metrics_account_for_all_docs(spark, docs, tmp_path):
+    """read_metrics is a view over the committed spans: its totals equal
+    the run's summary, and a crashed (uncommitted) run has no row."""
+    import os
+
     out = str(tmp_path / "ckpt")
     summary = run_extract_with_checkpoint(spark, docs, out, run_id="r1",
                                           num_partitions=4)
+    assert not os.path.exists(f"{out}/metrics")
+    (extract_spans(docs.limit(5), num_partitions=2)
+     .withColumn("partition_id", F.spark_partition_id())
+     .write.parquet(f"{out}/spans/run_id=crashed"))
     metrics = read_metrics(spark, out)
+    assert metrics.filter(F.col("run_id") == "crashed").count() == 0
     agg = metrics.agg(F.sum("doc_count").alias("d"),
                       F.sum("span_count").alias("s")).collect()[0]
     assert agg["d"] == 40 == summary["docs_done"]
@@ -103,9 +121,26 @@ def test_metrics_account_for_all_docs(spark, docs, tmp_path):
     assert agg["s"] == direct_spans == summary["spans_done"]
     assert metrics.filter(F.col("text_bytes") <= 0).count() == 0
     assert metrics.dtypes == [
-        ("partition_id", "int"), ("doc_count", "bigint"),
-        ("span_count", "bigint"), ("text_bytes", "bigint"),
-        ("run_id", "string"), ("wall_ms", "int")]
+        ("run_id", "string"), ("partition_id", "int"),
+        ("doc_count", "bigint"), ("span_count", "bigint"),
+        ("text_bytes", "bigint")]
+
+
+def test_empty_first_run_then_commit(spark, docs, tmp_path):
+    """A first run over an empty input (no lineage yet) writes and
+    commits nothing visible; the next run commits normally."""
+    out = str(tmp_path / "ckpt")
+    r0 = run_extract_with_checkpoint(spark, docs.limit(0), out, run_id="r0",
+                                     num_partitions=4)
+    assert r0["docs_done"] == 0 == r0["spans_done"]
+    assert read_committed_spans(spark, out).count() == 0
+
+    r1 = run_extract_with_checkpoint(spark, docs, out, run_id="r1",
+                                     num_partitions=4)
+    assert r1["docs_done"] == 40
+    committed = read_committed_spans(spark, out)
+    assert committed.count() == 40
+    assert committed.select("doc_id").distinct().count() == 40
 
 
 def test_corrupt_lineage_raises(spark, docs, tmp_path):
@@ -128,19 +163,16 @@ def test_corrupt_lineage_raises(spark, docs, tmp_path):
 
 
 def test_compact_checkpoint_tables(spark, docs, tmp_path):
-    """Many append-y runs leave many small lineage/metrics files; the
+    """Many append-y runs leave many small lineage files; the
     bin-packing pass rewrites them to few files without changing what
     readers see."""
     import os
 
-    from stirling_pdf_spark.runtime.checkpoint import (
-        compact_checkpoint_tables,
-        read_metrics,
-    )
+    from stirling_pdf_spark.runtime.checkpoint import compact_small_files
 
     out = str(tmp_path / "ckpt")
     num = F.regexp_extract("doc_id", "([0-9]+)", 1).cast("long")
-    for i in range(4):  # 4 runs of 10 docs -> 4 file batches per table
+    for i in range(4):  # 4 runs of 10 docs -> 4 lineage file batches
         run_extract_with_checkpoint(spark, docs.filter(num % 4 == i), out,
                                     run_id=f"r{i}", num_partitions=4)
     before_rows = read_committed_spans(spark, out).count()
@@ -150,15 +182,15 @@ def test_compact_checkpoint_tables(spark, docs, tmp_path):
     lineage_files_before = n_files(f"{out}/lineage")
     assert lineage_files_before > 1
 
-    stats = compact_checkpoint_tables(spark, out)
-    assert stats["lineage"]["files_after"] == 1  # tiny table bin-packs to 1
+    stats = compact_small_files(spark, f"{out}/lineage")
+    assert stats["files_after"] == 1  # tiny table bin-packs to 1
     assert n_files(f"{out}/lineage") == 1 < lineage_files_before
     # reader-visible content unchanged
     assert read_committed_spans(spark, out).count() == before_rows == 40
     assert read_metrics(spark, out).count() == before_metric_rows
     # idempotent: already compact -> no-op
-    again = compact_checkpoint_tables(spark, out)
-    assert again["lineage"]["files_before"] == again["lineage"]["files_after"]
+    again = compact_small_files(spark, f"{out}/lineage")
+    assert again["files_before"] == again["files_after"]
 
 
 def test_expire_orphan_runs(spark, docs, tmp_path):

@@ -112,6 +112,7 @@ def test_extract_anchors_order_href_text_domain(spark):
 def test_lineage_metrics_second_run_writes_nothing(spark, tmp_path):
     from stirling_pdf_spark.corpus.spark_synth import synth_docs_df
     from stirling_pdf_spark.runtime.checkpoint import (
+        read_metrics,
         run_extract_with_checkpoint,
     )
 
@@ -120,7 +121,7 @@ def test_lineage_metrics_second_run_writes_nothing(spark, tmp_path):
     s1 = run_extract_with_checkpoint(spark, docs, out, run_id="r1")
     s2 = run_extract_with_checkpoint(spark, docs, out, run_id="r2")
     assert s1["docs_done"] == 6 and s2["docs_done"] == 0
-    m = spark.read.parquet(f"{out}/metrics")
+    m = read_metrics(spark, out)
     per_run = {r["run_id"]: r["docs"] for r in
                m.groupBy("run_id").agg(F.sum("doc_count").alias("docs"))
                .collect()}
