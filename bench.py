@@ -269,26 +269,44 @@ R3_SHARED = (
     "extract_annotations",
 )
 
-# queries that consume a shared materialized corpus (extract/derive
-# once, fan out — the deployment shape; which corpus varies by gate)
-_RICH_CONSUMERS = ("e17_full_info", "e18_title_inference",
-                   "to_markdown", "to_html", "to_xml")
-_PLAIN_CONSUMERS = ("f6_filter_rotation", "s9_watermark_grid",
-                    "remove_blank_pages")
-_REPEAT_CONSUMERS = ("s9_page_numbers", "s3_split_doc_count",
-                     "s3_split_byte_size")         # ×32 plain repeat
-_RICH_REPEAT_CONSUMERS = ("toc_set_outline",)      # ×32 rich repeat
-_INFO_REPEAT_CONSUMERS = ("e17_page_info",)        # ×32 info repeat
+# gates that consume a shared materialized corpus instead of deriving
+# their own (extract/derive once, fan out — the deployment shape):
+# gate -> key of the corpus_builders() entry it reads
+SHARED_CORPUS = {
+    **dict.fromkeys(("e17_full_info", "e18_title_inference",
+                     "to_markdown", "to_html", "to_xml"), "rich"),
+    **dict.fromkeys(("f6_filter_rotation", "s9_watermark_grid",
+                     "remove_blank_pages"), "plain"),
+    **dict.fromkeys(("s9_page_numbers", "s3_split_doc_count",
+                     "s3_split_byte_size"), "repeat"),   # ×32 plain repeat
+    "toc_set_outline": "rich_repeat",                    # ×32 rich repeat
+    "e17_page_info": "info_repeat",                      # ×32 info repeat
+}
 
 
-def main() -> None:
-    import __spark_entry__ as E
+def corpus_builders() -> dict:
+    """Shared-corpus key -> ``(spark, sf_dir) -> docs`` builder."""
     from stirling_pdf_spark.corpus.spark_synth import (
         docs_from_documents_table,
         docs_info_repeat_from_documents,
         docs_repeat_from_documents,
         docs_rich_from_documents,
         docs_rich_repeat_from_documents,
+    )
+
+    return {
+        "rich": docs_rich_from_documents,
+        "plain": docs_from_documents_table,
+        "repeat": lambda s, d: docs_repeat_from_documents(s, d, 32),
+        "rich_repeat": lambda s, d: docs_rich_repeat_from_documents(s, d, 32),
+        "info_repeat": lambda s, d: docs_info_repeat_from_documents(s, d, 32),
+    }
+
+
+def main() -> None:
+    import __spark_entry__ as E
+    from stirling_pdf_spark.corpus.spark_synth import (
+        docs_from_documents_table,
         synth_docs_df,
     )
     from stirling_pdf_spark.operators.extract_pipeline import extract_spans
@@ -373,40 +391,20 @@ def main() -> None:
         best_of("extract_skew", _skew_extract)
 
     # --- shared derived corpora: materialize once, fan consumers out
-    rich_path = "/tmp/bench_rich_corpus.parquet"
-    plain_path = "/tmp/bench_plain_corpus.parquet"
-    repeat_path = "/tmp/bench_repeat_corpus.parquet"
-    rich_repeat_path = "/tmp/bench_rich_repeat_corpus.parquet"
-    info_repeat_path = "/tmp/bench_info_repeat_corpus.parquet"
     t0 = time.time()
-    docs_rich_from_documents(spark, SF_DIR) \
-        .write.mode("overwrite").parquet(rich_path)
-    docs_from_documents_table(spark, SF_DIR) \
-        .write.mode("overwrite").parquet(plain_path)
-    docs_repeat_from_documents(spark, SF_DIR, 32) \
-        .write.mode("overwrite").parquet(repeat_path)
-    docs_rich_repeat_from_documents(spark, SF_DIR, 32) \
-        .write.mode("overwrite").parquet(rich_repeat_path)
-    docs_info_repeat_from_documents(spark, SF_DIR, 32) \
-        .write.mode("overwrite").parquet(info_repeat_path)
+    paths = {}
+    for key, build in corpus_builders().items():
+        paths[key] = f"/tmp/bench_{key}_corpus.parquet"
+        build(spark, SF_DIR).write.mode("overwrite").parquet(paths[key])
     timings["derive_corpora"] = round(time.time() - t0, 3)
-    rich = spark.read.parquet(rich_path)
-    plain = spark.read.parquet(plain_path)
-    repeat = spark.read.parquet(repeat_path)
-    rich_repeat = spark.read.parquet(rich_repeat_path)
-    info_repeat = spark.read.parquet(info_repeat_path)
+    corpora = {key: spark.read.parquet(p) for key, p in paths.items()}
 
     # --- headline relational / training queries, interleaved rounds
     qs = E.queries()
     for _ in range(ROUNDS):
         for name in BENCH_QUERIES:
-            shared = {**dict.fromkeys(_RICH_CONSUMERS, rich),
-                      **dict.fromkeys(_PLAIN_CONSUMERS, plain),
-                      **dict.fromkeys(_REPEAT_CONSUMERS, repeat),
-                      **dict.fromkeys(_RICH_REPEAT_CONSUMERS, rich_repeat),
-                      **dict.fromkeys(_INFO_REPEAT_CONSUMERS, info_repeat)}
-            if name in shared:
-                fn = lambda n=name, d=shared[name]: \
+            if name in SHARED_CORPUS:
+                fn = lambda n=name, d=corpora[SHARED_CORPUS[name]]: \
                     qs[n](spark, SF_DIR, docs=d).count()
             else:
                 fn = lambda n=name: qs[n](spark, SF_DIR).count()

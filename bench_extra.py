@@ -1,8 +1,8 @@
 """Per-query isolation bench (guide §1.4): times individual declared
 queries with the SAME methodology as bench.py (.count(), staged
-releases, shared corpora for the consumer gates) without touching the
-frozen bench.py. Also dumps .explain("formatted") for each query when
---explain-dir is given.
+releases, shared corpora for the consumer gates), importing bench.py's
+query list and gate -> shared-corpus table. Also dumps
+.explain("formatted") for each query when --explain-dir is given.
 
 Usage:
     python bench_extra.py q1 q2 ...            # time named queries
@@ -10,7 +10,7 @@ Usage:
     python bench_extra.py --explain-dir plans/r06 --suffix before name
     python bench_extra.py --all                # every bench.py query
 
-Env mirrors bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
+Env as bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
@@ -23,17 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-_RICH_CONSUMERS = ("e17_full_info", "e18_title_inference",
-                   "to_markdown", "to_html", "to_xml")
-_PLAIN_CONSUMERS = ("f6_filter_rotation", "s9_watermark_grid",
-                    "remove_blank_pages")
-_REPEAT_CONSUMERS = ("s9_page_numbers", "s3_split_doc_count",
-                     "s3_split_byte_size")
-_RICH_REPEAT_CONSUMERS = ("toc_set_outline",)
-_INFO_REPEAT_CONSUMERS = ("e17_page_info",)
+from bench import BENCH_QUERIES, CPUS, SF_DIR, SHARED_CORPUS, corpus_builders
 
 
 def main() -> None:
@@ -48,13 +38,6 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as E
-    from stirling_pdf_spark.corpus.spark_synth import (
-        docs_from_documents_table,
-        docs_info_repeat_from_documents,
-        docs_repeat_from_documents,
-        docs_rich_from_documents,
-        docs_rich_repeat_from_documents,
-    )
     from stirling_pdf_spark.runtime.staging import release_staged
     from stirling_pdf_spark.session import get_spark
 
@@ -64,37 +47,24 @@ def main() -> None:
     qs = E.queries()
     names = list(args.names)
     if args.all:
-        names = [n for n in qs if n in _bench_query_names()]
+        names = list(BENCH_QUERIES)
     unknown = [n for n in names if n not in qs]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
     # shared corpora, built lazily only when a consumer is requested
+    builders = corpus_builders()
     shared_cache: dict[str, object] = {}
 
     def shared_for(name: str):
-        for group, builder, path in (
-            (_RICH_CONSUMERS, docs_rich_from_documents,
-             "/tmp/bx_rich.parquet"),
-            (_PLAIN_CONSUMERS, docs_from_documents_table,
-             "/tmp/bx_plain.parquet"),
-            (_REPEAT_CONSUMERS,
-             lambda s, d: docs_repeat_from_documents(s, d, 32),
-             "/tmp/bx_repeat.parquet"),
-            (_RICH_REPEAT_CONSUMERS,
-             lambda s, d: docs_rich_repeat_from_documents(s, d, 32),
-             "/tmp/bx_rich_repeat.parquet"),
-            (_INFO_REPEAT_CONSUMERS,
-             lambda s, d: docs_info_repeat_from_documents(s, d, 32),
-             "/tmp/bx_info_repeat.parquet"),
-        ):
-            if name in group:
-                if path not in shared_cache:
-                    builder(spark, SF_DIR).write.mode("overwrite") \
-                        .parquet(path)
-                    shared_cache[path] = spark.read.parquet(path)
-                return shared_cache[path]
-        return None
+        key = SHARED_CORPUS.get(name)
+        if key is None:
+            return None
+        if key not in shared_cache:
+            path = f"/tmp/bx_{key}.parquet"
+            builders[key](spark, SF_DIR).write.mode("overwrite").parquet(path)
+            shared_cache[key] = spark.read.parquet(path)
+        return shared_cache[key]
 
     timings: dict[str, float] = {}
     for rnd in range(args.rounds):
@@ -129,14 +99,6 @@ def main() -> None:
                       "total": round(sum(timings.values()), 3),
                       "rounds": args.rounds, "sf_dir": SF_DIR}))
     spark.stop()
-
-
-def _bench_query_names() -> tuple:
-    import re
-    src = open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "bench.py")).read()
-    block = src.split("BENCH_QUERIES = (", 1)[1].split(")", 1)[0]
-    return tuple(re.findall(r'"([^"]+)"', block))
 
 
 if __name__ == "__main__":

@@ -58,14 +58,28 @@ def shingles_expr(n: int = 2, words: str = "w"):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def parallelize(df: DataFrame, factor: int = 1) -> DataFrame:
+def parallelize(df: DataFrame) -> DataFrame:
     """Spread a (possibly single-partition) input across the cluster
     before compute-heavy narrow stages. Small parquet inputs arrive as
     ONE split (files.maxPartitionBytes), which would serialize every
     downstream map — the kind of bug that's invisible at 60k rows and
     fatal at 100 TB when one file/partition is hot."""
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
-    return df.repartition(target)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def fan_out(df: DataFrame, *cols: str) -> DataFrame:
+    """Spread a small-scan input across the session's parallelism
+    before a compute-heavy Python stage. The bench tables are single
+    small parquet files (one row group — an unsplittable ONE-task
+    scan), so a mapInPandas/mapInArrow directly over them runs
+    serially; hash-repartition on ``cols`` (deterministic under task
+    retry, unlike round-robin) unless the input is already at least
+    that parallel (at 100 TB the scan has thousands of splits and a
+    second shuffle would be pure overhead)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= par:
+        return df
+    return df.repartition(par, *[F.col(c) for c in cols])
 
 
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:

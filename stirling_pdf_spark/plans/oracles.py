@@ -1,5 +1,11 @@
 """DuckDB oracle SQL for every gated query in ``__spark_entry__``.
 
+Naming rule: the oracle of gate ``<name>`` is the module constant
+``<NAME>`` (the gate name upper-cased); ``__spark_entry__.oracle_sql``
+looks it up by that name and raises when it is missing. Gates that
+must equal another gate's result exactly alias its constant (see
+"shared oracles" at the end).
+
 Each statement is the independent ANSI-SQL re-derivation of the Spark
 query's semantics over the same parquet views (region nation customer
 supplier part orders lineitem events documents embeddings). The driver
@@ -263,7 +269,7 @@ SELECT source,
 FROM s
 """
 
-F4_SIZE_CLASS = f"""
+F4_SIZE_CLASS_FILTER = f"""
 SELECT CASE WHEN p_size <= 5 THEN 'A6'
             WHEN p_size <= 11 THEN 'A5'
             WHEN p_size <= 17 THEN 'A4'
@@ -338,14 +344,6 @@ FROM documents
 WHERE len(regexp_extract_all(text, 'ta[a-z]+')) > 0
 """
 
-E3_DOC_CLASSIFICATION = """
-SELECT CASE WHEN n_chars < 20 THEN 'EMPTY'
-            WHEN n_chars < 200 THEN 'SHORT'
-            ELSE 'TEXT' END AS doc_class,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM documents GROUP BY 1
-"""
-
 EVENTS_HOURLY_ROLLUP = f"""
 SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
        event_type,
@@ -401,7 +399,7 @@ WHERE common * 100 >= {JACCARD_THRESHOLD_PCT} * (sa.n + sb.n - common)
 """
 
 
-DEDUP_NGRAM_JACCARD_MAXDF = f"""
+DEDUP_JACCARD_MAXDF = f"""
 WITH {_SHINGLES_CTE},
 sz AS (SELECT id, CAST(len(s) AS BIGINT) AS n FROM sh),
 x AS (SELECT id, unnest(s) AS shingle FROM sh),
@@ -2323,7 +2321,7 @@ S6_CUSTOM_ORDER_EXTRACT = _REPEAT_DOCS_CTE + """
 )
 """ + _SLOT_LINES
 
-E3_DOC_CLASS_DIRECT = _REPEAT_DOCS_CTE + """
+E3_DOC_CLASSIFICATION = _REPEAT_DOCS_CTE + """
 -- media draws land on every COMPLETED 3rd page (synth_from_text), so
 -- a doc classifies MIXED iff it completes >= 3 pages
 SELECT did AS doc_id,
@@ -5166,7 +5164,7 @@ FROM v
 """
 
 
-QUALITY_ENSEMBLE_VOTE = _quality_ensemble_sql()
+QUALITY_ENSEMBLE = _quality_ensemble_sql()
 
 
 def _winnow_fps_cte(k: int = 3, w: int = 4) -> str:
@@ -6905,7 +6903,7 @@ FROM a JOIN r ON a.domain = r.domain AND r.rn = 1
 """
 
 
-SKEW_REPORT = """
+EVENTS_SKEW_REPORT = """
 WITH c AS (
   SELECT CAST(user_id AS VARCHAR) AS key,
          CAST(count(*) AS BIGINT) AS cnt
@@ -6999,7 +6997,7 @@ FROM d
 """
 
 
-SITEMAP_ENTRIES = """
+SITEMAP_INGEST = """
 WITH d AS (SELECT doc_id AS n, doc_id % 5 AS k FROM documents),
 t AS (
   SELECT 'dom' || k AS domain, CAST(0 AS BIGINT) AS pos,
@@ -7687,7 +7685,7 @@ FROM k
 # mutual-kNN pair mining over the even/odd vec_id bipartition: the
 # same float64 cosine + (cos DESC, id ASC) rank determinism as
 # ANN_COSINE_TOPK, windowed in BOTH directions over one scored frame
-EMB_MUTUAL_KNN = f"""
+EMB_MARGIN_PAIRS = f"""
 WITH {_EMB_CTE},
 a AS (SELECT id, v FROM e WHERE id % 2 = 0),
 b AS (SELECT id, v FROM e WHERE id % 2 = 1),
@@ -7708,3 +7706,21 @@ r AS (
 SELECT id_a, id_b, rank_ab, rank_ba FROM r
 WHERE rank_ab <= 3 AND rank_ba <= 3
 """
+
+
+# ------------------------------------------------------- shared oracles
+# gates whose result must equal another gate's exactly share its SQL
+
+# streaming_pack reuses the batch packer's oracle verbatim — the
+# batch/stream parity statement
+STREAMING_PACK = PACK_SEQUENCES
+# the streaming rollup must equal the batch rollup exactly — same
+# oracle, different engine path
+STREAMING_WINDOW_ROLLUP = EVENTS_HOURLY_ROLLUP
+# ingest + restart + batch-resume must reproduce one-shot batch
+# extraction exactly; scale preserves every layout decision and
+# single-page concatenation preserves reading order; page-major
+# row-major poster tiling preserves reading order exactly
+STREAMING_INGEST_RESUME = EXTRACT_TEXT_SPANS
+S7_SCALE_SINGLE_EXTRACT = EXTRACT_TEXT_SPANS
+S7_POSTER_EXTRACT = EXTRACT_TEXT_SPANS

@@ -1,135 +1,50 @@
-"""Driver-contract guards for __spark_entry__ — pure Python, no Spark.
+"""Registry contract for __spark_entry__ — pure Python, no Spark.
 
-The driver records only the FIRST 50 queries() entries, compares each
-against oracle_sql() by sorted-column value hash, and smoke-runs
-entry(). These tests keep the registry honest without a cluster.
+A gate is declared once, as a module-level ``q_<name>`` callable;
+``queries()`` collects them and ``oracle_sql()`` pairs each with the
+``oracles.<NAME>`` constant, raising for a gate that has none unless it
+is in ``ROWS_ONLY``. These tests pin that rule, the gate signature, and
+that every gate name written as a free string elsewhere (bench tables,
+pytest gate lists) names a registered gate.
 """
 
 from __future__ import annotations
 
 import inspect
 
+import pytest
+
 import __spark_entry__ as E
-
-ROWS_ONLY = {"extract_synth_corpus"}
-
-# gates that never had a driver row before round 5, plus gates whose
-# operators CHANGED in round 5 -- they must sit in the 50-entry window
-# so the driver records them this round.  The window holds exactly 50
-# slots and round 5 produced far more than 50 new gates, so the final
-# window keeps the NEWEST never-gated entries; overflow moves to
-# R5_REPLICA_ONLY below (replica-green via scripts/check_queries.py,
-# and for the changed-in-r5 five, driver-green in r4 before the
-# low-severity ADVICE fixes that pytest covers directly).
-R5_NEW_OR_CHANGED = [
-    # new in r5
-    "auto_redact", "signature_state", "add_image_stamp",
-    "dedup_image_dhash", "to_html", "to_html_tables", "ann_ivf_nprobe3",
-    "edit_text", "form_fill_unlock", "add_comments", "img_to_pdf",
-    "form_fields_csv", "to_xml", "to_xml_tables", "semdedup_prune",
-    "domain_mix_sample", "vocab_topk", "bigram_lm_fit", "auto_rotate",
-    "bm25_topk", "events_sessionize",
-    # r5 continuation session (never had a driver row)
-    "extract_csv", "analysis_font_info", "url_normalize",
-    "fix_encoding", "dedup_image_ahash", "gopher_quality",
-    "lm_quality_partition", "streaming_dedup",
-    # r5 third session (never had a driver row)
-    "to_xlsx",
-    # r5 fourth session (never had a driver row)
-    "to_epub", "to_docx", "pack_sequences", "multimodal_decode_wav",
-    "ann_pq_topk", "to_pptx", "ann_ivfpq_topk", "dedup_substring_cov",
-    "text_nfc_normalize", "multimodal_probe_mp4",
-    "corpus_hash_split", "corpus_to_jsonl", "multimodal_decode_errors",
-]
-
-# rotated below the boundary when the ninth-session gates took the
-# top slots: replica-green via scripts/check_queries.py; the five
-# changed-in-r5 operators were driver-green in r4 and their r5 fixes
-# (jpeg fill bytes, long offsets, sanitize slots, markdown-ingest
-# inline protection) are covered by dedicated pytest cases
-R5_REPLICA_ONLY = [
-    "streaming_window_rollup", "timestamp_state",
-    "multimodal_decode_jpeg", "s9_watermark_grid", "s11_flatten_forms",
-    "sanitize_pdf", "md_to_pdf_ingest",
-]
-
-# born below the boundary: the r5 window is saturated (50 slots, all
-# needing their first r5 driver row); replica-green via
-# scripts/check_queries.py and first candidates for the r6 window
-R6_WINDOW_CANDIDATES = ["bpe_pair_counts", "pipeline_training_corpus",
-                        "lang_balance_sample", "dedup_incremental",
-                        "pack_seq_boundaries",
-                        # r5 fifth session
-                        "bpe_train_table", "bpe_encode_tokens",
-                        "quality_classifier_score",
-                        "audio_silence_trim",
-                        "fingerprint_winnow", "winnow_match_pairs",
-                        "corpus_stats_report",
-                        "quality_classifier_train",
-                        "quality_classifier_trained_score",
-                        "streaming_pack",
-                        # r5 sixth session
-                        "extract_lineage_metrics", "extract_span_diff",
-                        "dedup_keep_best", "url_blocklist_filter",
-                        "html_anchor_extract", "retrieval_mmr",
-                        "token_budget_select", "fim_transform",
-                        "emb_kmeans", "text_collapse_lines",
-                        "kmeans_balanced_sample", "interleave_records",
-                        "extract_parallelism_parity",
-                        "text_dehyphenate", "dedup_minhash_report",
-                        "media_caption_pairs", "dedup_cluster_sizes",
-                        "image_size_filter",
-                        "dedup_incremental_minhash", "web_pagerank",
-                        "quality_decile_split", "domain_quality_priors",
-                        "dedup_normalized_exact", "web_hits",
-                        "events_funnel", "events_cohort",
-                        # r5 seventh session
-                        "events_dau_mau", "text_readability",
-                        "chat_format", "html_meta_robots",
-                        "section_chunks", "events_asof",
-                        "png_text_meta", "events_range_join",
-                        "events_pivot", "events_rolling",
-                        "audio_energy", "corpus_snapshot_diff",
-                        "streaming_join",
-                        # r5 eighth session
-                        "warc_ingest", "image_exif_meta",
-                        "sketch_hll_distinct", "bloom_decontaminate",
-                        "zorder_manifest",
-                        # r5 tenth session
-                        "multimodal_decode_tiff",
-                        "multimodal_tiff_pages", "tiff_to_pdf",
-                        "dedup_title_levenshtein", "web_triangles",
-                        "web_clustering_coeff", "text_homoglyph",
-                        "domain_prefix",
-                        # r5 eleventh session
-                        "dedup_image_phash", "image_quality_stats",
-                        "phrase_search", "bm25_hard_negatives",
-                        "tfidf_cosine_pairs", "audio_downsample",
-                        "containment_pairs", "lm_trigram_backoff",
-                        "html_justext", "sketch_cms_estimate",
-                        "html_interleaved", "web_cocitation",
-                        "corpus_shuffle_order", "events_anomaly",
-                        "image_dedup_keep", "quality_ensemble",
-                        "events_rollup_cube", "text_ngram_novelty",
-                        # r5 twelfth session
-                        "emb_margin_pairs"]
+import bench
+from test_extract_gates import MAP_DOCS_GATES
 
 
-def test_new_round5_gates_sit_inside_the_driver_window():
-    order = list(E.queries())
-    window = set(order[:50])
-    outside = [n for n in R5_NEW_OR_CHANGED if n not in window]
-    assert not outside, f"new gates outside the 50-row window: {outside}"
+def test_every_gate_has_an_oracle_except_rows_only():
+    assert len(E.queries()) == 274
+    assert set(E.queries()) - set(E.oracle_sql()) == E.ROWS_ONLY
 
 
-def test_rotated_out_gates_are_tracked_not_lost():
-    order = list(E.queries())
-    window = set(order[:50])
-    registry = set(order)
-    for name in R5_REPLICA_ONLY + R6_WINDOW_CANDIDATES:
-        assert name in registry, f"tracked gate vanished: {name}"
-        assert name not in window, (
-            f"{name} is in the window; move it back to R5_NEW_OR_CHANGED")
+def test_gate_without_oracle_constant_raises(monkeypatch):
+    monkeypatch.setattr(E, "q_probe", lambda spark, sf_dir: None,
+                        raising=False)
+    assert "probe" in E.queries()
+    with pytest.raises(LookupError, match="probe"):
+        E.oracle_sql()
+
+
+def test_gate_names_outside_the_registry_are_registered():
+    registry = set(E.queries())
+    # extract_synth is bench.py's own extraction timing, not a gate
+    named = {
+        "bench.BENCH_QUERIES": set(bench.BENCH_QUERIES),
+        "bench.R3_SHARED": set(bench.R3_SHARED) - {"extract_synth"},
+        "bench.SHARED_CORPUS": set(bench.SHARED_CORPUS),
+        "test_extract_gates.MAP_DOCS_GATES": set(MAP_DOCS_GATES),
+    }
+    unknown = {k: sorted(v - registry) for k, v in named.items()
+               if v - registry}
+    assert not unknown, unknown
+    assert set(bench.SHARED_CORPUS.values()) <= set(bench.corpus_builders())
 
 
 def test_query_callables_accept_spark_and_sf_dir():
