@@ -6,13 +6,21 @@ Shape (SURVEY.md §3.1 "Spark equivalent"), one plan every doc takes:
                    doc <= salt_threshold spans -> one row, bucket 0
                    larger doc -> one row per reading-order segment
               -> repartition(doc_id, bucket)
-              -> mapInArrow(_extract_sub: kernel per row; unsalted rows
-                            budgeted, segment rows unbudgeted)
+              -> mapInArrow(_extract_sub: the rows of each batch in
+                   slices of at most DEFAULT_SALT_THRESHOLD spans, cut at
+                   row boundaries, through kernel.extract.extract_docs;
+                   unsalted rows budgeted, segment rows unbudgeted)
               -> groupBy(doc_id) applyInArrow(_finish_doc: an unsalted doc
                    passes through; a salted doc's segments concatenate
                    in order, the 2000-chunk budget re-applied and order
                    renumbered, in _reassemble)
-    -> write spans_out + metrics + lineage
+
+The stage body lays out every doc of a slice on Arrow/numpy columns; a
+doc the batch kernel does not take (html, rules, annotations, form
+fields, page state, unknown kinds, or a header Arrow would not parse
+as Python does) is decoded, run through ``extract_doc`` and encoded per
+doc (``_extract_routed``), and its error names its doc_id.
+``runtime.checkpoint`` writes the result and commits its lineage.
 
 Why salting: one 1500-page PDF in a hash-partitioned batch of 1-page
 docs is exactly the skew the reference never faces (one doc == one HTTP
@@ -25,8 +33,8 @@ re-applied — bit-identical to the unsalted kernel output. The segment
 rule has one owner, ``kernel.extract.segment_of``; the keying below is
 built from its declaration and computes each span's segment once.
 
-All per-document work happens inside Arrow stages with columnar span
-decode/encode (no per-row Spark Python UDFs); the shuffles are the
+All per-document work happens inside Arrow stages (no per-row Spark
+Python UDFs); the shuffles are the
 repartition by (doc_id, bucket) and the regroup by doc_id, both on keys
 that are unique or salted — no hot keys by construction.
 
@@ -40,12 +48,13 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..kernel.extract import FIXED_SEGMENTS, PAGE_KINDS, extract_doc
+from ..kernel.extract import (
+    FIXED_SEGMENTS, PAGE_KINDS, SPAN_TYPE, extract_doc, extract_docs)
 from ..kernel.model import MAX_CHUNKS_PER_DOC
 
 OUT_SPAN_STRUCT = T.StructType([
@@ -140,39 +149,63 @@ def map_docs(docs: DataFrame, fn, schema: T.StructType) -> DataFrame:
     return docs.repartition(n, "doc_id").mapInArrow(run, schema)
 
 
-def _segment(span: Column, pages_per_bucket: int) -> Column:
-    """``kernel.extract.segment_of`` as a Spark expression."""
-    kind = span["kind"]
-    page = F.substring_index(span["text"], "|", 1).cast("long")
-    seg = F.when(kind.isin(*PAGE_KINDS), F.floor(page / pages_per_bucket))
-    for k, fixed in FIXED_SEGMENTS.items():
-        seg = seg.when(kind == k, F.lit(fixed))
-    return seg.otherwise(F.lit(0))
+def _segment_sql(pages_per_bucket: int) -> str:
+    """``kernel.extract.segment_of`` of raw span ``s`` as Spark SQL. A
+    page field that does not parse keys to segment 0, so its doc reaches
+    the kernel, whose error names the doc, on both routes."""
+    kinds = ", ".join(f"'{k}'" for k in PAGE_KINDS)
+    page = "COALESCE(TRY_CAST(substring_index(s.text, '|', 1) AS BIGINT), 0)"
+    fixed = " ".join(f"WHEN s.kind = '{k}' THEN {seg}"
+                     for k, seg in FIXED_SEGMENTS.items())
+    return (f"CASE WHEN s.kind IN ({kinds}) THEN floor({page} / {pages_per_bucket}) "
+            f"{fixed} ELSE 0 END")
 
 
 def _key(docs: DataFrame, salt_threshold: int, pages_per_bucket: int) -> DataFrame:
     """docs -> (doc_id, bucket, salted, spans): a doc at or under the
     threshold stays one unsalted row in bucket 0; a larger doc becomes
-    one salted row per reading-order segment it has spans in."""
-    tagged = docs.select(
-        "doc_id", "spans",
-        F.when(F.size("spans") > salt_threshold, F.transform(
-            "spans", lambda s: F.struct(
-                _segment(s, pages_per_bucket).alias("seg"), s.alias("span")),
-        )).alias("tagged"),
-    )
-    whole = F.array(F.struct(F.lit(0).cast("long").alias("bucket"),
-                             F.lit(False).alias("salted"),
-                             F.col("spans").alias("spans")))
-    segments = F.transform(
-        F.array_distinct(F.transform("tagged", lambda x: x["seg"])),
-        lambda b: F.struct(
-            b.alias("bucket"), F.lit(True).alias("salted"),
-            F.transform(F.filter("tagged", lambda x: x["seg"] == b),
-                        lambda x: x["span"]).alias("spans")),
-    )
-    rows = F.when(F.col("tagged").isNull(), whole).otherwise(segments)
-    return tagged.select("doc_id", F.inline(rows))
+    one salted row per reading-order segment it has spans in. One SQL
+    expression, so planning costs no per-expression driver round trips;
+    ``tagged`` (each span with its segment, computed once) is bound as a
+    lambda variable."""
+    tagged = (f"array(transform(spans, s -> struct({_segment_sql(pages_per_bucket)} "
+              "AS seg, s AS span)))")
+    segments = ("transform(array_distinct(transform(tagged, x -> x.seg)), "
+                "b -> struct(b AS bucket, true AS salted, "
+                "transform(filter(tagged, x -> x.seg = b), x -> x.span) AS spans))")
+    whole = "array(struct(CAST(0 AS BIGINT) AS bucket, false AS salted, spans AS spans))"
+    return docs.selectExpr(
+        "doc_id",
+        f"inline(CASE WHEN size(spans) > {salt_threshold} "
+        f"THEN flatten(transform({tagged}, tagged -> {segments})) ELSE {whole} END)")
+
+
+def _slices(lengths: list[int], salted: list[bool]):
+    """(start, stop) row ranges of one batch for the kernel: consecutive
+    rows with the same salted flag and at most DEFAULT_SALT_THRESHOLD
+    spans in all, a larger row alone."""
+    start, size = 0, 0
+    for i, (n, s) in enumerate(zip(lengths, salted)):
+        if i > start and (s != salted[start] or size + n > DEFAULT_SALT_THRESHOLD):
+            yield start, i
+            start, size = i, 0
+        size += n
+    if start < len(lengths):
+        yield start, len(lengths)
+
+
+def _extract_routed(ids: "pa.Array", spans: "pa.ListArray", chunk_budget):
+    """``per_doc`` of ``extract_docs``: the docs at the given positions
+    through ``extract_doc``, an error naming the doc_id."""
+    def run(docs):
+        out = []
+        for i, raw in zip(docs.tolist(), _decode_span_lists(spans.take(docs))):
+            try:
+                out.append(extract_doc(raw, chunk_budget=chunk_budget))
+            except Exception as exc:
+                raise ValueError(f"doc_id {ids[i].as_py()!r}: {exc!r}") from exc
+        return _encode_span_lists(out)
+    return run
 
 
 def _extract_sub(batches):
@@ -180,15 +213,18 @@ def _extract_sub(batches):
     # per doc, applied at reassembly (see module docstring)
     for rb in batches:
         names = rb.schema.names
-        raw = _decode_span_lists(rb.column(names.index("spans")))
-        salted = pylist(rb.column(names.index("salted")))
-        out = [extract_doc(spans, chunk_budget=None) if s else extract_doc(spans)
-               for spans, s in zip(raw, salted)]
+        ids = rb.column(names.index("doc_id"))
+        salted = rb.column(names.index("salted"))
+        spans = rb.column(names.index("spans"))
+        flags = pylist(salted)
+        out = [pa.array([], pa.list_(SPAN_TYPE))]
+        for a, b in _slices(pylist(pc.list_value_length(spans).fill_null(0)), flags):
+            budget = None if flags[a] else MAX_CHUNKS_PER_DOC
+            part = spans.slice(a, b - a)
+            out.append(extract_docs(part, budget, _extract_routed(
+                ids.slice(a, b - a), part, budget)))
         yield pa.RecordBatch.from_arrays(
-            [rb.column(names.index("doc_id")),
-             rb.column(names.index("bucket")),
-             rb.column(names.index("salted")),
-             _encode_span_lists(out)],
+            [ids, rb.column(names.index("bucket")), salted, pa.concat_arrays(out)],
             names=["doc_id", "bucket", "salted", "spans"],
         )
 

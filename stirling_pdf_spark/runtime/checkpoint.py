@@ -39,6 +39,9 @@ from pyspark.sql import functions as F
 from ..operators.extract_pipeline import extract_spans
 
 
+_LINEAGE_KEYS = "doc_id string, partition_id int"
+
+
 def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
     """The table at ``path``, or None when it does not exist yet (first
     run). Any other failure — e.g. a corrupt lineage file — raises:
@@ -96,8 +99,8 @@ def run_extract_with_checkpoint(
     # files that lineage never committed — safe to replace
     out.write.mode("overwrite").parquet(span_path)
 
-    (spark.read.parquet(span_path)
-     .select("doc_id", "partition_id")
+    # the known schema: inferring it would read the footers a second time
+    (spark.read.schema(_LINEAGE_KEYS).parquet(span_path)
      .withColumn("run_id", F.lit(run_id))
      .withColumn("committed_at", F.current_timestamp())
      .write.mode("append").parquet(f"{out_dir}/lineage"))  # COMMIT

@@ -3,6 +3,8 @@ orphan invisibility, the metrics view."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -124,6 +126,19 @@ def test_metrics_account_for_all_docs(spark, docs, tmp_path):
         ("run_id", "string"), ("partition_id", "int"),
         ("doc_count", "bigint"), ("span_count", "bigint"),
         ("text_bytes", "bigint")]
+
+
+def test_lineage_file_schema(spark, docs, tmp_path):
+    """The lineage files keep their schema whether the commit reads the
+    written (doc_id, partition_id) with an inferred or a given schema."""
+    out = str(tmp_path / "ckpt")
+    run_extract_with_checkpoint(spark, docs, out, run_id="r1")
+    lineage = pq.read_table(f"{out}/lineage")
+    assert lineage.schema.remove_metadata() == pa.schema([
+        ("doc_id", pa.string()), ("partition_id", pa.int32()),
+        pa.field("run_id", pa.string(), nullable=False),
+        pa.field("committed_at", pa.timestamp("ns"), nullable=False)])
+    assert lineage.num_rows == 40
 
 
 def test_empty_first_run_then_commit(spark, docs, tmp_path):
