@@ -10,10 +10,12 @@ Shape (SURVEY.md §3.1 "Spark equivalent"), one plan every doc takes:
                    slices of at most DEFAULT_SALT_THRESHOLD spans, cut at
                    row boundaries, through kernel.extract.extract_docs;
                    unsalted rows budgeted, segment rows unbudgeted)
-              -> groupBy(doc_id) applyInArrow(_finish_doc: an unsalted doc
-                   passes through; a salted doc's segments concatenate
-                   in order, the 2000-chunk budget re-applied and order
-                   renumbered, in _reassemble)
+              -> repartition(doc_id), sortWithinPartitions(doc_id)
+              -> mapInArrow(_finish_docs: runs of unsalted rows pass
+                   through as batch slices; a salted doc's segments,
+                   which may straddle batches, concatenate in order, the
+                   2000-chunk budget re-applied and order renumbered, in
+                   _reassemble)
 
 The stage body lays out every doc of a slice on Arrow/numpy columns; a
 doc the batch kernel does not take (html, rules, annotations, form
@@ -33,10 +35,12 @@ re-applied — bit-identical to the unsalted kernel output. The segment
 rule has one owner, ``kernel.extract.segment_of``; the keying below is
 built from its declaration and computes each span's segment once.
 
-All per-document work happens inside Arrow stages (no per-row Spark
-Python UDFs); the shuffles are the
-repartition by (doc_id, bucket) and the regroup by doc_id, both on keys
-that are unique or salted — no hot keys by construction.
+All per-document work happens inside Arrow stages (no per-row or
+per-group Spark Python UDFs: each Python call takes a whole Arrow
+batch); the shuffles are the repartition by (doc_id, bucket) and the
+regroup by doc_id, both on keys that are unique or salted — no hot keys
+by construction. The regroup's partition count is left to
+``spark.sql.shuffle.partitions`` and AQE coalescing.
 
 ``map_docs`` is the one per-document Arrow stage every other raw-docs
 operator (exports, tables, search, elements, comments, edit-text) runs
@@ -67,6 +71,7 @@ SPANS_OUT_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("spans", T.ArrayType(OUT_SPAN_STRUCT), False),
 ])
+_SPANS_OUT_ARROW = to_arrow_schema(SPANS_OUT_SCHEMA)
 _SUB_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("bucket", T.LongType(), False),
@@ -229,12 +234,57 @@ def _extract_sub(batches):
         )
 
 
-def _finish_doc(group: pa.Table) -> pa.Table:
-    """One doc_id's rows -> its spans_out row: an unsalted doc passes
-    through, a salted doc is reassembled."""
-    if pc.any(group.column("salted")).as_py():
-        return _reassemble(group)
-    return group.select(["doc_id", "spans"])
+def _runs(ids: list, salted: list[bool]):
+    """(start, stop) row ranges of one doc_id-sorted batch: maximal runs
+    of unsalted rows, and the rows of one salted doc."""
+    start = 0
+    for i in range(1, len(ids)):
+        if salted[i] != salted[start] or (salted[i] and ids[i] != ids[start]):
+            yield start, i
+            start = i
+    if ids:
+        yield start, len(ids)
+
+
+def _finish_docs(batches):
+    """The regroup's body over one task's doc_id-sorted batches -> spans_out
+    batches: runs of unsalted rows pass through as slices; a salted doc's
+    segment rows, which may straddle batches, go to ``_reassemble`` once
+    the next run starts or the input ends."""
+    open_id, open_rows = None, []   # a salted doc that may go on in the next run
+    for rb in batches:
+        ids, salted = pylist(rb.column("doc_id")), pylist(rb.column("salted"))
+        parts = []
+        for a, b in _runs(ids, salted):
+            rows = rb.slice(a, b - a)
+            if salted[a] and ids[a] == open_id:
+                open_rows.append(rows)
+                continue
+            if open_rows:
+                parts.append(_reassembled(open_rows))
+            if salted[a]:
+                open_id, open_rows = ids[a], [rows]
+            else:
+                open_id, open_rows = None, []
+                parts.append(rows)
+        if parts:
+            yield _out_batch(parts)
+    if open_rows:
+        yield _out_batch([_reassembled(open_rows)])
+
+
+def _reassembled(rows: list[pa.RecordBatch]) -> pa.RecordBatch:
+    """One salted doc's segment rows -> its spans_out row."""
+    return _reassemble(pa.Table.from_batches(rows)).to_batches()[0]
+
+
+def _out_batch(parts: list[pa.RecordBatch]) -> pa.RecordBatch:
+    """The doc_id and spans columns of ``parts`` as one batch of exactly
+    the spans_out Arrow schema."""
+    cols = [[p.column(name) for p in parts] for name in _SPANS_OUT_ARROW.names]
+    return pa.RecordBatch.from_arrays(
+        [c[0] if len(c) == 1 else pa.concat_arrays(c) for c in cols],
+        schema=_SPANS_OUT_ARROW)
 
 
 def _reassemble(group: pa.Table) -> pa.Table:
@@ -273,8 +323,9 @@ def extract_spans(
         _key(docs, salt_threshold, pages_per_bucket)
         .repartition(num_partitions, "doc_id", "bucket")
         .mapInArrow(_extract_sub, _SUB_SCHEMA)
-        .groupBy("doc_id")
-        .applyInArrow(_finish_doc, SPANS_OUT_SCHEMA)
+        .repartition("doc_id")
+        .sortWithinPartitions("doc_id")
+        .mapInArrow(_finish_docs, SPANS_OUT_SCHEMA)
     )
 
 

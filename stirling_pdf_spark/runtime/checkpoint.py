@@ -32,7 +32,6 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,15 +42,16 @@ _LINEAGE_KEYS = "doc_id string, partition_id int"
 
 
 def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
-    """The table at ``path``, or None when it does not exist yet (first
-    run). Any other failure — e.g. a corrupt lineage file — raises:
-    reading it as "first run" would silently re-extract every doc."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        if exc.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
+    """The table at ``path``, or None when nothing exists there yet (first
+    run). Asks the path's Hadoop ``FileSystem`` first, so a first run pays
+    no failed read. A path that exists but does not read — e.g. a corrupt
+    lineage file — raises: reading it as "first run" would silently
+    re-extract every doc."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath):
+        return None
+    return spark.read.parquet(path)
 
 
 def pending_docs(spark: SparkSession, docs: DataFrame, out_dir: str) -> DataFrame:

@@ -139,6 +139,39 @@ def _plan_text(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_regroup_is_one_arrow_batch_stream(spark):
+    """The regroup by doc_id runs as a mapInArrow over doc_id-sorted
+    partitions, not a per-group Python call."""
+    docs = synth_docs_df(spark, 20, seed=5, num_partitions=2)
+    plan = _plan_text(extract_spans(docs, num_partitions=2))
+    assert "FlatMapGroupsInArrow" not in plan, plan
+    assert "MapInArrow _finish_docs" in plan, plan
+
+
+@pytest.mark.parametrize("rows_per_batch", [1, 2, 3])
+def test_salted_docs_across_tiny_arrow_batches(spark, rows_per_batch):
+    """A salted doc's segment rows straddle the regroup's Arrow batches
+    when a batch holds only a few rows; its output still equals the
+    unsalted kernel's."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(rows_per_batch))
+    try:
+        docs = synth_docs_df(spark, 24, seed=3, mega_pages=(20, 30),
+                             num_partitions=2)
+        out = extract_spans(docs, num_partitions=3, salt_threshold=100,
+                            pages_per_bucket=4)
+        got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
+                              s["order"]) for s in r["spans"]]
+               for r in out.collect()}
+    finally:
+        spark.conf.set(key, before)
+    corpus = list(synth_corpus(24, seed=3, mega_pages=(20, 30)))
+    assert sum(len(spans) > 100 for _d, _a, spans in corpus) >= 2
+    assert got == {doc_id: [tuple(s) for s in extract_doc(spans)]
+                   for doc_id, _arch, spans in corpus}
+
+
 def test_input_consumed_once(spark, tmp_path):
     """One plan for every input: the extraction never persists its
     input and evaluates the input subtree once — one file scan for a
