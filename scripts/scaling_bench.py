@@ -1,13 +1,13 @@
 """Throughput scaling evidence for the north rule's N vs 4N criterion.
 
-Without a real cluster, the same north-rule job runs at several local
-parallelism levels — by default local[1] (N) and
-local[nproc] (4N on a 4-vCPU host) — over the SAME materialized corpus,
-each run in a fresh JVM (subprocess). Levels are interleaved across
-rounds and the min is taken, because a shared host shows up-to-1.5x
-run-to-run noise. Timed region = one ``run_extract_with_checkpoint``
-into a fresh output directory: resume filter, extraction, span sink and
-lineage commit (no JVM startup, no warm-up).
+Without a real cluster, the same north-rule job runs at two local
+parallelism levels — local[1] (N) and local[nproc] (4N on a 4-vCPU
+host) — over the SAME materialized corpus, each run in a fresh JVM
+(subprocess). Levels are interleaved across rounds and the min is
+taken, because a shared host shows up-to-1.5x run-to-run noise. Timed
+region = one ``run_extract_with_checkpoint`` into a fresh output
+directory: resume filter, extraction, span sink and lineage commit (no
+JVM startup, no warm-up).
 
 Efficiency = (docs_per_sec_high / docs_per_sec_low) / (high / low); the
 rule requires >= 0.8. The Karp-Flatt serial fraction
@@ -16,7 +16,6 @@ the share of the job that did not parallelise (per-job stages, driver
 round trips, the commit). Record results in BENCH.md by hand.
 
 Usage: python scripts/scaling_bench.py [--n-docs 6000] [--runs 3]
-       [--levels 1,4]
 """
 
 from __future__ import annotations
@@ -87,10 +86,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n-docs", type=int, default=6000)
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--levels", default=f"1,{len(os.sched_getaffinity(0))}",
-                    help="low,high local[] core counts")
     args = ap.parse_args()
-    low, high = (int(c) for c in args.levels.split(","))
+    low, high = 1, len(os.sched_getaffinity(0))
+    if high == low:
+        sys.exit("needs at least 2 usable CPUs to compare two levels")
     corpus = os.path.join(WORK, f"corpus-{args.n_docs}.parquet")
     os.makedirs(WORK, exist_ok=True)
 

@@ -10,12 +10,11 @@ Shape (SURVEY.md §3.1 "Spark equivalent"), one plan every doc takes:
                    slices of at most DEFAULT_SALT_THRESHOLD spans, cut at
                    row boundaries, through kernel.extract.extract_docs;
                    unsalted rows budgeted, segment rows unbudgeted)
-              -> repartition(doc_id), sortWithinPartitions(doc_id)
-              -> mapInArrow(_finish_docs: runs of unsalted rows pass
-                   through as batch slices; a salted doc's segments,
-                   which may straddle batches, concatenate in order, the
-                   2000-chunk budget re-applied and order renumbered, in
-                   _reassemble)
+              -> repartition(doc_id)
+              -> mapInArrow(_finish_docs: unsalted rows pass through;
+                   a salted doc's segment rows, from any batch of the
+                   task, concatenate in bucket order, the 2000-chunk
+                   budget re-applied and order renumbered, in _reassemble)
 
 The stage body lays out every doc of a slice on Arrow/numpy columns; a
 doc the batch kernel does not take (html, rules, annotations, form
@@ -234,57 +233,24 @@ def _extract_sub(batches):
         )
 
 
-def _runs(ids: list, salted: list[bool]):
-    """(start, stop) row ranges of one doc_id-sorted batch: maximal runs
-    of unsalted rows, and the rows of one salted doc."""
-    start = 0
-    for i in range(1, len(ids)):
-        if salted[i] != salted[start] or (salted[i] and ids[i] != ids[start]):
-            yield start, i
-            start = i
-    if ids:
-        yield start, len(ids)
-
-
 def _finish_docs(batches):
-    """The regroup's body over one task's doc_id-sorted batches -> spans_out
-    batches: runs of unsalted rows pass through as slices; a salted doc's
-    segment rows, which may straddle batches, go to ``_reassemble`` once
-    the next run starts or the input ends."""
-    open_id, open_rows = None, []   # a salted doc that may go on in the next run
+    """The regroup's body over one task's batches -> spans_out batches of
+    exactly the spans_out Arrow schema. Unsalted rows pass through. The
+    repartition by doc_id puts every segment row of a salted doc in this
+    task, in any of its batches, so the segment rows are kept until the
+    input ends and each salted doc then goes to ``_reassemble`` once."""
+    segments = []
     for rb in batches:
-        ids, salted = pylist(rb.column("doc_id")), pylist(rb.column("salted"))
-        parts = []
-        for a, b in _runs(ids, salted):
-            rows = rb.slice(a, b - a)
-            if salted[a] and ids[a] == open_id:
-                open_rows.append(rows)
-                continue
-            if open_rows:
-                parts.append(_reassembled(open_rows))
-            if salted[a]:
-                open_id, open_rows = ids[a], [rows]
-            else:
-                open_id, open_rows = None, []
-                parts.append(rows)
-        if parts:
-            yield _out_batch(parts)
-    if open_rows:
-        yield _out_batch([_reassembled(open_rows)])
-
-
-def _reassembled(rows: list[pa.RecordBatch]) -> pa.RecordBatch:
-    """One salted doc's segment rows -> its spans_out row."""
-    return _reassemble(pa.Table.from_batches(rows)).to_batches()[0]
-
-
-def _out_batch(parts: list[pa.RecordBatch]) -> pa.RecordBatch:
-    """The doc_id and spans columns of ``parts`` as one batch of exactly
-    the spans_out Arrow schema."""
-    cols = [[p.column(name) for p in parts] for name in _SPANS_OUT_ARROW.names]
-    return pa.RecordBatch.from_arrays(
-        [c[0] if len(c) == 1 else pa.concat_arrays(c) for c in cols],
-        schema=_SPANS_OUT_ARROW)
+        salted = rb.column("salted")
+        yield rb.filter(pc.invert(salted)).select(_SPANS_OUT_ARROW.names).cast(
+            _SPANS_OUT_ARROW)
+        segments.append(rb.filter(salted))
+    if segments:
+        rows = pa.Table.from_batches(segments)
+        ids = rows.column("doc_id")
+        for doc_id in pc.unique(ids):
+            yield from _reassemble(rows.filter(pc.equal(ids, doc_id))).cast(
+                _SPANS_OUT_ARROW).to_batches()
 
 
 def _reassemble(group: pa.Table) -> pa.Table:
@@ -324,7 +290,6 @@ def extract_spans(
         .repartition(num_partitions, "doc_id", "bucket")
         .mapInArrow(_extract_sub, _SUB_SCHEMA)
         .repartition("doc_id")
-        .sortWithinPartitions("doc_id")
         .mapInArrow(_finish_docs, SPANS_OUT_SCHEMA)
     )
 

@@ -140,8 +140,8 @@ def _plan_text(df) -> str:
 
 
 def test_regroup_is_one_arrow_batch_stream(spark):
-    """The regroup by doc_id runs as a mapInArrow over doc_id-sorted
-    partitions, not a per-group Python call."""
+    """The regroup by doc_id runs as a mapInArrow over each partition's
+    batches, not a per-group Python call."""
     docs = synth_docs_df(spark, 20, seed=5, num_partitions=2)
     plan = _plan_text(extract_spans(docs, num_partitions=2))
     assert "FlatMapGroupsInArrow" not in plan, plan

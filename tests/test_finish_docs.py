@@ -1,8 +1,9 @@
 """The regroup's batch body, ``extract_pipeline._finish_docs``, on
-hand-built doc_id-sorted Arrow batches (no Spark): unsalted rows pass
-through unchanged, each salted doc comes out as ``_reassemble`` of all
-its segment rows wherever the batch cuts fall, and every output batch
-has exactly the spans_out Arrow schema."""
+hand-built Arrow batches of one task (no Spark): unsalted rows pass
+through unchanged, each salted doc comes out once, as ``_reassemble`` of
+all its segment rows wherever the batch cuts fall and in whatever order
+the rows arrive, and every output batch has exactly the spans_out Arrow
+schema."""
 
 from __future__ import annotations
 
@@ -67,7 +68,7 @@ def _check(rows: list[dict], cuts: list[int]) -> None:
         assert rb.schema == OUT
     got = pa.Table.from_batches(out, schema=OUT).to_pylist()
     expected = _expected(rows)
-    assert [r["doc_id"] for r in got] == list(expected)
+    assert sorted(r["doc_id"] for r in got) == sorted(expected)
     assert {r["doc_id"]: r["spans"] for r in got} == expected
 
 
@@ -96,6 +97,13 @@ def test_salted_docs_at_both_ends_of_the_partition():
 def test_unsalted_rows_between_and_next_to_salted_docs():
     rows = (_salted("a", 2) + _unsalted("b") + _unsalted("c")
             + _salted("d", 3) + _salted("e", 1) + _unsalted("f"))
+    for cuts in _every_batch_size(rows):
+        _check(rows, cuts)
+
+
+def test_salted_rows_interleaved_with_other_docs():
+    a, c = _salted("a", 3), _salted("c", 2)
+    rows = [a[0], *_unsalted("b"), c[0], a[1], *_unsalted("d"), c[1], a[2]]
     for cuts in _every_batch_size(rows):
         _check(rows, cuts)
 
