@@ -4,7 +4,9 @@ Shape (SURVEY.md §3.1 "Spark equivalent"), one plan every doc takes:
 
     read docs -> key (doc_id, bucket):               ONE source scan
                    doc <= salt_threshold spans -> one row, bucket 0
-                   larger doc -> one row per reading-order segment
+                   larger doc -> one row per reading-order segment,
+                     unless a page field would not read here as int()
+                     reads it (then one row, bucket 0)
               -> repartition(doc_id, bucket)
               -> mapInArrow(_extract_sub: the rows of each batch in
                    slices of at most DEFAULT_SALT_THRESHOLD spans, cut at
@@ -153,35 +155,43 @@ def map_docs(docs: DataFrame, fn, schema: T.StructType) -> DataFrame:
     return docs.repartition(n, "doc_id").mapInArrow(run, schema)
 
 
-def _segment_sql(pages_per_bucket: int) -> str:
-    """``kernel.extract.segment_of`` of raw span ``s`` as Spark SQL. A
-    page field that does not parse keys to segment 0, so its doc reaches
-    the kernel, whose error names the doc, on both routes."""
-    kinds = ", ".join(f"'{k}'" for k in PAGE_KINDS)
-    page = "COALESCE(TRY_CAST(substring_index(s.text, '|', 1) AS BIGINT), 0)"
+def _tag_sql(pages_per_bucket: int) -> str:
+    """The keying's fields of raw span ``s`` as Spark SQL: ``seg``, its
+    ``kernel.extract.segment_of``, and ``ok``, whether its page field
+    reads as the same number here and in segment_of's int(), i.e. casts
+    to BIGINT and back to itself. int() also reads "1_50", " 150",
+    "+150", non-ASCII digits and values past int64, which the cast does
+    not; a doc with such a field is not salted, and the batch kernel's
+    header parse sends it to extract_doc."""
+    is_page = "s.kind IN ({})".format(", ".join(f"'{k}'" for k in PAGE_KINDS))
+    text = "substring_index(s.text, '|', 1)"
+    page = f"TRY_CAST({text} AS BIGINT)"
     fixed = " ".join(f"WHEN s.kind = '{k}' THEN {seg}"
                      for k, seg in FIXED_SEGMENTS.items())
-    return (f"CASE WHEN s.kind IN ({kinds}) THEN floor({page} / {pages_per_bucket}) "
-            f"{fixed} ELSE 0 END")
+    return (f"CASE WHEN {is_page} THEN floor({page} / {pages_per_bucket}) "
+            f"{fixed} ELSE 0 END AS seg, CASE WHEN {is_page} "
+            f"THEN COALESCE(CAST({page} AS STRING) = {text}, false) ELSE true END AS ok")
 
 
 def _key(docs: DataFrame, salt_threshold: int, pages_per_bucket: int) -> DataFrame:
     """docs -> (doc_id, bucket, salted, spans): a doc at or under the
-    threshold stays one unsalted row in bucket 0; a larger doc becomes
-    one salted row per reading-order segment it has spans in. One SQL
-    expression, so planning costs no per-expression driver round trips;
-    ``tagged`` (each span with its segment, computed once) is bound as a
-    lambda variable."""
-    tagged = (f"array(transform(spans, s -> struct({_segment_sql(pages_per_bucket)} "
-              "AS seg, s AS span)))")
+    threshold, or with a span that is not ``ok`` (``_tag_sql``), stays
+    one unsalted row in bucket 0; any other doc becomes one salted row
+    per reading-order segment it has spans in. One SQL expression, so
+    planning costs no per-expression driver round trips; ``tagged``
+    (each span with its segment and page check, computed once) is bound
+    as a lambda variable."""
+    tagged = (f"array(transform(spans, s -> struct({_tag_sql(pages_per_bucket)}, "
+              "s AS span)))")
     segments = ("transform(array_distinct(transform(tagged, x -> x.seg)), "
                 "b -> struct(b AS bucket, true AS salted, "
                 "transform(filter(tagged, x -> x.seg = b), x -> x.span) AS spans))")
     whole = "array(struct(CAST(0 AS BIGINT) AS bucket, false AS salted, spans AS spans))"
     return docs.selectExpr(
         "doc_id",
-        f"inline(CASE WHEN size(spans) > {salt_threshold} "
-        f"THEN flatten(transform({tagged}, tagged -> {segments})) ELSE {whole} END)")
+        f"inline(CASE WHEN size(spans) > {salt_threshold} THEN flatten(transform("
+        f"{tagged}, tagged -> IF(forall(tagged, x -> x.ok), {segments}, {whole}))) "
+        f"ELSE {whole} END)")
 
 
 def _slices(lengths: list[int], salted: list[bool]):

@@ -12,11 +12,9 @@ materializing the token stream:
 
   1. tokens per doc = whitespace token count (the corpus convention
      shared with textstats.token_counts);
-  2. the GLOBAL token offset of each doc comes from a two-phase
-     prefix sum — repartitionByRange on the order key, a local
-     window cumsum per range, then per-partition totals (one bounded
-     collect, one row per partition — the s1-merge pattern,
-     pageops.py:197-226) broadcast back as a literal map. No global
+  2. the GLOBAL token offset of each doc is ``prefix_sums`` over the
+     order key, the module's one global prefix sum (also used by
+     ``shard_plan`` and textstats.token_budget_select); no
      single-partition window anywhere;
   3. each doc explodes into the sequences it overlaps:
      seq_id in [start div L, (end-1) div L], with the token offset
@@ -29,65 +27,72 @@ the document's first token position WITHIN that sequence and
 n_in_seq how many of its tokens land there; sum(n_in_seq) per doc ==
 n_tokens, and sum(n_in_seq) per seq_id == L for every full sequence.
 
-Scale shape: one range shuffle + one explode; the collect is bounded
-by the partition count, never by corpus size.
+Scale shape: ``prefix_sums``' two shuffles + one explode; the collect
+is bounded by the range count, never by corpus size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..runtime.staging import stage
 from .dedup import words_col
 
 
+def prefix_sums(df: DataFrame, order: list[Column],
+                sums: dict[str, Column]) -> DataFrame:
+    """``df`` plus, for each ``name: value`` of ``sums``, a long column
+    ``name``: the sum of ``value`` over every row before this one in
+    ``order`` (an exclusive running sum; 0 on the first row).
+
+    ``order`` must be a STRICT total order (add a unique tie-break key):
+    rows with equal keys may fall on either side of a range cut, and
+    their sums would then depend on where the cut lands.
+
+    Two phases, no single-partition window. ``repartitionByRange(*order)``
+    takes its range count from ``spark.sql.shuffle.partitions`` and AQE
+    coalescing; a window per range (``_pid``, the partition id) gives
+    each row its sum within its range; the per-range totals (one row per
+    range) are collected and added back as literal offsets. The executed
+    plan has two exchanges, ``rangepartitioning`` on ``order`` and then
+    ``hashpartitioning(_pid)`` for the window, which cannot know that
+    ``_pid`` already is the partition id, so every row is shuffled
+    twice. The ranged frame is staged: the totals and the result must
+    read the same ``_pid`` of each row."""
+    ranged = df.repartitionByRange(*order).withColumn("_pid", F.spark_partition_id())
+    before = Window.partitionBy("_pid").orderBy(*order) \
+        .rowsBetween(Window.unboundedPreceding, -1)
+    local = stage(ranged.select(
+        "*", *[F.coalesce(F.sum(v).over(before), F.lit(0)).alias(n)
+               for n, v in sums.items()]))
+    totals = sorted(local.groupBy("_pid")
+                    .agg(*[F.sum(v).alias(n) for n, v in sums.items()]).collect())
+    for n in sums:
+        acc, offsets = 0, []
+        for r in totals:
+            offsets += [F.lit(r["_pid"]), F.lit(acc).cast("long")]
+            acc += int(r[n] or 0)
+        off = F.element_at(F.create_map(*offsets), F.col("_pid")) if offsets else F.lit(0)
+        local = local.withColumn(n, (F.col(n) + off).cast("long"))
+    return local.drop("_pid")
+
+
 def pack_sequences(df: DataFrame, seq_len: int = 512,
-                   id_col: str = "doc_id", text_col: str = "text",
-                   num_ranges: int | None = None) -> DataFrame:
+                   id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Assign each document its spans in the packed token stream."""
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    spark = df.sparkSession
-    nr = num_ranges or spark.sparkContext.defaultParallelism
-
     # split(trim('')) yields [''] (size 1), so whitespace-only docs
     # must be dropped on the trimmed text, not the token count
     toks = df.filter(F.trim(F.col(text_col)) != "").select(
         F.col(id_col),
         F.size(words_col(text_col)).cast("long").alias("n_tokens"),
     )
-
-    ranged = toks.repartitionByRange(nr, F.col(id_col)) \
-        .withColumn("_pid", F.spark_partition_id())
-    w_loc = Window.partitionBy("_pid").orderBy(id_col) \
-        .rowsBetween(Window.unboundedPreceding, -1)
-    local = ranged.select(
-        id_col, "n_tokens", "_pid",
-        F.coalesce(F.sum("n_tokens").over(w_loc), F.lit(0)).alias("_lps"),
-    )
-    local = stage(local)  # two consumers: totals + final projection
-
-    totals = sorted(
-        local.groupBy("_pid").agg(F.sum("n_tokens").alias("sp")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    off: dict[int, int] = {}
-    acc = 0
-    for r in totals:
-        off[r["_pid"]] = acc
-        acc += int(r["sp"] or 0)
-    po = (F.coalesce(F.element_at(
-        F.create_map(*[F.lit(v) for kv in off.items() for v in kv]),
-        F.col("_pid")), F.lit(0)) if off else F.lit(0))
-
-    start = (F.col("_lps") + po).alias("tok_off")
-    spanned = local.select(id_col, "n_tokens", start).withColumn(
-        "seq_id",
-        F.explode(F.sequence(
+    spanned = prefix_sums(toks, [F.col(id_col)], {"tok_off": F.col("n_tokens")}) \
+        .withColumn("seq_id", F.explode(F.sequence(
             F.expr(f"tok_off DIV {seq_len}"),
-            F.expr(f"(tok_off + n_tokens - 1) DIV {seq_len}"))),
-    )
+            F.expr(f"(tok_off + n_tokens - 1) DIV {seq_len}"))))
     seq_base = F.col("seq_id") * seq_len
     doc_end = F.col("tok_off") + F.col("n_tokens")
     first_in_seq = F.greatest(F.col("tok_off"), seq_base)
@@ -101,8 +106,7 @@ def pack_sequences(df: DataFrame, seq_len: int = 512,
 
 def pack_seq_boundaries(df: DataFrame, seq_len: int = 512,
                         id_col: str = "doc_id",
-                        text_col: str = "text",
-                        num_ranges: int | None = None) -> DataFrame:
+                        text_col: str = "text") -> DataFrame:
     """Per-sequence document boundaries — the attention-reset
     metadata a trainer consumes alongside the packed stream (each
     boundary offset is where cross-document attention masking
@@ -110,7 +114,7 @@ def pack_seq_boundaries(df: DataFrame, seq_len: int = 512,
     n_docs, boundaries sorted ascending, n_tokens); every full
     sequence has n_tokens == seq_len."""
     packed = pack_sequences(df, seq_len=seq_len, id_col=id_col,
-                            text_col=text_col, num_ranges=num_ranges)
+                            text_col=text_col)
     return packed.groupBy("seq_id").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.array_sort(F.collect_list("tok_start")).alias("boundaries"),
@@ -232,61 +236,27 @@ def span_corrupt_transform(df: DataFrame, id_col: str = "doc_id",
 
 
 def shard_plan(df: DataFrame, target_bytes: int = 16384,
-               id_col: str = "doc_id", text_col: str = "text",
-               num_ranges: int | None = None) -> DataFrame:
+               id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Equal-byte output sharding plan — the 'write the final corpus
     as N balanced files' op every released dataset runs last: docs in
     ``id_col`` order are assigned whole (never split) to shard =
     cumulative_byte_offset div ``target_bytes``, and the plan reports
     each shard's doc count, byte total and contiguous id range.
 
-    Scale shape: the pack_sequences two-phase prefix sum — one
-    repartitionByRange on the order key, a per-range local window
-    cumsum, per-range totals collected (bounded by the partition
-    count) and broadcast back as a literal map; the rollup lands on
-    the shard universe. No global single-partition window.
+    Scale shape: ``prefix_sums`` over ``id_col`` (its two shuffles and
+    one collect bounded by the range count), then the rollup onto the
+    shard universe. No global single-partition window.
 
     Output: (shard_id, n_docs, sum_bytes, min_doc, max_doc)."""
     if target_bytes <= 0:
         raise ValueError(
             f"target_bytes must be positive, got {target_bytes}")
-    spark = df.sparkSession
-    nr = num_ranges or spark.sparkContext.defaultParallelism
     sized = df.select(
         F.col(id_col),
         F.octet_length(F.col(text_col)).cast("long").alias("n_bytes"),
     )
-    ranged = sized.repartitionByRange(nr, F.col(id_col)) \
-        .withColumn("_pid", F.spark_partition_id())
-    w_loc = Window.partitionBy("_pid").orderBy(id_col) \
-        .rowsBetween(Window.unboundedPreceding, -1)
-    local = ranged.select(
-        id_col, "n_bytes", "_pid",
-        F.coalesce(F.sum("n_bytes").over(w_loc), F.lit(0))
-        .alias("_lps"),
-    )
-    local = stage(local)  # two consumers: totals + final projection
-    totals = sorted(
-        local.groupBy("_pid").agg(F.sum("n_bytes").alias("sp"))
-        .collect(),
-        key=lambda r: r["_pid"],
-    )
-    off: dict[int, int] = {}
-    acc = 0
-    for r in totals:
-        off[r["_pid"]] = acc
-        acc += int(r["sp"] or 0)
-    po = (F.coalesce(F.element_at(
-        F.create_map(*[F.lit(v) for kv in off.items() for v in kv]),
-        F.col("_pid")), F.lit(0)) if off else F.lit(0))
-    assigned = local.select(
-        id_col, "n_bytes",
-        (F.col("_lps") + po).cast("long").alias("_off"),
-    ).select(
-        id_col, "n_bytes",
-        F.expr(f"_off div {target_bytes}").cast("long")
-        .alias("shard_id"),
-    )
+    assigned = prefix_sums(sized, [F.col(id_col)], {"_off": F.col("n_bytes")}) \
+        .withColumn("shard_id", F.expr(f"_off div {target_bytes}").cast("long"))
     return assigned.groupBy("shard_id").agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("n_bytes").cast("long").alias("sum_bytes"),

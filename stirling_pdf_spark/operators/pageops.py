@@ -140,24 +140,16 @@ def _merge_sort_keys(comparator: str,
 
 
 def merge_order(docs: DataFrame, comparator: str = "byFileName",
-                provided_order: list[str] | None = None,
-                two_phase: bool = False,
-                num_ranges: int | None = None) -> DataFrame:
+                provided_order: list[str] | None = None) -> DataFrame:
     """The merge plan: (doc_id, doc_pos, page_shift, np) — each input
     document's 1-based position in the merged output and the page
     offset its pages shift by. ``merge_docs`` consumes this; gating it
     directly pins the comparator semantics.
 
-    Default path: ONE global window over the tiny per-doc ``n_pages``
-    aggregate (one row per input document — it sorts #docs rows, not
-    spans), fine to ~10^6 merge inputs. ``two_phase=True`` is the
-    10^9-input shape: repartitionByRange on the sort keys (distributed
-    total sort), per-range local row numbers + prefix sums, then a
-    driver-collected per-range totals table (#ranges rows — bounded by
-    parallelism, not input size) broadcast back as cumulative offsets.
-    Both paths produce IDENTICAL output (pinned in pytest) because the
-    tie-break keys make the total order strict — no equal keys can
-    straddle a range boundary ambiguously."""
+    One global window over the per-doc ``n_pages`` aggregate: it sorts
+    one row per input document, not spans, and the merge's output is
+    one document that one executor holds anyway, so the window adds no
+    bound on scale. The tie-break keys make the order strict."""
     s = F.col("s")
     is_geo = _is_page_kind(s)
     header = F.substring_index(s["text"], "\t", 1)
@@ -182,59 +174,15 @@ def merge_order(docs: DataFrame, comparator: str = "byFileName",
         order_cols[0] = order_cols[0].asc_nulls_last()
     joined = n_pages.join(keyed, "doc_id")
 
-    if not two_phase:
-        w_order = Window.orderBy(*order_cols)
-        return joined.select(
-            "doc_id", "np",
-            F.row_number().over(w_order).alias("doc_pos"),
-            F.coalesce(
-                F.sum("np").over(
-                    w_order.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ).alias("page_shift"),
-        )
-
-    spark = docs.sparkSession
-    nr = num_ranges or spark.sparkContext.defaultParallelism
-    ranged = joined.repartitionByRange(nr, *order_cols) \
-        .withColumn("_pid", F.spark_partition_id())
-    w_loc = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = ranged.select(
-        "doc_id", "np", "_pid",
-        F.row_number().over(w_loc).alias("_lrn"),
+    w_order = Window.orderBy(*order_cols)
+    return joined.select(
+        "doc_id", "np",
+        F.row_number().over(w_order).alias("doc_pos"),
         F.coalesce(
             F.sum("np").over(
-                w_loc.rowsBetween(Window.unboundedPreceding, -1)),
+                w_order.rowsBetween(Window.unboundedPreceding, -1)),
             F.lit(0),
-        ).alias("_lps"),
-    )
-    from ..runtime.staging import stage
-
-    local = stage(local)  # two consumers: totals + final projection
-    totals = sorted(
-        local.groupBy("_pid").agg(
-            F.count("*").alias("c"),
-            F.sum("np").alias("sp"),
-        ).collect(),
-        key=lambda r: r["_pid"],
-    )
-    row_off: dict[int, int] = {}
-    page_off: dict[int, int] = {}
-    acc_r = acc_p = 0
-    for r in totals:
-        row_off[r["_pid"]], page_off[r["_pid"]] = acc_r, acc_p
-        acc_r += r["c"]
-        acc_p += int(r["sp"] or 0)
-    ro = F.coalesce(F.element_at(
-        F.create_map(*[F.lit(v) for kv in row_off.items() for v in kv]),
-        F.col("_pid")), F.lit(0)) if row_off else F.lit(0)
-    po = F.coalesce(F.element_at(
-        F.create_map(*[F.lit(v) for kv in page_off.items() for v in kv]),
-        F.col("_pid")), F.lit(0)) if page_off else F.lit(0)
-    return local.select(
-        "doc_id", "np",
-        (F.col("_lrn") + ro).cast("int").alias("doc_pos"),
-        (F.col("_lps") + po).cast("long").alias("page_shift"),
+        ).alias("page_shift"),
     )
 
 

@@ -65,9 +65,10 @@ def build_training_corpus(df: DataFrame, seq_len: int = 512,
     Output = pack_sequences' schema over the surviving docs. The gate
     over this function pins COMPOSITION (stage order, join keys,
     survivor sets), not the per-stage rules — those have their own
-    oracles. Plan shape: three map-only filters/joins (quality,
-    dedup keep-list, split) feeding the packer's two-phase prefix
-    sum; the dedup groupBy is the only extra shuffle."""
+    oracles. Plan shape: the quality and split filters are map-only;
+    the dedup groupBy and the keep-list joins shuffle on the content
+    hash and on the doc id; the packer's ``packing.prefix_sums`` adds
+    its range shuffle and its hash shuffle on the range id."""
     from .packing import pack_sequences
     from .textstats import gopher_quality_filter
 

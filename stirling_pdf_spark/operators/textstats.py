@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import parallelize, words_col
+from .packing import prefix_sums
 
 # small deterministic stopword sets; order of LANGS is the tie-break
 # precedence for lang_id (first wins on equal score)
@@ -1120,8 +1121,8 @@ def url_blocklist_filter(df: DataFrame,
 
 
 def token_budget_select(df: DataFrame, budget_tokens: int,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        num_ranges: int | None = None) -> DataFrame:
+                        id_col: str = "doc_id",
+                        text_col: str = "text") -> DataFrame:
     """Data selection under a token budget — the published
     quality-ranked selection idiom (take the best documents until the
     token budget is spent; cf. the public DsDm/DataComp-LM-style
@@ -1130,68 +1131,23 @@ def token_budget_select(df: DataFrame, budget_tokens: int,
     count before it is under ``budget_tokens`` (greedy fill — the
     boundary-crossing doc is taken).
 
-    The global prefix sum is the two-phase shape (packing.py /
-    pageops.py s1-merge): repartitionByRange on the rank key, local
-    window cumsum per range, per-partition totals collected (bounded
-    by partition count, never corpus size) and broadcast back as a
-    literal map. No single-partition global window anywhere.
+    The cumulative count and the rank are packing.prefix_sums over
+    (quality desc, id): its two shuffles and one collect bounded by
+    the range count. No single-partition global window anywhere.
 
     Output: (id, quality, n_tokens, cum_before, sel_rank).
     """
-    from pyspark.sql import Window
-
-    from ..runtime.staging import stage
-
-    spark = df.sparkSession
-    nr = num_ranges or spark.sparkContext.defaultParallelism
-
     q = quality_stats(df, id_col=id_col, text_col=text_col)
     toks = q.select(
         "id", F.col("n_words").cast("long").alias("n_tokens"),
         F.col("quality").cast("long").alias("quality"),
-        (F.lit(3) - F.col("quality")).alias("_nq"),
     )
-    ranged = toks.repartitionByRange(nr, F.col("_nq"), F.col("id")) \
-        .withColumn("_pid", F.spark_partition_id())
-    w_loc = Window.partitionBy("_pid").orderBy("_nq", "id") \
-        .rowsBetween(Window.unboundedPreceding, -1)
-    w_rn = Window.partitionBy("_pid").orderBy("_nq", "id")
-    local = stage(ranged.select(
-        "id", "n_tokens", "quality", "_pid",
-        F.coalesce(F.sum("n_tokens").over(w_loc), F.lit(0)).alias("_lps"),
-        F.row_number().over(w_rn).cast("long").alias("_lrn"),
-    ))
-
-    totals = sorted(
-        local.groupBy("_pid").agg(
-            F.sum("n_tokens").alias("tp"), F.count("*").alias("np"),
-        ).collect(),
-        key=lambda r: r["_pid"],
-    )
-    tok_off: dict[int, int] = {}
-    row_off: dict[int, int] = {}
-    t_acc = r_acc = 0
-    for r in totals:
-        tok_off[r["_pid"]] = t_acc
-        row_off[r["_pid"]] = r_acc
-        t_acc += int(r["tp"] or 0)
-        r_acc += int(r["np"] or 0)
-
-    def _offmap(off: dict[int, int]):
-        if not off:
-            return F.lit(0)
-        return F.coalesce(F.element_at(
-            F.create_map(*[F.lit(v) for kv in off.items() for v in kv]),
-            F.col("_pid")), F.lit(0))
-
     return (
-        local
-        .withColumn("cum_before", (F.col("_lps") + _offmap(tok_off))
-                    .cast("long"))
-        .withColumn("sel_rank", (F.col("_lrn") + _offmap(row_off))
-                    .cast("long"))
+        prefix_sums(toks, [F.col("quality").desc(), F.col("id")],
+                    {"cum_before": F.col("n_tokens"), "sel_rank": F.lit(1)})
         .filter(F.col("cum_before") < budget_tokens)
-        .select("id", "quality", "n_tokens", "cum_before", "sel_rank")
+        .select("id", "quality", "n_tokens", "cum_before",
+                (F.col("sel_rank") + 1).alias("sel_rank"))
     )
 
 

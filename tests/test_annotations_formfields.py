@@ -225,26 +225,3 @@ def test_merge_docs_by_title_page_shift(spark):
         ("1", "doc-2:1"), ("2", "doc-2:2"), ("3", "doc-2:3"),
         ("4", "doc-1:1"), ("5", "doc-1:2"),
     ]
-
-
-def test_merge_order_two_phase_identical(spark):
-    """The 10^9-input two-phase plan (range partition + local prefix
-    sums + broadcast range offsets) must equal the single-window plan
-    bit-for-bit, for every comparator."""
-    from stirling_pdf_spark.operators.pageops import merge_order
-
-    def doc(i):
-        n_pages = (i % 5) + 1
-        spans = [_text(p, 72.0, f"d{i}p{p}") for p in range(1, n_pages + 1)]
-        spans.append(("meta", f"title|t{(i * 7) % 13:02d}", "", 0))
-        spans.append(("meta", f"modified|{1000 + (i * 31) % 17}", "", 0))
-        return _doc(f"doc-{i}", _offsets(spans))
-
-    df = spark.createDataFrame([doc(i) for i in range(40)], SCHEMA)
-    for comparator in ("byFileName", "byDateModified", "byPDFTitle"):
-        a = {r["doc_id"]: (r["doc_pos"], r["page_shift"]) for r in
-             merge_order(df, comparator).collect()}
-        b = {r["doc_id"]: (r["doc_pos"], r["page_shift"]) for r in
-             merge_order(df, comparator, two_phase=True,
-                         num_ranges=7).collect()}
-        assert a == b, comparator

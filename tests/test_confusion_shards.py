@@ -41,14 +41,14 @@ def test_shard_plan_closed_form(spark):
     assert sum(r["sum_bytes"] for r in out.values()) == 1000
 
 
-def test_shard_plan_parallelism_invariant(spark):
+def test_shard_plan_parallelism_invariant(spark, shuffle_partitions):
     rows = [(i, "b" * (37 + (i * 13) % 91)) for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     plans = []
-    for nr in (1, 4, 16):
-        out = shard_plan(df.repartition(nr), target_bytes=1000,
-                         num_ranges=nr)
-        plans.append(sorted(tuple(r) for r in out.collect()))
+    for n in (1, 5, 16):
+        with shuffle_partitions(n):
+            out = shard_plan(df.repartition(n), target_bytes=1000)
+            plans.append(sorted(tuple(r) for r in out.collect()))
     assert plans[0] == plans[1] == plans[2]
 
 

@@ -287,43 +287,46 @@ def test_extract_sub_error_names_the_doc():
 
 def test_key_rows_follow_segment_of(spark):
     """The SQL keying puts each span where kernel.extract.segment_of
-    does, and a page that does not parse in segment 0."""
+    does; a doc with a page that does not parse stays one unsalted row."""
     spans = [("meta", "k|v", "", 0), ("text", "3|1.0|2.0|3.0|F\ta", "", 1),
              ("media", "15|1|2|3|4", "m", 2), ("annotation", "8|1|2|3|4\tx", "", 3),
-             ("text", "x|1.0|2.0|3.0|F\tbad", "", 4), ("html", "<p>h</p>", "", 5),
+             ("html", "<p>h</p>", "", 5),
              ("htmlbody", "<p>b</p>", "", 6), ("bookmark", "0|t", "", 7),
              ("attachment", "", "m", 8), ("formfield", "n|t|v", "", 9),
              ("pagemeta", "21|612.0|792.0|0|", "", 10), ("odd", "z", "", 11)]
-    df = spark.createDataFrame([("d", [dict(zip(FIELDS, s)) for s in spans])],
-                               "doc_id string, spans array<struct<kind:string,"
-                               "text:string,media_ref:string,offset:int>>")
-    got = sorted((r["bucket"], [tuple(s) for s in r["spans"]])
-                 for r in ep._key(df, 5, 7).collect())
+    bad = ("text", "x|1.0|2.0|3.0|F\tbad", "", 4)
 
-    def seg(s):
-        try:
-            return segment_of(s[0], s[1], 7)
-        except ValueError:
-            return 0
+    def keyed(spans, threshold):
+        df = spark.createDataFrame([("d", [dict(zip(FIELDS, s)) for s in spans])],
+                                   "doc_id string, spans array<struct<kind:string,"
+                                   "text:string,media_ref:string,offset:int>>")
+        return sorted((r["bucket"], r["salted"], [tuple(s) for s in r["spans"]])
+                      for r in ep._key(df, threshold, 7).collect())
+
     want: dict[int, list] = {}
     for s in spans:
-        want.setdefault(seg(s), []).append(s)
-    assert got == sorted(want.items())
-    assert [r["bucket"] for r in ep._key(df, len(spans), 7).collect()] == [0]
+        want.setdefault(segment_of(s[0], s[1], 7), []).append(s)
+    assert keyed(spans, 5) == [(b, True, ss) for b, ss in sorted(want.items())]
+    assert keyed(spans, len(spans)) == [(0, False, spans)]
+    assert keyed(spans + [bad], 5) == [(0, False, spans + [bad])]
 
 
 def test_malformed_span_names_the_doc_on_both_routes(spark):
     """One bad text header fails the job with the doc_id in the error,
-    whether its doc takes the unsalted or the salted route."""
-    def doc(doc_id, pages):
+    whether its doc takes the unsalted or the salted route. A page that
+    does not parse keeps a large doc unsalted, so the salted case has a
+    bad coordinate under a good page."""
+    def doc(doc_id, pages, header):
         spans = [("text", wire.encode_text_run(TextRun(p, 72.0, 72.0, 11.0, "F", "w")), "", p)
                  for p in range(1, pages + 1)]
-        spans.append(("text", "seven|1.0|bad-y|11.0|F\tbroken", "", pages + 1))
+        spans.append(("text", header + "\tbroken", "", pages + 1))
         return doc_id, [dict(zip(FIELDS, s)) for s in spans]
     schema = ("doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
-    for doc_id, pages in (("doc-small-bad", 3), ("doc-salted-bad", 40)):
-        df = spark.createDataFrame([doc(doc_id, pages), ("doc-ok", [])], schema)
+    for doc_id, pages, header in (("doc-small-bad", 3, "seven|1.0|bad-y|11.0|F"),
+                                  ("doc-unsalted-bad", 40, "seven|1.0|bad-y|11.0|F"),
+                                  ("doc-salted-bad", 40, "7|1.0|bad-y|11.0|F")):
+        df = spark.createDataFrame([doc(doc_id, pages, header), ("doc-ok", [])], schema)
         with pytest.raises(Exception, match=doc_id):
             ep.extract_spans(df, num_partitions=2, salt_threshold=20,
                              pages_per_bucket=10).collect()

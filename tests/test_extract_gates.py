@@ -1,9 +1,11 @@
-"""Every ``extract_*`` gate of the query registry, and every gate whose
+"""Every ``extract_*`` gate of the query registry, every gate whose
 query runs a ``map_docs`` stage (exports, tables, search, elements,
-comments, edit-text), against its DuckDB oracle at the smoke scale
-factor, through the same comparison as ``scripts/check_queries.py`` —
-so a plain pytest run catches an oracle break in the extraction plan or
-a per-document Arrow stage without the full sweep."""
+comments, edit-text), and every gate over the global prefix sum
+(``packing.prefix_sums``) or the merge-order window, against its DuckDB
+oracle at the smoke scale factor, through the same comparison as
+``scripts/check_queries.py`` — so a plain pytest run catches an oracle
+break in the extraction plan, a per-document Arrow stage or a global
+ordering without the full sweep."""
 
 from __future__ import annotations
 
@@ -29,7 +31,13 @@ MAP_DOCS_GATES = [
     "to_xml_tables", "to_markdown", "to_markdown_tables", "to_epub",
     "to_docx", "to_pptx", "edit_text", "add_comments",
 ]
-GATES = [n for n in QUERIES if n.startswith("extract_")] + MAP_DOCS_GATES
+PREFIX_SUM_GATES = [
+    "pack_sequences", "pack_seq_boundaries", "shard_plan",
+    "token_budget_select", "quality_decile_split", "s1_merge_by_date",
+    "s1_merge_by_title", "pipeline_training_corpus",
+]
+GATES = ([n for n in QUERIES if n.startswith("extract_")] + MAP_DOCS_GATES
+         + PREFIX_SUM_GATES)
 
 
 @pytest.fixture(scope="module")

@@ -8,6 +8,7 @@ kernel output despite page-range splitting + reassembly)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from stirling_pdf_spark.corpus.spark_synth import synth_docs_df
 from stirling_pdf_spark.corpus.synth import synth_corpus
@@ -133,6 +134,37 @@ def test_skew_torture_one_mega_among_tiny(spark):
     page_buckets = list(counts.values())
     assert len(page_buckets) >= 16
     assert max(page_buckets) / statistics.median(page_buckets) < 2.0
+
+
+@pytest.mark.parametrize("page", ["1_50", "\u0661\u0667\u0660", str(1 << 63)])
+def test_salted_keying_agrees_with_segment_of(spark, page):
+    """A page field that Python's int() reads but Spark's BIGINT cast
+    does not (a digit separator, Arabic-Indic digits, a value past int64)
+    keeps its doc unsalted, so its output still equals extract_doc's; a
+    doc whose page fields all cast is still salted."""
+    from stirling_pdf_spark.corpus.synth import synth_from_text
+    from stirling_pdf_spark.operators.extract_pipeline import _key
+
+    _did, clean = synth_from_text("clean", " ".join(f"w{i}" for i in range(40 * 40 * 8)))
+    # page 40's lines move to `page`: 150, 170 or 2**63 to int()
+    odd = [(k, page + t[2:] if k == "text" and t.startswith("40|") else t, m, o)
+           for k, t, m, o in clean]
+    assert odd != clean
+    schema = ("doc_id string, spans array<struct<kind:string,"
+              "text:string,media_ref:string,offset:int>>")
+    docs = spark.createDataFrame(
+        [(did, [dict(kind=k, text=t, media_ref=m, offset=o) for k, t, m, o in spans])
+         for did, spans in (("clean", clean), ("odd", odd))], schema)
+
+    rows = _key(docs, 5, 10).groupBy("doc_id").agg(
+        F.count("*").alias("n"), F.max("salted").alias("salted")).collect()
+    assert {r["doc_id"]: (r["n"] > 1, r["salted"]) for r in rows} == {
+        "clean": (True, True), "odd": (False, False)}
+    out = extract_spans(docs, num_partitions=4, salt_threshold=5, pages_per_bucket=10)
+    got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
+                         for s in r["spans"]] for r in out.collect()}
+    assert got == {"clean": [tuple(s) for s in extract_doc(clean)],
+                   "odd": [tuple(s) for s in extract_doc(odd)]}
 
 
 def _plan_text(df) -> str:

@@ -1,7 +1,7 @@
 """Sequence packing (operators/packing.py): concat-and-chunk
 invariants — per-doc token conservation, full sequences tile to
 exactly seq_len, boundary-straddling docs split correctly, and the
-two-phase prefix sum is independent of the range-partition count."""
+global prefix sum is independent of the range-partition count."""
 
 from __future__ import annotations
 
@@ -56,13 +56,14 @@ def test_straddle_concrete(spark):
     ]
 
 
-def test_partition_count_invariance(spark):
+def test_partition_count_invariance(spark, shuffle_partitions):
     counts = [5, 13, 2, 40, 1, 1, 31, 8, 22, 3, 17, 6]
     df = _docs(spark, counts)
-    a = _collect(pack_sequences(df, seq_len=10, num_ranges=1))
-    b = _collect(pack_sequences(df, seq_len=10, num_ranges=5))
-    c = _collect(pack_sequences(df, seq_len=10, num_ranges=16))
-    assert a == b == c
+    runs = []
+    for n in (1, 5, 16):
+        with shuffle_partitions(n):
+            runs.append(_collect(pack_sequences(df, seq_len=10)))
+    assert runs[0] == runs[1] == runs[2]
 
 
 def test_empty_docs_dropped(spark):

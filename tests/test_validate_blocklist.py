@@ -159,7 +159,7 @@ def test_mmr_pool_smaller_than_k_emits_all(spark):
     assert [(r["mmr_rank"], r["doc_id"]) for r in rows] == [(1, 1)]
 
 
-def test_token_budget_select_greedy_fill(spark):
+def test_token_budget_select_greedy_fill(spark, shuffle_partitions):
     from stirling_pdf_spark.operators.textstats import token_budget_select
 
     # quality: long diverse docs score 3, the junk doc scores lower ->
@@ -171,24 +171,27 @@ def test_token_budget_select_greedy_fill(spark):
         [(1, good), (2, good.replace("word", "term")),
          (3, "a a a a a a a a a a a a a a a a a a a a a a a a a")],
         "doc_id long, text string")
-    rows = sorted(
-        token_budget_select(docs, 50, num_ranges=2).collect(),
-        key=lambda r: r["sel_rank"])
-    assert [(r["id"], r["quality"], r["cum_before"], r["sel_rank"])
-            for r in rows] == [(1, 3, 0, 1), (2, 3, 25, 2)]
+    for n in (1, 5, 16):
+        with shuffle_partitions(n):
+            rows = sorted(token_budget_select(docs, 50).collect(),
+                          key=lambda r: r["sel_rank"])
+        assert [(r["id"], r["quality"], r["cum_before"], r["sel_rank"])
+                for r in rows] == [(1, 3, 0, 1), (2, 3, 25, 2)], n
 
 
-def test_token_budget_boundary_doc_is_taken(spark):
+def test_token_budget_boundary_doc_is_taken(spark, shuffle_partitions):
     from stirling_pdf_spark.operators.textstats import token_budget_select
 
     good = " ".join(f"word{i}" for i in range(25))
     docs = spark.createDataFrame(
         [(1, good), (2, good.replace("word", "term"))],
         "doc_id long, text string")
-    # budget 26: doc 1 fills 25, doc 2 has cum_before 25 < 26 -> taken
-    assert token_budget_select(docs, 26, num_ranges=2).count() == 2
-    # budget 25: doc 2's cum_before 25 is NOT under budget
-    assert token_budget_select(docs, 25, num_ranges=2).count() == 1
+    for n in (1, 5, 16):
+        with shuffle_partitions(n):
+            # budget 26: doc 1 fills 25, doc 2 has cum_before 25 < 26 -> taken
+            assert token_budget_select(docs, 26).count() == 2, n
+            # budget 25: doc 2's cum_before 25 is NOT under budget
+            assert token_budget_select(docs, 25).count() == 1, n
 
 
 def test_fim_transform_psm_layout_and_passthrough(spark):
