@@ -44,6 +44,7 @@ from stirling_pdf_spark.operators.dedup import fan_out
 from stirling_pdf_spark.operators.extract_pipeline import (
     explode_spans,
     extract_spans,
+    map_rows,
 )
 from stirling_pdf_spark.operators.multimodal import text_payload_metadata
 from stirling_pdf_spark.sources.tables import read_table
@@ -536,8 +537,6 @@ def q_html_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-row table (header row, colspan=2 row) plus a second one-row
     table, and the REAL kernel/html_tables.py parser extracts
     positioned cells; the oracle states the closed-form layout."""
-    import pandas as pd
-
     from stirling_pdf_spark.functions.html import html_table_cells
 
     _ship_package(spark)
@@ -546,25 +545,21 @@ def q_html_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("doc_id"),
         F.col("text"))
 
-    def build(batches):
-        for pdf in batches:
-            htmls = []
-            for text in pdf["text"]:
-                w = (text or "").split()
-                g = lambda i: w[i % len(w)]  # noqa: E731
-                htmls.append(
-                    "<html><body><table>"
-                    f"<tr><th>{g(0)}</th><th>{g(1)}</th><th>{g(2)}</th></tr>"
-                    f"<tr><td>{g(3)}</td><td>{g(4)}</td><td>{g(5)}</td></tr>"
-                    f'<tr><td colspan="2">{g(6)}</td><td>{g(7)}</td></tr>'
-                    f"<tr><td>{g(8)}</td><td>{g(9)}</td><td>{g(10)}</td></tr>"
-                    "</table><p>prose between tables</p>"
-                    f"<table><tr><td>{g(1)}</td><td>{g(2)}</td></tr></table>"
-                    "</body></html>")
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "html": htmls})
+    def build(did, text):
+        w = (text or "").split()
+        g = lambda i: w[i % len(w)]  # noqa: E731
+        yield did, (
+            "<html><body><table>"
+            f"<tr><th>{g(0)}</th><th>{g(1)}</th><th>{g(2)}</th></tr>"
+            f"<tr><td>{g(3)}</td><td>{g(4)}</td><td>{g(5)}</td></tr>"
+            f'<tr><td colspan="2">{g(6)}</td><td>{g(7)}</td></tr>'
+            f"<tr><td>{g(8)}</td><td>{g(9)}</td><td>{g(10)}</td></tr>"
+            "</table><p>prose between tables</p>"
+            f"<table><tr><td>{g(1)}</td><td>{g(2)}</td></tr></table>"
+            "</body></html>")
 
-    html_df = fan_out(docs, "doc_id").mapInPandas(
-        build, "doc_id string, html string")
+    html_df = map_rows(fan_out(docs, "doc_id"), build,
+                       "doc_id string, html string")
     return html_table_cells(html_df)
 
 
@@ -842,8 +837,6 @@ def q_img_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     for wide images) and centered scale-to-fit draw geometry derive
     from the REAL decoded dimensions. Output = pagemeta + media wire
     read back per page."""
-    import pandas as pd_  # noqa: F401 (worker-side import via closure)
-
     from stirling_pdf_spark.corpus.media import (
         image_payload_for_ref, jpeg_payload_for_ref,
     )
@@ -858,24 +851,14 @@ def q_img_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(sha, 1, 8).alias("s8"),
     )
 
-    def gen(batches):
-        import pandas as pd
+    def gen(did, s8):
+        for seq, ref, fn in ((0, f"media-{s8}", image_payload_for_ref),
+                             (1, f"jpg-{s8}", jpeg_payload_for_ref)):
+            yield did, seq, ref, fn(ref)
 
-        for pdf in batches:
-            rows = {"doc_id": [], "seq": [], "media_ref": [],
-                    "payload": []}
-            for did, s8 in zip(pdf["doc_id"], pdf["s8"]):
-                for seq, ref, fn in (
-                        (0, f"media-{s8}", image_payload_for_ref),
-                        (1, f"jpg-{s8}", jpeg_payload_for_ref)):
-                    rows["doc_id"].append(did)
-                    rows["seq"].append(seq)
-                    rows["media_ref"].append(ref)
-                    rows["payload"].append(fn(ref))
-            yield pd.DataFrame(rows)
-
-    images = fan_out(src, "doc_id").mapInPandas(
-        gen, "doc_id string, seq int, media_ref string, payload binary")
+    images = map_rows(
+        fan_out(src, "doc_id"), gen,
+        "doc_id string, seq int, media_ref string, payload binary")
     out = images_to_pdf(images, "maintainAspectRatio",
                         auto_rotate=True)
     # the exploded wire rows feed BOTH sides of the pagemeta|media
@@ -2381,7 +2364,7 @@ def q_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     16*(sha256[5] % 64) leading zero samples before the closed-form
     sawtooth, so the trim offsets, trimmed duration AND the post-trim
     energy are all pinned against the oracle's model
-    (operators/multimodal.audio_silence_stats — narrow mapInPandas,
+    (operators/multimodal.audio_silence_stats — narrow map_rows,
     per-row error isolation, no shuffle)."""
     from stirling_pdf_spark.corpus.media import wav_silence_table
     from stirling_pdf_spark.operators.multimodal import (
@@ -3775,20 +3758,12 @@ def q_tiff_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("media-"), F.substring(sha, 1, 8)).alias("ref"),
     )
 
-    def gen(batches):
-        import pandas as pd
+    def gen(did, ref):
+        yield did, 0, ref, tiff_multipage_payload_for_ref(ref)
 
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "seq": [0] * len(pdf),
-                "media_ref": pdf["ref"],
-                "payload": [tiff_multipage_payload_for_ref(r)
-                            for r in pdf["ref"]],
-            })
-
-    images = fan_out(src, "doc_id").mapInPandas(
-        gen, "doc_id string, seq int, media_ref string, payload binary")
+    images = map_rows(
+        fan_out(src, "doc_id"), gen,
+        "doc_id string, seq int, media_ref string, payload binary")
     out = images_to_pdf(images, "fitDocumentToImage")
     return out.select("doc_id", F.explode("spans").alias("sp")).select(
         "doc_id", F.col("sp.kind").alias("kind"),

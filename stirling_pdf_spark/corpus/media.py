@@ -14,10 +14,11 @@ from __future__ import annotations
 import hashlib
 from functools import lru_cache
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.extract_pipeline import map_rows
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
@@ -70,27 +71,20 @@ def media_refs(docs: DataFrame) -> DataFrame:
 
 def _ref_table(docs: DataFrame, fmt_of, payload_of) -> DataFrame:
     """(media_ref, fmt, payload) for every distinct corpus ref, generated
-    distributed (mapInArrow over ``media_refs``). ``fmt_of`` is a fixed
-    format string or a function of the ref; ``payload_of`` maps a ref
-    to its payload bytes."""
+    distributed (one map_rows stage over ``media_refs``). ``fmt_of`` is
+    a fixed format string or a function of the ref; ``payload_of`` maps
+    a ref to its payload bytes."""
     fmt = fmt_of if callable(fmt_of) else (lambda _r: fmt_of)
 
-    def gen(batches):
-        for rb in batches:
-            refs = rb.column(0).to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(refs, pa.string()),
-                 pa.array([fmt(r) for r in refs], pa.string()),
-                 pa.array([payload_of(r) for r in refs], pa.binary())],
-                names=["media_ref", "fmt", "payload"],
-            )
+    def gen(ref):
+        yield ref, fmt(ref), payload_of(ref)
 
-    return media_refs(docs).mapInArrow(gen, MEDIA_SCHEMA)
+    return map_rows(media_refs(docs), gen, MEDIA_SCHEMA)
 
 
 def media_table(docs: DataFrame) -> DataFrame:
     """media(media_ref, fmt, payload) for every ref in the corpus.
-    Generation is distributed (mapInArrow over the distinct refs)."""
+    Generation is distributed (map_rows over the distinct refs)."""
     return _ref_table(docs, fmt_for_ref, payload_for_ref)
 
 

@@ -3,7 +3,7 @@
 Two sources for the interleaved-docs table (both deterministic, no
 external data):
   * ``synth_docs_df`` — archetype corpus from doc indices
-    (spark.range -> mapInPandas(generator)); generation is distributed,
+    (spark.range -> mapInArrow(generator)); generation is distributed,
     so bench corpora never bottleneck on the driver;
   * ``docs_from_documents_table`` — derived 1:1 from the driver's
     read-only ``documents`` parquet via corpus.synth.synth_from_text.
@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..kernel import wire
 from ..kernel.model import TextRun
 from ..operators.dedup import fan_out
-from ..operators.extract_pipeline import pylist
+from ..operators.extract_pipeline import map_rows, pylist
 from ..sources.tables import DOCS_SCHEMA, read_table
 from .synth import synth_doc, synth_from_text
 
@@ -121,19 +121,10 @@ def _derive_docs(spark: SparkSession, sf_dir: str, derive) -> DataFrame:
     docs = fan_out(read_table(spark, sf_dir, "documents")
                    .select("doc_id", "text"), "doc_id")
 
-    def gen(batches):
-        for rb in batches:
-            names = rb.schema.names
-            ids = pylist(rb.column(names.index("doc_id")))
-            texts = pylist(rb.column(names.index("text")))
-            out_ids, out_spans = [], []
-            for doc_id, text in zip(ids, texts):
-                did, spans = derive(f"doc-{doc_id}", text or "")
-                out_ids.append(did)
-                out_spans.append(spans)
-            yield _spans_batch(out_ids, out_spans)
+    def gen(doc_id, text):
+        yield derive(f"doc-{doc_id}", text or "")
 
-    return docs.mapInArrow(gen, DOCS_SCHEMA)
+    return map_rows(docs, gen, DOCS_SCHEMA)
 
 
 def docs_twocol_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -343,29 +343,21 @@ def html_table_cells(df, id_col: str = "doc_id", html_col: str = "html"):
     colspan advances the cursor, rowspan ignored, nested tables bind
     cells to the innermost context — the kernel's documented subset).
 
-    Scale shape: one Arrow-batched mapInPandas straight off the scan —
+    Scale shape: one map_rows stage straight off the scan —
     map-only, per-doc cost linear in HTML length, no shuffle. Output:
     (id, table_idx, row_idx, col_idx, is_header, colspan, cell_text).
     """
-    import pandas as pd
-
     from ..kernel.html_tables import extract_table_cells
+    from ..operators.extract_pipeline import map_rows
 
     schema = ("id string, table_idx long, row_idx long, col_idx long, "
               "is_header boolean, colspan long, cell_text string")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did, html in zip(pdf[id_col], pdf[html_col]):
-                for t, r, c, hdr, span, text in extract_table_cells(
-                        html or ""):
-                    rows.append((did, t, r, c, hdr, span, text))
-            yield pd.DataFrame(rows, columns=[
-                "id", "table_idx", "row_idx", "col_idx", "is_header",
-                "colspan", "cell_text"])
+    def gen(did, html):
+        for cell in extract_table_cells(html or ""):
+            yield (did, *cell)
 
-    return df.select(id_col, html_col).mapInPandas(gen, schema)
+    return map_rows(df.select(id_col, html_col), gen, schema)
 
 
 def feed_entries(feeds, domain_col: str = "domain",

@@ -18,8 +18,8 @@ Documented subset (stated, not silently wrong):
 - Cell text is the whitespace-normalized join of all character data
   inside the cell, including inline markup text.
 
-Pure (html in, cell rows out) — the Spark plumbing (Arrow-batched
-mapInPandas over the corpus) lives in functions/html.py, matching the
+Pure (html in, cell rows out) — the Spark plumbing (one map_rows
+stage over the corpus) lives in functions/html.py, matching the
 other HTML kernels.
 """
 

@@ -19,11 +19,10 @@ costs one task its matrix, bounded by ``max_tokens``.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .extract_pipeline import map_rows
 
 _SUMMARY_SCHEMA = ("doc_id string, n_unchanged long, n_removed long, "
                    "n_added long, removed_sorted string, added_sorted string")
@@ -53,20 +52,11 @@ def compare_summary(base: DataFrame, revised: DataFrame,
     the per-type multisets (deterministic under equal-token ties)."""
     from ..kernel.diff import diff_summary, tokenize
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, bt, rt in zip(pdf["doc_id"], pdf["base_text"],
-                                   pdf["rev_text"]):
-                u, nr, na, rem, add = diff_summary(
-                    tokenize(bt or ""), tokenize(rt or ""),
-                    max_tokens=max_tokens)
-                rows.append((did, u, nr, na, rem, add))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_unchanged", "n_removed", "n_added",
-                "removed_sorted", "added_sorted"])
+    def gen(did, bt, rt):
+        yield (did, *diff_summary(tokenize(bt or ""), tokenize(rt or ""),
+                                  max_tokens=max_tokens))
 
-    return _paired(base, revised).mapInPandas(gen, _SUMMARY_SCHEMA)
+    return map_rows(_paired(base, revised), gen, _SUMMARY_SCHEMA)
 
 
 def compare_changes(base: DataFrame, revised: DataFrame,
@@ -81,20 +71,11 @@ def compare_changes(base: DataFrame, revised: DataFrame,
     per (doc, pane) in document order."""
     from ..kernel.diff import change_groups, diff_words, tokenize
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, bt, rt in zip(pdf["doc_id"], pdf["base_text"],
-                                   pdf["rev_text"]):
-                diff = diff_words(tokenize(bt or ""), tokenize(rt or ""),
-                                  max_tokens=max_tokens)
-                for pane in ("base", "comparison"):
-                    for idx, (gid, first, last, label, n) in enumerate(
-                            change_groups(diff, pane)):
-                        rows.append((did, pane, idx, gid, first, last,
-                                     label, n))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "pane", "group_idx", "group_id", "first_pos",
-                "last_pos", "label", "n_tokens"])
+    def gen(did, bt, rt):
+        diff = diff_words(tokenize(bt or ""), tokenize(rt or ""),
+                          max_tokens=max_tokens)
+        for pane in ("base", "comparison"):
+            for idx, group in enumerate(change_groups(diff, pane)):
+                yield (did, pane, idx, *group)
 
-    return _paired(base, revised).mapInPandas(gen, _GROUPS_SCHEMA)
+    return map_rows(_paired(base, revised), gen, _GROUPS_SCHEMA)

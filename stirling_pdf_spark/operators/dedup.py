@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .extract_pipeline import map_rows
+
 # ---------------------------------------------------------------- helpers
 
 def words_col(text_col: str = "text"):
@@ -71,7 +73,7 @@ def fan_out(df: DataFrame, *cols: str) -> DataFrame:
     """Spread a small-scan input across the session's parallelism
     before a compute-heavy Python stage. The bench tables are single
     small parquet files (one row group — an unsplittable ONE-task
-    scan), so a mapInPandas/mapInArrow directly over them runs
+    scan), so a map_rows stage directly over them runs
     serially; hash-repartition on ``cols`` (deterministic under task
     retry, unlike round-robin) unless the input is already at least
     that parallel (at 100 TB the scan has thousands of splits and a
@@ -649,11 +651,10 @@ def image_dhash(media: DataFrame, payload_col: str = "payload",
     Per image: real decode (multimodal.decode_pixels — PNG/JPEG/GIF/
     PPM/BMP), BT.601 integer luma, box-average down to the 9x8 dHash
     grid, bit r*8+c = cell[r][c+1] > cell[r][c]. One narrow
-    mapInPandas, no shuffle; undecodable payloads yield null hashes
+    map_rows stage, no shuffle; undecodable payloads yield null hashes
     (per-row error isolation). Output: (media_ref, dhash int64,
     width, height)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -668,40 +669,30 @@ def image_dhash(media: DataFrame, payload_col: str = "payload",
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        for pdf in batches:
-            out = {"media_ref": [], "dhash": [], "width": [],
-                   "height": []}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                dh = w = h = None
-                try:
-                    b = bytes(payload) if payload is not None else b""
-                    w, h, rgb = decode_pixels(b)
-                    px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-                    wide = px.astype(np.int64)
-                    luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
-                            + 114 * wide[:, :, 2]) // 1000
-                    # box-average to 8 rows x 9 cols (exact on
-                    # cell-aligned fixtures, standard area sampling
-                    # otherwise)
-                    ys = [int(r * h / 8) for r in range(9)]
-                    xs = [int(c * w / 9) for c in range(10)]
-                    cells = _box_average(luma, ys, xs)
-                    v = np.uint64(0)
-                    for r in range(8):
-                        for c in range(8):
-                            if cells[r, c + 1] > cells[r, c]:
-                                v |= np.uint64(1) << np.uint64(r * 8 + c)
-                    dh = int(v.astype(np.int64))
-                except (NotImplementedError, ValueError, IndexError):
-                    w = h = dh = None
-                out["media_ref"].append(ref)
-                out["dhash"].append(dh)
-                out["width"].append(w)
-                out["height"].append(h)
-            yield pd.DataFrame(out)
+    def run(ref, payload):
+        dh = w = h = None
+        try:
+            w, h, rgb = decode_pixels(payload or b"")
+            px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
+            wide = px.astype(np.int64)
+            luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
+                    + 114 * wide[:, :, 2]) // 1000
+            # box-average to 8 rows x 9 cols (exact on cell-aligned
+            # fixtures, standard area sampling otherwise)
+            ys = [int(r * h / 8) for r in range(9)]
+            xs = [int(c * w / 9) for c in range(10)]
+            cells = _box_average(luma, ys, xs)
+            v = np.uint64(0)
+            for r in range(8):
+                for c in range(8):
+                    if cells[r, c + 1] > cells[r, c]:
+                        v |= np.uint64(1) << np.uint64(r * 8 + c)
+            dh = int(v.astype(np.int64))
+        except (NotImplementedError, ValueError, IndexError):
+            w = h = dh = None
+        yield ref, dh, w, h
 
-    return src.mapInPandas(run, schema)
+    return map_rows(src, run, schema)
 
 
 def dhash_near_dup_pairs(hashes: DataFrame, max_distance: int = 7,
@@ -780,13 +771,12 @@ def image_ahash(media: DataFrame, payload_col: str = "payload",
 
     Per image: real decode (multimodal.decode_pixels), BT.601 integer
     luma, box-average down to the 8x8 aHash grid, bit r*8+c =
-    cell[r][c] > mean(all 64 cells). Same narrow mapInPandas shape as
+    cell[r][c] > mean(all 64 cells). Same narrow map_rows shape as
     image_dhash — no shuffle, undecodable payloads yield null hashes.
     Output: (media_ref, ahash int64, width, height); pair generation
     reuses dhash_near_dup_pairs(hash_col='ahash') — the banded
     Hamming LSH is hash-family agnostic."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -801,38 +791,29 @@ def image_ahash(media: DataFrame, payload_col: str = "payload",
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        for pdf in batches:
-            out = {"media_ref": [], "ahash": [], "width": [],
-                   "height": []}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                ah = w = h = None
-                try:
-                    b = bytes(payload) if payload is not None else b""
-                    w, h, rgb = decode_pixels(b)
-                    px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-                    wide = px.astype(np.int64)
-                    luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
-                            + 114 * wide[:, :, 2]) // 1000
-                    ys = [int(r * h / 8) for r in range(9)]
-                    xs = [int(c * w / 8) for c in range(9)]
-                    cells = _box_average(luma, ys, xs)
-                    mean = cells.mean()
-                    v = np.uint64(0)
-                    for r in range(8):
-                        for c in range(8):
-                            if cells[r, c] > mean:
-                                v |= np.uint64(1) << np.uint64(r * 8 + c)
-                    ah = int(v.astype(np.int64))
-                except (NotImplementedError, ValueError, IndexError):
-                    w = h = ah = None
-                out["media_ref"].append(ref)
-                out["ahash"].append(ah)
-                out["width"].append(w)
-                out["height"].append(h)
-            yield pd.DataFrame(out)
+    def run(ref, payload):
+        ah = w = h = None
+        try:
+            w, h, rgb = decode_pixels(payload or b"")
+            px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
+            wide = px.astype(np.int64)
+            luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
+                    + 114 * wide[:, :, 2]) // 1000
+            ys = [int(r * h / 8) for r in range(9)]
+            xs = [int(c * w / 8) for c in range(9)]
+            cells = _box_average(luma, ys, xs)
+            mean = cells.mean()
+            v = np.uint64(0)
+            for r in range(8):
+                for c in range(8):
+                    if cells[r, c] > mean:
+                        v |= np.uint64(1) << np.uint64(r * 8 + c)
+            ah = int(v.astype(np.int64))
+        except (NotImplementedError, ValueError, IndexError):
+            w = h = ah = None
+        yield ref, ah, w, h
 
-    return src.mapInPandas(run, schema)
+    return map_rows(src, run, schema)
 
 
 def image_phash(media: DataFrame, payload_col: str = "payload",
@@ -849,12 +830,11 @@ def image_phash(media: DataFrame, payload_col: str = "payload",
     luma, box-average to the 32x32 pHash plane, orthonormal 2D DCT
     (two 32x32 matmuls), bit i = sign of the i-th low-frequency AC
     coefficient (8x8 block minus DC, row-major — 63 bits). Same
-    narrow mapInPandas shape as image_dhash: no shuffle, undecodable
+    narrow map_rows shape as image_dhash: no shuffle, undecodable
     payloads yield null hashes. Output: (media_ref, phash int64,
     width, height); pairs via dhash_near_dup_pairs(hash_col='phash',
     n_bands=7, band_bits=9) — exact for distance <= 6."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -870,54 +850,46 @@ def image_phash(media: DataFrame, payload_col: str = "payload",
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        m = _dct_mat()
-        for pdf in batches:
-            out = {"media_ref": [], "phash": [], "width": [],
-                   "height": []}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                ph = w = h = None
-                try:
-                    b = bytes(payload) if payload is not None else b""
-                    w, h, rgb = decode_pixels(b)
-                    px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-                    wide = px.astype(np.int64)
-                    luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
-                            + 114 * wide[:, :, 2]) // 1000
-                    d = PHASH_DIM
-                    if (h, w) == (d, d):
-                        plane = luma.astype(np.float64)
-                    elif h >= d and w >= d:
-                        # area sampling on integer boundaries (exact
-                        # on cell-aligned fixtures)
-                        ys = [int(r * h / d) for r in range(d + 1)]
-                        xs = [int(c * w / d) for c in range(d + 1)]
-                        plane = _box_average(luma, ys, xs)
-                    else:
-                        # upsample small rasters by nearest pixel
-                        iy = (np.arange(d) * h) // d
-                        ix = (np.arange(d) * w) // d
-                        plane = luma[np.ix_(iy, ix)].astype(np.float64)
-                    coef = m @ plane @ m.T
-                    v = np.uint64(0)
-                    i = 0
-                    for u in range(PHASH_LOW):
-                        for vv in range(PHASH_LOW):
-                            if u == 0 and vv == 0:
-                                continue
-                            if coef[u, vv] > 0:
-                                v |= np.uint64(1) << np.uint64(i)
-                            i += 1
-                    ph = int(v.astype(np.int64))
-                except (NotImplementedError, ValueError, IndexError):
-                    w = h = ph = None
-                out["media_ref"].append(ref)
-                out["phash"].append(ph)
-                out["width"].append(w)
-                out["height"].append(h)
-            yield pd.DataFrame(out)
+    m = _dct_mat()
 
-    return src.mapInPandas(run, schema)
+    def run(ref, payload):
+        ph = w = h = None
+        try:
+            w, h, rgb = decode_pixels(payload or b"")
+            px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
+            wide = px.astype(np.int64)
+            luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
+                    + 114 * wide[:, :, 2]) // 1000
+            d = PHASH_DIM
+            if (h, w) == (d, d):
+                plane = luma.astype(np.float64)
+            elif h >= d and w >= d:
+                # area sampling on integer boundaries (exact on
+                # cell-aligned fixtures)
+                ys = [int(r * h / d) for r in range(d + 1)]
+                xs = [int(c * w / d) for c in range(d + 1)]
+                plane = _box_average(luma, ys, xs)
+            else:
+                # upsample small rasters by nearest pixel
+                iy = (np.arange(d) * h) // d
+                ix = (np.arange(d) * w) // d
+                plane = luma[np.ix_(iy, ix)].astype(np.float64)
+            coef = m @ plane @ m.T
+            v = np.uint64(0)
+            i = 0
+            for u in range(PHASH_LOW):
+                for vv in range(PHASH_LOW):
+                    if u == 0 and vv == 0:
+                        continue
+                    if coef[u, vv] > 0:
+                        v |= np.uint64(1) << np.uint64(i)
+                    i += 1
+            ph = int(v.astype(np.int64))
+        except (NotImplementedError, ValueError, IndexError):
+            w = h = ph = None
+        yield ref, ph, w, h
+
+    return map_rows(src, run, schema)
 
 
 def substring_dup_coverage(df: DataFrame, w: int = 8,

@@ -18,9 +18,10 @@ from __future__ import annotations
 from email import message_from_bytes, policy
 from email.message import EmailMessage
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .extract_pipeline import map_rows
 
 PARSED_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -65,23 +66,10 @@ def eml_roundtrip(docs: DataFrame, id_col: str = "doc_id",
     src = docs.selectExpr(f"CAST({id_col} AS STRING) AS doc_id",
                           f"{text_col} AS text")
 
-    def run(batches):
-        for rb in batches:
-            ids = rb.column(0).to_pylist()
-            texts = rb.column(1).to_pylist()
-            subj, frm, blen, natt = [], [], [], []
-            for did, text in zip(ids, texts):
-                parsed = parse_eml(build_eml(did, text or "",
-                                             attachments=int(did[-1] in "05")))
-                subj.append(parsed["subject"])
-                frm.append(parsed["from_addr"])
-                blen.append(len(parsed["body"].rstrip("\n")))
-                natt.append(parsed["n_attachments"])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.string()), pa.array(subj, pa.string()),
-                 pa.array(frm, pa.string()), pa.array(blen, pa.int64()),
-                 pa.array(natt, pa.int64())],
-                names=[f.name for f in PARSED_SCHEMA],
-            )
+    def run(did, text):
+        parsed = parse_eml(build_eml(did, text or "",
+                                     attachments=int(did[-1] in "05")))
+        yield (did, parsed["subject"], parsed["from_addr"],
+               len(parsed["body"].rstrip("\n")), parsed["n_attachments"])
 
-    return src.mapInArrow(run, PARSED_SCHEMA)
+    return map_rows(src, run, PARSED_SCHEMA)

@@ -43,10 +43,13 @@ regroup by doc_id, both on keys that are unique or salted — no hot keys
 by construction. The regroup's partition count is left to
 ``spark.sql.shuffle.partitions`` and AQE coalescing.
 
-``map_docs`` is the one per-document Arrow stage every other raw-docs
-operator (exports, tables, search, elements, comments, edit-text) runs
-through: repartition on doc_id, decode the spans columnar, call the
-operator's per-doc function, build the output batch column by column.
+``map_rows`` is the one row-wise Arrow stage every other per-row Python
+operator runs through (media decoders, perceptual hashes, compare, NFC,
+file/WARC/EML sources, corpus derivation): read each column once per
+batch, call the operator's per-row function, build the output batch
+column by column. ``map_docs``, the stage of every raw-docs operator
+(exports, tables, search, elements, comments, edit-text), is a
+repartition on doc_id, then ``map_rows``.
 """
 
 from __future__ import annotations
@@ -100,17 +103,15 @@ def pylist(col: "pa.Array | pa.ChunkedArray") -> list:
 
 
 def _decode_span_lists(col: "pa.Array") -> list[list[tuple]]:
-    """Columnar decode of array<struct<kind,text,media_ref,offset>>:
-    four flat column reads (``pylist``) + one zip, instead of a dict per
-    span — the dominant cost of the UDF boundary at scale."""
+    """Columnar decode of a ``list<struct>`` column (raw spans
+    ``array<struct<kind,text,media_ref,offset>>`` on the extraction
+    path): one flat column read (``pylist``) per struct field + one zip,
+    each element a tuple of its fields by position, instead of a dict
+    per element — the dominant cost of the UDF boundary at scale."""
     lst = col.combine_chunks() if hasattr(col, "combine_chunks") else col
     vals = lst.flatten()
-    flat = list(zip(
-        pylist(vals.field("kind")),
-        pylist(vals.field("text")),
-        pylist(vals.field("media_ref")),
-        pylist(vals.field("offset")),
-    ))
+    flat = list(zip(*[pylist(vals.field(i))
+                      for i in range(vals.type.num_fields)]))
     offs = pylist(lst.offsets)
     base = offs[0]
     return [flat[offs[i] - base:offs[i + 1] - base] for i in range(len(offs) - 1)]
@@ -131,28 +132,48 @@ def _encode_span_lists(span_lists: list[list[tuple]]) -> "pa.ListArray":
     return pa.ListArray.from_arrays(pa.array(offs, pa.int32()), struct)
 
 
-def map_docs(docs: DataFrame, fn, schema: T.StructType) -> DataFrame:
-    """The per-document Arrow stage over raw ``docs(doc_id, spans)``:
-    ``fn(doc_id, raw_spans)`` yields output rows as tuples in ``schema``
-    order (any number per doc, none for a doc that emits nothing). One
-    repartition on doc_id, then one mapInArrow; per batch the rows are
-    transposed and each column built with one ``pa.array`` of its Arrow
-    type, nested ``list<struct>`` columns included."""
+def _read_column(col: "pa.Array") -> list:
+    """One batch column as Python values: ``_decode_span_lists`` for a
+    ``list<struct>`` column, ``pylist`` for any other."""
+    t = col.type
+    if pa.types.is_list(t) and pa.types.is_struct(t.value_type):
+        return _decode_span_lists(col)
+    return pylist(col)
+
+
+def map_rows(df: DataFrame, fn, schema: "T.StructType | str") -> DataFrame:
+    """The row-wise Arrow stage: ``fn(*row)`` gets one input row's
+    values in column order (binary as ``bytes``, a null as ``None``,
+    ``list<struct>`` elements as tuples) and yields output rows as
+    tuples in ``schema`` order (any number per row). ``schema`` is a
+    StructType or a DDL string. One mapInArrow; per batch each input
+    column is read once, the output rows are transposed and each column
+    built with one ``pa.array`` of its Arrow type, nested
+    ``list<struct>`` columns (from tuples) included; a batch that emits
+    no row yields a typed empty batch."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
 
     def run(batches):
         for rb in batches:
-            names = rb.schema.names
-            ids = pylist(rb.column(names.index("doc_id")))
-            raw = _decode_span_lists(rb.column(names.index("spans")))
-            rows = [row for did, spans in zip(ids, raw) for row in fn(did, spans)]
+            rows = [out for row in zip(*map(_read_column, rb.columns))
+                    for out in fn(*row)]
             cols = list(zip(*rows)) if rows else [[]] * len(arrow_schema)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(c, f.type) for c, f in zip(cols, arrow_schema)],
                 schema=arrow_schema)
 
+    return df.mapInArrow(run, schema)
+
+
+def map_docs(docs: DataFrame, fn, schema: T.StructType) -> DataFrame:
+    """The per-document Arrow stage over raw ``docs(doc_id, spans)``:
+    one repartition on doc_id, then ``map_rows`` with
+    ``fn(doc_id, raw_spans)``."""
     n = docs.sparkSession.sparkContext.defaultParallelism * 2
-    return docs.repartition(n, "doc_id").mapInArrow(run, schema)
+    return map_rows(docs.repartition(n, "doc_id").select("doc_id", "spans"),
+                    fn, schema)
 
 
 def _tag_sql(pages_per_bucket: int) -> str:

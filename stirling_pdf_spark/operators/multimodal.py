@@ -7,8 +7,9 @@ layout a 100 TB training pipeline needs:
 
     media(media_ref: string, fmt: string, payload: binary)
 
-Decode / feature-extract stages are `mapInPandas` over Arrow batches
-(pyarrow binary arrays — zero-copy into the Python worker). Decoding
+Decode / feature-extract stages are row functions run through one
+``map_rows`` stage (operators/extract_pipeline.py: payloads arrive as
+``bytes`` straight off the Arrow batch, no pandas round trip). Decoding
 is REAL for PPM/BMP (stdlib struct), PNG (stdlib zlib + all five
 scanline filters), baseline JPEG (kernel/jpeg.py: Huffman entropy
 decode + IDCT, grayscale and 4:4:4 color) and GIF (kernel/gif.py: the
@@ -36,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .extract_pipeline import map_rows
 
 MAX_PAYLOAD_BYTES = 50 * 1024 * 1024  # reference: 50MB/file cap, AttachmentService.java:47
 
@@ -234,7 +237,8 @@ def decode_pixels(payload: bytes) -> tuple[int, int, bytes]:
     (bottom-up padded BGR rows re-ordered). This is the input stage
     for pixel-consuming operators (perceptual hashing); formats that
     need external codecs raise NotImplementedError like
-    decode_image."""
+    decode_image; a BMP cut inside its header raises ValueError,
+    which its per-row callers catch."""
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
         w, h, px = decode_png(payload)
         if len(px) == 4 * w * h:        # RGBA -> RGB
@@ -281,6 +285,8 @@ def decode_pixels(payload: bytes) -> tuple[int, int, bytes]:
             raise ValueError("truncated PPM pixel data")
         return w, h, px
     if payload[:2] == b"BM":
+        if len(payload) < 30:   # the fixed fields read below end at 30
+            raise ValueError("truncated BMP header")
         (data_off,) = struct.unpack_from("<I", payload, 10)
         w, h_raw = struct.unpack_from("<ii", payload, 18)
         (bpp,) = struct.unpack_from("<H", payload, 28)
@@ -322,7 +328,7 @@ def decode_images(media: DataFrame, payload_col: str = "payload",
                   fmt_col: str = "fmt",
                   with_reason: bool = False) -> DataFrame:
     """Arrow-batched REAL decode stage over raster payloads: one
-    narrow mapInPandas, no shuffle; undecodable payloads yield null
+    narrow map_rows stage, no shuffle; undecodable payloads yield null
     dims instead of failing the batch (per-row error isolation, the
     behavior a 100 TB sweep needs). ``with_reason=True`` appends the
     per-row failure message column (the decode_audio/probe_video
@@ -337,56 +343,42 @@ def decode_images(media: DataFrame, payload_col: str = "payload",
             IMAGE_DECODE_SCHEMA.fields
             + [T.StructField("reason", T.StringType(), True)])
 
-    def run(batches):
-        for pdf in batches:
-            out = {"media_ref": [], "fmt": [], "width": [],
-                   "height": [], "n_bytes": [], "px_head": []}
-            if with_reason:
-                out["reason"] = []
-            for ref, fmt, payload in zip(pdf["media_ref"], pdf["fmt"],
-                                         pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                px_head = None
-                reason = None
-                try:
-                    if b[:8] == b"\x89PNG\r\n\x1a\n":
-                        w, h, px = decode_png(b)
-                        px_head = px[:8].hex()
-                    elif b[:3] == b"\xFF\xD8\xFF":
-                        from ..kernel import jpeg
+    def run(ref, fmt, payload):
+        b = payload or b""
+        px_head = None
+        reason = None
+        try:
+            if b[:8] == b"\x89PNG\r\n\x1a\n":
+                w, h, px = decode_png(b)
+                px_head = px[:8].hex()
+            elif b[:3] == b"\xFF\xD8\xFF":
+                from ..kernel import jpeg
 
-                        w, h, _nc, px = jpeg.decode(b)
-                        px_head = px[:8].hex()
-                    elif b[:4] == b"GIF8":
-                        from ..kernel import gif
+                w, h, _nc, px = jpeg.decode(b)
+                px_head = px[:8].hex()
+            elif b[:4] == b"GIF8":
+                from ..kernel import gif
 
-                        w, h, px = gif.decode(b)
-                        px_head = px[:8].hex()
-                    elif b[:4] in (b"II*\x00", b"MM\x00*"):
-                        from ..kernel import tiff
+                w, h, px = gif.decode(b)
+                px_head = px[:8].hex()
+            elif b[:4] in (b"II*\x00", b"MM\x00*"):
+                from ..kernel import tiff
 
-                        w, h, _ch, px = tiff.decode(b)
-                        px_head = px[:8].hex()
-                    else:
-                        w, h = decode_image(b)
-                except (NotImplementedError, ValueError, IndexError,
-                        struct.error) as e:
-                    # struct.error: truncated container headers ('BM'
-                    # prefix shorter than its fixed fields) must stay a
-                    # per-row null, not an Arrow-batch failure
-                    w = h = None
-                    reason = str(e) or type(e).__name__
-                if with_reason:
-                    out["reason"].append(reason)
-                out["media_ref"].append(ref)
-                out["fmt"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_bytes"].append(len(b))
-                out["px_head"].append(px_head)
-            yield pd.DataFrame(out)
+                w, h, _ch, px = tiff.decode(b)
+                px_head = px[:8].hex()
+            else:
+                w, h = decode_image(b)
+        except (NotImplementedError, ValueError, IndexError,
+                struct.error) as e:
+            # struct.error: truncated container headers ('BM'
+            # prefix shorter than its fixed fields) must stay a
+            # per-row null, not an Arrow-batch failure
+            w = h = None
+            reason = str(e) or type(e).__name__
+        row = (ref, fmt, w, h, len(b), px_head)
+        yield row + (reason,) if with_reason else row
 
-    return src.mapInPandas(run, schema)
+    return map_rows(src, run, schema)
 
 
 # PDFBox PDRectangle.A4 in points (210 x 297 mm at 72 dpi)
@@ -506,18 +498,14 @@ def media_metadata(media: DataFrame, payload_col: str = "payload",
     cols.insert(1, F.col(fmt_col).alias("fmt") if fmt_col else F.lit(None).cast("string").alias("fmt"))
     src = media.select(*cols)
 
-    def extract(batches):
-        for pdf in batches:
-            metas = []
-            for ref, fmt, payload in zip(pdf["media_ref"], pdf["fmt"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                digest = hashlib.sha256(b)
-                w, h = _fake_dims(digest.digest())
-                metas.append((ref, fmt, len(b), digest.hexdigest(), w, h,
-                              len(b) > MAX_PAYLOAD_BYTES))
-            yield pd.DataFrame(metas, columns=[f.name for f in MEDIA_META_SCHEMA])
+    def extract(ref, fmt, payload):
+        b = payload or b""
+        digest = hashlib.sha256(b)
+        w, h = _fake_dims(digest.digest())
+        yield (ref, fmt, len(b), digest.hexdigest(), w, h,
+               len(b) > MAX_PAYLOAD_BYTES)
 
-    return src.mapInPandas(extract, MEDIA_META_SCHEMA)
+    return map_rows(src, extract, MEDIA_META_SCHEMA)
 
 
 def frame_sample(media: DataFrame, frame_bytes: int = 4096, every_n: int = 10,
@@ -529,19 +517,13 @@ def frame_sample(media: DataFrame, frame_bytes: int = 4096, every_n: int = 10,
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def sample(batches):
-        for pdf in batches:
-            out = {"media_ref": [], "frame_no": [], "frame": []}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                n_frames = (len(b) + frame_bytes - 1) // frame_bytes
-                for i in range(0, n_frames, every_n):
-                    out["media_ref"].append(ref)
-                    out["frame_no"].append(i)
-                    out["frame"].append(b[i * frame_bytes:(i + 1) * frame_bytes])
-            yield pd.DataFrame(out)
+    def sample(ref, payload):
+        b = payload or b""
+        n_frames = (len(b) + frame_bytes - 1) // frame_bytes
+        for i in range(0, n_frames, every_n):
+            yield ref, i, b[i * frame_bytes:(i + 1) * frame_bytes]
 
-    return src.mapInPandas(sample, FRAME_SCHEMA)
+    return map_rows(src, sample, FRAME_SCHEMA)
 
 
 def resolve_media(spans_out: DataFrame, media: DataFrame) -> DataFrame:
@@ -601,7 +583,7 @@ def decode_audio(media: DataFrame, payload_col: str = "payload",
                  ref_col: str = "media_ref",
                  fmt_col: str = "fmt") -> DataFrame:
     """Arrow-batched REAL audio decode stage (kernel/wav.py RIFF/PCM):
-    one narrow mapInPandas, no shuffle; undecodable payloads yield
+    one narrow map_rows stage, no shuffle; undecodable payloads yield
     null stats + a reason instead of failing the batch — the same
     per-row error isolation as decode_images."""
     from ..kernel import wav
@@ -610,33 +592,19 @@ def decode_audio(media: DataFrame, payload_col: str = "payload",
                        F.col(fmt_col).alias("fmt"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_ref", "fmt", "n_bytes", "channels",
-                "sample_rate", "bits", "n_frames", "duration_ms",
-                "peak", "sum_abs", "reason")}
-            for ref, fmt, payload in zip(pdf["media_ref"], pdf["fmt"],
-                                         pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                info = reason = None
-                try:
-                    info = wav.decode(b)
-                except (NotImplementedError, ValueError,
-                        struct.error) as e:
-                    reason = str(e) or type(e).__name__
-                out["media_ref"].append(ref)
-                out["fmt"].append(fmt)
-                out["n_bytes"].append(len(b))
-                for field in ("channels", "sample_rate", "bits",
-                              "n_frames", "duration_ms", "peak",
-                              "sum_abs"):
-                    out[field].append(
-                        getattr(info, field) if info else None)
-                out["reason"].append(reason)
-            yield pd.DataFrame(out)
+    def run(ref, fmt, payload):
+        b = payload or b""
+        info = reason = None
+        try:
+            info = wav.decode(b)
+        except (NotImplementedError, ValueError, struct.error) as e:
+            reason = str(e) or type(e).__name__
+        yield (ref, fmt, len(b), *(
+            getattr(info, field) if info else None
+            for field in ("channels", "sample_rate", "bits", "n_frames",
+                          "duration_ms", "peak", "sum_abs")), reason)
 
-    return src.mapInPandas(run, AUDIO_DECODE_SCHEMA)
+    return map_rows(src, run, AUDIO_DECODE_SCHEMA)
 
 
 AUDIO_SILENCE_SCHEMA = T.StructType([
@@ -661,53 +629,39 @@ def audio_silence_stats(media: DataFrame, payload_col: str = "payload",
     what remains). Consumes kernel/wav.decode_samples, the same parser
     as decode_audio, so container handling never diverges.
 
-    Scale shape: one narrow mapInPandas over the payload column, no
+    Scale shape: one narrow map_rows stage over the payload column, no
     shuffle; per-row error isolation (null stats + reason) exactly as
     decode_audio/decode_images. Integer outputs keep the DuckDB
     oracle exact."""
+    import numpy as np
+
     from ..kernel import wav
 
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        import numpy as np
+    def run(ref, payload):
+        row, reason = (None,) * 6, None
+        try:
+            channels, rate, _bits, arr = wav.decode_samples(payload or b"")
+            n = int(arr.size)
+            nz = np.flatnonzero(arr)
+            if nz.size:
+                lead = int(nz[0])
+                trail = n - 1 - int(nz[-1])
+            else:
+                lead, trail = n, 0
+            kept = arr[lead:n - trail]
+            a = np.abs(kept)
+            row = (n, lead, trail,
+                   (kept.size // channels) * 1000 // rate,
+                   int(a.max()) if a.size else 0,
+                   int(a.sum()))
+        except (NotImplementedError, ValueError, struct.error) as e:
+            reason = str(e) or type(e).__name__
+        yield (ref, *row, reason)
 
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_ref", "n_samples", "lead_silence",
-                "trail_silence", "trimmed_ms", "peak", "energy_abs",
-                "reason")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                row = reason = None
-                try:
-                    channels, rate, _bits, arr = wav.decode_samples(b)
-                    n = int(arr.size)
-                    nz = np.flatnonzero(arr)
-                    if nz.size:
-                        lead = int(nz[0])
-                        trail = n - 1 - int(nz[-1])
-                    else:
-                        lead, trail = n, 0
-                    kept = arr[lead:n - trail]
-                    a = np.abs(kept)
-                    row = (n, lead, trail,
-                           (kept.size // channels) * 1000 // rate,
-                           int(a.max()) if a.size else 0,
-                           int(a.sum()))
-                except (NotImplementedError, ValueError,
-                        struct.error) as e:
-                    reason = str(e) or type(e).__name__
-                out["media_ref"].append(ref)
-                for i, field in enumerate((
-                        "n_samples", "lead_silence", "trail_silence",
-                        "trimmed_ms", "peak", "energy_abs")):
-                    out[field].append(row[i] if row else None)
-                out["reason"].append(reason)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(run, AUDIO_SILENCE_SCHEMA)
+    return map_rows(src, run, AUDIO_SILENCE_SCHEMA)
 
 
 VIDEO_PROBE_SCHEMA = T.StructType([
@@ -732,7 +686,7 @@ def probe_video(media: DataFrame, payload_col: str = "payload",
     """Arrow-batched REAL ISO-BMFF container probe (kernel/mp4.py box
     walk — the ffprobe-shaped metadata stage; frame decode needs
     codec libraries and stays out of scope per SCOPE.md): one narrow
-    mapInPandas, unparseable payloads yield null metadata + a reason,
+    map_rows stage, unparseable payloads yield null metadata + a reason,
     never a batch failure."""
     from ..kernel import mp4
 
@@ -740,33 +694,20 @@ def probe_video(media: DataFrame, payload_col: str = "payload",
                        F.col(fmt_col).alias("fmt"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_ref", "fmt", "n_bytes", "major_brand",
-                "timescale", "duration_ms", "n_tracks", "n_video",
-                "n_audio", "width", "height", "reason")}
-            for ref, fmt, payload in zip(pdf["media_ref"], pdf["fmt"],
-                                         pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                info = reason = None
-                try:
-                    info = mp4.probe(b)
-                except (NotImplementedError, ValueError,
-                        struct.error) as e:
-                    reason = str(e) or type(e).__name__
-                out["media_ref"].append(ref)
-                out["fmt"].append(fmt)
-                out["n_bytes"].append(len(b))
-                for field in ("major_brand", "timescale",
-                              "duration_ms", "n_tracks", "n_video",
-                              "n_audio", "width", "height"):
-                    out[field].append(
-                        getattr(info, field) if info else None)
-                out["reason"].append(reason)
-            yield pd.DataFrame(out)
+    def run(ref, fmt, payload):
+        b = payload or b""
+        info = reason = None
+        try:
+            info = mp4.probe(b)
+        except (NotImplementedError, ValueError, struct.error) as e:
+            reason = str(e) or type(e).__name__
+        yield (ref, fmt, len(b), *(
+            getattr(info, field) if info else None
+            for field in ("major_brand", "timescale", "duration_ms",
+                          "n_tracks", "n_video", "n_audio", "width",
+                          "height")), reason)
 
-    return src.mapInPandas(run, VIDEO_PROBE_SCHEMA)
+    return map_rows(src, run, VIDEO_PROBE_SCHEMA)
 
 
 def media_caption_pairs(flat_spans: DataFrame) -> DataFrame:
@@ -835,7 +776,7 @@ def png_text_chunks(media: DataFrame, payload_col: str = "payload",
                     ref_col: str = "media_ref") -> DataFrame:
     """PNG textual-metadata extraction (tEXt chunks, PNG 1.2
     §4.2.3.1) — the image-side analogue of document metadata (E15):
-    one narrow mapInPandas over the blob table walking the chunk
+    one narrow map_rows stage over the blob table walking the chunk
     layout (length/type/data/crc framing), emitting (ref, pos, key,
     value) per tEXt chunk in file order. Non-PNG or truncated
     payloads contribute no rows (the decode_images error-isolation
@@ -846,42 +787,29 @@ def png_text_chunks(media: DataFrame, payload_col: str = "payload",
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        for pdf in batches:
-            refs, poss, keys, vals = [], [], [], []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                if b[:8] != b"\x89PNG\r\n\x1a\n":
-                    continue
-                off, pos = 8, 0
-                while off + 8 <= len(b):
-                    (ln,) = struct.unpack(">I", b[off:off + 4])
-                    ctype = b[off + 4:off + 8]
-                    data_end = off + 8 + ln
-                    if data_end + 4 > len(b):
-                        break           # truncated: keep rows so far
-                    if ctype == b"tEXt":
-                        data = b[off + 8:data_end]
-                        nul = data.find(b"\x00")
-                        if nul >= 0:
-                            refs.append(ref)
-                            poss.append(pos)
-                            keys.append(data[:nul].decode("latin-1"))
-                            vals.append(data[nul + 1:].decode("latin-1"))
-                            pos += 1
-                    if ctype == b"IEND":
-                        break
-                    off = data_end + 4
-            import pandas as pd
+    def run(ref, payload):
+        b = payload or b""
+        if b[:8] != b"\x89PNG\r\n\x1a\n":
+            return
+        off, pos = 8, 0
+        while off + 8 <= len(b):
+            (ln,) = struct.unpack(">I", b[off:off + 4])
+            ctype = b[off + 4:off + 8]
+            data_end = off + 8 + ln
+            if data_end + 4 > len(b):
+                break           # truncated: keep rows so far
+            if ctype == b"tEXt":
+                data = b[off + 8:data_end]
+                nul = data.find(b"\x00")
+                if nul >= 0:
+                    yield (ref, pos, data[:nul].decode("latin-1"),
+                           data[nul + 1:].decode("latin-1"))
+                    pos += 1
+            if ctype == b"IEND":
+                break
+            off = data_end + 4
 
-            yield pd.DataFrame({
-                "media_ref": pd.Series(refs, dtype=object),
-                "pos": pd.Series(poss, dtype="int32"),
-                "key": pd.Series(keys, dtype=object),
-                "value": pd.Series(vals, dtype=object),
-            })
-
-    return src.mapInPandas(run, PNG_TEXT_SCHEMA)
+    return map_rows(src, run, PNG_TEXT_SCHEMA)
 
 
 AUDIO_ENERGY_SCHEMA = T.StructType([
@@ -900,39 +828,28 @@ def audio_energy(media: DataFrame, payload_col: str = "payload",
     audio-corpus filter runs (silence/clipping screens) kept in pure
     int64 so the oracle states them closed-form (RMS needs a sqrt, so
     the ENERGY is the engine-stable quantity; callers derive RMS
-    downstream). One narrow mapInPandas; undecodable payloads keep
+    downstream). One narrow map_rows stage; undecodable payloads keep
     the row with null stats + reason (decode_images contract)."""
+    import numpy as np
+
     from ..kernel import wav
 
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "n_samples", "peak",
-                                   "energy", "reason")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                n = pk = en = reason = None
-                try:
-                    import numpy as np
+    def run(ref, payload):
+        n = pk = en = reason = None
+        try:
+            _ch, _rate, _bits, arr = wav.decode_samples(payload or b"")
+            a = np.abs(arr.astype(np.int64))
+            n = int(a.size)
+            pk = int(a.max()) if n else 0
+            en = int((a * a).sum())
+        except (NotImplementedError, ValueError, struct.error) as e:
+            reason = str(e) or type(e).__name__
+        yield ref, n, pk, en, reason
 
-                    _ch, _rate, _bits, arr = wav.decode_samples(b)
-                    a = np.abs(arr.astype(np.int64))
-                    n = int(a.size)
-                    pk = int(a.max()) if n else 0
-                    en = int((a * a).sum())
-                except (NotImplementedError, ValueError,
-                        struct.error) as e:
-                    reason = str(e) or type(e).__name__
-                out["media_ref"].append(ref)
-                out["n_samples"].append(n)
-                out["peak"].append(pk)
-                out["energy"].append(en)
-                out["reason"].append(reason)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(run, AUDIO_ENERGY_SCHEMA)
+    return map_rows(src, run, AUDIO_ENERGY_SCHEMA)
 
 
 def image_exif_meta(media: DataFrame, payload_col: str = "payload",
@@ -942,7 +859,8 @@ def image_exif_meta(media: DataFrame, payload_col: str = "payload",
     X resolution rational, DateTimeOriginal and PixelXDimension.
     Parse failures (no APP1, truncated TIFF) become error rows with a
     reason, never task failures — the LAION-style metadata hygiene
-    stage. Narrow mapInPandas: blobs parse where they sit, no shuffle."""
+    stage. Narrow map_rows stage: blobs parse where they sit, no
+    shuffle; a null payload parses as empty (a 'not a JPEG' row)."""
     from ..kernel.exif import parse_exif
 
     schema = T.StructType([
@@ -958,23 +876,17 @@ def image_exif_meta(media: DataFrame, payload_col: str = "payload",
         T.StructField("reason", T.StringType()),
     ])
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf[ref_col], pdf[payload_col]):
-                try:
-                    m = parse_exif(bytes(payload))
-                    rows.append((ref, m["endian"], m["make"], m["model"],
-                                 m["orientation"], m["xres_num"],
-                                 m["xres_den"], m["datetime_original"],
-                                 m["pixel_x"], None))
-                except (ValueError, IndexError, KeyError) as exc:
-                    rows.append((ref, None, None, None, None, None,
-                                 None, None, None, str(exc)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields])
+    def run(ref, payload):
+        try:
+            m = parse_exif(payload or b"")
+            yield (ref, m["endian"], m["make"], m["model"],
+                   m["orientation"], m["xres_num"], m["xres_den"],
+                   m["datetime_original"], m["pixel_x"], None)
+        except (ValueError, IndexError, KeyError) as exc:
+            yield (ref, None, None, None, None, None, None, None, None,
+                   str(exc))
 
-    return media.select(ref_col, payload_col).mapInPandas(run, schema)
+    return map_rows(media.select(ref_col, payload_col), run, schema)
 
 
 TIFF_PAGES_SCHEMA = T.StructType([
@@ -991,41 +903,26 @@ def tiff_pages(media: DataFrame, payload_col: str = "payload",
     """Explode multi-page TIFFs into per-page frame rows — the
     container walk the reference performs in PdfUtils.imageToPdf
     (PdfUtils.java:439-531: one PDF page per TIFF directory entry).
-    One narrow mapInPandas over the blob table, no shuffle; an
+    One narrow map_rows stage over the blob table, no shuffle; an
     undecodable payload yields a single (null page) row instead of
     failing the batch. Output: (media_ref, page, width, height,
     px_head) with page 0-based in IFD-chain order and px_head the
     first 8 DECODED bytes (proof the strip/PackBits walk is real)."""
+    from ..kernel import tiff
+
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        from ..kernel import tiff
+    def run(ref, payload):
+        try:
+            pages = tiff.decode_pages(payload or b"")
+        except (NotImplementedError, ValueError, struct.error, IndexError):
+            yield ref, None, None, None, None
+            return
+        for i, (w, h, _ch, px) in enumerate(pages):
+            yield ref, i, w, h, px[:8].hex()
 
-        for pdf in batches:
-            out = {"media_ref": [], "page": [], "width": [],
-                   "height": [], "px_head": []}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    pages = tiff.decode_pages(b)
-                except (NotImplementedError, ValueError,
-                        struct.error, IndexError):
-                    out["media_ref"].append(ref)
-                    out["page"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["px_head"].append(None)
-                    continue
-                for i, (w, h, _ch, px) in enumerate(pages):
-                    out["media_ref"].append(ref)
-                    out["page"].append(i)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["px_head"].append(px[:8].hex())
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(run, TIFF_PAGES_SCHEMA)
+    return map_rows(src, run, TIFF_PAGES_SCHEMA)
 
 
 def image_quality_stats(media: DataFrame, payload_col: str = "payload",
@@ -1051,7 +948,7 @@ def image_quality_stats(media: DataFrame, payload_col: str = "payload",
     keep = 1 iff none fire. Undecodable payloads emit null stats and
     keep = 0 (per-row error isolation).
 
-    Scale shape: one narrow mapInPandas decode pass (no shuffle), one
+    Scale shape: one narrow map_rows decode pass (no shuffle), one
     2-long-column corpus aggregate broadcast back — a classifier pass
     must not cost a shuffle at 10^12 images, and this one doesn't."""
     import numpy as np
@@ -1069,38 +966,20 @@ def image_quality_stats(media: DataFrame, payload_col: str = "payload",
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("media_ref", "width", "height",
-                                   "n_px", "sum_luma", "ssq_luma",
-                                   "min_luma", "max_luma")}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                w = h = n = s = q = lo = hi = None
-                try:
-                    b = bytes(payload) if payload is not None else b""
-                    w, h, rgb = decode_pixels(b)
-                    px = np.frombuffer(rgb, np.uint8).reshape(-1, 3)
-                    wide = px.astype(np.int64)
-                    luma = (299 * wide[:, 0] + 587 * wide[:, 1]
-                            + 114 * wide[:, 2]) // 1000
-                    n = int(luma.size)
-                    s = int(luma.sum())
-                    q = int((luma * luma).sum())
-                    lo = int(luma.min())
-                    hi = int(luma.max())
-                except (NotImplementedError, ValueError, IndexError):
-                    w = h = n = s = q = lo = hi = None
-                out["media_ref"].append(ref)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px"].append(n)
-                out["sum_luma"].append(s)
-                out["ssq_luma"].append(q)
-                out["min_luma"].append(lo)
-                out["max_luma"].append(hi)
-            yield pd.DataFrame(out)
+    def run(ref, payload):
+        try:
+            w, h, rgb = decode_pixels(payload or b"")
+            px = np.frombuffer(rgb, np.uint8).reshape(-1, 3)
+            wide = px.astype(np.int64)
+            luma = (299 * wide[:, 0] + 587 * wide[:, 1]
+                    + 114 * wide[:, 2]) // 1000
+            yield (ref, w, h, int(luma.size), int(luma.sum()),
+                   int((luma * luma).sum()), int(luma.min()),
+                   int(luma.max()))
+        except (NotImplementedError, ValueError, IndexError):
+            yield (ref, *(None,) * 7)
 
-    stats = src.mapInPandas(run, schema)
+    stats = map_rows(src, run, schema)
     corpus = stats.filter(F.col("n_px").isNotNull()).agg(
         F.sum("sum_luma").cast("long").alias("tot_sum"),
         F.sum("n_px").cast("long").alias("tot_n"))
@@ -1156,41 +1035,30 @@ def audio_downsample(media: DataFrame, factor: int = 4,
     Output keeps the integer loudness statistics of the RESAMPLED
     signal (count/peak/sum|s|/energy) rather than the samples — the
     engine-stable quantities (audio_energy's contract). One narrow
-    mapInPandas, no shuffle; undecodable rows carry a reason."""
+    map_rows stage, no shuffle; undecodable rows carry a reason."""
+    import numpy as np
+
     from ..kernel import wav
 
     src = media.select(F.col(ref_col).alias("media_ref"),
                        F.col(payload_col).alias("payload"))
 
-    def run(batches):
-        import numpy as np
+    def run(ref, payload):
+        ch = rate = ro = n = pk = sa = en = reason = None
+        try:
+            ch, rate, _bits, arr = wav.decode_samples(payload or b"")
+            frames = arr.astype(np.int64).reshape(-1, ch)
+            nb = (frames.shape[0] // factor) * factor
+            blocks = frames[:nb].reshape(-1, factor, ch)
+            ds = np.floor_divide(blocks.sum(axis=1), factor)
+            a = np.abs(ds)
+            ro = rate // factor
+            n = int(ds.shape[0])
+            pk = int(a.max()) if a.size else 0
+            sa = int(a.sum())
+            en = int((a * a).sum())
+        except (NotImplementedError, ValueError, struct.error) as e:
+            reason = str(e) or type(e).__name__
+        yield ref, ch, rate, ro, n, pk, sa, en, reason
 
-        for pdf in batches:
-            cols = ("media_ref", "channels", "sample_rate", "rate_out",
-                    "n_out_frames", "peak_out", "sumabs_out",
-                    "energy_out", "reason")
-            out = {k: [] for k in cols}
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                ch = rate = ro = n = pk = sa = en = reason = None
-                try:
-                    ch, rate, _bits, arr = wav.decode_samples(b)
-                    frames = arr.astype(np.int64).reshape(-1, ch)
-                    nb = (frames.shape[0] // factor) * factor
-                    blocks = frames[:nb].reshape(-1, factor, ch)
-                    ds = np.floor_divide(blocks.sum(axis=1), factor)
-                    a = np.abs(ds)
-                    ro = rate // factor
-                    n = int(ds.shape[0])
-                    pk = int(a.max()) if a.size else 0
-                    sa = int(a.sum())
-                    en = int((a * a).sum())
-                except (NotImplementedError, ValueError,
-                        struct.error) as e:
-                    reason = str(e) or type(e).__name__
-                for k, v in zip(cols, (ref, ch, rate, ro, n, pk, sa,
-                                       en, reason)):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(run, AUDIO_DOWNSAMPLE_SCHEMA)
+    return map_rows(src, run, AUDIO_DOWNSAMPLE_SCHEMA)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import parallelize, words_col
+from .extract_pipeline import map_rows
 from .packing import prefix_sums
 
 # small deterministic stopword sets; order of LANGS is the tie-break
@@ -662,31 +663,25 @@ def nfc_normalize(df: DataFrame, id_col: str = "doc_id",
     cleanup a multilingual text pipeline runs before tokenization and
     hashing (decomposed 'e'+U+0301 and composed 'é' must not hash to
     different dedup keys). Spark ships no normalizer built-in, so this
-    is one narrow Arrow stage over Python's unicodedata (the stdlib's
+    is one narrow map_rows stage over Python's unicodedata (the stdlib's
     full UCD tables) — the sanctioned slow path for work the JVM can't
     express; no shuffle, per-row nulls pass through.
 
     Output: (doc_id, n_chars_src, text_nfc) — the source char count
     rides along so callers can derive composed-char deltas without
     re-reading the input."""
-    import pandas as pd
     import unicodedata
 
     src = df.select(F.col(id_col).alias("doc_id"),
                     F.col(text_col).alias("text"))
 
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_chars_src": pdf["text"].map(
-                    lambda s: len(s) if s is not None else None),
-                "text_nfc": pdf["text"].map(
-                    lambda s: unicodedata.normalize("NFC", s)
-                    if s is not None else None),
-            })
+    def run(did, s):
+        if s is None:
+            yield did, None, None
+        else:
+            yield did, len(s), unicodedata.normalize("NFC", s)
 
-    return src.mapInPandas(run, NFC_SCHEMA)
+    return map_rows(src, run, NFC_SCHEMA)
 
 
 def bpe_pair_counts(df: DataFrame, k: int = 20, id_col: str = "doc_id",

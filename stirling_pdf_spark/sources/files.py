@@ -20,8 +20,10 @@ becomes one document:
     EmlProcessingUtils.java:256-284 path), attachments as attachment
     spans with content-hash media_refs.
 
-Everything stays Arrow-batched (mapInPandas over the binaryFile rows);
-doc_id = the file name.
+Each source is one ``map_rows`` stage (operators/extract_pipeline.py)
+over the binaryFile rows: the file bytes arrive as ``bytes`` and the
+spans leave as tuples, both straight through Arrow; doc_id = the file
+name.
 """
 
 from __future__ import annotations
@@ -29,40 +31,30 @@ from __future__ import annotations
 import hashlib
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.extract_pipeline import map_rows
 from .tables import DOCS_SCHEMA
 
-_RAW_FIELDS = ("kind", "text", "media_ref", "offset")
 
+def _file_docs(spark: SparkSession, path: str, glob: str,
+               spans_of) -> DataFrame:
+    """One doc per file matching ``glob`` under ``path``: doc_id the
+    file name, spans ``spans_of(name, content_bytes)``."""
+    def gen(p, content):
+        name = os.path.basename(p)
+        yield name, spans_of(name, content)
 
-def _dicts(spans) -> list[dict]:
-    return [dict(zip(_RAW_FIELDS, s)) for s in spans]
-
-
-def _binary_files(spark: SparkSession, path: str, glob: str) -> DataFrame:
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
+    files = (spark.read.format("binaryFile").option("pathGlobFilter", glob)
+             .load(path).select("path", "content"))
+    return map_rows(files, gen, DOCS_SCHEMA)
 
 
 def docs_from_html_files(spark: SparkSession, path: str,
                          glob: str = "*.html") -> DataFrame:
     """One doc per .html file: a single raw html span."""
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                ids.append(os.path.basename(p))
-                markup = bytes(content).decode("utf-8", "replace")
-                spans.append(_dicts([("html", markup, "", 0)]))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _binary_files(spark, path, glob).mapInPandas(gen, DOCS_SCHEMA)
+    return _file_docs(spark, path, glob, lambda _name, content: [
+        ("html", content.decode("utf-8", "replace"), "", 0)])
 
 
 def docs_from_markdown_files(spark: SparkSession, path: str,
@@ -74,17 +66,9 @@ def docs_from_markdown_files(spark: SparkSession, path: str,
     converted-document behavior."""
     from ..functions.markdown_ingest import markdown_to_html
 
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                ids.append(os.path.basename(p))
-                md = bytes(content).decode("utf-8", "replace")
-                spans.append(_dicts([("htmlbody", markdown_to_html(md),
-                                      "", 0)]))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _binary_files(spark, path, glob).mapInPandas(gen, DOCS_SCHEMA)
+    return _file_docs(spark, path, glob, lambda _name, content: [
+        ("htmlbody", markdown_to_html(content.decode("utf-8", "replace")),
+         "", 0)])
 
 
 def docs_from_text_files(spark: SparkSession, path: str,
@@ -93,18 +77,8 @@ def docs_from_text_files(spark: SparkSession, path: str,
     geometry (plain text carries none of its own)."""
     from ..corpus.synth import synth_from_text
 
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(p)
-                text = bytes(content).decode("utf-8", "replace")
-                _, raw = synth_from_text(name, text)
-                ids.append(name)
-                spans.append(_dicts(raw))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _binary_files(spark, path, glob).mapInPandas(gen, DOCS_SCHEMA)
+    return _file_docs(spark, path, glob, lambda name, content: synth_from_text(
+        name, content.decode("utf-8", "replace"))[1])
 
 
 def _eml_to_spans(raw: bytes) -> list[tuple]:
@@ -141,15 +115,8 @@ def docs_from_eml_files(spark: SparkSession, path: str,
                         glob: str = "*.eml") -> DataFrame:
     """One doc per .eml file: meta headers + body html + attachments
     (H6 EML parse as an ingestion source)."""
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                ids.append(os.path.basename(p))
-                spans.append(_dicts(_eml_to_spans(bytes(content))))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _binary_files(spark, path, glob).mapInPandas(gen, DOCS_SCHEMA)
+    return _file_docs(spark, path, glob,
+                      lambda _name, content: _eml_to_spans(content))
 
 
 def docs_from_markdown_strings(df: DataFrame, id_col: str = "doc_id",
@@ -159,14 +126,7 @@ def docs_from_markdown_strings(df: DataFrame, id_col: str = "doc_id",
     form of the /markdown/pdf ingestion path."""
     from ..functions.markdown_ingest import markdown_to_html
 
-    def gen(batches):
-        for pdf in batches:
-            ids, spans = [], []
-            for did, md in zip(pdf[id_col], pdf[md_col]):
-                ids.append(did)
-                spans.append(_dicts([("htmlbody",
-                                      markdown_to_html(md or ""),
-                                      "", 0)]))
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
+    def gen(did, md):
+        yield did, [("htmlbody", markdown_to_html(md or ""), "", 0)]
 
-    return df.select(id_col, md_col).mapInPandas(gen, DOCS_SCHEMA)
+    return map_rows(df.select(id_col, md_col), gen, DOCS_SCHEMA)

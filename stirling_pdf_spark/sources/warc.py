@@ -12,14 +12,12 @@ container with byte-exact CDX-style offsets.
 Synthesis groups ``docs_per_file`` documents per segment keyed by
 ``doc_id // docs_per_file`` — segments build independently in
 parallel and any skew is bounded by the constant group size. Parsing
-is ``mapInPandas`` over (warc_file, blob) rows: segments stay on the
-executor that read them, no shuffle, and a 1000-executor cluster
+is one ``map_rows`` stage over (warc_file, blob) rows: segments stay on
+the executor that read them, no shuffle, and a 1000-executor cluster
 ingests 1000 segments at a time.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernel.warc import build_warc, parse_warc
+from ..operators.extract_pipeline import map_rows
 
 _FILE_SCHEMA = T.StructType([
     T.StructField("warc_file", T.LongType()),
@@ -88,20 +87,10 @@ def warc_records(segments: DataFrame) -> DataFrame:
     """Flatten WARC segments into one row per record with byte-exact
     CDX offsets; no shuffle — each segment parses where it sits."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fid, blob in zip(pdf["warc_file"], pdf["blob"]):
-                for rec in parse_warc(bytes(blob)):
-                    rows.append((int(fid), rec["offset"], rec["length"],
-                                 rec["rec_type"], rec["target_uri"],
-                                 rec["warc_date"], rec["http_status"],
-                                 rec["http_content_type"],
-                                 rec["payload"]))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _REC_SCHEMA.fields]
-            ) if rows else pd.DataFrame(
-                {f.name: pd.Series([], dtype=object)
-                 for f in _REC_SCHEMA.fields})
+    def run(fid, blob):
+        for rec in parse_warc(blob):
+            yield (fid, rec["offset"], rec["length"], rec["rec_type"],
+                   rec["target_uri"], rec["warc_date"], rec["http_status"],
+                   rec["http_content_type"], rec["payload"])
 
-    return segments.mapInPandas(run, _REC_SCHEMA)
+    return map_rows(segments.select("warc_file", "blob"), run, _REC_SCHEMA)

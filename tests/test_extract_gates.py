@@ -1,6 +1,8 @@
 """Every ``extract_*`` gate of the query registry, every gate whose
 query runs a ``map_docs`` stage (exports, tables, search, elements,
-comments, edit-text), and every gate over the global prefix sum
+comments, edit-text), every gate over another ``map_rows`` stage (media
+decoders, perceptual hashes, compare, NFC, EML, WARC, file sources,
+image->PDF inputs), and every gate over the global prefix sum
 (``packing.prefix_sums``) or the merge-order window, against its DuckDB
 oracle at the smoke scale factor, through the same comparison as
 ``scripts/check_queries.py`` — so a plain pytest run catches an oracle
@@ -36,8 +38,20 @@ PREFIX_SUM_GATES = [
     "token_budget_select", "quality_decile_split", "s1_merge_by_date",
     "s1_merge_by_title", "pipeline_training_corpus",
 ]
+MAP_ROWS_GATES = [
+    "image_size_filter", "multimodal_decode", "multimodal_decode_gif",
+    "multimodal_decode_jpeg", "multimodal_decode_tiff",
+    "multimodal_decode_wav", "multimodal_decode_errors",
+    "multimodal_probe_mp4", "multimodal_tiff_pages", "audio_silence_trim",
+    "audio_energy", "audio_downsample", "png_text_meta", "image_exif_meta",
+    "image_quality_stats", "dedup_image_dhash", "dedup_image_ahash",
+    "dedup_image_phash", "image_dedup_keep", "compare_docs",
+    "compare_changes", "text_nfc_normalize", "eml_roundtrip",
+    "html_table_extract", "md_to_pdf_ingest", "warc_ingest",
+    "h4_media_resolve", "img_to_pdf", "tiff_to_pdf",
+]
 GATES = ([n for n in QUERIES if n.startswith("extract_")] + MAP_DOCS_GATES
-         + PREFIX_SUM_GATES)
+         + MAP_ROWS_GATES + PREFIX_SUM_GATES)
 
 
 @pytest.fixture(scope="module")

@@ -1,4 +1,5 @@
-"""``map_docs``, the one per-document Arrow stage over raw docs."""
+"""``map_rows``, the one row-wise Arrow stage, and ``map_docs``, the
+per-document stage over raw docs built on it."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from stirling_pdf_spark.sources.tables import DOCS_SCHEMA, RAW_SPAN_STRUCT
 from stirling_pdf_spark.operators.extract_pipeline import (
     _decode_span_lists,
     map_docs,
+    map_rows,
     pylist,
 )
 
@@ -33,6 +35,15 @@ NULLABLE_DOCS_SCHEMA = T.StructType([
     T.StructField("spans", T.ArrayType(_NULLABLE), False),
 ])
 SPANS_TYPE = to_arrow_schema(NULLABLE_DOCS_SCHEMA).field("spans").type
+# one row of every kind map_rows reads: nullable long and int, binary, and
+# a list<struct> whose struct is not the raw-span shape
+ROWS = [
+    ("a", 2, 7, b"\x00\xff", [("x", 1.5, None), ("y", None, 3)]),
+    ("b", None, None, None, []),
+    ("c", 0, -1, b"", [("z", 0.0, 4)]),
+]
+ROWS_DDL = ("id string, n long, i int, blob binary, "
+            "items array<struct<k:string,w:double,v:int>>")
 
 
 def _spans(docs) -> pa.Array:
@@ -59,12 +70,41 @@ def test_no_rows_emitted_gives_empty_result_of_schema(spark):
     assert out.schema == schema
     assert out.collect() == []
 
+    out = map_rows(spark.createDataFrame(ROWS, ROWS_DDL),
+                   lambda *row: [], ROWS_DDL)
+    assert out.schema == T.DataType.fromDDL(ROWS_DDL)
+    assert out.collect() == []
+
 
 def test_span_list_column_round_trips(spark):
     docs = spark.createDataFrame(DOCS + NULL_OFFSET_DOCS, NULLABLE_DOCS_SCHEMA)
     out = map_docs(docs, lambda did, spans: [(did, spans)], docs.schema)
     got = {r["doc_id"]: [tuple(s) for s in r["spans"]] for r in out.collect()}
     assert got == dict(DOCS + NULL_OFFSET_DOCS)
+
+
+def test_map_rows_passes_rows_as_python_values(spark):
+    """fn gets each row as ``to_pylist`` gives it: a null long or int
+    as None (not NaN or a float), binary as bytes, list<struct>
+    elements as tuples."""
+    out = map_rows(spark.createDataFrame(ROWS, ROWS_DDL),
+                   lambda *row: [(repr(row),)], "row string")
+    assert sorted(r["row"] for r in out.collect()) == sorted(map(repr, ROWS))
+
+
+def test_map_rows_fans_out_and_builds_typed_columns(spark):
+    """One input row yields many output rows (none, here, for ``b``);
+    every column, the list<struct> one built from tuples, comes back
+    with its values' types."""
+    def fan(id_, n, i, blob, items):
+        for k in range(len(items) + (n is not None)):
+            yield id_, n, i, blob, items[:k]
+
+    out = map_rows(spark.createDataFrame(ROWS, ROWS_DDL), fan, ROWS_DDL)
+    got = sorted(out.collect(), key=lambda r: (r["id"], len(r["items"])))
+    want = [r for row in ROWS for r in fan(*row)]
+    assert len(want) == 5
+    assert _typed(got) == _typed(want)
 
 
 @pytest.mark.parametrize("col", [

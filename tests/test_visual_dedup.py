@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import hashlib
+import importlib
 import random
+
+import pytest
 
 from stirling_pdf_spark.corpus.media import (
     DHASH_COLS,
@@ -80,15 +83,23 @@ def test_image_dhash_matches_closed_form(spark):
         assert (got[ref]["width"], got[ref]["height"]) == (9 * s, 8 * s)
 
 
-def test_image_dhash_undecodable_yields_null(spark):
-    from stirling_pdf_spark.operators.dedup import image_dhash
-
+@pytest.mark.parametrize("op, col", [
+    ("dedup.image_dhash", "dhash"),
+    ("dedup.image_ahash", "ahash"),
+    ("dedup.image_phash", "phash"),
+    ("multimodal.image_quality_stats", "n_px"),
+], ids=["image_dhash", "image_ahash", "image_phash", "image_quality_stats"])
+def test_image_dhash_undecodable_yields_null(spark, op, col):
+    module, name = op.split(".")
+    fn = getattr(importlib.import_module(
+        f"stirling_pdf_spark.operators.{module}"), name)
     media = spark.createDataFrame(
-        [("m-bad", "webp", b"RIFFxxxxWEBP"), ("m-trunc", "ppm", b"P6")],
+        [("m-bad", "webp", b"RIFFxxxxWEBP"), ("m-trunc", "ppm", b"P6"),
+         ("m-bmp", "bmp", b"BM\x00\x00")],    # header cut before its fields
         "media_ref string, fmt string, payload binary")
-    rows = {r["media_ref"]: r for r in image_dhash(media).collect()}
-    assert rows["m-bad"]["dhash"] is None
-    assert rows["m-trunc"]["dhash"] is None
+    rows = {r["media_ref"]: r for r in fn(media).collect()}
+    assert set(rows) == {"m-bad", "m-trunc", "m-bmp"}
+    assert all(r[col] is None for r in rows.values())
 
 
 def test_dhash_pairs_banding_is_exact_vs_brute_force(spark):

@@ -141,3 +141,13 @@ class TestWarcSpark:
         assert rows["m-good"]["reason"] is None
         assert rows["m-bad"]["make"] is None
         assert "JPEG" in rows["m-bad"]["reason"]
+
+    def test_exif_operator_null_payload_is_an_error_row(self, spark):
+        media = spark.createDataFrame(
+            [("m-null", None)], "media_ref string, payload binary")
+        from stirling_pdf_spark.operators.multimodal import image_exif_meta
+
+        [row] = image_exif_meta(media).collect()
+        assert row["media_ref"] == "m-null"
+        assert row["make"] is None
+        assert row["reason"] == "not a JPEG"
