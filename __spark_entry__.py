@@ -22,6 +22,7 @@ stirling_pdf_spark/plans/oracles.py.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -40,11 +41,11 @@ from stirling_pdf_spark.operators import relational as R
 from stirling_pdf_spark.operators import dedup as D
 from stirling_pdf_spark.operators import similarity as S
 from stirling_pdf_spark.operators import textstats as TS
-from stirling_pdf_spark.operators.dedup import fan_out
 from stirling_pdf_spark.operators.extract_pipeline import (
     explode_spans,
     extract_spans,
     map_rows,
+    spread,
 )
 from stirling_pdf_spark.operators.multimodal import text_payload_metadata
 from stirling_pdf_spark.sources.tables import read_table
@@ -59,6 +60,15 @@ def _ship_package(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(package_zip())
     except Exception:
         pass  # already added, or driver-side sys.path suffices
+
+
+def _shipped(gate: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """``gate`` with the package shipped to the session first."""
+    @functools.wraps(gate)
+    def run(spark: SparkSession, *args, **kwargs) -> DataFrame:
+        _ship_package(spark)
+        return gate(spark, *args, **kwargs)
+    return run
 
 
 # ------------------------------------------------------------- relational
@@ -88,7 +98,6 @@ q_events_sessionize = R.events_sessionize
 # ------------------------------------------------------------- extraction
 
 def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ship_package(spark)
     return extract_spans(docs_from_documents_table(spark, sf_dir))
 
 
@@ -110,7 +119,6 @@ def q_extract_twocol_text_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the vote (a line votes iff width >= 100 pt <=> len >= 19)."""
     from stirling_pdf_spark.corpus.spark_synth import docs_twocol_from_documents
 
-    _ship_package(spark)
     out = extract_spans(docs_twocol_from_documents(spark, sf_dir))
     flat = explode_spans(out).filter(F.col("kind") == "text")
     w = Window.partitionBy("doc_id").orderBy("order")
@@ -140,7 +148,6 @@ def q_extract_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     :5533-5882, :5119-5300)."""
     from stirling_pdf_spark.operators.elements import extract_elements
 
-    _ship_package(spark)
     return extract_elements(docs_from_documents_table(spark, sf_dir))
 
 
@@ -171,7 +178,6 @@ def q_e17_doc_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     attachment counts, all from the extraction outputs."""
     from stirling_pdf_spark.operators.elements import extract_elements
 
-    _ship_package(spark)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     # the derivation feeds two Python passes (spans + elements) —
@@ -205,7 +211,6 @@ def q_e2_page_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the uncapped md5)."""
     from stirling_pdf_spark.operators.elements import extract_elements, page_text
 
-    _ship_package(spark)
     pages = page_text(extract_elements(docs_from_documents_table(spark, sf_dir)))
     return pages.select(
         "doc_id", "page", "n_lines", F.md5("text").alias("text_md5")
@@ -219,7 +224,6 @@ def q_e13_search_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.operators.elements import extract_elements
     from stirling_pdf_spark.operators.search import text_search_elements
 
-    _ship_package(spark)
     els = extract_elements(docs_from_documents_table(spark, sf_dir))
     return text_search_elements(els, "data")
 
@@ -235,7 +239,6 @@ def q_e13_whole_word_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the closed form — the corpus is constructed, so counts are exact)."""
     from stirling_pdf_spark.operators.search import text_search_elements
 
-    _ship_package(spark)
     docs = read_table(spark, sf_dir, "documents")
     body = F.concat(
         F.lit("w"), (F.col("doc_id") % 10).cast("string"),
@@ -415,7 +418,6 @@ def q_auto_rotate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.autorotate import auto_rotate
 
-    _ship_package(spark)
     return auto_rotate(docs_autorotate_from_documents(spark, sf_dir))
 
 
@@ -479,8 +481,6 @@ def q_compare_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.compare import compare_summary
 
-    _ship_package(spark)
-
     def assembled(docs: DataFrame) -> DataFrame:
         flat = explode_spans(extract_spans(docs)).filter(
             F.col("kind") == "text")
@@ -506,7 +506,6 @@ def q_compare_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the closed-form groups."""
     from stirling_pdf_spark.operators.compare import compare_changes
 
-    _ship_package(spark)
     toked = read_table(spark, sf_dir, "documents").select(
         F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
         .alias("doc_id"),
@@ -539,7 +538,6 @@ def q_html_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     positioned cells; the oracle states the closed-form layout."""
     from stirling_pdf_spark.functions.html import html_table_cells
 
-    _ship_package(spark)
     docs = read_table(spark, sf_dir, "documents").select(
         F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
         .alias("doc_id"),
@@ -558,7 +556,7 @@ def q_html_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"<table><tr><td>{g(1)}</td><td>{g(2)}</td></tr></table>"
             "</body></html>")
 
-    html_df = map_rows(fan_out(docs, "doc_id"), build,
+    html_df = map_rows(spread(docs, "doc_id"), build,
                        "doc_id string, html string")
     return html_table_cells(html_df)
 
@@ -601,7 +599,6 @@ def q_verify_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.verify import verify_docs
 
-    _ship_package(spark)
     return verify_docs(docs_corrupt_from_documents(spark, sf_dir))
 
 
@@ -617,7 +614,6 @@ def q_extract_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.runtime.incremental import extract_incremental
 
-    _ship_package(spark)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     # each derived corpus feeds TWO consumers (payload hash + an
@@ -666,7 +662,6 @@ def q_auto_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.search import auto_redact
 
-    _ship_package(spark)
     spans = extract_spans(docs_redact_from_documents(spark, sf_dir))
     out = auto_redact(
         auto_redact(spans, "report", whole_word_search=True),
@@ -696,7 +691,6 @@ def q_edit_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.edittext import edit_text
 
-    _ship_package(spark)
     docs = docs_redact_from_documents(spark, sf_dir)
     edited = edit_text(
         edit_text(docs, [("report", "summaries")],
@@ -732,7 +726,6 @@ def q_form_fill_unlock(spark: SparkSession, sf_dir: str,
         delete_fields, fill_form, unlock_forms,
     )
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_analysis_from_documents(spark, sf_dir)
     extra = [("formfield", "locked0|text|old|ro"),
@@ -775,7 +768,6 @@ def q_add_comments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.comments import add_comments
 
-    _ship_package(spark)
     docs = docs_redact_from_documents(spark, sf_dir)
     out = add_comments(docs, [
         {"pageIndex": 0, "anchorText": "classified", "x": 10.0,
@@ -822,7 +814,6 @@ def q_form_fields_csv(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.forms import fields_csv
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_analysis_from_documents(spark, sf_dir)
     return fields_csv(docs, values={"field0": 'csv,"x"'})
@@ -842,7 +833,6 @@ def q_img_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.multimodal import images_to_pdf
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     src = base.select(
@@ -857,7 +847,7 @@ def q_img_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield did, seq, ref, fn(ref)
 
     images = map_rows(
-        fan_out(src, "doc_id"), gen,
+        spread(src, "doc_id"), gen,
         "doc_id string, seq int, media_ref string, payload binary")
     out = images_to_pdf(images, "maintainAspectRatio",
                         auto_rotate=True)
@@ -902,7 +892,6 @@ def q_img_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_synth_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only check: archetype corpus (two-column layouts, mixed
     media, HTML, mega-docs through the salted path) -> kind totals."""
-    _ship_package(spark)
     docs = synth_docs_df(spark, 96, seed=42, mega_pages=(120, 160))
     flat = explode_spans(extract_spans(docs, salt_threshold=2000))
     return flat.groupBy("kind").agg(
@@ -920,7 +909,6 @@ def q_e19_blank_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible-line/media counts for the rest."""
     from stirling_pdf_spark.operators.pageops import blank_pages
 
-    _ship_package(spark)
     docs = docs_from_documents_table(spark, sf_dir)
     pages = F.transform(
         F.filter("spans", lambda s: s["kind"].isin("text", "media")),
@@ -953,7 +941,6 @@ def q_e18_title_inference(spark: SparkSession, sf_dir: str,
     from stirling_pdf_spark.operators.autoname import infer_titles
     from stirling_pdf_spark.operators.elements import extract_elements
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_rich_from_documents(spark, sf_dir)
     return infer_titles(extract_elements(docs))
@@ -966,7 +953,6 @@ def q_s4_split_chapters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.spark_synth import docs_rich_from_documents
     from stirling_pdf_spark.operators.pageops import split_by_chapters
 
-    _ship_package(spark)
     return split_by_chapters(docs_rich_from_documents(spark, sf_dir),
                              max_level=0)
 
@@ -981,7 +967,6 @@ def q_e17_full_info(spark: SparkSession, sf_dir: str,
     from stirling_pdf_spark.corpus.spark_synth import docs_rich_from_documents
     from stirling_pdf_spark.operators.elements import extract_elements
 
-    _ship_package(spark)
     if docs is None:
         from stirling_pdf_spark.runtime.staging import stage as _stage
 
@@ -1024,7 +1009,6 @@ def q_extract_annotations(spark: SparkSession, sf_dir: str) -> DataFrame:
     '{page}|{subtype}|{contents}|{author}|{subject}' per page."""
     from stirling_pdf_spark.corpus.spark_synth import docs_rich_from_documents
 
-    _ship_package(spark)
     flat = explode_spans(
         extract_spans(docs_rich_from_documents(spark, sf_dir)))
     return flat.filter(F.col("kind") == "annotation").select(
@@ -1044,7 +1028,6 @@ def q_e16_form_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_analysis_from_documents,
     )
 
-    _ship_package(spark)
     flat = explode_spans(
         extract_spans(docs_analysis_from_documents(spark, sf_dir)))
     ftype = F.split_part("text", F.lit("|"), F.lit(2))
@@ -1083,7 +1066,6 @@ def _merge_order_gate(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.pageops import merge_order
 
-    _ship_package(spark)
     docs = docs_analysis_from_documents(spark, sf_dir)
     out = merge_order(docs, comparator)
     return out.select(
@@ -1119,7 +1101,6 @@ def q_e17_page_info(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.elements import extract_elements
 
-    _ship_package(spark)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     if docs is None:
@@ -1194,7 +1175,6 @@ def q_toc_set_outline(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.pageops import set_outline
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_rich_repeat_from_documents(spark, sf_dir, 32)
     docs = set_outline(
@@ -1227,7 +1207,6 @@ def q_f2_filter_contains_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.pageops import has_media
 
-    _ship_package(spark)
     docs = docs_repeat_from_documents(spark, sf_dir, 32)
     return has_media(docs).select(
         "doc_id",
@@ -1245,7 +1224,6 @@ def q_s10_remove_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.pageops import remove_images
 
-    _ship_package(spark)
     docs = remove_images(docs_repeat_from_documents(spark, sf_dir, 32))
     flat = explode_spans(extract_spans(docs))
     return flat.groupBy("doc_id").agg(
@@ -1266,7 +1244,6 @@ def q_text_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives by applying the same regex chain in the same order."""
     from stirling_pdf_spark.operators.textstats import scrub_pii
 
-    _ship_package(spark)
     docs = read_table(spark, sf_dir, "documents")
     planted = F.concat(
         F.col("text"),
@@ -1286,7 +1263,6 @@ def q_dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-occurrence window in SQL."""
     from stirling_pdf_spark.operators.dedup import paragraph_dedup
 
-    _ship_package(spark)
     return paragraph_dedup(read_table(spark, sf_dir, "documents"))
 
 
@@ -1304,7 +1280,6 @@ def q_attachment_crud(spark: SparkSession, sf_dir: str) -> DataFrame:
         rename_attachment,
     )
 
-    _ship_package(spark)
     docs = docs_from_documents_table(spark, sf_dir)
     docs = add_attachments(docs, [("added.bin", "media-aa11bb22"),
                                   ("extra.dat", "media-cc33dd44")])
@@ -1332,7 +1307,6 @@ def q_s9_page_numbers(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.pageops import page_number_stamps
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_repeat_from_documents(spark, sf_dir, 32)
     return page_number_stamps(
@@ -1355,7 +1329,6 @@ def q_s3_split_doc_count(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.pageops import split_into_n_docs
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_repeat_from_documents(spark, sf_dir, 32)
     parts = split_into_n_docs(docs, 3)
@@ -1381,7 +1354,6 @@ def q_s3_split_byte_size(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.pageops import split_by_byte_size
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_repeat_from_documents(spark, sf_dir, 32)
     parts = split_by_byte_size(docs, O.SPLIT_BYTE_MAX)
@@ -1404,7 +1376,6 @@ def q_s11_flatten_forms(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.pageops import flatten_forms
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_analysis_from_documents(spark, sf_dir)
     flat = explode_spans(extract_spans(flatten_forms(docs)))
@@ -1435,7 +1406,6 @@ def q_s9_watermark_grid(spark: SparkSession, sf_dir: str,
     the whole-text md5."""
     from stirling_pdf_spark.operators.pageops import add_watermark
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_from_documents_table(spark, sf_dir)
     wm = add_watermark(docs, "WATERMARK", rotation=0.0,
@@ -1467,7 +1437,6 @@ def q_remove_blank_pages(spark: SparkSession, sf_dir: str,
     counts after removal pin both the drop and the dense renumber."""
     from stirling_pdf_spark.operators.pageops import remove_blank_pages
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_from_documents_table(spark, sf_dir)
     pages = F.transform(
@@ -1523,7 +1492,6 @@ def q_sanitize_pdf(spark: SparkSession, sf_dir: str,
         SANITIZE_INFO_KEYS, sanitize_docs,
     )
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_analysis_from_documents(spark, sf_dir)
     extra = [
@@ -1601,7 +1569,6 @@ def q_security_password(spark: SparkSession, sf_dir: str,
         ENCRYPTION_STATE_KEYS, add_password, remove_password,
     )
 
-    _ship_package(spark)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     if docs is None:
@@ -1641,7 +1608,6 @@ def q_signature_state(spark: SparkSession, sf_dir: str,
         add_cert_sign, remove_cert_sign, validate_signatures,
     )
 
-    _ship_package(spark)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     if docs is None:
@@ -1679,7 +1645,6 @@ def q_add_image_stamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted blob. Pageless (empty-text) docs stamp nothing."""
     from stirling_pdf_spark.operators.pageops import add_image
 
-    _ship_package(spark)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     # both parity branches read the corpus — synthesize once
@@ -1846,7 +1811,6 @@ def q_to_markdown(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_markdown
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_rich_from_documents(spark, sf_dir)
     out = to_markdown(docs)
@@ -1867,7 +1831,6 @@ def q_to_markdown_tables(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_markdown
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_stream_table_from_documents(spark, sf_dir)
     return to_markdown(docs)
@@ -1887,7 +1850,6 @@ def q_to_html(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_html
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_rich_from_documents(spark, sf_dir)
     out = to_html(docs)
@@ -1907,7 +1869,6 @@ def q_to_html_tables(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_html
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_stream_table_from_documents(spark, sf_dir)
     return to_html(docs)
@@ -1928,7 +1889,6 @@ def q_to_xml(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_xml
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_rich_from_documents(spark, sf_dir)
     out = to_xml(docs)
@@ -1948,7 +1908,6 @@ def q_to_xml_tables(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_xml
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_stream_table_from_documents(spark, sf_dir)
     return to_xml(docs)
@@ -1971,7 +1930,6 @@ def q_to_epub(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_epub
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_chapters_from_documents(spark, sf_dir)
     out = to_epub(docs)
@@ -1997,7 +1955,6 @@ def q_to_docx(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_docx
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_chapters_from_documents(spark, sf_dir)
     out = to_docx(docs)
@@ -2122,13 +2079,13 @@ def q_quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _qc_labeled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents + integer label = (lang_id == 'en'), computed inline
-    in one projection after a materializing repartition (no join)."""
-    from stirling_pdf_spark.operators.dedup import parallelize, words_col
+    in one projection after a materializing spread (no join)."""
+    from stirling_pdf_spark.operators.dedup import words_col
     from stirling_pdf_spark.operators.textstats import lang_pred_expr
 
     words = read_table(spark, sf_dir, "documents").select(
         "text", words_col("text").alias("w"))
-    return parallelize(words).select(
+    return spread(words, "text").select(
         "text",
         (lang_pred_expr("w") == F.lit("en")).cast("long").alias("label"),
     )
@@ -2270,7 +2227,6 @@ def q_multimodal_decode_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.operators.multimodal import (
         decode_audio, probe_video)
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -2306,7 +2262,6 @@ def q_multimodal_probe_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import mp4_table
     from stirling_pdf_spark.operators.multimodal import probe_video
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -2337,7 +2292,6 @@ def q_multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import wav_table
     from stirling_pdf_spark.operators.multimodal import decode_audio
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -2371,7 +2325,6 @@ def q_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_silence_stats,
     )
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -2408,7 +2361,6 @@ def q_to_pptx(spark: SparkSession, sf_dir: str,
     )
     from stirling_pdf_spark.operators.markdown import to_pptx
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_slides_from_documents(spark, sf_dir)
     out = to_pptx(docs)
@@ -2532,7 +2484,6 @@ def q_md_to_pdf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_from_markdown_strings,
     )
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents").filter(
         F.length(F.trim("text")) > 0)
     w = F.split(F.trim("text"), r"\s+")
@@ -2585,7 +2536,6 @@ def q_streaming_ingest_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.streaming.ingest import stream_extract
 
-    _ship_package(spark)
     base = tempfile.mkdtemp(prefix="stream_gate_")
     in_dir, out_dir, cp = f"{base}/in", f"{base}/out", f"{base}/cp"
     docs = docs_from_documents_table(spark, sf_dir)
@@ -2670,7 +2620,6 @@ def q_timestamp_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         TSA_PRESETS, add_doc_timestamp, validate_signatures,
     )
 
-    _ship_package(spark)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     # the corpus feeds FIVE filtered branches (one per TSA preset) —
@@ -2705,7 +2654,6 @@ def q_s11_metadata_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.pageops import set_metadata
 
-    _ship_package(spark)
     docs = set_metadata(
         docs_analysis_from_documents(spark, sf_dir),
         {"title": None, "producer": "spark-extract"})
@@ -2719,7 +2667,6 @@ def q_e14_lattice_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule-component clustering and emitted top-to-bottom."""
     from stirling_pdf_spark.corpus.spark_synth import docs_tables_from_documents
 
-    _ship_package(spark)
     docs = docs_tables_from_documents(spark, sf_dir)
     flat = explode_spans(extract_spans(docs)).filter(F.col("kind") == "table")
     w = Window.partitionBy("doc_id").orderBy("order")
@@ -2739,7 +2686,6 @@ def q_e14_stream_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.tables import tables_stream
 
-    _ship_package(spark)
     return tables_stream(docs_stream_table_from_documents(spark, sf_dir))
 
 
@@ -2756,7 +2702,6 @@ def q_extract_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.tables import pdf_to_csv
 
-    _ship_package(spark)
     lat = docs_tables_from_documents(spark, sf_dir)
     stream = docs_stream_table_from_documents(spark, sf_dir).select(
         F.concat(F.lit("s"), F.col("doc_id")).alias("doc_id"), "spans")
@@ -2775,7 +2720,6 @@ def q_to_xlsx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.tables import pdf_to_xlsx
 
-    _ship_package(spark)
     two = docs_tables_from_documents(spark, sf_dir)
     one = docs_single_table_from_documents(spark, sf_dir).select(
         F.concat(F.lit("s"), F.col("doc_id")).alias("doc_id"), "spans")
@@ -2791,7 +2735,6 @@ def q_analysis_font_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.spark_synth import docs_rich_from_documents
     from stirling_pdf_spark.operators.elements import font_info
 
-    _ship_package(spark)
     return font_info(docs_rich_from_documents(spark, sf_dir))
 
 
@@ -2894,7 +2837,6 @@ def q_streaming_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.operators.dedup import words_col
     from stirling_pdf_spark.streaming.packer import stream_pack
 
-    _ship_package(spark)
     base = tempfile.mkdtemp(prefix="stream_pack_")
     in_dir, out_dir, cp = f"{base}/in", f"{base}/out", f"{base}/cp"
     os.makedirs(in_dir)
@@ -2988,7 +2930,6 @@ def q_dedup_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dup_pairs, image_ahash,
     )
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3025,7 +2966,6 @@ def q_dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dup_pairs, image_phash,
     )
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3058,7 +2998,6 @@ def q_f6_filter_rotation(spark: SparkSession, sf_dir: str,
         filter_page_rotation, set_page_rotation,
     )
 
-    _ship_package(spark)
     if docs is None:
         docs = docs_from_documents_table(spark, sf_dir)
     rot = (F.regexp_extract("doc_id", "([0-9]+)", 1).cast("long") % 4) * 90
@@ -3089,7 +3028,6 @@ def q_s7_scale_single_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         scale_pages, to_single_page,
     )
 
-    _ship_package(spark)
     docs = to_single_page(
         scale_pages(docs_from_documents_table(spark, sf_dir), 2.0),
         page_height=2.0 * 792.0)
@@ -3106,7 +3044,6 @@ def q_e3_doc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_repeat_from_documents,
     )
 
-    _ship_package(spark)
     flat = explode_spans(
         extract_spans(docs_repeat_from_documents(spark, sf_dir, 32)))
     per = flat.groupBy("doc_id").agg(
@@ -3131,7 +3068,6 @@ def q_s6_reverse_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     page sequence."""
     from stirling_pdf_spark.operators.pageops import rearrange_pages
 
-    _ship_package(spark)
     docs = rearrange_pages(docs_from_documents_table(spark, sf_dir),
                            "REVERSE")
     return _text_ranks(extract_spans(docs))
@@ -3150,7 +3086,6 @@ def q_s6_side_stitch_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.pageops import rearrange_pages
 
-    _ship_package(spark)
     docs = rearrange_pages(docs_repeat_from_documents(spark, sf_dir, 32),
                            "SIDE_STITCH_BOOKLET_SORT")
     return _text_ranks(extract_spans(docs))
@@ -3166,7 +3101,6 @@ def q_s6_custom_order_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.pageops import rearrange_pages_custom
 
-    _ship_package(spark)
     docs = rearrange_pages_custom(
         docs_repeat_from_documents(spark, sf_dir, 32), "2n-1")
     return _text_ranks(extract_spans(docs))
@@ -3184,7 +3118,6 @@ def q_s8_overlay_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.operators.pageops import overlay_docs_multi
     from stirling_pdf_spark.sources.tables import DOCS_SCHEMA
 
-    _ship_package(spark)
     base = docs_repeat_from_documents(spark, sf_dir, 32)
     ov = spark.createDataFrame(
         [("ov-0", [
@@ -3210,7 +3143,6 @@ def q_s7_poster_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     order or wrong uniform scale would reorder or re-chunk lines)."""
     from stirling_pdf_spark.operators.pageops import poster_pages
 
-    _ship_package(spark)
     docs = poster_pages(docs_from_documents_table(spark, sf_dir), 2, 2)
     return _text_ranks(extract_spans(docs))
 
@@ -3221,7 +3153,6 @@ def q_s9_stamp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     each page's reading order ends with the stamp."""
     from stirling_pdf_spark.operators.pageops import add_page_stamps
 
-    _ship_package(spark)
     docs = add_page_stamps(docs_from_documents_table(spark, sf_dir),
                            "STAMP", number_pages=True)
     return _text_ranks(extract_spans(docs))
@@ -3236,7 +3167,6 @@ def q_e20_auto_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIRST part (:340-345), so part 0 = pages 1-2, part 1 = pages 4+."""
     from stirling_pdf_spark.operators.pageops import auto_split_at_markers
 
-    _ship_package(spark)
     docs = docs_from_documents_table(spark, sf_dir)
 
     def marker(page: int):
@@ -3263,7 +3193,6 @@ def q_s3_split_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the closed-form paging model."""
     from stirling_pdf_spark.operators.pageops import split_every_n_pages
 
-    _ship_package(spark)
     docs = docs_from_documents_table(spark, sf_dir)
     parts = split_every_n_pages(docs, 2)
     flat = explode_spans(extract_spans(parts))
@@ -3274,7 +3203,6 @@ def q_e15_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E15 document metadata (PdfJsonConversionService.java:2781-2810,
     AnalysisController.java:76-99): Info-dict key|value meta spans pass
     the kernel ahead of content and project to (doc_id, key, value)."""
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     docs = base.select(
         F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
@@ -3310,7 +3238,6 @@ def q_e9_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     resource dedup by content hash — media spans grouped by media_ref
     across pages AND documents (refs bucketed to 2 hex chars so
     cross-doc collisions actually occur)."""
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     ref_a = F.concat(F.lit("media-"), F.substring(sha, 1, 2))
@@ -3348,7 +3275,6 @@ def q_s2_split_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     all hash-checked."""
     from stirling_pdf_spark.operators.pageops import split_at_pages
 
-    _ship_package(spark)
     docs = docs_from_documents_table(spark, sf_dir)
     parts = split_at_pages(docs, [2, 5])
     flat = explode_spans(extract_spans(parts))
@@ -3365,7 +3291,6 @@ def q_h4_media_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import media_table
     from stirling_pdf_spark.operators.multimodal import resolve_media
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     media_ref = F.concat(F.lit("media-"), F.substring(sha, 1, 8))
@@ -3400,7 +3325,6 @@ def q_s5_split_sections_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the closed-form cell-assignment model."""
     from stirling_pdf_spark.operators.pageops import split_by_sections
 
-    _ship_package(spark)
     docs = docs_from_documents_table(spark, sf_dir)
     parts = split_by_sections(docs, 1, 1)
     flat = explode_spans(extract_spans(parts))
@@ -3417,7 +3341,6 @@ def q_f4_page_size_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
         STANDARD_PAGE_SIZES, filter_page_size, set_page_rotation,
     )
 
-    _ship_package(spark)
     docs = docs_from_documents_table(spark, sf_dir)
     names = list(STANDARD_PAGE_SIZES)
     idx = ((F.regexp_extract("doc_id", "([0-9]+)", 1).cast("long") % 9) + 1
@@ -3489,7 +3412,6 @@ def q_image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dup_pairs, image_phash,
     )
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3562,7 +3484,6 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import image_table
     from stirling_pdf_spark.operators.multimodal import decode_images
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3594,7 +3515,6 @@ def q_image_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_quality_stats,
     )
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3626,7 +3546,6 @@ def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import jpeg_table
     from stirling_pdf_spark.operators.multimodal import decode_images
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3655,7 +3574,6 @@ def q_multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import gif_table
     from stirling_pdf_spark.operators.multimodal import decode_images
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3687,7 +3605,6 @@ def q_multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import tiff_table
     from stirling_pdf_spark.operators.multimodal import decode_images
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3717,7 +3634,6 @@ def q_multimodal_tiff_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import tiff_multipage_table
     from stirling_pdf_spark.operators.multimodal import tiff_pages
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3749,7 +3665,6 @@ def q_tiff_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.multimodal import images_to_pdf
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     src = base.select(
@@ -3762,7 +3677,7 @@ def q_tiff_to_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         yield did, 0, ref, tiff_multipage_payload_for_ref(ref)
 
     images = map_rows(
-        fan_out(src, "doc_id"), gen,
+        spread(src, "doc_id"), gen,
         "doc_id string, seq int, media_ref string, payload binary")
     out = images_to_pdf(images, "fitDocumentToImage")
     return out.select("doc_id", F.explode("spans").alias("sp")).select(
@@ -3785,7 +3700,6 @@ def q_dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dup_pairs, image_dhash,
     )
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -3959,7 +3873,6 @@ def q_h1_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sanitized markup."""
     from stirling_pdf_spark.functions.html import sanitize_html_udf
 
-    _ship_package(spark)
     docs = read_table(spark, sf_dir, "documents")
     html = F.concat(
         F.lit('<div onclick="x()"><p style="color:red">'), F.col("text"),
@@ -3981,7 +3894,6 @@ def q_h7_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     order."""
     from stirling_pdf_spark.functions.html import main_blocks_udf
 
-    _ship_package(spark)
     docs = read_table(spark, sf_dir, "documents")
     # ltrim: a slice boundary can land on a space, which the block
     # scorer's whitespace collapse would merge with the template space
@@ -4049,7 +3961,6 @@ def q_e24_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentences [21j, 21j+24) — the oracle re-derives exactly that."""
     from stirling_pdf_spark.functions.text import chunk_text_udf
 
-    _ship_package(spark)
     docs = read_table(spark, sf_dir, "documents")
     sents = F.transform(
         F.split(F.trim(F.col("text")), r"\s+"),
@@ -4070,7 +3981,6 @@ def q_eml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     trip in an Arrow-batched stage."""
     from stirling_pdf_spark.operators.emlparse import eml_roundtrip
 
-    _ship_package(spark)
     return eml_roundtrip(read_table(spark, sf_dir, "documents"))
 
 
@@ -4167,7 +4077,6 @@ def q_interleave_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_repeated_from_documents,
     )
 
-    _ship_package(spark)
     flat = explode_spans(
         extract_spans(docs_repeated_from_documents(spark, sf_dir)))
     part = (
@@ -4198,22 +4107,23 @@ def q_interleave_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_extract_parallelism_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north rule's cross-cluster-size reproducibility claim as an
     oracle-checked gate: the SAME corpus extracted under two different
-    partitionings (5 vs 11 shuffle partitions, different input
-    repartition) runs through span_diff — every document must come
-    back bit-identical (kind, text, media_ref, order), so the oracle
-    is simply the span-count totals with equal=1 everywhere."""
+    partitionings runs through span_diff. Side A salts every doc over
+    8 spans (its segments are extracted across tasks and reassembled);
+    side B starts from a 3-way input repartition and keeps every doc
+    whole. Every document must come back bit-identical (kind, text,
+    media_ref, order), so the oracle is simply the span-count totals
+    with equal=1 everywhere."""
     from stirling_pdf_spark.operators.validate import span_diff
 
-    _ship_package(spark)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     # the SAME corpus extracted under two partitionings — synthesize
     # once; each side still repartitions + extracts independently
     docs = _stage(docs_from_documents_table(spark, sf_dir))
     cols = ["doc_id", "order", "kind", "text", "media_ref"]
-    a = explode_spans(extract_spans(docs, num_partitions=5)).select(*cols)
+    a = explode_spans(extract_spans(docs, salt_threshold=8)).select(*cols)
     b = explode_spans(
-        extract_spans(docs.repartition(3), num_partitions=11)
+        extract_spans(docs.repartition(3), salt_threshold=2**31 - 1)
     ).select(*cols)
     return span_diff(a, b)
 
@@ -4265,7 +4175,6 @@ def q_media_caption_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stirling_pdf_spark.operators.multimodal import media_caption_pairs
 
-    _ship_package(spark)
     flat = explode_spans(
         extract_spans(docs_repeated_from_documents(spark, sf_dir)))
     return media_caption_pairs(flat)
@@ -4303,7 +4212,6 @@ def q_image_size_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_size_filter,
     )
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -4494,7 +4402,6 @@ def q_extract_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_extract_with_checkpoint,
     )
 
-    _ship_package(spark)
     base = tempfile.mkdtemp(prefix="lineage_gate_")
     try:
         docs = docs_from_documents_table(spark, sf_dir)
@@ -4721,7 +4628,6 @@ def q_png_text_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import png_text_table
     from stirling_pdf_spark.operators.multimodal import png_text_chunks
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -4769,7 +4675,6 @@ def q_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import wav_table
     from stirling_pdf_spark.operators.multimodal import audio_energy
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -4797,7 +4702,6 @@ def q_audio_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import wav_table
     from stirling_pdf_spark.operators.multimodal import audio_downsample
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -4979,7 +4883,6 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Content-Length framing, not just the field values."""
     from stirling_pdf_spark.sources.warc import warc_records, warc_segments
 
-    _ship_package(spark)
     docs = read_table(spark, sf_dir, "documents") \
         .select("doc_id", "text", "source")
     recs = warc_records(warc_segments(docs, docs_per_file=64))
@@ -5006,7 +4909,6 @@ def q_image_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import exif_jpeg_table
     from stirling_pdf_spark.operators.multimodal import image_exif_meta
 
-    _ship_package(spark)
     base = read_table(spark, sf_dir, "documents")
     sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
     docs = base.select(
@@ -5447,6 +5349,7 @@ def q_ict_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ict_pairs(read_table(spark, sf_dir, "documents"))
 
 
+@_shipped
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: extract ordered spans for every document in the
     sf0.001 corpus and aggregate span counts per (doc, kind)."""
@@ -5471,8 +5374,9 @@ ROWS_ONLY = frozenset({"extract_synth_corpus"})
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Every gate: each module-level ``q_<name>`` keyed ``<name>``."""
-    return {n[2:]: f for n, f in globals().items()
+    """Every gate: each module-level ``q_<name>`` keyed ``<name>``,
+    shipping the package to the session before it runs."""
+    return {n[2:]: _shipped(f) for n, f in globals().items()
             if n.startswith("q_") and callable(f)}
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.extract_pipeline import map_rows
+from ..operators.extract_pipeline import map_rows, spread
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
@@ -48,16 +48,10 @@ def fmt_for_ref(ref: str) -> str:
 
 
 def media_refs(docs: DataFrame) -> DataFrame:
-    """Distinct media refs across media + attachment spans.
-
-    The distinct's shuffle output is a few KB of refs, so AQE's
-    partition coalescing folds it to ONE partition — and every
-    downstream payload generator + decoder (narrow maps over this
-    frame) then runs serially. Per-ref compute here is orders of
-    magnitude above per-ref bytes (codec encode/decode, DCT), the
-    exact case byte-based coalescing mis-sizes, so fan the refs back
-    out to the session's parallelism (hash on media_ref —
-    deterministic). Measured: the image-hash dedup gates drop ~2x."""
+    """Distinct media refs across media + attachment spans, ``spread``
+    on media_ref for the payload generators and decoders downstream
+    (codec encode/decode and DCT per ref; measured: the image-hash
+    dedup gates drop ~2x)."""
     s = F.explode("spans").alias("s")
     refs = (
         docs.select(s)
@@ -65,8 +59,7 @@ def media_refs(docs: DataFrame) -> DataFrame:
         .filter(F.col("media_ref") != "")
         .distinct()
     )
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    return refs.repartition(par, "media_ref")
+    return spread(refs, "media_ref")
 
 
 def _ref_table(docs: DataFrame, fmt_of, payload_of) -> DataFrame:

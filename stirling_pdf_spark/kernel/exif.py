@@ -164,8 +164,16 @@ def parse_tiff(tiff: bytes) -> dict:
 
 def parse_exif(jpeg: bytes) -> dict:
     """Segment-walk a JPEG to the Exif APP1 and parse its TIFF block.
-    Raises ValueError when no EXIF APP1 is present (callers isolate
-    that to an error row, never a task failure)."""
+    Raises ValueError when no EXIF APP1 is present or a read runs past
+    the buffer (callers isolate that to an error row, never a task
+    failure)."""
+    try:
+        return _walk_to_exif(jpeg)
+    except struct.error as exc:
+        raise ValueError(f"truncated EXIF: {exc}") from exc
+
+
+def _walk_to_exif(jpeg: bytes) -> dict:
     if jpeg[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     pos = 2

@@ -12,7 +12,7 @@ much.
 Scale shape: one equi-join on doc_id (both sides hash-partition on
 the key; no broadcast needed — the sides are the same size), then a
 map-only Arrow-batched diff.  Per-pair cost is O(len_a · len_b) in
-DOCUMENT length only; pairs are independent so the stage parallelizes
+DOCUMENT length only; pairs are independent so the stage scales out
 perfectly and a doc-length salt is unnecessary — one mega-document
 costs one task its matrix, bounded by ``max_tokens``.
 """
@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .extract_pipeline import map_rows
+from .extract_pipeline import map_rows, spread
 
 _SUMMARY_SCHEMA = ("doc_id string, n_unchanged long, n_removed long, "
                    "n_added long, removed_sorted string, added_sorted string")
@@ -34,13 +34,8 @@ _GROUPS_SCHEMA = ("doc_id string, pane string, group_idx long, "
 def _paired(base: DataFrame, revised: DataFrame) -> DataFrame:
     b = base.select(F.col("doc_id"), F.col("text").alias("base_text"))
     r = revised.select(F.col("doc_id"), F.col("text").alias("rev_text"))
-    # pin the diff stage's parallelism: the joined pair rows are a few
-    # KB each, so AQE's byte-based coalescing folds the join output to
-    # 1-2 partitions — but the downstream LCS matrix is O(len_a*len_b)
-    # per row, compute far above bytes. Hash on doc_id (deterministic);
-    # the repartition is the only exchange the map stage needs.
-    par = base.sparkSession.sparkContext.defaultParallelism
-    return b.join(r, "doc_id").repartition(par, "doc_id")
+    # spread for the LCS matrix, O(len_a*len_b) per pair row
+    return spread(b.join(r, "doc_id"), "doc_id")
 
 
 def compare_summary(base: DataFrame, revised: DataFrame,

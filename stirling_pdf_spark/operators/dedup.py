@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .extract_pipeline import map_rows
+from .extract_pipeline import spread
 
 # ---------------------------------------------------------------- helpers
 
@@ -60,37 +60,13 @@ def shingles_expr(n: int = 2, words: str = "w"):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def parallelize(df: DataFrame) -> DataFrame:
-    """Spread a (possibly single-partition) input across the cluster
-    before compute-heavy narrow stages. Small parquet inputs arrive as
-    ONE split (files.maxPartitionBytes), which would serialize every
-    downstream map — the kind of bug that's invisible at 60k rows and
-    fatal at 100 TB when one file/partition is hot."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def fan_out(df: DataFrame, *cols: str) -> DataFrame:
-    """Spread a small-scan input across the session's parallelism
-    before a compute-heavy Python stage. The bench tables are single
-    small parquet files (one row group — an unsplittable ONE-task
-    scan), so a map_rows stage directly over them runs
-    serially; hash-repartition on ``cols`` (deterministic under task
-    retry, unlike round-robin) unless the input is already at least
-    that parallel (at 100 TB the scan has thousands of splits and a
-    second shuffle would be pure overhead)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    return df.repartition(par, *[F.col(c) for c in cols])
-
-
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    # repartition AFTER tokenizing: the shuffle materializes the split
+    # spread AFTER tokenizing: the shuffle materializes the split
     # word array, so Catalyst's project-collapse can't inline the regex
     # split into the shingle lambda (which would re-split the text for
     # every w[i] access — measured ~10x slower on long texts)
     words = df.select(F.col(id_col).alias("id"), words_col(text_col).alias("w"))
-    return parallelize(words).select(
+    return spread(words, "id").select(
         "id", shingles_expr(n, "w").alias("shingles")
     )
 
@@ -155,7 +131,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
         # plain explode makes Catalyst infer `size(shingles) > 0` and
         # push it to the SCAN with the whole shingle expression
         # inlined — the regex split then re-executes per lambda
-        # element on the unparallelized input split (measured 11s vs
+        # element on the input split, before the spread (measured 11s vs
         # 0.5s on sf0.1)
         inv = (
             sh.select("id", F.explode_outer("shingles").alias("sh"))
@@ -331,7 +307,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     """(id, simhash) — simhash as a '01...' bitstring of length ``bits``.
     Token multiplicity counts (term-frequency weighting), matching the
     classic Charikar construction. Bit = 1 iff vote sum > 0."""
-    toks = parallelize(df).select(
+    toks = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.explode(words_col(text_col)).alias("tok"),
     ).select("id", F.md5("tok").alias("tok_md5"))
@@ -507,7 +483,7 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
     baseline — correct at any scale but quadratic; the scale path
     pre-buckets with similarity.lsh_buckets and joins within buckets.
     Output: (id_a, id_b) — ids only, no float columns."""
-    v = parallelize(df).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     return (
@@ -546,7 +522,7 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
             F.slice(w, i * words_per_para + 1, words_per_para), " "),
     )
     exploded = (
-        parallelize(df)
+        spread(df, id_col)
         # empty/whitespace-only text yields ZERO paragraphs (split of
         # '' is [''], which would fake one empty window)
         .filter(F.length(F.trim(F.col(text_col))) > 0)
@@ -658,7 +634,7 @@ def image_dhash(media: DataFrame, payload_col: str = "payload",
 
     from pyspark.sql import types as T
 
-    from .multimodal import decode_pixels
+    from .multimodal import map_luma
 
     schema = T.StructType([
         T.StructField("media_ref", T.StringType(), False),
@@ -666,33 +642,21 @@ def image_dhash(media: DataFrame, payload_col: str = "payload",
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
     ])
-    src = media.select(F.col(ref_col).alias("media_ref"),
-                       F.col(payload_col).alias("payload"))
 
-    def run(ref, payload):
-        dh = w = h = None
-        try:
-            w, h, rgb = decode_pixels(payload or b"")
-            px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-            wide = px.astype(np.int64)
-            luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
-                    + 114 * wide[:, :, 2]) // 1000
-            # box-average to 8 rows x 9 cols (exact on cell-aligned
-            # fixtures, standard area sampling otherwise)
-            ys = [int(r * h / 8) for r in range(9)]
-            xs = [int(c * w / 9) for c in range(10)]
-            cells = _box_average(luma, ys, xs)
-            v = np.uint64(0)
-            for r in range(8):
-                for c in range(8):
-                    if cells[r, c + 1] > cells[r, c]:
-                        v |= np.uint64(1) << np.uint64(r * 8 + c)
-            dh = int(v.astype(np.int64))
-        except (NotImplementedError, ValueError, IndexError):
-            w = h = dh = None
-        yield ref, dh, w, h
+    def dhash(w, h, luma):
+        # box-average to 8 rows x 9 cols (exact on cell-aligned
+        # fixtures, standard area sampling otherwise)
+        ys = [int(r * h / 8) for r in range(9)]
+        xs = [int(c * w / 9) for c in range(10)]
+        cells = _box_average(luma, ys, xs)
+        v = np.uint64(0)
+        for r in range(8):
+            for c in range(8):
+                if cells[r, c + 1] > cells[r, c]:
+                    v |= np.uint64(1) << np.uint64(r * 8 + c)
+        return int(v.astype(np.int64)), w, h
 
-    return map_rows(src, run, schema)
+    return map_luma(media, payload_col, ref_col, dhash, schema)
 
 
 def dhash_near_dup_pairs(hashes: DataFrame, max_distance: int = 7,
@@ -780,7 +744,7 @@ def image_ahash(media: DataFrame, payload_col: str = "payload",
 
     from pyspark.sql import types as T
 
-    from .multimodal import decode_pixels
+    from .multimodal import map_luma
 
     schema = T.StructType([
         T.StructField("media_ref", T.StringType(), False),
@@ -788,32 +752,20 @@ def image_ahash(media: DataFrame, payload_col: str = "payload",
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
     ])
-    src = media.select(F.col(ref_col).alias("media_ref"),
-                       F.col(payload_col).alias("payload"))
 
-    def run(ref, payload):
-        ah = w = h = None
-        try:
-            w, h, rgb = decode_pixels(payload or b"")
-            px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-            wide = px.astype(np.int64)
-            luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
-                    + 114 * wide[:, :, 2]) // 1000
-            ys = [int(r * h / 8) for r in range(9)]
-            xs = [int(c * w / 8) for c in range(9)]
-            cells = _box_average(luma, ys, xs)
-            mean = cells.mean()
-            v = np.uint64(0)
-            for r in range(8):
-                for c in range(8):
-                    if cells[r, c] > mean:
-                        v |= np.uint64(1) << np.uint64(r * 8 + c)
-            ah = int(v.astype(np.int64))
-        except (NotImplementedError, ValueError, IndexError):
-            w = h = ah = None
-        yield ref, ah, w, h
+    def ahash(w, h, luma):
+        ys = [int(r * h / 8) for r in range(9)]
+        xs = [int(c * w / 8) for c in range(9)]
+        cells = _box_average(luma, ys, xs)
+        mean = cells.mean()
+        v = np.uint64(0)
+        for r in range(8):
+            for c in range(8):
+                if cells[r, c] > mean:
+                    v |= np.uint64(1) << np.uint64(r * 8 + c)
+        return int(v.astype(np.int64)), w, h
 
-    return map_rows(src, run, schema)
+    return map_luma(media, payload_col, ref_col, ahash, schema)
 
 
 def image_phash(media: DataFrame, payload_col: str = "payload",
@@ -839,7 +791,7 @@ def image_phash(media: DataFrame, payload_col: str = "payload",
     from pyspark.sql import types as T
 
     from ..corpus.media import PHASH_DIM, PHASH_LOW, _dct_mat
-    from .multimodal import decode_pixels
+    from .multimodal import map_luma
 
     schema = T.StructType([
         T.StructField("media_ref", T.StringType(), False),
@@ -847,49 +799,37 @@ def image_phash(media: DataFrame, payload_col: str = "payload",
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
     ])
-    src = media.select(F.col(ref_col).alias("media_ref"),
-                       F.col(payload_col).alias("payload"))
 
     m = _dct_mat()
 
-    def run(ref, payload):
-        ph = w = h = None
-        try:
-            w, h, rgb = decode_pixels(payload or b"")
-            px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3)
-            wide = px.astype(np.int64)
-            luma = (299 * wide[:, :, 0] + 587 * wide[:, :, 1]
-                    + 114 * wide[:, :, 2]) // 1000
-            d = PHASH_DIM
-            if (h, w) == (d, d):
-                plane = luma.astype(np.float64)
-            elif h >= d and w >= d:
-                # area sampling on integer boundaries (exact on
-                # cell-aligned fixtures)
-                ys = [int(r * h / d) for r in range(d + 1)]
-                xs = [int(c * w / d) for c in range(d + 1)]
-                plane = _box_average(luma, ys, xs)
-            else:
-                # upsample small rasters by nearest pixel
-                iy = (np.arange(d) * h) // d
-                ix = (np.arange(d) * w) // d
-                plane = luma[np.ix_(iy, ix)].astype(np.float64)
-            coef = m @ plane @ m.T
-            v = np.uint64(0)
-            i = 0
-            for u in range(PHASH_LOW):
-                for vv in range(PHASH_LOW):
-                    if u == 0 and vv == 0:
-                        continue
-                    if coef[u, vv] > 0:
-                        v |= np.uint64(1) << np.uint64(i)
-                    i += 1
-            ph = int(v.astype(np.int64))
-        except (NotImplementedError, ValueError, IndexError):
-            w = h = ph = None
-        yield ref, ph, w, h
+    def phash(w, h, luma):
+        d = PHASH_DIM
+        if (h, w) == (d, d):
+            plane = luma.astype(np.float64)
+        elif h >= d and w >= d:
+            # area sampling on integer boundaries (exact on
+            # cell-aligned fixtures)
+            ys = [int(r * h / d) for r in range(d + 1)]
+            xs = [int(c * w / d) for c in range(d + 1)]
+            plane = _box_average(luma, ys, xs)
+        else:
+            # upsample small rasters by nearest pixel
+            iy = (np.arange(d) * h) // d
+            ix = (np.arange(d) * w) // d
+            plane = luma[np.ix_(iy, ix)].astype(np.float64)
+        coef = m @ plane @ m.T
+        v = np.uint64(0)
+        i = 0
+        for u in range(PHASH_LOW):
+            for vv in range(PHASH_LOW):
+                if u == 0 and vv == 0:
+                    continue
+                if coef[u, vv] > 0:
+                    v |= np.uint64(1) << np.uint64(i)
+                i += 1
+        return int(v.astype(np.int64)), w, h
 
-    return map_rows(src, run, schema)
+    return map_luma(media, payload_col, ref_col, phash, schema)
 
 
 def substring_dup_coverage(df: DataFrame, w: int = 8,
@@ -1025,10 +965,10 @@ def winnow_fingerprints(df: DataFrame, k: int = 3, w: int = 4,
     shuffle is whatever the consumer does with the (id, fp) index."""
     words = df.select(F.col(id_col).alias("id"),
                       words_col(text_col).alias("w"))
-    # repartition AFTER tokenizing, same reason as _shingled: the
+    # spread AFTER tokenizing, same reason as _shingled: the
     # shuffle materializes the split array so the hash lambda can't
     # inline the regex split per element
-    base = parallelize(words)
+    base = spread(words, "id")
     joined = " || ' ' || ".join(f"w[i + {j}]" for j in range(k))
     hs_expr = (
         f"transform(sequence(0, size(w) - {k}), i -> "
@@ -1286,7 +1226,7 @@ def dedup_global_sentences(df: DataFrame, max_df: int = 2,
     sents = F.expr(
         f"transform(regexp_extract_all({text_col},"
         f" '({_SENTENCE_RE})', 1), s -> trim(s))")
-    exploded = parallelize(df).select(
+    exploded = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.posexplode(sents).alias("pos", "sent"),
     )
@@ -1393,7 +1333,7 @@ def tfidf_cosine_pairs(df: DataFrame, threshold_pct: int = 75,
     exactly like dedup_jaccard_maxdf's prefix filter. Per-doc norms
     are one extra partial-agg'd groupBy, broadcast-joined back."""
     toks = (
-        parallelize(df)
+        spread(df, id_col)
         .select(F.col(id_col).cast("long").alias("id"),
                 F.explode(words_col(text_col)).alias("term"))
         .filter(F.col("term") != "")

@@ -7,7 +7,7 @@ Shape (SURVEY.md §3.1 "Spark equivalent"), one plan every doc takes:
                    larger doc -> one row per reading-order segment,
                      unless a page field would not read here as int()
                      reads it (then one row, bucket 0)
-              -> repartition(doc_id, bucket)
+              -> spread(doc_id, bucket)
               -> mapInArrow(_extract_sub: the rows of each batch in
                    slices of at most DEFAULT_SALT_THRESHOLD spans, cut at
                    row boundaries, through kernel.extract.extract_docs;
@@ -38,10 +38,15 @@ built from its declaration and computes each span's segment once.
 
 All per-document work happens inside Arrow stages (no per-row or
 per-group Spark Python UDFs: each Python call takes a whole Arrow
-batch); the shuffles are the repartition by (doc_id, bucket) and the
+batch); the shuffles are the spread on (doc_id, bucket) and the
 regroup by doc_id, both on keys that are unique or salted — no hot keys
 by construction. The regroup's partition count is left to
 ``spark.sql.shuffle.partitions`` and AQE coalescing.
+
+``spread`` is the one partitioning policy of every compute-heavy stage
+(this pipeline's first exchange, ``map_docs`` and every per-row
+operator): one hash repartition on the stage's key, with one pinned
+partition count.
 
 ``map_rows`` is the one row-wise Arrow stage every other per-row Python
 operator runs through (media decoders, perceptual hashes, compare, NFC,
@@ -49,7 +54,7 @@ file/WARC/EML sources, corpus derivation): read each column once per
 batch, call the operator's per-row function, build the output batch
 column by column. ``map_docs``, the stage of every raw-docs operator
 (exports, tables, search, elements, comments, edit-text), is a
-repartition on doc_id, then ``map_rows``.
+``spread`` on doc_id, then ``map_rows``.
 """
 
 from __future__ import annotations
@@ -167,13 +172,24 @@ def map_rows(df: DataFrame, fn, schema: "T.StructType | str") -> DataFrame:
     return df.mapInArrow(run, schema)
 
 
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Spread ``df`` across the cluster before a compute-heavy stage:
+    one hash repartition on ``keys`` (every column when none is given)
+    into 2 x defaultParallelism partitions, the one partitioning policy
+    of every per-row operator. The count is pinned because per-row
+    compute is far above per-row bytes here: AQE coalesces by bytes,
+    and would fold a small, single-split input's stage to 1-2 tasks.
+    Hashing is deterministic under task retry, and a following groupBy
+    or window on the same keys reuses the exchange."""
+    n = 2 * df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, *(keys or df.columns))
+
+
 def map_docs(docs: DataFrame, fn, schema: T.StructType) -> DataFrame:
     """The per-document Arrow stage over raw ``docs(doc_id, spans)``:
-    one repartition on doc_id, then ``map_rows`` with
+    ``spread`` on doc_id, then ``map_rows`` with
     ``fn(doc_id, raw_spans)``."""
-    n = docs.sparkSession.sparkContext.defaultParallelism * 2
-    return map_rows(docs.repartition(n, "doc_id").select("doc_id", "spans"),
-                    fn, schema)
+    return map_rows(spread(docs, "doc_id").select("doc_id", "spans"), fn, schema)
 
 
 def _tag_sql(pages_per_bucket: int) -> str:
@@ -307,18 +323,16 @@ def _reassemble(group: pa.Table) -> pa.Table:
 
 def extract_spans(
     docs: DataFrame,
-    num_partitions: int | None = None,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     pages_per_bucket: int = PAGES_PER_BUCKET,
 ) -> DataFrame:
     """docs(doc_id, spans: array<raw span struct>) ->
     spans_out(doc_id, spans: array<(kind,text,media_ref,order)>).
-    Consumes ``docs`` once."""
-    if num_partitions is None:
-        num_partitions = docs.sparkSession.sparkContext.defaultParallelism * 2
+    Consumes ``docs`` once. The keyed rows are ``spread`` on (doc_id,
+    bucket) for the extraction; the regroup's ``repartition("doc_id")``
+    has no count on purpose: that stage is cheap, and AQE sizes it."""
     return (
-        _key(docs, salt_threshold, pages_per_bucket)
-        .repartition(num_partitions, "doc_id", "bucket")
+        spread(_key(docs, salt_threshold, pages_per_bucket), "doc_id", "bucket")
         .mapInArrow(_extract_sub, _SUB_SCHEMA)
         .repartition("doc_id")
         .mapInArrow(_finish_docs, SPANS_OUT_SCHEMA)

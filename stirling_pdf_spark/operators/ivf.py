@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import cosine_expr, parallelize
+from .dedup import cosine_expr
+from .extract_pipeline import spread
 
 
 def train_centroids(df: DataFrame, k: int = 8, iters: int = 5,
@@ -86,7 +87,7 @@ def ivf_assign(df: DataFrame, centroids: list[list[float]],
     ties (exact fp equality) go to the lowest cluster index."""
     dists = _dists_expr(vec_col, centroids)
     cluster = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return parallelize(df).select(
+    return spread(df, id_col).select(
         F.col(id_col).alias("id"), cluster.alias("cluster")
     )
 
@@ -97,8 +98,8 @@ def ivf_topk(df: DataFrame, centroids: list[list[float]],
     """Approximate top-k: candidates come from the query's nprobe
     nearest inverted lists; exact cosine rank within candidates.
     Output: (query_id, rank, neighbor_id)."""
-    v = parallelize(df).select(F.col(id_col).alias("id"),
-                               F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"),
+                                  F.col(vec_col).alias("v"))
     # materialize the distance array ONCE as a column; cluster and the
     # probe list both derive from it (inlining the 8x64-term expression
     # into each consumer doubles codegen size and optimizer time)
@@ -153,8 +154,8 @@ def semdedup_prune(df: DataFrame, centroids: list[list[float]],
     exactly the SemDeDup trick that makes semantic dedup feasible on
     web-scale corpora; the keep-list is one distinct + one left join.
     """
-    v = parallelize(df).select(F.col(id_col).alias("id"),
-                               F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"),
+                                  F.col(vec_col).alias("v"))
     assigned = v.withColumn("dists", _dists_expr("v", centroids)).select(
         "id", "v",
         (F.array_position("dists", F.array_min("dists")) - 1)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .extract_pipeline import map_rows
+from .extract_pipeline import map_rows, spread
 
 MAX_PAYLOAD_BYTES = 50 * 1024 * 1024  # reference: 50MB/file cap, AttachmentService.java:47
 
@@ -98,6 +98,8 @@ def decode_png(payload: bytes) -> tuple[int, int, bytes]:
         data = payload[pos + 8:pos + 8 + length]
         pos += 12 + length  # skip CRC
         if ctype == b"IHDR":
+            if len(data) != 13:
+                raise ValueError("PNG IHDR is not 13 bytes")
             w, h, depth, color_type, _comp, _filt, interlace = \
                 struct.unpack(">IIBBBBB", data)
         elif ctype == b"PLTE":
@@ -237,8 +239,8 @@ def decode_pixels(payload: bytes) -> tuple[int, int, bytes]:
     (bottom-up padded BGR rows re-ordered). This is the input stage
     for pixel-consuming operators (perceptual hashing); formats that
     need external codecs raise NotImplementedError like
-    decode_image; a BMP cut inside its header raises ValueError,
-    which its per-row callers catch."""
+    decode_image; a BMP or PNG cut inside its header raises
+    ValueError, which ``map_luma`` catches."""
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
         w, h, px = decode_png(payload)
         if len(px) == 4 * w * h:        # RGBA -> RGB
@@ -321,6 +323,36 @@ IMAGE_DECODE_SCHEMA = T.StructType([
     # stored raw
     T.StructField("px_head", T.StringType(), True),
 ])
+
+
+def map_luma(media: DataFrame, payload_col: str, ref_col: str, fn,
+             schema: T.StructType) -> DataFrame:
+    """The row stage of the pixel operators (perceptual hashes, quality
+    stats): each payload decoded by ``decode_pixels`` to its BT.601
+    integer luma plane (299r+587g+114b)//1000, an int64 (height, width)
+    array, and ``fn(width, height, luma)`` -> the row's values after
+    media_ref, in ``schema`` order. A payload that does not decode, or
+    whose raster ``fn`` cannot take, yields media_ref and nulls (per-row
+    error isolation); this is the one place that decides which errors
+    those are."""
+    import numpy as np
+
+    src = media.select(F.col(ref_col).alias("media_ref"),
+                       F.col(payload_col).alias("payload"))
+    nulls = (None,) * (len(schema.fields) - 1)
+
+    def run(ref, payload):
+        try:
+            w, h, rgb = decode_pixels(payload or b"")
+            px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3).astype(np.int64)
+            luma = (299 * px[:, :, 0] + 587 * px[:, :, 1]
+                    + 114 * px[:, :, 2]) // 1000
+            row = (ref, *fn(w, h, luma))
+        except (NotImplementedError, ValueError, IndexError):
+            row = (ref, *nulls)
+        yield row
+
+    return map_rows(src, run, schema)
 
 
 def decode_images(media: DataFrame, payload_col: str = "payload",
@@ -477,16 +509,11 @@ def images_to_pdf(images: DataFrame, fit_option: str = "fillPage",
             text=f"{page}|{x!r}|{y!r}|{w!r}|{h!r}",
             media_ref=ref, offset=len(spans)))
 
-    # explicit hash repartition on the group key: the payload bytes
-    # are small enough that AQE's byte-based coalescing folds the
-    # groupBy shuffle to 1-2 partitions, but build() decodes every
-    # image (TIFF page chains, JPEG scans) — compute per row is orders
-    # of magnitude above bytes per row, so pin the parallelism; the
-    # groupBy reuses this exchange (same key) and adds no shuffle.
-    # Measured: tiff_to_pdf 5.9 s -> 1.4 s at sf0.1/local[32].
-    par = images.sparkSession.sparkContext.defaultParallelism
-    return (images.repartition(par, "doc_id")
-            .groupBy("doc_id").applyInPandas(build, DOCS_SCHEMA))
+    # build() decodes every image (TIFF page chains, JPEG scans); the
+    # groupBy reuses the spread's exchange on doc_id. Measured:
+    # tiff_to_pdf 5.9 s -> 1.4 s at sf0.1/local[32].
+    return spread(images, "doc_id").groupBy("doc_id").applyInPandas(
+        build, DOCS_SCHEMA)
 
 
 def media_metadata(media: DataFrame, payload_col: str = "payload",
@@ -951,8 +978,6 @@ def image_quality_stats(media: DataFrame, payload_col: str = "payload",
     Scale shape: one narrow map_rows decode pass (no shuffle), one
     2-long-column corpus aggregate broadcast back — a classifier pass
     must not cost a shuffle at 10^12 images, and this one doesn't."""
-    import numpy as np
-
     schema = T.StructType([
         T.StructField("media_ref", T.StringType(), False),
         T.StructField("width", T.IntegerType(), True),
@@ -963,23 +988,12 @@ def image_quality_stats(media: DataFrame, payload_col: str = "payload",
         T.StructField("min_luma", T.IntegerType(), True),
         T.StructField("max_luma", T.IntegerType(), True),
     ])
-    src = media.select(F.col(ref_col).alias("media_ref"),
-                       F.col(payload_col).alias("payload"))
 
-    def run(ref, payload):
-        try:
-            w, h, rgb = decode_pixels(payload or b"")
-            px = np.frombuffer(rgb, np.uint8).reshape(-1, 3)
-            wide = px.astype(np.int64)
-            luma = (299 * wide[:, 0] + 587 * wide[:, 1]
-                    + 114 * wide[:, 2]) // 1000
-            yield (ref, w, h, int(luma.size), int(luma.sum()),
-                   int((luma * luma).sum()), int(luma.min()),
-                   int(luma.max()))
-        except (NotImplementedError, ValueError, IndexError):
-            yield (ref, *(None,) * 7)
+    def moments(w, h, luma):
+        return (w, h, int(luma.size), int(luma.sum()),
+                int((luma * luma).sum()), int(luma.min()), int(luma.max()))
 
-    stats = map_rows(src, run, schema)
+    stats = map_luma(media, payload_col, ref_col, moments, schema)
     corpus = stats.filter(F.col("n_px").isNotNull()).agg(
         F.sum("sum_luma").cast("long").alias("tot_sum"),
         F.sum("n_px").cast("long").alias("tot_n"))

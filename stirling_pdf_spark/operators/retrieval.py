@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import parallelize, words_col
+from .extract_pipeline import spread
+from .textstats import words_col
 
 # (query_id, terms) — vocabulary terms of the synthetic documents table
 BM25_QUERIES: tuple[tuple[str, tuple[str, ...]], ...] = (
@@ -50,7 +51,7 @@ def _bm25_scored(df: DataFrame, q: DataFrame,
     (query_id, term) DataFrame; duplicate query terms contribute
     twice (standard query-tf weighting)."""
     toks = (
-        parallelize(df)
+        spread(df, id_col)
         .select(F.col(id_col).cast("long").alias("id"),
                 F.explode(words_col(text_col)).alias("term"))
         .filter(F.col("term") != "")
@@ -129,7 +130,7 @@ def bm25_hard_negatives(df: DataFrame, every: int = 100,
     (broadcast); scoring shares bm25's postings aggregations; the
     final top-k windows per query over candidate docs only."""
     base = (
-        parallelize(df)
+        spread(df, id_col)
         .select(F.col(id_col).cast("long").alias("query_id"),
                 words_col(text_col).alias("w"))
         .filter(F.col("query_id") % every == 0)
@@ -222,10 +223,10 @@ def mmr_topk(df: DataFrame, query_ids: list[int], k: int = 5,
     """
     import pandas as pd
 
-    from .dedup import cosine_expr, parallelize
+    from .dedup import cosine_expr
 
-    v = parallelize(df).select(F.col(id_col).alias("id"),
-                               F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"),
+                                  F.col(vec_col).alias("v"))
     q = v.filter(F.col("id").isin([int(x) for x in query_ids])).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv"))
     scored = (
@@ -310,7 +311,7 @@ def section_chunks(df: DataFrame, id_col: str = "doc_id",
     section_idx is 0-based in document order; preamble text before
     the first heading gets an empty breadcrumb.
     """
-    lines = parallelize(df).select(
+    lines = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), r"\n")).alias("pos", "line"),
     )
@@ -378,7 +379,7 @@ def ict_pairs(df: DataFrame, max_len: int = 128, overlap: int = 32,
     (id, pair_no, query, positive, negative)."""
     from ..kernel.chunker import chunk_text_windows
 
-    chunks = parallelize(df).select(
+    chunks = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         chunk_text_windows(F.col(text_col), max_len, overlap)
         .alias("c"),
@@ -428,11 +429,10 @@ def phrase_search(df: DataFrame,
     an equi-join on (id, pos) — broadcast-able per-term when a term
     is rare, shuffle-hash otherwise, Catalyst/AQE's call. No windows,
     no driver state; phrase literals are plan constants."""
-    from .textstats import parallelize
 
     all_terms = sorted({t for _, ts in phrases for t in ts})
     toks = (
-        parallelize(df)
+        spread(df, id_col)
         .select(F.col(id_col).cast("long").alias("id"),
                 F.posexplode(words_col(text_col)).alias("pos", "term"))
         .filter(F.col("term").isin(all_terms))

@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import cosine_expr, parallelize
+from .dedup import cosine_expr
+from .extract_pipeline import spread
 
 
 def make_planes(seed: int, n_planes: int, dim: int) -> list[list[float]]:
@@ -75,7 +76,7 @@ def lsh_buckets(df: DataFrame, planes: list[list[float]],
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """(id, bucket) — bucket is the concatenated sign-bit string of the
     vector against each hyperplane."""
-    return parallelize(df).select(
+    return spread(df, id_col).select(
         F.col(id_col).alias("id"),
         bucket_expr(vec_col, planes).alias("bucket"),
     )
@@ -89,8 +90,8 @@ def embedding_near_dup_lsh(df: DataFrame, planes: list[list[float]],
     bucket (O(sum bucket^2) instead of O(n^2)); exact cosine verifies.
     Output (id_a, id_b) is a SUBSET of dedup.embedding_near_dup_pairs —
     recall rises with fewer planes or more tables."""
-    v = parallelize(df).select(F.col(id_col).alias("id"),
-                               F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"),
+                                  F.col(vec_col).alias("v"))
     vb = v.join(lsh_buckets(df, planes, id_col, vec_col), "id")
     a = vb.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
                   F.col("bucket").alias("ba"))
@@ -112,7 +113,7 @@ def cosine_topk(df: DataFrame, query_ids: list[int], k: int = 3,
     neighbor id ascending; self excluded. The query side is tiny and
     broadcast; the corpus side is scanned once, no shuffle before the
     per-query top-k (a windowed rank over query_id partitions)."""
-    v = parallelize(df).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     q = v.filter(F.col("id").isin([int(x) for x in query_ids])).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -136,7 +137,7 @@ def lsh_topk(df: DataFrame, query_ids: list[int], planes: list[list[float]],
     bucket; exact cosine rank within candidates. Output shape matches
     cosine_topk. Recall < 1 by construction — add tables/probes to
     raise it; at 100 TB the bucket join replaces the full cross join."""
-    v = parallelize(df).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     b = lsh_buckets(df, planes, id_col, vec_col)
     vb = v.join(b, "id")
     q = vb.filter(F.col("id").isin([int(x) for x in query_ids])).select(
@@ -203,8 +204,8 @@ def pq_topk(df: DataFrame, codebooks: list[list[list[float]]],
     the scan is O(queries x corpus) — PQ cuts bytes and FLOPs per
     candidate, not candidates; compose with the IVF cells for IVF-PQ
     when both dials are needed."""
-    v = parallelize(df).select(F.col(id_col).alias("id"),
-                               F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"),
+                                  F.col(vec_col).alias("v"))
     coded = v.select("id", pq_codes_expr("v", codebooks))
     q = (
         v.filter(F.col("id").isin([int(x) for x in query_ids]))
@@ -257,8 +258,8 @@ def ivfpq_topk(df: DataFrame, centroids: list[list[float]],
     multiplicatively."""
     from .ivf import _dists_expr
 
-    v = parallelize(df).select(F.col(id_col).alias("id"),
-                               F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"),
+                                  F.col(vec_col).alias("v"))
     with_d = v.withColumn("cdists", _dists_expr("v", centroids))
     coded = with_d.select(
         "id",
@@ -381,7 +382,7 @@ def mutual_knn_pairs(df: DataFrame, k: int = 3, id_col: str = "vec_id",
     mutual rank filter below is unchanged — both directions' ranks are
     windowed over the SAME scored frame, so candidates are scored
     once, not once per direction."""
-    v = parallelize(df).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    v = spread(df, id_col).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     a = v.filter(F.col("id") % 2 == 0).select(
         F.col("id").alias("id_a"), F.col("v").alias("va"))
     b = v.filter(F.col("id") % 2 == 1).select(

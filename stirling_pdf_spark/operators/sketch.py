@@ -200,9 +200,10 @@ def cms_heavy_estimates(df: DataFrame, id_col: str = "doc_id",
     exceeds depth*width rows."""
     from pyspark.sql import Window
 
-    from .dedup import parallelize, words_col
+    from .dedup import words_col
+    from .extract_pipeline import spread
 
-    toks = (parallelize(df)
+    toks = (spread(df, id_col)
             .select(F.explode(words_col(text_col)).alias("term"))
             .filter(F.col("term") != ""))
     from ..runtime.staging import stage

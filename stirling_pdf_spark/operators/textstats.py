@@ -17,8 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import parallelize, words_col
-from .extract_pipeline import map_rows
+from .dedup import words_col
+from .extract_pipeline import map_rows, spread
 from .packing import prefix_sums
 
 # small deterministic stopword sets; order of LANGS is the tie-break
@@ -48,7 +48,7 @@ def lang_id(df: DataFrame, id_col: str = "doc_id",
     """(id, pred_lang, score) — argmax of per-language stopword hit
     counts over whitespace tokens; 'und' when no stopword hits at all.
     Ties resolved by LANGS order via a strict-> comparison chain."""
-    base = parallelize(df).select(F.col(id_col).alias("id"),
+    base = spread(df, id_col).select(F.col(id_col).alias("id"),
                      words_col(text_col).alias("w"))
     scored = base.select(
         "id", *[_stopword_hits(lang).alias(f"s_{lang}") for lang in LANGS]
@@ -70,7 +70,7 @@ def quality_stats(df: DataFrame, id_col: str = "doc_id",
     Quality buckets: +1 for >= 20 words, +1 for distinct ratio >= 50%,
     +1 for mean word length in [300, 900] x100."""
     t = F.col(text_col)
-    base = parallelize(df).select(
+    base = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.length(t).cast("long").alias("n_chars"),
         words_col(text_col).alias("w"),
@@ -135,10 +135,8 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     rep_x1000 = top_count * 1000 DIV n_grams (exact on both engines).
     Docs with fewer than n words emit no row. One explode + two
     aggregations, all shuffles on the doc id."""
-    from .dedup import parallelize, words_col
-
     w = (
-        parallelize(df)
+        spread(df, id_col)
         .select(F.col(id_col).alias("id"), words_col(text_col).alias("w"))
         .filter(F.size("w") >= n)
     )
@@ -193,7 +191,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 3, id_col: str = "doc_id",
     Output: (id, term, tf, df, rank)."""
     from pyspark.sql import Window
 
-    toks = parallelize(df).select(
+    toks = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.explode(words_col(text_col)).alias("term"),
     ).filter(F.col("term") != "")
@@ -222,7 +220,7 @@ def hash_sample(df: DataFrame, rate_pct: int = 10, id_col: str = "doc_id",
     the scan, no shuffle."""
     bucket = F.conv(F.substring(F.md5(text_col), 1, 4), 16, 10).cast("long")
     return (
-        parallelize(df)
+        spread(df, id_col)
         .withColumn("bucket", bucket)
         .filter(F.col("bucket") * 100 < F.lit(rate_pct) * 65536)
         .select(F.col(id_col).alias("id"), "bucket")
@@ -257,7 +255,7 @@ def scrub_pii(df: DataFrame, id_col: str = "doc_id",
                     .cast("long").alias(f"n_{name}"))
         out = F.regexp_replace(out, pat, _repl)
     cols.append(F.md5(out).alias("scrubbed_md5"))
-    return parallelize(df).select(*cols)
+    return spread(df, id_col).select(*cols)
 
 
 # RE2-safe (no lookarounds/backrefs — works in Spark AND DuckDB, and
@@ -363,7 +361,7 @@ def domain_mix_sample(df: DataFrame,
         n_copies > 0, F.sequence(F.lit(0), n_copies - 1)
     ).otherwise(F.array().cast("array<int>"))
     return (
-        parallelize(df)
+        spread(df, id_col)
         .select(sid.alias("id"), F.col(source_col).alias("domain"),
                 F.explode(copies).alias("copy_idx"))
         .select("id", "domain", F.col("copy_idx").cast("int"))
@@ -384,7 +382,7 @@ def vocab_topk(df: DataFrame, k: int = 50, id_col: str = "doc_id",
     from pyspark.sql import Window
 
     toks = (
-        parallelize(df)
+        spread(df, id_col)
         .select(F.col(id_col).alias("id"),
                 F.explode(words_col(text_col)).alias("term"))
         .filter(F.col("term") != "")
@@ -418,8 +416,8 @@ def bigram_lm_fit(df: DataFrame, id_col: str = "doc_id",
     counts) + two shuffle joins back on those keys + one per-doc
     groupBy — every stage partial-aggregates; the model IS a
     DataFrame, never driver state."""
-    d = parallelize(df).select(F.col(id_col).alias("id"),
-                               words_col(text_col).alias("w"))
+    d = spread(df, id_col).select(F.col(id_col).alias("id"),
+                                  words_col(text_col).alias("w"))
     grams = (
         d.filter(F.size("w") >= 2)
         .select(
@@ -700,7 +698,7 @@ def bpe_pair_counts(df: DataFrame, k: int = 20, id_col: str = "doc_id",
     full BPE loop is this op iterated with merged symbols — each
     round the same two shuffles over vocabulary-sized data."""
     wordfreq = (
-        parallelize(df)
+        spread(df, id_col)
         .select(F.explode(words_col(text_col)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word").agg(F.count("*").cast("long").alias("freq"))
@@ -810,7 +808,7 @@ def bpe_train_merges(df: DataFrame, n_merges: int = 6,
     the vocabulary is millions of rows, not trillions; caching it
     between iterations keeps each round O(vocab)."""
     wordfreq = (
-        parallelize(df)
+        spread(df)
         .select(F.explode(words_col(text_col)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word").agg(F.count("*").cast("long").alias("freq"))
@@ -967,7 +965,7 @@ def corpus_stats_report(df: DataFrame, id_col: str = "doc_id",
     (task, key), so the report costs a scan plus a ~40-row exchange
     regardless of corpus size. All-integer outputs keep the oracle
     exact (sums, not means: the reader divides)."""
-    base = parallelize(df).select(
+    base = spread(df, id_col).select(
         words_col(text_col).alias("w"),
         F.octet_length(F.col(text_col)).cast("long").alias("n_bytes"),
     )
@@ -1028,7 +1026,7 @@ def train_quality_classifier(df: DataFrame, label_col: str = "label",
     join is a broadcast of ONE row. The model is `buckets` rows — tiny
     by construction — which is what makes the collect-to-literal
     scoring path legitimate. Output: (bucket, n_pos, n_neg, weight)."""
-    toks = parallelize(df).select(
+    toks = spread(df).select(
         F.col(label_col).cast("long").alias("y"),
         F.explode(words_col(text_col)).alias("t"),
     )
@@ -1233,7 +1231,7 @@ def readability(df: DataFrame, id_col: str = "doc_id",
     n_words = F.size(words_col(text_col)).cast("long")
     n_sent = (F.size(F.split(t, r"[.!?]+")) - 1).cast("long")
     n_syll = (F.size(F.split(F.lower(t), r"[aeiouy]+")) - 1).cast("long")
-    base = parallelize(df).select(
+    base = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         n_words.alias("n_words"), n_sent.alias("n_sentences"),
         n_syll.alias("n_syllables"),
@@ -1278,7 +1276,7 @@ def dsir_weights(df: DataFrame, target_pred, text_col: str = "text",
                                            F.element_at(w, i + 2)))),
     ).otherwise(F.array().cast("array<string>"))
     feats = F.concat(w, bigrams)
-    hashed = parallelize(df).select(
+    hashed = spread(df).select(
         target_pred.cast("long").alias("is_t"),
         F.explode(feats).alias("f"),
     ).select(
@@ -1333,7 +1331,7 @@ def dsir_select(df: DataFrame, k: int = 50, id_col: str = "doc_id",
                                            F.element_at(w, i + 2)))),
     ).otherwise(F.array().cast("array<string>"))
     feats = F.concat(w, bigrams)
-    hashed = stage(parallelize(df).select(
+    hashed = stage(spread(df, id_col).select(
         F.col(id_col).alias("id"),
         (F.col(lang_col) == target_lang).cast("long").alias("is_t"),
         F.explode(feats).alias("f"),
@@ -1399,7 +1397,7 @@ def bpe_fertility(df: DataFrame, n_merges: int = 6,
         "word",
         F.size(F.split("seq", " ")).cast("long").alias("n_sub"))
     lw = (
-        parallelize(df)
+        spread(df, id_col)
         .select(F.col(lang_col).alias("lang"),
                 F.explode(words_col(text_col)).alias("word"))
         .filter(F.col("word") != "")
@@ -1504,7 +1502,7 @@ def heavy_hitters(df: DataFrame, threshold_frac: int = 64,
     cap = capacity or 2 * threshold_frac
     # one corpus scan: the token arrays are staged for their three
     # consumers (sketch pass, total count, exact candidate count)
-    toks = stage(parallelize(df).select(words_col(text_col).alias("w")))
+    toks = stage(spread(df).select(words_col(text_col).alias("w")))
 
     def sketch(batches):
         mg: dict[str, int] = {}
@@ -1566,7 +1564,7 @@ def collocation_lift_topk(df: DataFrame, k: int = 25,
 
     w = words_col(text_col)
     # staged: three consumers (unigrams, bigrams, token total)
-    toks = stage(parallelize(df).select(w.alias("w")))
+    toks = stage(spread(df).select(w.alias("w")))
     uni = (
         toks.select(F.explode("w").alias("word"))
         .filter(F.col("word") != "")
@@ -1622,7 +1620,7 @@ def lang_confusion(df: DataFrame, text_col: str = "text",
     Scale shape: one projection + map-side partial agg onto at most
     |langs| x (|langs|+1) keys — constant exchange at any corpus
     size. Output: (true_lang, pred_lang, n_docs, n_match)."""
-    base = parallelize(df).select(
+    base = spread(df).select(
         F.col(lang_col).alias("true_lang"),
         words_col(text_col).alias("w"),
     )
@@ -1663,7 +1661,7 @@ def mix_plan(df: DataFrame, parts: dict[str, int],
     if total_parts <= 0:
         raise ValueError("parts must sum to a positive total")
     counts = (
-        parallelize(df)
+        spread(df)
         .select(F.col(source_col).alias("source"),
                 F.size(words_col(text_col)).cast("long").alias("n"))
         .groupBy("source")
@@ -1718,7 +1716,7 @@ def script_detect(df: DataFrame, id_col: str = "doc_id",
         .cast("long")
         for name, rng in _SCRIPT_RANGES
     }
-    base = parallelize(df).select(
+    base = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         *[c.alias(f"n_{name}") for name, c in counts.items()],
     )
@@ -1746,7 +1744,7 @@ def corpus_drift(df: DataFrame, slice_pred, text_col: str = "text",
     Scale shape: one explode + partial agg onto ``n_buckets`` keys,
     then a one-row totals broadcast — constant exchange at any corpus
     size. Output: (bucket, c_a, c_b, ppm_a, ppm_b, l1_ppm)."""
-    hashed = parallelize(df).select(
+    hashed = spread(df).select(
         slice_pred.cast("long").alias("is_a"),
         F.explode(words_col(text_col)).alias("t"),
     ).filter(F.col("t") != "").select(
@@ -1795,7 +1793,7 @@ def qa_mine(df: DataFrame, id_col: str = "doc_id",
     sents = F.expr(
         f"transform(regexp_extract_all({text_col},"
         f" '({_SENTENCE_RE})', 1), s -> trim(s))")
-    base = parallelize(df).select(
+    base = spread(df, id_col).select(
         F.col(id_col).alias("id"), sents.alias("s"))
     pairs = base.filter(F.size("s") >= 2).select(
         "id",
@@ -1908,7 +1906,7 @@ def lm_trigram_backoff(df: DataFrame, id_col: str = "doc_id",
     left-word — vocabulary-sized, broadcastable on real corpora),
     four lookup joins from the scored half, one per-doc groupBy. The
     model IS a DataFrame; no driver state."""
-    base = parallelize(df).select(
+    base = spread(df, id_col).select(
         F.col(id_col).cast("long").alias("id"),
         words_col(text_col).alias("w"))
     train = base.filter(F.col("id") % 2 == 0)

@@ -25,8 +25,7 @@ def docs(spark):
 def test_resume_skips_committed(spark, docs, tmp_path):
     out = str(tmp_path / "ckpt")
     first_half = docs.filter(F.xxhash64("doc_id") % 2 == 0)
-    r1 = run_extract_with_checkpoint(spark, first_half, out, run_id="r1",
-                                     num_partitions=4)
+    r1 = run_extract_with_checkpoint(spark, first_half, out, run_id="r1")
     assert r1["docs_done"] == first_half.count() > 0
     # a doc whose lineage holds two rows (a re-appended commit): the
     # resume skips it and readers see it once
@@ -37,33 +36,30 @@ def test_resume_skips_committed(spark, docs, tmp_path):
     assert spark.read.parquet(f"{out}/lineage").filter(
         F.col("doc_id") == twice).count() == 2
 
-    r2 = run_extract_with_checkpoint(spark, docs, out, run_id="r2",
-                                     num_partitions=4)
+    r2 = run_extract_with_checkpoint(spark, docs, out, run_id="r2")
     assert r2["docs_done"] == 40 - r1["docs_done"]
 
     committed = read_committed_spans(spark, out)
     assert committed.count() == 40
     assert committed.filter(F.col("doc_id") == twice).count() == 1
     # committed output == direct full extraction (same spans per doc)
-    direct = extract_spans(docs, num_partitions=4)
+    direct = extract_spans(docs)
     joined = committed.alias("a").join(direct.alias("b"), "doc_id")
     assert joined.count() == 40
     mismatches = joined.filter(F.col("a.spans") != F.col("b.spans")).count()
     assert mismatches == 0
 
     # a third run over the same corpus is a no-op
-    r3 = run_extract_with_checkpoint(spark, docs, out, run_id="r3",
-                                     num_partitions=4)
+    r3 = run_extract_with_checkpoint(spark, docs, out, run_id="r3")
     assert r3["docs_done"] == 0
 
 
 def test_orphan_spans_invisible(spark, docs, tmp_path):
     out = str(tmp_path / "ckpt")
-    run_extract_with_checkpoint(spark, docs, out, run_id="r1",
-                                num_partitions=4)
+    run_extract_with_checkpoint(spark, docs, out, run_id="r1")
     # simulate a crash after the span write, before the lineage commit:
     # span files exist under a run_id that lineage never recorded
-    orphan = extract_spans(docs.limit(3), num_partitions=2).withColumn(
+    orphan = extract_spans(docs.limit(3)).withColumn(
         "partition_id", F.spark_partition_id()
     )
     orphan.write.parquet(f"{out}/spans/run_id=orphan")
@@ -80,21 +76,19 @@ def test_kill_and_resume_recovers_crashed_docs(spark, docs, tmp_path):
     out = str(tmp_path / "ckpt")
     survivors = docs.filter(F.xxhash64("doc_id") % 2 == 0)
     crashed = docs.filter(F.xxhash64("doc_id") % 2 != 0)
-    run_extract_with_checkpoint(spark, survivors, out, run_id="r1",
-                                num_partitions=4)
+    run_extract_with_checkpoint(spark, survivors, out, run_id="r1")
     # the crashed attempt got as far as its span write (step 2 of the
     # commit protocol) — no lineage row ever lands
-    (extract_spans(crashed, num_partitions=4)
+    (extract_spans(crashed)
      .withColumn("partition_id", F.spark_partition_id())
      .write.parquet(f"{out}/spans/run_id=crashed"))
     assert read_committed_spans(spark, out).count() == survivors.count()
 
-    r = run_extract_with_checkpoint(spark, docs, out, run_id="r2",
-                                    num_partitions=4)
+    r = run_extract_with_checkpoint(spark, docs, out, run_id="r2")
     assert r["docs_done"] == crashed.count()  # exactly the crashed docs
     committed = read_committed_spans(spark, out)
     assert committed.count() == 40
-    direct = extract_spans(docs, num_partitions=4)
+    direct = extract_spans(docs)
     joined = committed.alias("a").join(direct.alias("b"), "doc_id")
     assert joined.filter(F.col("a.spans") != F.col("b.spans")).count() == 0
 
@@ -105,10 +99,9 @@ def test_metrics_account_for_all_docs(spark, docs, tmp_path):
     import os
 
     out = str(tmp_path / "ckpt")
-    summary = run_extract_with_checkpoint(spark, docs, out, run_id="r1",
-                                          num_partitions=4)
+    summary = run_extract_with_checkpoint(spark, docs, out, run_id="r1")
     assert not os.path.exists(f"{out}/metrics")
-    (extract_spans(docs.limit(5), num_partitions=2)
+    (extract_spans(docs.limit(5))
      .withColumn("partition_id", F.spark_partition_id())
      .write.parquet(f"{out}/spans/run_id=crashed"))
     metrics = read_metrics(spark, out)
@@ -117,7 +110,7 @@ def test_metrics_account_for_all_docs(spark, docs, tmp_path):
                       F.sum("span_count").alias("s")).collect()[0]
     assert agg["d"] == 40 == summary["docs_done"]
     direct_spans = (
-        extract_spans(docs, num_partitions=4)
+        extract_spans(docs)
         .agg(F.sum(F.size("spans"))).collect()[0][0]
     )
     assert agg["s"] == direct_spans == summary["spans_done"]
@@ -145,13 +138,11 @@ def test_empty_first_run_then_commit(spark, docs, tmp_path):
     """A first run over an empty input (no lineage yet) writes and
     commits nothing visible; the next run commits normally."""
     out = str(tmp_path / "ckpt")
-    r0 = run_extract_with_checkpoint(spark, docs.limit(0), out, run_id="r0",
-                                     num_partitions=4)
+    r0 = run_extract_with_checkpoint(spark, docs.limit(0), out, run_id="r0")
     assert r0["docs_done"] == 0 == r0["spans_done"]
     assert read_committed_spans(spark, out).count() == 0
 
-    r1 = run_extract_with_checkpoint(spark, docs, out, run_id="r1",
-                                     num_partitions=4)
+    r1 = run_extract_with_checkpoint(spark, docs, out, run_id="r1")
     assert r1["docs_done"] == 40
     committed = read_committed_spans(spark, out)
     assert committed.count() == 40
@@ -165,15 +156,13 @@ def test_corrupt_lineage_raises(spark, docs, tmp_path):
     import shutil
 
     out = str(tmp_path / "ckpt")
-    run_extract_with_checkpoint(spark, docs, out, run_id="r1",
-                                num_partitions=4)
+    run_extract_with_checkpoint(spark, docs, out, run_id="r1")
     shutil.rmtree(f"{out}/lineage")
     os.makedirs(f"{out}/lineage")
     with open(f"{out}/lineage/part-00000.parquet", "wb") as fh:
         fh.write(b"not a parquet file")
     with pytest.raises(Exception):
-        run_extract_with_checkpoint(spark, docs, out, run_id="r2",
-                                    num_partitions=4)
+        run_extract_with_checkpoint(spark, docs, out, run_id="r2")
     assert not os.path.exists(f"{out}/spans/run_id=r2")
 
 
@@ -189,7 +178,7 @@ def test_compact_checkpoint_tables(spark, docs, tmp_path):
     num = F.regexp_extract("doc_id", "([0-9]+)", 1).cast("long")
     for i in range(4):  # 4 runs of 10 docs -> 4 lineage file batches
         run_extract_with_checkpoint(spark, docs.filter(num % 4 == i), out,
-                                    run_id=f"r{i}", num_partitions=4)
+                                    run_id=f"r{i}")
     before_rows = read_committed_spans(spark, out).count()
     before_metric_rows = read_metrics(spark, out).count()
     n_files = lambda p: sum(  # noqa: E731
@@ -212,9 +201,8 @@ def test_expire_orphan_runs(spark, docs, tmp_path):
     from stirling_pdf_spark.runtime.checkpoint import expire_orphan_runs
 
     out = str(tmp_path / "ckpt")
-    run_extract_with_checkpoint(spark, docs, out, run_id="good",
-                                num_partitions=4)
-    orphan = extract_spans(docs.limit(2), num_partitions=2).withColumn(
+    run_extract_with_checkpoint(spark, docs, out, run_id="good")
+    orphan = extract_spans(docs.limit(2)).withColumn(
         "partition_id", F.spark_partition_id())
     orphan.write.parquet(f"{out}/spans/run_id=crashed")
     removed = expire_orphan_runs(spark, out)

@@ -95,7 +95,7 @@ def test_stream_extract_drains_and_commits(spark, tmp_path):
     docs = synth_docs_df(spark, 30, mega_pages=(6, 9), num_partitions=3)
     docs.write.parquet(in_dir)
 
-    q = stream_extract(spark, in_dir, out, ckpt, num_partitions=4)
+    q = stream_extract(spark, in_dir, out, ckpt)
     q.awaitTermination(120)
     assert read_committed_spans(spark, out).count() == 30
 
@@ -104,7 +104,7 @@ def test_stream_extract_drains_and_commits(spark, tmp_path):
         .filter(F.element_at(F.split(F.col("doc_id"), "-"), -1)
                 .cast("long") >= 30)
     more.write.mode("append").parquet(in_dir)
-    q2 = stream_extract(spark, in_dir, out, ckpt, num_partitions=4)
+    q2 = stream_extract(spark, in_dir, out, ckpt)
     q2.awaitTermination(120)
     committed = read_committed_spans(spark, out)
     assert committed.count() == 45
@@ -114,12 +114,10 @@ def test_stream_extract_drains_and_commits(spark, tmp_path):
 def test_checkpoint_replay_same_run_id_is_safe(spark, tmp_path):
     out = str(tmp_path / "out")
     docs = synth_docs_df(spark, 12, mega_pages=(6, 9), num_partitions=2)
-    r1 = run_extract_with_checkpoint(spark, docs, out, run_id="rX",
-                                     num_partitions=2)
+    r1 = run_extract_with_checkpoint(spark, docs, out, run_id="rX")
     assert r1["docs_done"] == 12
     # replay with the SAME run_id (streaming retry shape): must be a
     # no-op and must not clobber committed spans
-    r2 = run_extract_with_checkpoint(spark, docs, out, run_id="rX",
-                                     num_partitions=2)
+    r2 = run_extract_with_checkpoint(spark, docs, out, run_id="rX")
     assert r2["docs_done"] == 0
     assert read_committed_spans(spark, out).count() == 12

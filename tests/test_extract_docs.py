@@ -328,5 +328,5 @@ def test_malformed_span_names_the_doc_on_both_routes(spark):
                                   ("doc-salted-bad", 40, "7|1.0|bad-y|11.0|F")):
         df = spark.createDataFrame([doc(doc_id, pages, header), ("doc-ok", [])], schema)
         with pytest.raises(Exception, match=doc_id):
-            ep.extract_spans(df, num_partitions=2, salt_threshold=20,
+            ep.extract_spans(df, salt_threshold=20,
                              pages_per_bucket=10).collect()

@@ -7,13 +7,15 @@ kernel output despite page-range splitting + reassembly)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from stirling_pdf_spark.corpus.spark_synth import synth_docs_df
 from stirling_pdf_spark.corpus.synth import synth_corpus
 from stirling_pdf_spark.kernel.extract import extract_doc
-from stirling_pdf_spark.operators.extract_pipeline import extract_spans
+from stirling_pdf_spark.operators.extract_pipeline import extract_spans, spread
 
 N_DOCS = 120
 MEGA_PAGES = (60, 80)  # scaled-down mega docs for test runtime
@@ -30,7 +32,7 @@ def _oracle(n_docs: int) -> dict[str, list[tuple]]:
 @pytest.fixture(scope="module")
 def spark_result(spark):
     docs = synth_docs_df(spark, N_DOCS, mega_pages=MEGA_PAGES, num_partitions=8)
-    result = extract_spans(docs, num_partitions=8, salt_threshold=SALT_THRESHOLD)
+    result = extract_spans(docs, salt_threshold=SALT_THRESHOLD)
     rows = result.collect()
     return {
         r["doc_id"]: [
@@ -112,7 +114,7 @@ def test_skew_torture_one_mega_among_tiny(spark):
     docs = spark.createDataFrame(rows, schema)
 
     ppb = 8
-    out = extract_spans(docs, num_partitions=16, salt_threshold=100,
+    out = extract_spans(docs, salt_threshold=100,
                         pages_per_bucket=ppb)
     got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
                           s["order"]) for s in r["spans"]]
@@ -160,7 +162,7 @@ def test_salted_keying_agrees_with_segment_of(spark, page):
         F.count("*").alias("n"), F.max("salted").alias("salted")).collect()
     assert {r["doc_id"]: (r["n"] > 1, r["salted"]) for r in rows} == {
         "clean": (True, True), "odd": (False, False)}
-    out = extract_spans(docs, num_partitions=4, salt_threshold=5, pages_per_bucket=10)
+    out = extract_spans(docs, salt_threshold=5, pages_per_bucket=10)
     got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
                          for s in r["spans"]] for r in out.collect()}
     assert got == {"clean": [tuple(s) for s in extract_doc(clean)],
@@ -171,11 +173,27 @@ def _plan_text(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_spread_is_one_hash_exchange_on_its_keys(spark):
+    """``spread`` and the per-row operators on it (``lang_id`` here)
+    plan one hash exchange on the key into 2 x defaultParallelism
+    partitions, and no round-robin."""
+    from stirling_pdf_spark.operators.textstats import lang_id
+
+    df = spark.createDataFrame(
+        [(f"d{i}", "the cat sat on the mat") for i in range(20)],
+        "doc_id string, text string")
+    n = 2 * spark.sparkContext.defaultParallelism
+    for out in (spread(df, "doc_id"), lang_id(df)):
+        plan = _plan_text(out)
+        assert re.search(rf"hashpartitioning\(doc_id#\d+, {n}\)", plan), plan
+        assert "RoundRobinPartitioning" not in plan, plan
+
+
 def test_regroup_is_one_arrow_batch_stream(spark):
     """The regroup by doc_id runs as a mapInArrow over each partition's
     batches, not a per-group Python call."""
     docs = synth_docs_df(spark, 20, seed=5, num_partitions=2)
-    plan = _plan_text(extract_spans(docs, num_partitions=2))
+    plan = _plan_text(extract_spans(docs))
     assert "FlatMapGroupsInArrow" not in plan, plan
     assert "MapInArrow _finish_docs" in plan, plan
 
@@ -191,7 +209,7 @@ def test_salted_docs_across_tiny_arrow_batches(spark, rows_per_batch):
     try:
         docs = synth_docs_df(spark, 24, seed=3, mega_pages=(20, 30),
                              num_partitions=2)
-        out = extract_spans(docs, num_partitions=3, salt_threshold=100,
+        out = extract_spans(docs, salt_threshold=100,
                             pages_per_bucket=4)
         got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
                               s["order"]) for s in r["spans"]]
@@ -216,7 +234,7 @@ def test_input_consumed_once(spark, tmp_path):
     pq = spark.read.parquet(path)
     for src, leaf in ((pq, "FileScan"), (docs, "Range (")):
         assert _plan_text(src).count(leaf) == 1
-        out = extract_spans(src, num_partitions=4, salt_threshold=150)
+        out = extract_spans(src, salt_threshold=150)
         assert out.count() == 60
         plan = _plan_text(out)
         assert plan.count(leaf) == 1, plan

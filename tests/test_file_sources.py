@@ -38,7 +38,7 @@ def test_html_file_source_extracts_main_content(spark, file_dir):
     from stirling_pdf_spark.sources.files import docs_from_html_files
 
     docs = docs_from_html_files(spark, file_dir)
-    flat = explode_spans(extract_spans(docs, num_partitions=2)).collect()
+    flat = explode_spans(extract_spans(docs)).collect()
     texts = [r["text"] for r in flat if r["kind"] == "text"]
     assert any("Title A" in t for t in texts)
     assert any("quick brown fox" in t for t in texts)
@@ -51,7 +51,7 @@ def test_text_file_source_canonical_layout(spark, file_dir):
     docs = docs_from_text_files(spark, file_dir)
     rows = docs.collect()
     assert [r["doc_id"] for r in rows] == ["b.txt"]
-    out = explode_spans(extract_spans(docs, num_partitions=2)).collect()
+    out = explode_spans(extract_spans(docs)).collect()
     texts = [r["text"] for r in out if r["kind"] == "text"]
     # 10 words -> two 8-word-capped lines of the canonical layout
     assert texts == ["alpha beta gamma delta epsilon zeta eta theta",
@@ -62,7 +62,7 @@ def test_eml_file_source_headers_body_attachments(spark, file_dir):
     from stirling_pdf_spark.sources.files import docs_from_eml_files
 
     docs = docs_from_eml_files(spark, file_dir)
-    flat = explode_spans(extract_spans(docs, num_partitions=2)).collect()
+    flat = explode_spans(extract_spans(docs)).collect()
     by_kind = {}
     for r in flat:
         by_kind.setdefault(r["kind"], []).append(r)

@@ -96,7 +96,7 @@ def test_file_and_string_sources(spark, tmp_path):
     docs = docs_from_markdown_files(spark, str(tmp_path))
     out = {r["doc_id"]: [s["text"] for s in r["spans"]
                          if s["kind"] == "text"]
-           for r in extract_spans(docs, num_partitions=2).collect()}
+           for r in extract_spans(docs).collect()}
     assert out["a.md"] == ["Hi", "body text"]
     assert out["b.md"] == ["one", "two"]
 

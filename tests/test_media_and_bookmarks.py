@@ -22,7 +22,7 @@ from stirling_pdf_spark.operators.multimodal import (
 def corpus(spark):
     docs = synth_docs_df(spark, 80, seed=42, mega_pages=(40, 50),
                          num_partitions=4)
-    return docs, extract_spans(docs, num_partitions=4, salt_threshold=200)
+    return docs, extract_spans(docs, salt_threshold=200)
 
 
 def test_payloads_deterministic():

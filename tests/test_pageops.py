@@ -36,7 +36,7 @@ def test_split_preserves_spans_and_rebases_offsets(spark, docs):
     assert bad == 0
     # every part id has the #pN suffix and parts re-extract cleanly
     assert parts.filter(~F.col("doc_id").contains("#p")).count() == 0
-    out = extract_spans(parts, num_partitions=4)
+    out = extract_spans(parts)
     assert out.count() == parts.count()
 
 
@@ -147,8 +147,8 @@ def test_set_rotation_extraction_invariant(spark, docs):
     extraction is rotation-invariant, and so is the kernel."""
     from stirling_pdf_spark.operators.pageops import set_page_rotation
 
-    base = extract_spans(docs, num_partitions=4)
-    rot = extract_spans(set_page_rotation(docs, 270), num_partitions=4)
+    base = extract_spans(docs)
+    rot = extract_spans(set_page_rotation(docs, 270))
     a = base.select("doc_id", F.expr(
         "transform(spans, s -> struct(s.kind, s.text, s.media_ref, s.order))"
     ).alias("spans"))
@@ -183,7 +183,7 @@ def test_physical_rotate_four_times_identity(spark):
 
 
 def test_has_text_and_media_predicates(spark, docs):
-    out = extract_spans(docs, num_partitions=4)
+    out = extract_spans(docs)
     n_media_docs = out.filter(
         F.exists("spans", lambda s: s["kind"] == "media")).count()
     assert has_media(out).count() == n_media_docs
@@ -214,7 +214,7 @@ def test_split_by_sections_conserves_and_scales(spark, docs):
     assert bad == 0
     # sections re-extract as standalone docs
     from stirling_pdf_spark.operators.extract_pipeline import extract_spans
-    assert extract_spans(parts, num_partitions=4).count() == parts.count()
+    assert extract_spans(parts).count() == parts.count()
 
 
 def test_blank_pages_detects_whitespace_only(spark):
@@ -246,7 +246,7 @@ def test_add_page_stamps(spark, docs):
     from stirling_pdf_spark.operators.pageops import add_page_stamps
 
     stamped = add_page_stamps(docs, "CONFIDENTIAL", number_pages=True)
-    out = extract_spans(stamped, num_partitions=4)
+    out = extract_spans(stamped)
     n_stamped_docs = out.filter(
         F.exists("spans", lambda s: s["text"].contains("CONFIDENTIAL"))
     ).count()
@@ -315,7 +315,7 @@ def test_page_number_stamps_full_surface(spark):
     # append path: stamps become kind='text' spans that ride extraction
     stamped = add_page_numbers(docs, pages_to_number="2-4",
                                starting_number=10)
-    flat = extract_spans(stamped, num_partitions=2) \
+    flat = extract_spans(stamped) \
         .select(F.explode("spans").alias("s")) \
         .filter(F.col("s.text").rlike("^1[012]$"))
     assert flat.count() == 3
@@ -335,15 +335,15 @@ def test_scale_pages_geometry(spark, docs):
     assert n.content == o.content
     # scaled docs still extract (structure intact; y-gaps scale up so
     # line separation is preserved)
-    out_o = extract_spans(docs, num_partitions=4)
-    out_s = extract_spans(scaled, num_partitions=4)
+    out_o = extract_spans(docs)
+    out_s = extract_spans(scaled)
     assert out_s.count() == out_o.count()
 
 
 def test_metadata_extraction(spark, docs):
     from stirling_pdf_spark.operators.extract_pipeline import extract_metadata
 
-    out = extract_spans(docs, num_partitions=4)
+    out = extract_spans(docs)
     meta = extract_metadata(out)
     rows = meta.collect()
     assert rows, "synth corpus must contain meta-bearing docs"
@@ -375,7 +375,7 @@ def six_page_doc(spark):
 
 def _page_order(df):
     """Content words in extracted reading order."""
-    out = extract_spans(df, num_partitions=2).collect()[0]["spans"]
+    out = extract_spans(df).collect()[0]["spans"]
     return [s["text"] for s in out if s["kind"] == "text"]
 
 
@@ -417,8 +417,7 @@ def test_rearrange_passes_non_page_spans(spark):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    out = extract_spans(rearrange_pages(df, "REVERSE"),
-                        num_partitions=2).collect()[0]["spans"]
+    out = extract_spans(rearrange_pages(df, "REVERSE")).collect()[0]["spans"]
     kinds = [s["kind"] for s in out]
     assert kinds == ["meta", "text", "text", "attachment"]
     assert [s["text"] for s in out if s["kind"] == "text"] == ["b", "a"]
@@ -446,7 +445,7 @@ def test_merge_docs_filename_order_and_page_shift(spark):
     )
     merged = merge_docs(df)
     assert merged.count() == 1
-    out = extract_spans(merged, num_partitions=2).collect()[0]["spans"]
+    out = extract_spans(merged).collect()[0]["spans"]
     assert [s["text"] for s in out] == ["b1", "a1", "a2"]
     # pages shifted: a's pages became global pages 2,3 after b's 1
     raw = merged.collect()[0]["spans"]
@@ -467,7 +466,7 @@ def test_overlay_docs_page_wise(spark):
               "media_ref:string,offset:int>>")
     base = spark.createDataFrame([mk("d1", "base", 72.0)], schema)
     over = spark.createDataFrame([mk("d1", "stamp", 172.0)], schema)
-    out = extract_spans(overlay_docs(base, over), num_partitions=2).collect()
+    out = extract_spans(overlay_docs(base, over)).collect()
     texts = [s["text"] for s in out[0]["spans"]]
     assert texts == ["base", "stamp"]  # same page, reading order by y
 
@@ -546,8 +545,8 @@ def test_crop_shifts_and_filters(spark):
 def test_to_single_page_preserves_text_order(spark, docs):
     from stirling_pdf_spark.operators.pageops import to_single_page
 
-    base = extract_spans(docs, num_partitions=4)
-    single = extract_spans(to_single_page(docs), num_partitions=4)
+    base = extract_spans(docs)
+    single = extract_spans(to_single_page(docs))
 
     def texts(df):
         return df.select(
@@ -767,8 +766,7 @@ def test_overlay_background_prepends(spark):
     for pos, expect in (("FOREGROUND", ["m-base", "m-ov"]),
                         ("BACKGROUND", ["m-ov", "m-base"])):
         out = extract_spans(
-            overlay_docs_multi(base, ov, "InterleavedOverlay", position=pos),
-            num_partitions=2)
+            overlay_docs_multi(base, ov, "InterleavedOverlay", position=pos))
         refs = [r["media_ref"] for r in
                 explode_spans(out).orderBy("order").collect()]
         assert refs == expect, pos
@@ -872,7 +870,7 @@ def test_set_metadata_update_delete_wipe(spark):
     upd = set_metadata(df, {"title": "new title", "author": None,
                             "subject": "added"})
     meta = {r["key"]: r["value"] for r in extract_metadata(
-        extract_spans(upd, num_partitions=2)).collect()}
+        extract_spans(upd)).collect()}
     assert meta == {"title": "new title", "producer": "engine",
                     "subject": "added"}
     # body untouched
@@ -881,7 +879,7 @@ def test_set_metadata_update_delete_wipe(spark):
 
     wiped = set_metadata(df, {"title": "only"}, delete_all=True)
     meta2 = {r["key"]: r["value"] for r in extract_metadata(
-        extract_spans(wiped, num_partitions=2)).collect()}
+        extract_spans(wiped)).collect()}
     assert meta2 == {"title": "only"}
 
 

@@ -21,7 +21,7 @@ def test_chain_scale_stamp_filter_extract_redact(spark, docs):
         ("scale", {"factor": 2.0}),
         ("stamp", {"stamp": "DRAFT", "number_pages": True}),
         ("filter_min_spans", {"n": 5}),
-        ("extract", {"num_partitions": 4}),
+        ("extract", {}),
         ("redact", {"term": "lorem"}),
     ])
     rows = out.collect()
@@ -34,10 +34,10 @@ def test_chain_scale_stamp_filter_extract_redact(spark, docs):
 
 
 def test_filter_drops_docs_mid_chain(spark, docs):
-    n_all = run_pipeline(docs, [("extract", {"num_partitions": 4})]).count()
+    n_all = run_pipeline(docs, [("extract", {})]).count()
     n_media = run_pipeline(docs, [
         ("filter_has_kind", {"kind": "media"}),
-        ("extract", {"num_partitions": 4}),
+        ("extract", {}),
     ]).count()
     assert 0 < n_media < n_all
 
@@ -64,12 +64,12 @@ def test_pipeline_round2_ops_chain(spark):
         ("set_rotation", {"rotation": 90}),
         ("filter_rotation", {"rotation": 90, "comparator": "EQUAL"}),
         ("single_page", {}),
-        ("extract", {"num_partitions": 4}),
+        ("extract", {}),
     ])
     assert out.count() == docs.count()  # every doc passed the filter
     dropped = run_pipeline(docs, [
         ("set_rotation", {"rotation": 90}),
         ("filter_rotation", {"rotation": 180, "comparator": "EQUAL"}),
-        ("extract", {"num_partitions": 4}),
+        ("extract", {}),
     ])
     assert dropped.count() == 0  # F8: filters drop docs mid-chain

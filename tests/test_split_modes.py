@@ -257,7 +257,7 @@ def test_flatten_forms_extraction_sees_static_text(spark):
     from stirling_pdf_spark.operators.extract_pipeline import extract_spans
 
     docs = _rows(spark, [_ff_doc("doc-a", [("f0", "text", "VALUE0")])])
-    flat = extract_spans(flatten_forms(docs), num_partitions=2)
+    flat = extract_spans(flatten_forms(docs))
     [row] = flat.collect()
     kinds = [s["kind"] for s in row["spans"]]
     assert "formfield" not in kinds

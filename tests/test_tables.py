@@ -135,7 +135,7 @@ def test_stream_mode_spark_operator(spark):
 def test_tables_through_spark_pipeline(spark):
     docs = synth_docs_df(spark, 120, seed=42, mega_pages=(10, 15),
                          num_partitions=4)
-    out = extract_spans(docs, num_partitions=4)
+    out = extract_spans(docs)
     tables = out.select(F.explode("spans").alias("s")) \
         .filter(F.col("s.kind") == "table")
     rows = tables.collect()

@@ -95,10 +95,11 @@ def test_image_dhash_undecodable_yields_null(spark, op, col):
         f"stirling_pdf_spark.operators.{module}"), name)
     media = spark.createDataFrame(
         [("m-bad", "webp", b"RIFFxxxxWEBP"), ("m-trunc", "ppm", b"P6"),
-         ("m-bmp", "bmp", b"BM\x00\x00")],    # header cut before its fields
+         ("m-bmp", "bmp", b"BM\x00\x00"),    # header cut before its fields
+         ("m-png", "png", b"\x89PNG\r\n\x1a\n\x00\x00\x00\rIHDR")],  # cut in IHDR
         "media_ref string, fmt string, payload binary")
     rows = {r["media_ref"]: r for r in fn(media).collect()}
-    assert set(rows) == {"m-bad", "m-trunc", "m-bmp"}
+    assert set(rows) == {"m-bad", "m-trunc", "m-bmp", "m-png"}
     assert all(r[col] is None for r in rows.values())
 
 

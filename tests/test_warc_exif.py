@@ -132,7 +132,11 @@ class TestWarcSpark:
             [("m-good", bytearray(build_exif_jpeg(
                 "MM", "Make1", "Model2", 3, (72, 1),
                 "2024:01:02 03:04:05", 99))),
-             ("m-bad", bytearray(b"\x89PNG not a jpeg"))],
+             ("m-bad", bytearray(b"\x89PNG not a jpeg")),
+             # cut after the APP1 marker, before its length
+             ("m-cut", bytearray(b"\xff\xd8\xff\xe1")),
+             # an Exif APP1 whose TIFF block holds only the byte order
+             ("m-tiff", bytearray(b"\xff\xd8\xff\xe1\x00\x0aExif\x00\x00II"))],
             "media_ref string, payload binary")
         from stirling_pdf_spark.operators.multimodal import image_exif_meta
 
@@ -141,6 +145,9 @@ class TestWarcSpark:
         assert rows["m-good"]["reason"] is None
         assert rows["m-bad"]["make"] is None
         assert "JPEG" in rows["m-bad"]["reason"]
+        for ref in ("m-cut", "m-tiff"):
+            assert rows[ref]["make"] is None
+            assert "truncated EXIF" in rows[ref]["reason"]
 
     def test_exif_operator_null_payload_is_an_error_row(self, spark):
         media = spark.createDataFrame(
