@@ -51,13 +51,20 @@ from stirling_pdf_spark.operators.multimodal import text_payload_metadata
 from stirling_pdf_spark.sources.tables import read_table
 
 
+_SHIPPED_APPS: set[str] = set()
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make the package importable inside the driver's Python workers
-    (the spark-submit --py-files shape) — idempotent."""
+    (the spark-submit --py-files shape), once per SparkContext."""
+    sc = spark.sparkContext
+    if sc.applicationId in _SHIPPED_APPS:
+        return
+    _SHIPPED_APPS.add(sc.applicationId)
     try:
         from stirling_pdf_spark.session import package_zip
 
-        spark.sparkContext.addPyFile(package_zip())
+        sc.addPyFile(package_zip())
     except Exception:
         pass  # already added, or driver-side sys.path suffices
 

@@ -4,7 +4,7 @@ The reference converts /convert/pdf/word by shelling out to
 LibreOffice (``PDFToFile.java:99`` soffice --convert-to docx) — an
 external binary that is out of scope here — so, exactly like the
 pdf->html / pdf->xml / pdf->epub exporters, the DOCX path re-uses the
-PROVEN typed-block pipeline (kernel/html_export.typed_doc_blocks:
+PROVEN typed-block pipeline (kernel/markdown.typed_doc_blocks:
 glyph-median headings, bold labels, bullet grouping, stream tables,
 cross-page stitching) and emits the OOXML *package members* as rows:
 
@@ -33,7 +33,7 @@ export stay one narrow Arrow stage at 100 TB.
 
 from __future__ import annotations
 
-from .html_export import typed_doc_blocks
+from .markdown import typed_doc_blocks
 from .xml_export import escape_xml
 
 CONTENT_TYPES = (

@@ -13,7 +13,7 @@ pipeline and emits the OCF container *members* deterministically:
     — i.e. any HEADING whose text contains ``Chapter<space>`` case-
     insensitively starts a new spine item.  Here the same regex runs
     over the typed heading blocks (heading1/heading2) from
-    kernel/html_export.typed_doc_blocks.
+    kernel/markdown.typed_doc_blocks.
   * blocks before the first chapter heading become a front-matter
     spine item ``chapter-0`` (Calibre's implicit "Start" section).
   * each spine item is a standalone XHTML document (EPUB 3 flavour,
@@ -36,7 +36,8 @@ from __future__ import annotations
 
 import re
 
-from .html_export import _emit, escape_html, typed_doc_blocks
+from .html_export import _emit, escape_html
+from .markdown import typed_doc_blocks
 
 # SMART_CHAPTER_EXPRESSION parity (re:test is a SEARCH, not a match)
 CHAPTER_RE = re.compile(r"\s*Chapter\s+", re.IGNORECASE)

@@ -2,13 +2,13 @@
 
 The reference shells out to ``pdftohtml`` for /convert/pdf/html — an
 external binary that is out of scope here — so the HTML exporter
-re-uses the PROVEN Markdown block pipeline (kernel/markdown.py, the
-PdfMarkdownConverter.java semantics: glyph-median heading detection,
-bold labels, bullet flushes, 0.8x-line-height paragraph breaks,
-soft-hyphen repair, cross-page sentence continuation, stream-table
-detection with the two-column guard, cross-page table stitching) and
-swaps the emitter: HTML tags + entity escaping instead of Markdown
-markers.
+renders the Markdown block pipeline's typed blocks
+(kernel/markdown.typed_doc_blocks, the PdfMarkdownConverter.java
+semantics: glyph-median heading detection, bold labels, bullet
+flushes, 0.8x-line-height paragraph breaks, soft-hyphen repair,
+cross-page sentence continuation, stream-table detection with the
+two-column guard, cross-page table stitching) and swaps the emitter:
+HTML tags + entity escaping instead of Markdown markers.
 
 Emission mapping:
 
@@ -24,91 +24,22 @@ Emission mapping:
   * whole document         -> <!DOCTYPE html> + <html><body> wrapper
                               (pdftohtml's standalone -s shape)
 
-The cross-page continuation quirk is kept faithfully: ANY trailing
-string block (heading, bold label, image placeholder) absorbs a
-lowercase continuation, exactly like the Markdown path
-(PdfMarkdownConverter.java:907-923).
+The cross-page continuation quirk is kept: ANY trailing string block
+(heading, bold label, image placeholder) absorbs a lowercase
+continuation (PdfMarkdownConverter.java:907-923). The '. ? ! :' stop
+test reads the block's text, so a bold label ending in ':' keeps the
+continuation as its own <p>; the Markdown path tests the rendered
+'**...**' and merges it.
 """
 
 from __future__ import annotations
 
-from collections import defaultdict
-
-from . import wire
-from .columns import is_two_column, reading_order
-from .lines import Line, cluster_lines
-from .markdown import (
-    FALLBACK_MEDIAN,
-    SOFT_HYPHEN,
-    _ends_with_sentence_punct,
-    _heading_prefix,
-    _is_bold_label,
-    _median,
-    _stitch_tables,
-    _weighted_median,
-)
-from .tables import stream_table_grid
-
-_BULLETS = "•▪◦"
+from .markdown import typed_doc_blocks
 
 
 def escape_html(text: str) -> str:
     return (text.replace("&", "&amp;").replace("<", "&lt;")
             .replace(">", "&gt;"))
-
-
-def _typed_page_blocks(lines: list[Line], median_size: float,
-                       median_height: float) -> list[tuple[str, str]]:
-    """The _page_blocks state machine with TYPED, unescaped output:
-    (kind, text) where kind in heading1/heading2/bold/bullet/para."""
-    out: list[tuple[str, str]] = []
-    para: list[str] = []
-    prev_bottom = None
-    prev_height = 0.0
-
-    def flush() -> None:
-        if para:
-            out.append(("para", "".join(para)))
-            para.clear()
-
-    for line in lines:
-        text = SOFT_HYPHEN.sub(r"\1\2", line.text()).strip()
-        if not text:
-            continue
-        gap = (line.y1 - prev_bottom) if prev_bottom is not None else 0.0
-        paragraph_break = prev_height > 0.0 and gap > prev_height * 0.8
-        prefix = _heading_prefix(line, text, median_size, median_height)
-        if prefix:
-            flush()
-            out.append(("heading1" if prefix == "# " else "heading2",
-                        text))
-        elif text[0] in _BULLETS:
-            flush()
-            out.append(("bullet", text))
-        elif _is_bold_label(line, text):
-            flush()
-            out.append(("bold", text))
-        elif paragraph_break:
-            flush()
-            para.append(text)
-        else:
-            if para:
-                joiner = "" if text[0] in "'’‘\"" else " "
-                para.append(joiner + text)
-            else:
-                para.append(text)
-        prev_bottom = line.y2
-        prev_height = line.y2 - line.y1
-    flush()
-    return out
-
-
-def _image_alt(draw: wire.MediaDraw) -> str:
-    parts = []
-    if draw.w > 0 and draw.h > 0:
-        parts.append(f"{draw.w:.0f}x{draw.h:.0f}pt")
-    body = f": {', '.join(parts)}" if parts else ""
-    return f"image redacted{body}"
 
 
 def render_html_table(grid: list[list[str]]) -> str:
@@ -163,76 +94,6 @@ def _emit(blocks: list[tuple[str, object]]) -> str:
             out.append(f"<p>{escape_html(payload)}</p>")
             i += 1
     return "\n".join(out)
-
-
-def typed_pages(spans) -> list[tuple[int, list[tuple[str, object]]]]:
-    """Raw interleaved spans -> PER-PAGE typed blocks
-    [(page, [(kind, payload)])] BEFORE cross-page stitching — the
-    slide-granular view the PPTX exporter consumes; typed_doc_blocks
-    folds these pages into the stitched document stream."""
-    runs_by_page: dict[int, list] = defaultdict(list)
-    media_by_page: dict[int, list] = defaultdict(list)
-    for kind, text, media_ref, _off in sorted(spans, key=lambda s: s[3]):
-        if kind == "text":
-            run = wire.parse_text_run(text)
-            runs_by_page[run.page].append(run)
-        elif kind == "media":
-            media_by_page[int(text.split("|", 1)[0])].append(
-                wire.parse_media(text, media_ref))
-
-    glyph_counts: dict[float, int] = defaultdict(int)
-    line_heights: list[float] = []
-    lines_by_page: dict[int, list[Line]] = {}
-    for page in sorted(set(runs_by_page) | set(media_by_page)):
-        lines = reading_order(cluster_lines(runs_by_page.get(page, [])))
-        lines_by_page[page] = lines
-        for ln in lines:
-            if ln.text().strip():
-                line_heights.append(ln.y2 - ln.y1)
-            for run in ln.runs:
-                glyph_counts[run.font_size] += sum(
-                    1 for c in run.content if not c.isspace())
-    median_size = _weighted_median(glyph_counts, FALLBACK_MEDIAN)
-    median_height = _median(line_heights, FALLBACK_MEDIAN)
-
-    pages: list[tuple[int, list[tuple[str, object]]]] = []
-    for page in sorted(set(runs_by_page) | set(media_by_page)):
-        page_lines = lines_by_page.get(page, [])
-        grid = (None if is_two_column(page_lines)
-                else stream_table_grid(runs_by_page.get(page, [])))
-        if grid is not None and any(
-                sum(1 for c in row if c.strip()) < 2 for row in grid):
-            grid = None
-        if grid is not None:
-            page_items: list[tuple[str, object]] = [("table", grid)]
-        else:
-            page_items = _typed_page_blocks(
-                page_lines, median_size, median_height)
-        page_items.extend(
-            ("image", _image_alt(d)) for d in media_by_page.get(page, ()))
-        pages.append((page, page_items))
-    return pages
-
-
-def typed_doc_blocks(spans) -> list[tuple[str, object]]:
-    """Raw interleaved spans -> stitched typed blocks
-    (kind, payload) with kind in heading1/heading2/bold/bullet/para/
-    table/image — the shared assembly behind the HTML and XML
-    emitters. Mirrors kernel.markdown.markdown_doc block for block."""
-    output: list[tuple[str, object]] = []
-    for _page, page_items in typed_pages(spans):
-        # cross-page sentence continuation: any STRING block absorbs
-        # (the reference quirk), never into/out of a table
-        if output and page_items:
-            lk, last = output[-1]
-            fk, first = page_items[0]
-            if (lk != "table" and fk == "para" and first
-                    and first[0].islower()
-                    and not _ends_with_sentence_punct(last)):
-                output[-1] = (lk, last + " " + first)
-                page_items = page_items[1:]
-        output.extend(page_items)
-    return _stitch_tables(output)
 
 
 def html_doc(spans) -> str:

@@ -45,6 +45,14 @@ STREAM (whitespace-column) detector page-level in place of the
 reference's word-grid block detector (:480-720) — a documented
 simplification: a detected table page renders wholly as a table; the
 reference can carve a table block out of a prose page.
+
+This module is the one block pipeline of every document export.
+``typed_pages`` parses a doc once (kernel/tables.by_page) into
+per-page typed blocks; ``_stitch_pages`` runs the cross-page sentence
+continuation and then the table stitching. Markdown renders each
+block to its string before the stitch; the HTML, XML, DOCX and EPUB
+emitters render the stitched typed blocks (``typed_doc_blocks``), and
+PPTX renders ``typed_pages`` one slide per page.
 """
 
 from __future__ import annotations
@@ -55,13 +63,14 @@ from collections import defaultdict
 from . import wire
 from .columns import is_two_column, reading_order
 from .lines import Line, cluster_lines
-from .tables import stream_table_grid
+from .tables import by_page, stream_table_grid
 
 SOFT_HYPHEN = re.compile(r"(\w+)-\n([a-z])")
 ORDERED_MARKER = re.compile(r"^(\d+)([.)])")
 INLINE_ESCAPES = set("\\`*_[]<>|~")
 MAX_HEADING_WORDS = 12
 FALLBACK_MEDIAN = 12.0
+_HEADING_MARKS = {"heading1": "# ", "heading2": "## "}
 
 
 def _escape_markdown(text: str) -> str:
@@ -143,8 +152,8 @@ def _ends_with_sentence_punct(text: str) -> bool:
     return bool(text) and text[-1] in ".?!:"
 
 
-def _heading_prefix(line: Line, text: str, median_size: float,
-                    median_height: float) -> str:
+def _heading_kind(line: Line, text: str, median_size: float,
+                  median_height: float) -> str:
     if (not text or len(text.split()) > MAX_HEADING_WORDS
             or _ends_like_sentence(text)):
         return ""
@@ -157,9 +166,9 @@ def _heading_prefix(line: Line, text: str, median_size: float,
         return ""
     ratio = value / baseline
     if ratio > 1.4:
-        return "# "
+        return "heading1"
     if ratio > 1.2:
-        return "## "
+        return "heading2"
     return ""
 
 
@@ -170,16 +179,18 @@ def _is_bold_label(line: Line, text: str) -> bool:
     return _is_bold(line)
 
 
-def _page_blocks(lines: list[Line], median_size: float,
-                 median_height: float) -> list[str]:
-    out: list[str] = []
+def _typed_page_blocks(lines: list[Line], median_size: float,
+                       median_height: float) -> list[tuple[str, str]]:
+    """One page's body lines -> TYPED, unescaped blocks (kind, text),
+    kind in heading1/heading2/bold/bullet/para."""
+    out: list[tuple[str, str]] = []
     para: list[str] = []
     prev_bottom = None
     prev_height = 0.0
 
     def flush() -> None:
         if para:
-            out.append(_escape_markdown("".join(para)))
+            out.append(("para", "".join(para)))
             para.clear()
 
     for line in lines:
@@ -188,16 +199,16 @@ def _page_blocks(lines: list[Line], median_size: float,
             continue
         gap = (line.y1 - prev_bottom) if prev_bottom is not None else 0.0
         paragraph_break = prev_height > 0.0 and gap > prev_height * 0.8
-        prefix = _heading_prefix(line, text, median_size, median_height)
-        if prefix:
+        heading = _heading_kind(line, text, median_size, median_height)
+        if heading:
             flush()
-            out.append(prefix + _escape_markdown(text))
+            out.append((heading, text))
         elif text[0] in "•▪◦":
             flush()
-            out.append(_escape_markdown(text))
+            out.append(("bullet", text))
         elif _is_bold_label(line, text):
             flush()
-            out.append("**" + _escape_markdown(text) + "**")
+            out.append(("bold", text))
         elif paragraph_break:
             flush()
             para.append(text)
@@ -268,30 +279,27 @@ def _stitch_tables(blocks: list[tuple[str, object]]) -> list[tuple[str, object]]
     return out
 
 
-def _image_placeholder(draw: wire.MediaDraw) -> str:
+def _image_alt(draw: wire.MediaDraw) -> str:
     parts = []
     if draw.w > 0 and draw.h > 0:
         parts.append(f"{draw.w:.0f}x{draw.h:.0f}pt")
     body = f": {', '.join(parts)}" if parts else ""
-    return f"<image redacted{body}>"
+    return f"image redacted{body}"
 
 
-def markdown_doc(spans) -> str:
-    """Raw interleaved spans -> Markdown string ('' for empty docs)."""
-    runs_by_page: dict[int, list] = defaultdict(list)
-    media_by_page: dict[int, list] = defaultdict(list)
-    for kind, text, media_ref, _off in sorted(spans, key=lambda s: s[3]):
-        if kind == "text":
-            run = wire.parse_text_run(text)
-            runs_by_page[run.page].append(run)
-        elif kind == "media":
-            media_by_page[int(text.split("|", 1)[0])].append(
-                wire.parse_media(text, media_ref))
+def typed_pages(spans) -> list[tuple[int, list[tuple[str, object]]]]:
+    """Raw interleaved spans -> PER-PAGE typed blocks
+    [(page, [(kind, payload)])] before cross-page stitching; kind in
+    heading1/heading2/bold/bullet/para (unescaped text), table (cell
+    grid) and image (alt text). The slide-granular view the PPTX
+    exporter consumes; every other exporter stitches these pages."""
+    runs_by_page, _, media_by_page = by_page(spans)
+    pages = sorted(set(runs_by_page) | set(media_by_page))
 
     glyph_counts: dict[float, int] = defaultdict(int)
     line_heights: list[float] = []
     lines_by_page: dict[int, list[Line]] = {}
-    for page in sorted(set(runs_by_page) | set(media_by_page)):
+    for page in pages:
         lines = reading_order(cluster_lines(runs_by_page.get(page, [])))
         lines_by_page[page] = lines
         for ln in lines:
@@ -303,14 +311,14 @@ def markdown_doc(spans) -> str:
     median_size = _weighted_median(glyph_counts, FALLBACK_MEDIAN)
     median_height = _median(line_heights, FALLBACK_MEDIAN)
 
-    output: list[tuple[str, object]] = []
-    for page in sorted(set(runs_by_page) | set(media_by_page)):
+    out: list[tuple[int, list[tuple[str, object]]]] = []
+    for page in pages:
         # multi-column guard (PdfMarkdownConverter.java:66-79): only
         # genuine two-column prose splits into columns; a table's
         # gutters must not be mistaken for a page-layout gutter — and
         # vice versa, so table detection is SKIPPED on two-column
         # pages (blocks = twoColumn ? List.of() : findTableBlocks)
-        page_lines = lines_by_page.get(page, [])
+        page_lines = lines_by_page[page]
         grid = (None if is_two_column(page_lines)
                 else stream_table_grid(runs_by_page.get(page, [])))
         if grid is not None and any(
@@ -323,23 +331,56 @@ def markdown_doc(spans) -> str:
         if grid is not None:
             page_items: list[tuple[str, object]] = [("table", grid)]
         else:
-            page_items = [("text", b) for b in _page_blocks(
-                lines_by_page.get(page, []), median_size, median_height)]
+            page_items = _typed_page_blocks(
+                page_lines, median_size, median_height)
         page_items.extend(
-            ("text", _image_placeholder(d))
-            for d in media_by_page.get(page, []))
-        # cross-page sentence continuation (:907-923) — STRING blocks
-        # only, never into/out of a table
+            ("image", _image_alt(d)) for d in media_by_page.get(page, ()))
+        out.append((page, page_items))
+    return out
+
+
+def _stitch_pages(pages) -> list[tuple[str, object]]:
+    """Per-page blocks -> one document block stream: the cross-page
+    sentence continuation (:907-923), then _stitch_tables. A page's
+    first paragraph merges into the previous block when it starts
+    lowercase and that block is not a table and does not end with
+    . ? ! : — tested on the payloads as given, so the Markdown path
+    (rendered strings) and the typed emitters (block text) each keep
+    their own outcome for a bold label ending in ':'."""
+    output: list[tuple[str, object]] = []
+    for _page, page_items in pages:
         if output and page_items:
             lk, last = output[-1]
             fk, first = page_items[0]
-            if (lk == "text" and fk == "text" and first
-                    and first[0].islower()
+            if (lk != "table" and fk == "para" and first[0].islower()
                     and not _ends_with_sentence_punct(last)):
-                output[-1] = ("text", last + " " + first)
+                output[-1] = (lk, last + " " + first)
                 page_items = page_items[1:]
         output.extend(page_items)
-    stitched = _stitch_tables(output)
+    return _stitch_tables(output)
+
+
+def typed_doc_blocks(spans) -> list[tuple[str, object]]:
+    """Raw interleaved spans -> stitched typed blocks, the document
+    stream behind the HTML, XML, DOCX and EPUB emitters."""
+    return _stitch_pages(typed_pages(spans))
+
+
+def _markdown_block(kind: str, payload):
+    if kind == "table":
+        return payload  # a grid until the tables stitch
+    if kind == "image":
+        return "<" + payload + ">"
+    text = _escape_markdown(payload)
+    if kind == "bold":
+        return "**" + text + "**"
+    return _HEADING_MARKS.get(kind, "") + text
+
+
+def markdown_doc(spans) -> str:
+    """Raw interleaved spans -> Markdown string ('' for empty docs)."""
+    pages = [(page, [(k, _markdown_block(k, p)) for k, p in items])
+             for page, items in typed_pages(spans)]
     return "\n\n".join(
         render_markdown_table(payload) if kind == "table" else payload
-        for kind, payload in stitched)
+        for kind, payload in _stitch_pages(pages))

@@ -6,7 +6,7 @@ scope here — so, like the docx/epub exporters, the PPTX path emits
 the OOXML *package members* as rows over the proven block pipeline,
 with the converter's one structural invariant kept: **one slide per
 PDF page** (soffice maps each page to a slide). Slides therefore
-consume the PER-PAGE typed blocks (kernel/html_export.typed_pages),
+consume the PER-PAGE typed blocks (kernel/markdown.typed_pages),
 not the cross-page-stitched document stream.
 
 Emission per block kind inside a slide's single text body:
@@ -32,7 +32,7 @@ the slide count varies), ``_rels/.rels``, ``ppt/presentation.xml``
 
 from __future__ import annotations
 
-from .html_export import _image_alt, typed_pages  # noqa: F401
+from .markdown import typed_pages
 from .xml_export import escape_xml
 
 _CT_HEAD = (

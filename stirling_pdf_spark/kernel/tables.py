@@ -34,7 +34,7 @@ from __future__ import annotations
 from typing import NamedTuple
 
 from . import wire
-from .model import CHAR_WIDTH_FACTOR, LINE_Y_TOLERANCE, TextRun
+from .model import CHAR_WIDTH_FACTOR, LINE_Y_TOLERANCE, MediaDraw, TextRun
 
 RULE_JOIN_TOLERANCE = 0.5   # pt — rules whose bboxes come this close join
 STREAM_COL_GAP = 14.0       # pt — min whitespace gap that splits columns
@@ -55,19 +55,25 @@ def parse_rule(text: str) -> Rule:
 
 
 def by_page(raw_spans: list[tuple]) -> tuple[dict[int, list[TextRun]],
-                                             dict[int, list[Rule]]]:
+                                             dict[int, list[Rule]],
+                                             dict[int, list[MediaDraw]]]:
     """A doc's raw spans in offset order, parsed and grouped by page:
-    (text runs by page, ruled lines by page); other kinds are skipped."""
+    (text runs, ruled lines, media draws), each by page; other kinds
+    are skipped. The one page parse of every per-doc exporter."""
     runs: dict[int, list[TextRun]] = {}
     rules: dict[int, list[Rule]] = {}
-    for kind, text, _ref, _off in sorted(raw_spans, key=lambda s: s[3]):
+    media: dict[int, list[MediaDraw]] = {}
+    for kind, text, ref, _off in sorted(raw_spans, key=lambda s: s[3]):
         if kind == "text":
             r = wire.parse_text_run(text)
             runs.setdefault(r.page, []).append(r)
         elif kind == "rule":
             rl = parse_rule(text)
             rules.setdefault(rl.page, []).append(rl)
-    return runs, rules
+        elif kind == "media":
+            d = wire.parse_media(text, ref)
+            media.setdefault(d.page, []).append(d)
+    return runs, rules, media
 
 
 def encode_rule(rule: Rule) -> str:

@@ -4,7 +4,7 @@
 The reference shells out to LibreOffice for /convert/pdf/xml — an
 external binary that is out of scope here (SCOPE.md) — so the XML
 exporter re-uses the PROVEN block pipeline shared with the Markdown
-and HTML emitters (kernel/html_export.typed_doc_blocks: glyph-median
+and HTML emitters (kernel/markdown.typed_doc_blocks: glyph-median
 heading detection, bold labels, bullet flushes, 0.8x-line-height
 paragraph breaks, soft-hyphen repair, cross-page sentence
 continuation, stream-table detection, cross-page table stitching)
@@ -27,7 +27,8 @@ double quotes (the XML 1.0 minimum for quoted attributes).
 
 from __future__ import annotations
 
-from .html_export import escape_html, typed_doc_blocks
+from .html_export import escape_html
+from .markdown import typed_doc_blocks
 
 
 def escape_xml(text: str) -> str:

@@ -54,7 +54,7 @@ def add_comments(docs: DataFrame, comments: list[dict],
         ))
 
     def annotate(did, spans):
-        runs_by_page, _ = by_page(spans)
+        runs_by_page, _, _ = by_page(spans)
         pages = sorted(runs_by_page)
         new_spans = list(spans)
         for pidx, x, y, w, h, text, author, subject, needle in specs:

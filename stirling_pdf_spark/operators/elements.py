@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..kernel import wire
 from ..kernel.coalesce import coalesce_runs
 from ..kernel.model import IMAGE_Z_BASE, TEXT_Z_BASE
+from ..kernel.tables import by_page
 from .extract_pipeline import map_docs
 
 ELEMENTS_SCHEMA = T.StructType([
@@ -35,15 +35,7 @@ ELEMENTS_SCHEMA = T.StructType([
 
 
 def _doc_elements(doc_id: str, raw_spans: list[tuple]) -> list[tuple]:
-    runs_by_page: dict[int, list] = {}
-    media_by_page: dict[int, list] = {}
-    for kind, text, media_ref, _off in sorted(raw_spans, key=lambda s: s[3]):
-        if kind == "text":
-            run = wire.parse_text_run(text)
-            runs_by_page.setdefault(run.page, []).append(run)
-        elif kind == "media":
-            draw = wire.parse_media(text, media_ref)
-            media_by_page.setdefault(draw.page, []).append(draw)
+    runs_by_page, _, media_by_page = by_page(raw_spans)
     rows: list[tuple] = []
     for page in sorted(set(runs_by_page) | set(media_by_page)):
         seq = 0

@@ -39,9 +39,10 @@ def _render(docs: DataFrame, render, schema: T.StructType) -> DataFrame:
 def to_html(docs: DataFrame) -> DataFrame:
     """PDF -> standalone HTML (/convert/pdf/html; the reference
     delegates to the external pdftohtml binary, PDFToFile.java:99,
-    172-201 — here the proven Markdown block pipeline re-emits as
-    HTML, kernel/html_export.py). docs(doc_id, spans raw) ->
-    (doc_id, html); empty documents emit no row."""
+    172-201 — here the one block pipeline, kernel/markdown.py,
+    re-emits as HTML via kernel/html_export.py).
+    docs(doc_id, spans raw) -> (doc_id, html); empty documents emit
+    no row."""
     from ..kernel.html_export import html_doc
 
     return _render(docs, html_doc, HTML_SCHEMA)

@@ -12,15 +12,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_FAR_PAGE = 1 << 30  # html/attachment spans sort after every real page
+# PAGE_KINDS: every kind whose wire text starts with the
+# "{page}|f1|f2|f3|f4" header (kernel/wire.py); ALL of them must be
+# remapped together whenever a page-rewriting operator
+# shifts/permutes/removes page numbers. 'annotation' carries a
+# media-style (x, y, w, h) header + a "subtype|contents|author|subject"
+# body, so geometry ops treat it like a media bbox (PdfJsonAnnotation
+# rect semantics).
+from ..kernel.extract import PAGE_KINDS
 
-# every kind whose wire text starts with the "{page}|f1|f2|f3|f4" header
-# (kernel/wire.py); ALL of them must be remapped together whenever a
-# page-rewriting operator shifts/permutes/removes page numbers.
-# 'annotation' carries a media-style (x, y, w, h) header + a
-# "subtype|contents|author|subject" body, so geometry ops treat it
-# like a media bbox (PdfJsonAnnotation rect semantics).
-PAGE_KINDS = ("text", "media", "rule", "pagemeta", "annotation")
+_FAR_PAGE = 1 << 30  # html/attachment spans sort after every real page
 
 # kinds with a real on-page anchor/extent (annotation rects transform
 # with the page like media boxes; pagemeta is page STATE, not geometry)

@@ -127,7 +127,7 @@ def text_search_pages(docs: DataFrame, term: str, regex: bool = False,
 
     Output: (doc_id, page, match_no, x1, y1, x2, y2, match)."""
     def rows(did, spans):
-        runs_by_page, _ = by_page(spans)
+        runs_by_page, _, _ = by_page(spans)
         for page in sorted(runs_by_page):
             for i, m in enumerate(find_matches(runs_by_page[page], term,
                                                regex, whole_word)):

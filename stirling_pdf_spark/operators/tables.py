@@ -32,7 +32,7 @@ def tables_stream(docs: DataFrame) -> DataFrame:
     """docs(doc_id, spans raw) -> (doc_id, page, csv) — Tabula STREAM
     (whitespace-column) tables, one row per detected table page."""
     def rows(did, spans):
-        runs_by_page, _ = by_page(spans)
+        runs_by_page, _, _ = by_page(spans)
         for page in sorted(runs_by_page):
             csv = stream_table_csv(runs_by_page[page])
             if csv is not None:
@@ -68,7 +68,7 @@ def pdf_to_csv(docs: DataFrame) -> DataFrame:
     packaging in the controller is presentation, the table here IS the
     zip manifest."""
     def rows(did, spans):
-        runs_by_page, rules_by_page = by_page(spans)
+        runs_by_page, rules_by_page, _ = by_page(spans)
         for page in sorted(set(runs_by_page) | set(rules_by_page)):
             if page in rules_by_page:
                 csvs = extract_table_csvs(rules_by_page[page],
@@ -141,7 +141,7 @@ def pdf_to_xlsx(docs: DataFrame) -> DataFrame:
     cross-partition state; nothing driver-side. The XLSX zip container
     is presentation — this table IS the workbook manifest."""
     def rows(did, spans):
-        runs_by_page, rules_by_page = by_page(spans)
+        runs_by_page, rules_by_page, _ = by_page(spans)
         used: set[str] = set()
         for page in sorted(rules_by_page):
             grids = extract_table_grids(rules_by_page[page],

@@ -1,6 +1,6 @@
 """Every ``extract_*`` gate of the query registry, every gate whose
 query runs a ``map_docs`` stage (exports, tables, search, elements,
-comments, edit-text), every gate over another ``map_rows`` stage (media
+comments, edit-text) plus the text->HTML autolink gate, every gate over another ``map_rows`` stage (media
 decoders, perceptual hashes, compare, NFC, EML, WARC, file sources,
 image->PDF inputs), and every gate over the global prefix sum
 (``packing.prefix_sums``) or the merge-order window, against its DuckDB
@@ -31,7 +31,7 @@ MAP_DOCS_GATES = [
     "e17_doc_info", "e17_page_info", "e17_full_info", "e18_title_inference",
     "add_image_stamp", "to_xlsx", "to_html", "to_html_tables", "to_xml",
     "to_xml_tables", "to_markdown", "to_markdown_tables", "to_epub",
-    "to_docx", "to_pptx", "edit_text", "add_comments",
+    "to_docx", "to_pptx", "edit_text", "add_comments", "h5_autolink",
 ]
 PREFIX_SUM_GATES = [
     "pack_sequences", "pack_seq_boundaries", "shard_plan",
@@ -66,3 +66,16 @@ def test_extract_gate_matches_oracle(spark, oracle, sf_smoke, name):
     ok, report = check_queries.check_query(
         spark, oracle, sf_smoke, name, QUERIES[name], ORACLES.get(name))
     assert ok, report
+
+
+def test_package_ships_once_per_spark_context(spark, sf_smoke, monkeypatch):
+    import stirling_pdf_spark.session as session
+
+    calls = []
+    real_zip = session.package_zip
+    monkeypatch.setattr(session, "package_zip",
+                        lambda: calls.append(1) or real_zip())
+    monkeypatch.setattr(E, "_SHIPPED_APPS", set())
+    for name in ("h5_autolink", "e2_page_text"):
+        QUERIES[name](spark, sf_smoke)
+    assert len(calls) == 1

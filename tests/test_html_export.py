@@ -108,3 +108,26 @@ def test_operator_skips_empty_docs(spark):
     out = to_html(df).collect()
     assert [r["doc_id"] for r in out] == ["doc-1"]
     assert "<body>" in out[0]["html"]
+
+
+def _label_then_continuation(label):
+    """Five body lines, a bold label ending page 1, and page 2 opening
+    with a lowercase sentence (the same doc the Markdown test pins)."""
+    runs = [_run(1, 72.0 + 14 * i, f"body line {i}") for i in range(5)]
+    runs.append(_run(1, 142.0, label, font="Helvetica-Bold"))
+    runs.append(_run(2, 72.0, "continues here and ends."))
+    return _doc(runs)
+
+
+def test_bold_label_ending_in_colon_keeps_page_continuation_apart():
+    # the typed path tests the label's own text: 'Note:' ends in ':',
+    # so the continuation stays a separate paragraph (Markdown merges)
+    html = _body(html_doc(_label_then_continuation("Note:")))
+    assert html.split("\n")[1:] == ["<p><strong>Note:</strong></p>",
+                                    "<p>continues here and ends.</p>"]
+
+
+def test_bold_label_absorbs_page_continuation_into_strong():
+    html = _body(html_doc(_label_then_continuation("Note")))
+    assert html.split("\n")[1:] == [
+        "<p><strong>Note continues here and ends.</strong></p>"]

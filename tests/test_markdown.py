@@ -235,3 +235,24 @@ def test_table_detection_still_fires_on_non_voting_columns():
 
     _, spans = stream_table_from_text("d", "aa bb cc dd ee ff")
     assert markdown_doc(spans).startswith("| aa ")
+
+
+def _label_then_continuation(label):
+    """Five body lines, a bold label ending page 1, and page 2 opening
+    with a lowercase sentence (the same doc the HTML test pins)."""
+    runs = [_run(1, 72.0 + 14 * i, f"body line {i}") for i in range(5)]
+    runs.append(_run(1, 142.0, label, font="Helvetica-Bold"))
+    runs.append(_run(2, 72.0, "continues here and ends."))
+    return _doc(runs)
+
+
+def test_bold_label_absorbs_page_continuation_even_after_colon():
+    # the continuation test reads the RENDERED block, and '**Note:**'
+    # ends in '*', not ':' -> the lowercase page start merges into it
+    md = markdown_doc(_label_then_continuation("Note:"))
+    assert md.split("\n\n")[1:] == ["**Note:** continues here and ends."]
+
+
+def test_bold_label_without_colon_absorbs_page_continuation():
+    md = markdown_doc(_label_then_continuation("Note"))
+    assert md.split("\n\n")[1:] == ["**Note** continues here and ends."]
