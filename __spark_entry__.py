@@ -3878,7 +3878,7 @@ def q_h1_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
     outside the allowlist drop, script+content drops, unknown tags
     unwrap, img src with an unsafe scheme drops — checked by md5 of the
     sanitized markup."""
-    from stirling_pdf_spark.functions.html import sanitize_html_udf
+    from stirling_pdf_spark.kernel.sanitize import sanitize_html
 
     docs = read_table(spark, sf_dir, "documents")
     html = F.concat(
@@ -3887,10 +3887,12 @@ def q_h1_sanitize(spark: SparkSession, sf_dir: str) -> DataFrame:
               "<blink>keep this text</blink>"
               '<a href="https://e.x/" title="t">link</a></div>'),
     )
-    cleaned = sanitize_html_udf()(html)
-    return docs.select(
-        "doc_id", F.md5(cleaned).alias("clean_md5"),
-        F.length(cleaned).cast("long").alias("clean_len"),
+    cleaned = map_rows(docs.select("doc_id", html.alias("html")),
+                       lambda d, h: [(d, sanitize_html(h or ""))],
+                       "doc_id long, clean string")
+    return cleaned.select(
+        "doc_id", F.md5("clean").alias("clean_md5"),
+        F.length("clean").cast("long").alias("clean_len"),
     )
 
 
@@ -3899,7 +3901,7 @@ def q_h7_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Readability/jusText over H1-H3 semantics): nav/footer boilerplate
     drops, the article heading + paragraphs survive in document
     order."""
-    from stirling_pdf_spark.functions.html import main_blocks_udf
+    from stirling_pdf_spark.kernel.html_extract import extract_main_blocks
 
     docs = read_table(spark, sf_dir, "documents")
     # ltrim: a slice boundary can land on a space, which the block
@@ -3916,11 +3918,13 @@ def q_h7_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('</p></article><footer>fine print <a href="/tos">tos</a>'
               "</footer></body></html>"),
     )
-    blocks = main_blocks_udf()(html)
-    return docs.select(
+    blocks = map_rows(docs.select("doc_id", html.alias("html")),
+                      lambda d, h: [(d, extract_main_blocks(h or ""))],
+                      "doc_id long, blocks array<string>")
+    return blocks.select(
         "doc_id",
-        F.size(blocks).alias("n_blocks"),
-        F.md5(F.array_join(blocks, "\n")).alias("blocks_md5"),
+        F.size("blocks").alias("n_blocks"),
+        F.md5(F.array_join("blocks", "\n")).alias("blocks_md5"),
     )
 
 
@@ -3966,7 +3970,7 @@ def q_e24_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     x-padded + '.'), which makes the greedy packing closed-form:
     24 sentences per chunk, 3-sentence overlap tail, so chunk j covers
     sentences [21j, 21j+24) — the oracle re-derives exactly that."""
-    from stirling_pdf_spark.functions.text import chunk_text_udf
+    from stirling_pdf_spark.kernel.chunker import chunk_text
 
     docs = read_table(spark, sf_dir, "documents")
     sents = F.transform(
@@ -3974,11 +3978,13 @@ def q_e24_sentence_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda w: F.concat(F.rpad(F.substring(w, 1, 10), 19, "x"),
                            F.lit(".")),
     )
-    body = F.array_join(sents, " ")
-    chunks = chunk_text_udf()(body)
-    return docs.select(
+    body = F.array_join(sents, " ").alias("body")
+    chunks = map_rows(docs.select("doc_id", body),
+                      lambda d, b: [(d, chunk_text(b or ""))],
+                      "doc_id long, chunks array<string>")
+    return chunks.select(
         "doc_id",
-        F.posexplode(chunks).alias("chunk_no", "chunk"),
+        F.posexplode("chunks").alias("chunk_no", "chunk"),
     ).select("doc_id", F.col("chunk_no").cast("long").alias("chunk_no"),
              "chunk")
 

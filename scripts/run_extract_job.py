@@ -6,9 +6,12 @@ deployment shape):
         scripts/run_extract_job.py \
         --input /root/testdata/sf0.01 --out /tmp/extract_out --run-id r1
 
-On a real cluster whose executor image has the package installed
-(below), the same invocation works with --master yarn/k8s and N or 4N
-executors; locally the session factory builds local[$CPUS].
+spark-submit's --master and --driver-memory are kept (the session
+factory builds local[--cores] only when it launches the JVM itself, as
+under plain ``python``), and the summary JSON reports the master the
+job ran on. tests/test_spark_submit.py runs this script on
+local-cluster[2,1,1024]; a yarn/k8s master is untested here and needs
+an executor image with the package installed (below).
 The job is resumable: re-running with the same --out skips committed
 docs (see runtime/checkpoint.py).
 
@@ -58,6 +61,7 @@ def main() -> None:
         ap.error("one of --input or --synth-docs is required")
     summary = run_extract_with_checkpoint(spark, docs, args.out,
                                           run_id=args.run_id)
+    summary["master"] = spark.sparkContext.master
     print(json.dumps(summary))
     spark.stop()
 

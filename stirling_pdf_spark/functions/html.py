@@ -14,7 +14,6 @@ kernel/sanitize.py.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -65,36 +64,6 @@ def text_to_html_py(text: str) -> str:
     out = out.replace("\r\n", "\n").replace("\r", "\n").replace("\n", "<br>")
     out = re.sub(URL_RE, r'<a href="\1">\1</a>', out)
     return re.sub(EMAIL_RE, r'<a href="mailto:\1">\1</a>', out)
-
-
-def sanitize_html_udf():
-    """H1 allowlist sanitizer (CustomHtmlSanitizer.java:45-67) as an
-    Arrow-batched pandas UDF over kernel/sanitize.py — the parser needs
-    real HTML tokenization, so this is UDF territory by design."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..kernel.sanitize import sanitize_html
-
-    @pandas_udf("string")
-    def _san(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: sanitize_html(v or ""))
-
-    return _san
-
-
-def main_blocks_udf():
-    """H7 boilerplate strip (kernel/html_extract.py, Readability/jusText
-    heuristics) as an Arrow-batched pandas UDF returning the kept block
-    texts in document order."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..kernel.html_extract import extract_main_blocks
-
-    @pandas_udf("array<string>")
-    def _blocks(s: pd.Series) -> pd.Series:
-        return s.map(lambda v: extract_main_blocks(v or ""))
-
-    return _blocks
 
 
 # one <a> tag per match; group 1 = the whole tag so the per-tag href /

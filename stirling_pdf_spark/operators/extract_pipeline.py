@@ -48,13 +48,21 @@ by construction. The regroup's partition count is left to
 operator): one hash repartition on the stage's key, with one pinned
 partition count.
 
-``map_rows`` is the one row-wise Arrow stage every other per-row Python
-operator runs through (media decoders, perceptual hashes, compare, NFC,
-file/WARC/EML sources, corpus derivation): read each column once per
-batch, call the operator's per-row function, build the output batch
-column by column. ``map_docs``, the stage of every raw-docs operator
-(exports, tables, search, elements, comments, edit-text), is a
-``spread`` on doc_id, then ``map_rows``.
+``map_rows`` is the one row-wise Arrow stage every other per-row or
+per-group Python operator runs through (media decoders, perceptual
+hashes, compare, NFC, file/WARC/EML sources, corpus derivation, the
+HTML sanitizer, boilerplate strip and sentence chunker): read each
+column once per batch, call the operator's per-row function, build the
+output batch column by column. A grouped operator (image->PDF, WARC
+segments, MMR re-ranking) lets the JVM group its rows first, as a
+``groupBy(...).agg(collect_list(struct(...)))``, and ``map_rows``
+then runs once per group row; ``collect_list`` order is arbitrary, so
+each such function sorts its list. ``map_docs``, the stage of every
+raw-docs operator (exports, tables, search, elements, comments,
+edit-text), is a ``spread`` on doc_id, then ``map_rows``. The one other
+Python stage shape is a ``mapInArrow`` body that needs a per-partition
+end (the heavy-hitters sketch), and the one pandas stage is the
+stateful streaming packer (``applyInPandasWithState``).
 """
 
 from __future__ import annotations

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .extract_pipeline import spread
+from .extract_pipeline import map_rows, spread
 from .textstats import words_col
 
 # (query_id, terms) — vocabulary terms of the synthetic documents table
@@ -216,13 +216,12 @@ def mmr_topk(df: DataFrame, query_ids: list[int], k: int = 5,
     scan, windowed top-``pool``) and the pool's pairwise similarity
     matrix (pool x pool self-join per query, bounded at pool^2 rows)
     are both JVM-side ``cosine_expr`` folds — bit-identical to the
-    DuckDB oracle. Only the greedy CONTROL FLOW runs in Python, via a
-    cogrouped applyInPandas whose groups are bounded by ``pool``
-    candidates — never corpus-sized. Output (query_id, mmr_rank,
-    doc_id), rank 1..k, score ties broken by id ascending.
+    DuckDB oracle. Only the greedy CONTROL FLOW runs in Python: one
+    ``map_rows`` call per query over its pool's (id, rel) list and its
+    pairs' (ia, ib, sim) list, both collected JVM-side and bounded by
+    ``pool`` candidates — never corpus-sized. Output (query_id,
+    mmr_rank, doc_id), rank 1..k, score ties broken by id ascending.
     """
-    import pandas as pd
-
     from .dedup import cosine_expr
 
     v = spread(df, id_col).select(F.col(id_col).alias("id"),
@@ -236,7 +235,7 @@ def mmr_topk(df: DataFrame, query_ids: list[int], k: int = 5,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("id"))
     # the pool (queries x pool rows, tiny) feeds three consumers —
-    # pair a-side, pair b-side, and the cogroup — so persist it once
+    # pair a-side, pair b-side, and the pool lists — so persist it once
     # instead of re-running the corpus scan + window per consumer
     from ..runtime.staging import stage
 
@@ -256,20 +255,11 @@ def mmr_topk(df: DataFrame, query_ids: list[int], k: int = 5,
         .select(F.col("qa").alias("query_id"), "ia", "ib", "sim")
     )
 
-    def greedy(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype="int64"),
-                 "mmr_rank": pd.Series(dtype="int64"),
-                 "doc_id": pd.Series(dtype="int64")})
-        qid = int(left["query_id"].iloc[0])
-        rel = dict(zip(left["id"].astype("int64"), left["rel"]))
-        sim: dict[tuple[int, int], float] = {}
-        for ia, ib, s in zip(right["ia"].astype("int64"),
-                             right["ib"].astype("int64"), right["sim"]):
-            sim[(int(ia), int(ib))] = float(s)
+    def greedy(qid, cands, sims):
+        rel = dict(cands)
+        # a one-candidate pool has no pairs: the left join gives null
+        sim = {(ia, ib): s for ia, ib, s in sims or ()}
         picked: list[int] = []
-        out = []
         while len(picked) < k and len(picked) < len(rel):
             best_id, best_score = None, None
             for cand in sorted(rel):
@@ -282,15 +272,14 @@ def mmr_topk(df: DataFrame, query_ids: list[int], k: int = 5,
                 if best_score is None or score > best_score:
                     best_id, best_score = cand, score
             picked.append(best_id)
-            out.append((qid, len(picked), best_id))
-        return pd.DataFrame(out, columns=["query_id", "mmr_rank", "doc_id"])
+            yield qid, len(picked), best_id
 
-    return (
-        pooled.groupBy("query_id")
-        .cogroup(pairs.groupBy("query_id"))
-        .applyInPandas(greedy,
-                       "query_id long, mmr_rank long, doc_id long")
-    )
+    lists = pooled.groupBy("query_id").agg(
+        F.collect_list(F.struct("id", "rel")).alias("cands")).join(
+        pairs.groupBy("query_id").agg(
+            F.collect_list(F.struct("ia", "ib", "sim")).alias("sims")),
+        "query_id", "left")
+    return map_rows(lists, greedy, "query_id long, mmr_rank long, doc_id long")
 
 
 def section_chunks(df: DataFrame, id_col: str = "doc_id",

@@ -14,6 +14,8 @@ training-data hygiene.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1495,8 +1497,6 @@ def heavy_hitters(df: DataFrame, threshold_frac: int = 64,
     carries candidate words only instead of the full vocabulary.
 
     Output: (word, total, share_ppm = total * 10^6 div N)."""
-    import pandas as pd
-
     from ..runtime.staging import stage
 
     cap = capacity or 2 * threshold_frac
@@ -1506,24 +1506,21 @@ def heavy_hitters(df: DataFrame, threshold_frac: int = 64,
 
     def sketch(batches):
         mg: dict[str, int] = {}
-        for pdf in batches:
-            batch: dict[str, int] = {}
-            for words in pdf["w"]:
-                if words is None:
-                    continue
-                for t in words:
-                    if t:
-                        batch[t] = batch.get(t, 0) + 1
-            for t, c in batch.items():
-                mg[t] = mg.get(t, 0) + c
+        for rb in batches:
+            counts = pc.value_counts(pc.list_flatten(rb.column(0)))
+            for t, c in zip(counts.field("values").to_pylist(),
+                            counts.field("counts").to_pylist()):
+                if t:
+                    mg[t] = mg.get(t, 0) + c
             if len(mg) > cap:
                 # mergeable-summary shrink: subtract the (cap+1)-th
                 # largest count, drop non-positive counters
                 kth = sorted(mg.values(), reverse=True)[cap]
                 mg = {t: c - kth for t, c in mg.items() if c > kth}
-        yield pd.DataFrame({"word": list(mg.keys())})
+        yield pa.RecordBatch.from_arrays([pa.array(list(mg), pa.string())],
+                                         names=["word"])
 
-    candidates = toks.mapInPandas(sketch, "word string").distinct()
+    candidates = toks.mapInArrow(sketch, "word string").distinct()
     n_total = int(
         toks.agg(F.sum(F.size("w")).alias("n")).collect()[0]["n"] or 0)
     exploded = toks.select(F.explode("w").alias("word")) \

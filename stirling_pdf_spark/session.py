@@ -2,9 +2,16 @@
 
 Local-mode defaults mirror what the 1000-executor deployment would set
 per-executor: AQE on (runtime re-plan + skew-join splitting), shuffle
-partitions ~ cores (not the 200 default), Arrow enabled for the
-pandas/Arrow UDF extraction stage, UTC session TZ so results compare
-bit-for-bit against the DuckDB oracle.
+partitions ~ cores (not the 200 default), Arrow enabled and its batch
+size bounded for the Arrow stages (``extract_pipeline``), UTC session
+TZ so results compare bit-for-bit against the DuckDB oracle.
+
+The master (``local[cores]``) and the driver heap are set only when
+this process launches the JVM. Under ``spark-submit`` the launcher has
+already started it with its own ``--master`` and ``--driver-memory``,
+and pyspark finds it through ``PYSPARK_GATEWAY_PORT``: a master set
+here would override the submitted one, and a driver heap set here
+would do nothing.
 
 Python workers import this package from its source directory: the
 session puts the package root on the executors' ``PYTHONPATH`` and starts
@@ -58,8 +65,7 @@ def get_spark(app_name: str = "stirling_pdf_spark",
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
+        SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -70,7 +76,6 @@ def get_spark(app_name: str = "stirling_pdf_spark",
         # Python worker (the reference's small-file/DPI OOM guards,
         # PdfUtils.java:140-154, map to this knob)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # workers import the package from its directory, through the
@@ -78,6 +83,9 @@ def get_spark(app_name: str = "stirling_pdf_spark",
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.python.daemon.module", "stirling_pdf_spark.runtime.pyworker")
     )
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cores}]").config(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

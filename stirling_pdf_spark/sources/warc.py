@@ -19,7 +19,6 @@ ingests 1000 segments at a time.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,21 +65,17 @@ def warc_segments(docs: DataFrame, docs_per_file: int = 64) -> DataFrame:
     keyed = docs.select(
         (F.col("doc_id") / docs_per_file).cast("long").alias("warc_file"),
         "doc_id", "text", "source")
+    files = keyed.groupBy("warc_file").agg(
+        F.collect_list(F.struct("doc_id", "text", "source")).alias("pages"))
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        pages = [(page_url(s, int(i)), page_date(int(i)),
-                  page_html(int(i), t).encode("utf-8"))
-                 for i, t, s in zip(pdf["doc_id"], pdf["text"],
-                                    pdf["source"])]
-        return pd.DataFrame({
-            "warc_file": pd.Series([int(pdf["warc_file"].iloc[0])],
-                                   dtype="int64"),
-            "blob": pd.Series([build_warc(pages)], dtype=object),
-            "n_records": pd.Series([len(pages) + 1], dtype="int32"),
-        })
+    def build(fid, pages):
+        # collect_list order is arbitrary: pages go in doc_id order
+        blob = build_warc([(page_url(s, i), page_date(i),
+                            page_html(i, t).encode("utf-8"))
+                           for i, t, s in sorted(pages, key=lambda p: p[0])])
+        yield fid, blob, len(pages) + 1
 
-    return keyed.groupBy("warc_file").applyInPandas(build, _FILE_SCHEMA)
+    return map_rows(files, build, _FILE_SCHEMA)
 
 
 def warc_records(segments: DataFrame) -> DataFrame:

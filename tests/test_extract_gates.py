@@ -2,7 +2,9 @@
 query runs a ``map_docs`` stage (exports, tables, search, elements,
 comments, edit-text) plus the text->HTML autolink gate, every gate over another ``map_rows`` stage (media
 decoders, perceptual hashes, compare, NFC, EML, WARC, file sources,
-image->PDF inputs), and every gate over the global prefix sum
+image->PDF, MMR re-ranking over JVM-grouped rows, the HTML sanitizer,
+boilerplate strip and sentence chunker) or the heavy-hitters sketch's
+``mapInArrow``, and every gate over the global prefix sum
 (``packing.prefix_sums``) or the merge-order window, against its DuckDB
 oracle at the smoke scale factor, through the same comparison as
 ``scripts/check_queries.py`` — so a plain pytest run catches an oracle
@@ -48,7 +50,9 @@ MAP_ROWS_GATES = [
     "dedup_image_phash", "image_dedup_keep", "compare_docs",
     "compare_changes", "text_nfc_normalize", "eml_roundtrip",
     "html_table_extract", "md_to_pdf_ingest", "warc_ingest",
-    "h4_media_resolve", "img_to_pdf", "tiff_to_pdf",
+    "h4_media_resolve", "img_to_pdf", "tiff_to_pdf", "retrieval_mmr",
+    "h1_sanitize", "h7_boilerplate", "e24_sentence_chunks",
+    "text_heavy_hitters",
 ]
 GATES = ([n for n in QUERIES if n.startswith("extract_")] + MAP_DOCS_GATES
          + MAP_ROWS_GATES + PREFIX_SUM_GATES)

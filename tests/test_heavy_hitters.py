@@ -59,6 +59,17 @@ def test_heavy_hitters_sketch_never_drops_true_heavy(spark):
     assert words == {"key"}
 
 
+def test_heavy_hitters_null_and_blank_text(spark):
+    # a null text has no tokens; a whitespace-only text is one empty
+    # token (split of ''), counted in N as the oracle counts it but
+    # never a candidate. N = 0 + 1 + 3 + 2 = 6, cutoff 6 / 2 = 3
+    rows = [(0, None), (1, "   "), (2, "hot hot cold"), (3, "hot warm")]
+    for capacity in (2, None):
+        out = heavy_hitters(_docs(spark, rows, 2), threshold_frac=2,
+                            capacity=capacity).collect()
+        assert [tuple(r) for r in out] == [("hot", 3, 3 * 1_000_000 // 6)]
+
+
 def test_collocation_lift_closed_form(spark):
     # 'new york' always adjacent; 'a b' co-occur at chance level.
     # doc = 'new york a b' x 5 docs -> N=20, c(new)=c(york)=5,

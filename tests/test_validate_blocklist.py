@@ -152,11 +152,24 @@ def test_mmr_prefers_diverse_over_redundant(spark):
 def test_mmr_pool_smaller_than_k_emits_all(spark):
     from stirling_pdf_spark.operators.retrieval import mmr_topk
 
+    # two vectors, both queried: each pool is the other vector alone,
+    # so no query has a pair row and the left join gives null sims
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.9, 0.1])],
         "vec_id long, embedding array<float>")
-    rows = mmr_topk(emb, [0], k=5, pool=10).collect()
-    assert [(r["mmr_rank"], r["doc_id"]) for r in rows] == [(1, 1)]
+    rows = mmr_topk(emb, [0, 1], k=5, pool=10).collect()
+    assert sorted(tuple(r) for r in rows) == [(0, 1, 1), (1, 1, 0)]
+
+    # k past a pool of 3: each pooled candidate ranked once, rank 1 the
+    # most relevant, never a vector outside the pool
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.7, 0.7]),
+         (3, [0.1, 0.9]), (4, [-1.0, 0.0])],
+        "vec_id long, embedding array<float>")
+    rows = sorted(tuple(r) for r in mmr_topk(emb, [0], k=10, pool=3).collect())
+    assert [r[1] for r in rows] == [1, 2, 3]
+    assert rows[0][2] == 1
+    assert {r[2] for r in rows} == {1, 2, 3}
 
 
 def test_token_budget_select_greedy_fill(spark, shuffle_partitions):

@@ -174,6 +174,28 @@ def test_images_to_pdf_fit_modes_and_drop(spark):
     assert (float(md[3]), float(md[4])) == (A4_H, A4_W)  # fills page
 
 
+def test_images_to_pdf_orders_pages_by_seq_across_partitions(spark):
+    from stirling_pdf_spark.operators.multimodal import images_to_pdf
+
+    # one doc, its images in reverse seq order, one per input partition:
+    # the grouped list arrives in shuffle order, the pages in seq order
+    rows = [("d", seq, f"m{seq}", b"P6\n%d 5\n255\n" % w + bytes(w * 5 * 3))
+            for seq, w in ((2, 30), (1, 20), (0, 10))]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3),
+        "doc_id string, seq int, media_ref string, payload binary")
+    [row] = images_to_pdf(df, "fitDocumentToImage").collect()
+    assert [(s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in row["spans"]] == [
+        ("pagemeta", "1|10.0|5.0|0|", "", 0),
+        ("media", "1|0.0|0.0|10.0|5.0", "m0", 1),
+        ("pagemeta", "2|20.0|5.0|0|", "", 2),
+        ("media", "2|0.0|0.0|20.0|5.0", "m1", 3),
+        ("pagemeta", "3|30.0|5.0|0|", "", 4),
+        ("media", "3|0.0|0.0|30.0|5.0", "m2", 5),
+    ]
+
+
 def test_images_to_pdf_rejects_unknown_fit(spark):
     import pytest
 

@@ -127,6 +127,18 @@ class TestWarcSpark:
         assert r7["http_status"] == 200
         assert bytes(r7["payload"]) == page_html(7, "word 7 " * 3).encode()
 
+    def test_segment_pages_in_doc_id_order_across_partitions(self, spark):
+        # doc_ids in reverse order, one per input partition: the grouped
+        # list arrives in shuffle order, the records in doc_id order
+        docs = spark.createDataFrame(
+            spark.sparkContext.parallelize(
+                [(i, f"t{i}", "s") for i in range(3, -1, -1)], 4),
+            "doc_id long, text string, source string")
+        recs = warc_records(warc_segments(docs, docs_per_file=4)) \
+            .filter("rec_type = 'response'").orderBy("offset")
+        assert [r["target_uri"] for r in recs.collect()] == [
+            page_url("s", i) for i in range(4)]
+
     def test_exif_operator_isolates_bad_payloads(self, spark):
         media = spark.createDataFrame(
             [("m-good", bytearray(build_exif_jpeg(
