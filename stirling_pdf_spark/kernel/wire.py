@@ -28,6 +28,11 @@ origin top-left; reference: PdfTextChunkExtractor.java:100-112).
 
 All page-scoped kinds share the 5-field "{page}|f1|f2|f3|f4" header so
 page-rewriting operators (merge/split/rearrange) treat them uniformly.
+The header is the text before the FIRST tab, split as split("|", 4) so
+the fifth field keeps any "|"; the body is everything after that first
+tab, tabs included. On the Spark side the wire codec of
+operators/pageops.py (wire_fields, wire_page, wire_body, wire_text,
+wire_repage) is the one reader and writer of this header.
 
 Coordinates are formatted with repr(float) so parse(format(v)) == v
 exactly — determinism of the span-equality contract depends on it.

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .pageops import _repack
+
 
 def _resolved_name(s: Column) -> Column:
     """determineFilename fallback chain (AttachmentService.java:429-445)
@@ -41,17 +43,6 @@ def _resolved_name(s: Column) -> Column:
     ).otherwise(F.lit("unknown"))
     return F.when(s["text"] != "", s["text"]).otherwise(
         F.concat(F.lit("attachment-"), suffix))
-
-
-def _repack(spans: Column) -> Column:
-    return F.transform(
-        spans,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"), s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
 
 
 def _first_match_idx(name: str) -> Column:
@@ -97,11 +88,7 @@ def rename_attachment(docs: DataFrame, name: str,
     idx = _first_match_idx(name)
     kept = F.filter("spans", lambda s, i: i != idx)
     matched = F.element_at("spans", idx + 1)
-    renamed = F.array(F.struct(
-        matched["kind"].alias("kind"), F.lit(new_name).alias("text"),
-        matched["media_ref"].alias("media_ref"),
-        F.lit(0).alias("offset"),
-    ))
+    renamed = F.array(matched.withField("text", F.lit(new_name)))
     out = F.when(idx.isNull(), F.col("spans")).otherwise(
         F.concat(kept, renamed))
     return docs.select("doc_id", _repack(out).alias("spans"))

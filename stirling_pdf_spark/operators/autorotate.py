@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pageops import page_rotations
+from .pageops import page_rotations, wire_body, wire_fields, wire_page
 
 MIN_GLYPHS = 30
 MIN_GLYPHS_UNANIMOUS = 8
@@ -55,23 +55,20 @@ def auto_rotate(docs: DataFrame,
     correction is 0 for undecided pages (mirroring PageResult's
     defaults); conf_x10000 is -1 except for method='text'."""
     s = F.col("s")
-    head = F.split_part(s["text"], F.lit("\t"), F.lit(1))
+    font = wire_fields(s["text"])[4]
     runs = (
         docs.select("doc_id", F.explode("spans").alias("s"))
         .filter(s["kind"] == "text")
         .select(
             "doc_id",
-            F.split_part(head, F.lit("|"), F.lit(1)).cast("long")
-            .alias("page"),
+            wire_page(s["text"]).alias("page"),
             F.coalesce(
-                F.nullif(F.regexp_extract(head, r"@(\d+)$", 1), F.lit(""))
+                F.nullif(F.regexp_extract(font, r"@(\d+)$", 1), F.lit(""))
                 .cast("long"),
                 F.lit(0),
             ).alias("dir"),
             F.length(
-                F.regexp_replace(
-                    F.substring(s["text"], F.length(head) + 2, 1 << 30),
-                    r"\s", "")
+                F.regexp_replace(wire_body(s["text"]), r"\s", "")
             ).cast("long").alias("glyphs"),
         )
     )

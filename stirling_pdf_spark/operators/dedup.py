@@ -42,7 +42,12 @@ from .extract_pipeline import spread
 # ---------------------------------------------------------------- helpers
 
 def words_col(text_col: str = "text"):
-    """Whitespace tokenization matching Python str.split()."""
+    """Whitespace tokenization: split on runs of ``\\s`` after
+    ``trim``. Unlike Python's ``str.split()``, ``trim`` strips spaces
+    only, so a text that starts or ends with a tab or newline gets an
+    empty first or last token (``"  \\t "`` gives ``["", ""]``) and a
+    blank text gives ``[""]``. The DuckDB oracles tokenize the same
+    way."""
     return F.split(F.trim(F.col(text_col)), r"\s+")
 
 

@@ -104,12 +104,10 @@ def font_info(docs: DataFrame) -> DataFrame:
     comma-joined."""
     from pyspark.sql import functions as F
 
+    from .pageops import wire_fields
+
     flat = docs.select("doc_id", F.explode_outer("spans").alias("s"))
-    font = F.when(
-        F.col("s.kind") == "text",
-        F.split_part(F.split_part(F.col("s.text"), F.lit("\t"), F.lit(1)),
-                     F.lit("|"), F.lit(5)),
-    )
+    font = F.when(F.col("s.kind") == "text", wire_fields(F.col("s.text"))[4])
     return (
         flat.groupBy("doc_id")
         .agg(F.array_sort(F.collect_set(font)).alias("farr"))

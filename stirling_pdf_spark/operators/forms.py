@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .pageops import _repack, flatten_forms
+
 # simplification of FormUtils.shouldCheckBoxBeChecked(value, states)
 # with the standard single "Yes" on-state: truthy tokens check the box
 _CHECKBOX_TRUE = ("yes", "y", "true", "on", "1", "checked")
@@ -59,19 +61,13 @@ def fill_form(docs: DataFrame, values: dict[str, str],
                 (_name(sp) == key) & (_ftype(sp) != "signature"),
                 _rebuild(sp, value, _flags(sp)),
             ).otherwise(new_text)
-        return F.struct(
-            sp["kind"].alias("kind"),
-            F.when(sp["kind"] == "formfield", new_text)
-            .otherwise(sp["text"]).alias("text"),
-            sp["media_ref"].alias("media_ref"),
-            sp["offset"].alias("offset"),
-        )
+        return sp.withField(
+            "text", F.when(sp["kind"] == "formfield", new_text)
+            .otherwise(sp["text"]))
 
     out = docs.select(
         "doc_id", F.transform("spans", rewrite).alias("spans"))
     if flatten:
-        from .pageops import flatten_forms
-
         out = flatten_forms(out)
     return out
 
@@ -84,17 +80,7 @@ def delete_fields(docs: DataFrame, names: list[str]) -> DataFrame:
         "spans",
         lambda sp: ~((sp["kind"] == "formfield")
                      & F.array_contains(name_arr, _name(sp))))
-    return docs.select(
-        "doc_id",
-        F.transform(
-            kept,
-            lambda sp, i: F.struct(
-                sp["kind"].alias("kind"), sp["text"].alias("text"),
-                sp["media_ref"].alias("media_ref"),
-                i.cast("int").alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    return docs.select("doc_id", _repack(kept).alias("spans"))
 
 
 def unlock_forms(docs: DataFrame) -> DataFrame:
@@ -108,15 +94,11 @@ def unlock_forms(docs: DataFrame) -> DataFrame:
         flags = _flags(sp)
         unlocked = F.array_join(
             F.array_remove(F.split(flags, ","), "ro"), ",")
-        return F.struct(
-            sp["kind"].alias("kind"),
-            F.when(sp["kind"] == "formfield",
-                   _rebuild(sp, F.split_part(sp["text"], F.lit("|"),
-                                             F.lit(3)), unlocked))
-            .otherwise(sp["text"]).alias("text"),
-            sp["media_ref"].alias("media_ref"),
-            sp["offset"].alias("offset"),
-        )
+        return sp.withField(
+            "text", F.when(sp["kind"] == "formfield",
+                           _rebuild(sp, F.split_part(sp["text"], F.lit("|"),
+                                                     F.lit(3)), unlocked))
+            .otherwise(sp["text"]))
 
     na = F.array(F.struct(
         F.lit("meta").alias("kind"),

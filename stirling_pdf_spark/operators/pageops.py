@@ -37,13 +37,57 @@ def span_page(s: Column) -> Column:
     attachments belong to no page and map to _FAR_PAGE (they stay with
     the last part on split, matching the kernel's read-after-pages
     contract)."""
-    return (
-        F.when(
-            _is_page_kind(s),
-            F.split_part(s["text"], F.lit("|"), F.lit(1)).cast("long"),
-        )
+    return F.when(_is_page_kind(s), wire_page(s["text"])) \
         .otherwise(F.lit(_FAR_PAGE))
-    )
+
+
+# ------------------------------------------------------------ wire codec
+# The one Spark-side reader and writer of the raw-span header
+# "{page}|f1|f2|f3|f4[\t{body}]" (kernel/wire.py). The header is the
+# text before the FIRST tab, split like Python's split("|", 4), so a
+# fifth field (a font name, a pagemeta label) keeps any "|" it holds;
+# the body is everything after that tab and is never re-split. Every
+# page operator reads, rewrites and renumbers spans through these.
+
+def _wire_head(text: Column) -> Column:
+    return F.substring_index(text, "\t", 1)
+
+
+def wire_fields(text: Column) -> list[Column]:
+    """The five header fields as string columns (null past the end of
+    a short header)."""
+    parts = F.split(_wire_head(text), r"\|", 5)
+    return [F.get(parts, i) for i in range(5)]
+
+
+def wire_page(text: Column) -> Column:
+    """The header's page field as a long."""
+    return F.split_part(text, F.lit("|"), F.lit(1)).cast("long")
+
+
+def wire_body(text: Column) -> Column:
+    """Everything after the first tab ("" when there is none)."""
+    return F.substr(text, F.length(_wire_head(text)) + 2)
+
+
+def wire_text(text: Column, fields: list[Column]) -> Column:
+    """``text`` with its header replaced by ``fields`` joined with "|";
+    everything from the first tab on is kept unchanged."""
+    return F.concat(F.concat_ws("|", *fields),
+                    F.substr(text, F.length(_wire_head(text)) + 1))
+
+
+def wire_repage(text: Column, page: Column) -> Column:
+    """``text`` renumbered to ``page``: only the text before the first
+    "|" changes."""
+    return F.concat(page.cast("string"),
+                    F.substr(text, F.instr(text, "|")))
+
+
+def _repack(spans: Column) -> Column:
+    """Dense, order-preserving int offsets 0..n-1 over a span array."""
+    return F.transform(
+        spans, lambda s, i: s.withField("offset", i.cast("int")))
 
 
 def _regroup(exploded: DataFrame, id_col: str = "doc_id",
@@ -59,24 +103,16 @@ def _regroup(exploded: DataFrame, id_col: str = "doc_id",
         .agg(F.array_sort(F.collect_list(key)).alias("ordered"))
         .select(
             F.col(id_col).alias("doc_id"),
-            F.expr(
-                "transform(ordered, (x, i) -> named_struct("
-                "'kind', x.s.kind, 'text', x.s.text,"
-                "'media_ref', x.s.media_ref, 'offset', CAST(i AS INT)))"
-            ).alias("spans"),
+            _repack(F.transform("ordered", lambda x: x["s"])).alias("spans"),
         )
     )
 
 
 def _widen_offset(sp: Column) -> Column:
-    """Rebuild a span struct with a LONG offset so it can union with
-    synthetic spans whose offsets exceed int32 (watermark grids);
-    _regroup re-densifies offsets to int afterwards."""
-    return F.struct(
-        sp["kind"].alias("kind"), sp["text"].alias("text"),
-        sp["media_ref"].alias("media_ref"),
-        sp["offset"].cast("long").alias("offset"),
-    )
+    """The span with a LONG offset so it can union with synthetic spans
+    whose offsets exceed int32 (watermark grids); _regroup re-densifies
+    offsets to int afterwards."""
+    return sp.withField("offset", sp["offset"].cast("long"))
 
 
 MERGE_COMPARATORS = ("byFileName", "byDateModified", "byDateCreated",
@@ -153,8 +189,7 @@ def merge_order(docs: DataFrame, comparator: str = "byFileName",
     bound on scale. The tie-break keys make the order strict."""
     s = F.col("s")
     is_geo = _is_page_kind(s)
-    header = F.substring_index(s["text"], "\t", 1)
-    p = F.split_part(header, F.lit("|"), F.lit(1)).cast("long")
+    p = wire_page(s["text"])
 
     keyed = docs.select(
         "doc_id",
@@ -196,28 +231,16 @@ def merge_docs(docs: DataFrame, merged_id: str = "merged",
     running page count of preceding docs; non-page spans keep their
     source-doc position in the concatenation order."""
     s = F.col("s")
-    is_geo = _is_page_kind(s)
-    header = F.substring_index(s["text"], "\t", 1)
-    p = F.split_part(header, F.lit("|"), F.lit(1)).cast("long")
-
     exploded = docs.select("doc_id", F.explode("spans").alias("s"))
     shifted = merge_order(docs, comparator, provided_order)
-    body = F.substring_index(s["text"], "\t", -1)
-    rest = F.substring_index(header, "|", -4)
-    new_text = F.when(~is_geo, s["text"]).when(
-        F.instr(s["text"], "\t") > 0,
-        F.concat((p + F.col("page_shift")).cast("string"), F.lit("|"), rest,
-                 F.lit("\t"), body),
-    ).otherwise(
-        F.concat((p + F.col("page_shift")).cast("string"), F.lit("|"), rest)
-    )
+    new_text = F.when(
+        _is_page_kind(s),
+        wire_repage(s["text"], wire_page(s["text"]) + F.col("page_shift")),
+    ).otherwise(s["text"])
     joined = exploded.join(shifted, "doc_id").select(
         F.lit(merged_id).alias("doc_id"),
         F.col("doc_pos"),
-        F.struct(
-            s["kind"].alias("kind"), new_text.alias("text"),
-            s["media_ref"].alias("media_ref"), s["offset"].alias("offset"),
-        ).alias("s"),
+        s.withField("text", new_text).alias("s"),
     )
     return _regroup(joined, order_cols=("doc_pos",))
 
@@ -274,8 +297,7 @@ def overlay_docs_multi(base: DataFrame, overlays: DataFrame,
     ov = overlays.select(F.col("doc_id").alias("ov_id"),
                          F.explode("spans").alias("s"))
     ov_geo = ov.filter(s["kind"].isin(*GEO_KINDS))
-    ov_page = F.split_part(F.substring_index(s["text"], "\t", 1),
-                           F.lit("|"), F.lit(1)).cast("long")
+    ov_page = wire_page(s["text"])
     file_pages = {
         r["ov_id"]: r["np"]
         for r in ov_geo.groupBy("ov_id").agg(F.max(ov_page).alias("np"))
@@ -329,15 +351,6 @@ def overlay_docs_multi(base: DataFrame, overlays: DataFrame,
                 ov_pg.alias("ov_pg"))
         .filter(F.col("ov_id").isNotNull())
     )
-    # re-page overlay content to the base page it lands on
-    header = F.substring_index(s["text"], "\t", 1)
-    body = F.substring_index(s["text"], "\t", -1)
-    rest = F.substring_index(header, "|", -4)
-    repaged = F.when(
-        F.instr(s["text"], "\t") > 0,
-        F.concat(F.col("page").cast("string"), F.lit("|"), rest,
-                 F.lit("\t"), body),
-    ).otherwise(F.concat(F.col("page").cast("string"), F.lit("|"), rest))
     layer = -1 if position == "BACKGROUND" else 1
     ov_assigned = (
         base_pages.join(
@@ -346,11 +359,9 @@ def overlay_docs_multi(base: DataFrame, overlays: DataFrame,
         )
         .select(
             "doc_id",
-            F.struct(
-                s["kind"].alias("kind"), repaged.alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ).alias("s"),
+            # re-page overlay content to the base page it lands on
+            s.withField("text", wire_repage(s["text"], F.col("page")))
+            .alias("s"),
             F.lit(layer).alias("layer"),
         )
     )
@@ -370,23 +381,9 @@ def split_at_pages(docs: DataFrame, cut_pages: list[int]) -> DataFrame:
     for i, c in enumerate(cuts):
         part = F.when(page > c, i + 1).otherwise(part)
 
-    exploded = docs.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id", part.alias("part"), "s"
-    )
-    return (
-        exploded.groupBy("doc_id", "part")
-        .agg(F.array_sort(F.collect_list(F.struct(
-            F.col("s.offset").alias("o"), F.col("s").alias("s")
-        ))).alias("ordered"))
-        .select(
-            F.concat("doc_id", F.lit("#p"), F.col("part")).alias("doc_id"),
-            F.expr(
-                "transform(ordered, (x, i) -> named_struct("
-                "'kind', x.s.kind, 'text', x.s.text,"
-                "'media_ref', x.s.media_ref, 'offset', CAST(i AS INT)))"
-            ).alias("spans"),
-        )
-    )
+    exploded = docs.select("doc_id", F.explode("spans").alias("s"))
+    return _regroup(exploded.select(
+        F.concat("doc_id", F.lit("#p"), part).alias("doc_id"), "s"))
 
 
 def rotate_pages_90(docs: DataFrame, page_height: float = 792.0) -> DataFrame:
@@ -415,52 +412,37 @@ def rotate_pages_90(docs: DataFrame, page_height: float = 792.0) -> DataFrame:
     h = F.lit(float(page_height))
 
     def rot(kind: Column, txt: Column) -> Column:
-        # wire: "{page}|f1|f2|f3|f4" with an optional "\t{body}" tail
-        header = F.substring_index(txt, "\t", 1)
-        p = [F.split_part(header, F.lit("|"), F.lit(i + 1)) for i in range(5)]
+        p = wire_fields(txt)
         f1, f2 = p[1].cast("double"), p[2].cast("double")
         f3, f4 = p[3].cast("double"), p[4].cast("double")
-        text_head = F.concat_ws(
-            "|", p[0], (h - f2).cast("string"), f1.cast("string"), p[3], p[4]
-        )
-        media_head = F.concat_ws(
-            "|", p[0], (h - f2 - f4).cast("string"), f1.cast("string"),
-            p[4], p[3],
-        )
+        text_f = [p[0], (h - f2).cast("string"), f1.cast("string"),
+                  p[3], p[4]]
+        media_f = [p[0], (h - f2 - f4).cast("string"), f1.cast("string"),
+                   p[4], p[3]]
         # rule endpoints (x1,y1),(x2,y2) -> (H-y1,x1),(H-y2,x2), normalized
         rx1, ry1 = h - f2, f1
         rx2, ry2 = h - f4, f3
-        rule_head = F.concat_ws(
-            "|", p[0],
-            F.least(rx1, rx2).cast("string"), F.least(ry1, ry2).cast("string"),
-            F.greatest(rx1, rx2).cast("string"),
-            F.greatest(ry1, ry2).cast("string"),
+        rule_f = [p[0], F.least(rx1, rx2).cast("string"),
+                  F.least(ry1, ry2).cast("string"),
+                  F.greatest(rx1, rx2).cast("string"),
+                  F.greatest(ry1, ry2).cast("string")]
+        meta_f = [p[0], p[2], p[1],
+                  ((p[3].cast("long") + 90) % 360).cast("string"), p[4]]
+        return (
+            F.when(kind == "text", wire_text(txt, text_f))
+            .when(kind.isin("media", "annotation"), wire_text(txt, media_f))
+            .when(kind == "rule", wire_text(txt, rule_f))
+            .otherwise(wire_text(txt, meta_f))
         )
-        meta_head = F.concat_ws(
-            "|", p[0], p[2], p[1],
-            ((p[3].cast("long") + 90) % 360).cast("string"), p[4],
-        )
-        head = (
-            F.when(kind == "text", text_head)
-            .when(kind.isin("media", "annotation"), media_head)
-            .when(kind == "rule", rule_head)
-            .otherwise(meta_head)
-        )
-        body = F.substring_index(txt, "\t", -1)
-        return F.when(F.instr(txt, "\t") > 0,
-                      F.concat(head, F.lit("\t"), body)).otherwise(head)
 
     return docs.select(
         "doc_id",
         F.transform(
             "spans",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
+            lambda s: s.withField(
+                "text",
                 F.when(_is_page_kind(s), rot(s["kind"], s["text"]))
-                .otherwise(s["text"]).alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
+                .otherwise(s["text"])),
         ).alias("spans"),
     )
 
@@ -505,36 +487,23 @@ def set_page_rotation(docs: DataFrame, rotation: Column | int,
             F.lit(0).alias("offset"),
         )),
     )
-    return docs.select(
-        "doc_id",
-        F.transform(
-            appended,
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"), s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    return docs.select("doc_id", _repack(appended).alias("spans"))
 
 
 def page_rotations(docs: DataFrame) -> DataFrame:
     """(doc_id, page, width, height, rotation) from pagemeta spans —
     the per-page state GetInfoOnPDF.java:812-851 reports."""
     s = F.col("s")
+    p = wire_fields(s["text"])
     return (
         docs.select("doc_id", F.explode("spans").alias("s"))
         .filter(s["kind"] == "pagemeta")
         .select(
             "doc_id",
-            F.split_part(s["text"], F.lit("|"), F.lit(1)).cast("long")
-            .alias("page"),
-            F.split_part(s["text"], F.lit("|"), F.lit(2)).cast("double")
-            .alias("width"),
-            F.split_part(s["text"], F.lit("|"), F.lit(3)).cast("double")
-            .alias("height"),
-            F.split_part(s["text"], F.lit("|"), F.lit(4)).cast("long")
-            .alias("rotation"),
+            p[0].cast("long").alias("page"),
+            p[1].cast("double").alias("width"),
+            p[2].cast("double").alias("height"),
+            p[3].cast("long").alias("rotation"),
         )
     )
 
@@ -542,7 +511,6 @@ def page_rotations(docs: DataFrame) -> DataFrame:
 # FilterController.java:256-265 — shared by the rotation, page-size,
 # page-count and file-size filters
 COMPARATORS = ("GREATER", "EQUAL", "LESS")
-ROTATION_COMPARATORS = COMPARATORS  # backwards-compat alias
 
 # PdfUtils.textToPageSize:52-66 — the nine standard sizes the reference
 # accepts, as PDFBox PDRectangle dimensions in points (ISO sizes are
@@ -658,8 +626,7 @@ def split_by_sections(docs: DataFrame, h_div: int = 1, v_div: int = 1,
     cols, rows = h_div + 1, v_div + 1
     cell_w, cell_h = page_w / cols, page_h / rows
     s = F.col("s")
-    header = F.substring_index(s["text"], "\t", 1)
-    p = [F.split_part(header, F.lit("|"), F.lit(i + 1)) for i in range(5)]
+    p = wire_fields(s["text"])
     x, y = p[1].cast("double"), p[2].cast("double")
     is_geo = s["kind"].isin(*GEO_KINDS)
     col_i = F.least(F.floor(x / cell_w).cast("int"), F.lit(cols - 1))
@@ -682,42 +649,20 @@ def split_by_sections(docs: DataFrame, h_div: int = 1, v_div: int = 1,
         s["kind"] == "rule",
         ((p[4].cast("double") - row_i * cell_h) * rows).cast("string"),
     ).otherwise(p[4])
-    new_header = F.concat_ws("|", F.lit("1"), nx.cast("string"),
-                             ny.cast("string"), f3_scaled, f4_scaled)
-    body = F.substring_index(s["text"], "\t", -1)
-    new_text = F.when(
-        ~is_geo, s["text"]
-    ).when(F.instr(s["text"], "\t") > 0,
-           F.concat(new_header, F.lit("\t"), body)).otherwise(new_header)
-
+    new_text = F.when(is_geo, wire_text(s["text"], [
+        F.lit("1"), nx.cast("string"), ny.cast("string"), f3_scaled,
+        f4_scaled])).otherwise(s["text"])
+    page = F.when(is_geo, p[0].cast("long")).otherwise(F.lit(_FAR_PAGE))
     exploded = docs.select(
         "doc_id", F.explode("spans").alias("s")
     ).filter(s["kind"] != "pagemeta").select(
-        "doc_id",
-        F.when(is_geo, p[0].cast("long")).otherwise(F.lit(_FAR_PAGE)).alias("page"),
-        F.when(is_geo, row_i).otherwise(F.lit(0)).alias("r"),
-        F.when(is_geo, col_i).otherwise(F.lit(0)).alias("c"),
-        F.struct(
-            s["kind"].alias("kind"), new_text.alias("text"),
-            s["media_ref"].alias("media_ref"), s["offset"].alias("offset"),
-        ).alias("s"),
+        F.concat("doc_id", F.lit("#p"), page,
+                 F.lit("r"), F.when(is_geo, row_i).otherwise(F.lit(0)),
+                 F.lit("c"), F.when(is_geo, col_i).otherwise(F.lit(0)))
+        .alias("doc_id"),
+        s.withField("text", new_text).alias("s"),
     )
-    return (
-        exploded.groupBy("doc_id", "page", "r", "c")
-        .agg(F.array_sort(F.collect_list(F.struct(
-            F.col("s.offset").alias("o"), F.col("s").alias("s")
-        ))).alias("ordered"))
-        .select(
-            F.concat("doc_id", F.lit("#p"), F.col("page"),
-                     F.lit("r"), F.col("r"), F.lit("c"), F.col("c"))
-            .alias("doc_id"),
-            F.expr(
-                "transform(ordered, (x, i) -> named_struct("
-                "'kind', x.s.kind, 'text', x.s.text,"
-                "'media_ref', x.s.media_ref, 'offset', CAST(i AS INT)))"
-            ).alias("spans"),
-        )
-    )
+    return _regroup(exploded)
 
 
 def add_page_stamps(docs: DataFrame, stamp: str, x: float = 280.0,
@@ -728,14 +673,10 @@ def add_page_stamps(docs: DataFrame, stamp: str, x: float = 280.0,
     ``number_pages`` the page number is appended to the stamp text.
     Offsets are re-packed so the result is a valid docs table."""
     s = F.col("s")
-    page_of = F.when(
-        _is_page_kind(s),
-        F.split_part(F.substring_index(s["text"], "\t", 1),
-                     F.lit("|"), F.lit(1)).cast("long"),
-    )
     pages = (
         docs.select("doc_id", F.explode("spans").alias("s"))
-        .select("doc_id", page_of.alias("page"))
+        .select("doc_id", F.when(_is_page_kind(s), wire_page(s["text"]))
+                .alias("page"))
         .filter(F.col("page").isNotNull())
         .distinct()
     )
@@ -757,16 +698,10 @@ def add_page_stamps(docs: DataFrame, stamp: str, x: float = 280.0,
             )
         ).alias("stamps")
     )
-    return (
-        docs.join(stamp_spans, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(concat(spans, coalesce(stamps, array())),"
-                " (s, i) -> named_struct('kind', s.kind, 'text', s.text,"
-                " 'media_ref', s.media_ref, 'offset', CAST(i AS INT)))"
-            ).alias("spans"),
-        )
+    return docs.join(stamp_spans, "doc_id", "left").select(
+        "doc_id",
+        _repack(F.expr("concat(spans, coalesce(stamps, array()))"))
+        .alias("spans"),
     )
 
 
@@ -788,13 +723,11 @@ def set_outline(docs: DataFrame,
             walk(children or [], depth + 1)
 
     walk(tree, 0)
-    page_of = lambda s: F.split_part(  # noqa: E731
-        F.substring_index(s["text"], "\t", 1), F.lit("|"), F.lit(1)
-    ).cast("long")
     np_col = F.greatest(
         F.coalesce(
             F.array_max(F.transform(
-                F.filter("spans", _is_page_kind), page_of)),
+                F.filter("spans", _is_page_kind),
+                lambda s: wire_page(s["text"]))),
             F.lit(0).cast("long")),
         F.lit(1).cast("long"),
     )
@@ -826,14 +759,8 @@ def set_outline(docs: DataFrame,
     ) if flat else F.array().cast(
         "array<struct<kind:string,text:string,media_ref:string,offset:int>>")
     kept = F.filter("spans", lambda s: s["kind"] != "bookmark")
-    repacked = F.transform(
-        F.concat(kept, new_spans),
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"), s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"), i.cast("int").alias("offset"),
-        ),
-    )
-    return docs.select("doc_id", repacked.alias("spans"))
+    return docs.select(
+        "doc_id", _repack(F.concat(kept, new_spans)).alias("spans"))
 
 
 # Standard-14 font metrics used by the page-number placer (public AFM
@@ -884,13 +811,11 @@ def page_number_stamps(docs: DataFrame, position: int = 8,
     from ..kernel.model import CHAR_WIDTH_FACTOR
 
     s = F.col("s")
-    is_geo = _is_page_kind(s)
-    pg = F.split_part(F.substring_index(s["text"], "\t", 1),
-                      F.lit("|"), F.lit(1)).cast("long")
     totals = (
         docs.select("doc_id", F.explode("spans").alias("s"))
         .groupBy("doc_id")
-        .agg(F.max(F.when(is_geo, pg)).alias("total"))
+        .agg(F.max(F.when(_is_page_kind(s), wire_page(s["text"])))
+             .alias("total"))
         .filter(F.col("total").isNotNull())
     )
     distinct_totals = sorted(
@@ -970,16 +895,10 @@ def add_page_numbers(docs: DataFrame, **kwargs) -> DataFrame:
             )
         ).alias("stamps")
     )
-    return (
-        docs.join(stamp_spans, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(concat(spans, coalesce(stamps, array())),"
-                " (s, i) -> named_struct('kind', s.kind, 'text', s.text,"
-                " 'media_ref', s.media_ref, 'offset', CAST(i AS INT)))"
-            ).alias("spans"),
-        )
+    return docs.join(stamp_spans, "doc_id", "left").select(
+        "doc_id",
+        _repack(F.expr("concat(spans, coalesce(stamps, array()))"))
+        .alias("spans"),
     )
 
 
@@ -990,36 +909,34 @@ def scale_pages(docs: DataFrame, factor: float) -> DataFrame:
     fct = F.lit(float(factor))
 
     def scaled(txt: Column, kind: Column) -> Column:
-        header = F.substring_index(txt, "\t", 1)
-        p = [F.split_part(header, F.lit("|"), F.lit(i + 1)) for i in range(5)]
+        p = wire_fields(txt)
         nx = (p[1].cast("double") * fct).cast("string")
         ny = (p[2].cast("double") * fct).cast("string")
-        f4_text = (p[3].cast("double") * fct).cast("string")   # font size
-        f4_media = (p[3].cast("double") * fct).cast("string")  # width / x2
-        f5_media = (p[4].cast("double") * fct).cast("string")  # height / y2
-        head = F.when(
-            kind == "text", F.concat_ws("|", p[0], nx, ny, f4_text, p[4])
-        ).when(
-            # pagemeta: page box scales, rotation/label don't
-            kind == "pagemeta", F.concat_ws("|", p[0], nx, ny, p[3], p[4])
-        ).otherwise(F.concat_ws("|", p[0], nx, ny, f4_media, f5_media))
-        body = F.substring_index(txt, "\t", -1)
-        return F.when(F.instr(txt, "\t") > 0,
-                      F.concat(head, F.lit("\t"), body)).otherwise(head)
+        # font size (text), width / x2 (media, rule); pagemeta: the page
+        # box scales, rotation/label don't
+        f3 = F.when(kind == "pagemeta", p[3]).otherwise(
+            (p[3].cast("double") * fct).cast("string"))
+        f4 = F.when(kind.isin("text", "pagemeta"), p[4]).otherwise(
+            (p[4].cast("double") * fct).cast("string"))  # height / y2
+        return wire_text(txt, [p[0], nx, ny, f3, f4])
 
     return docs.select(
         "doc_id",
         F.transform(
             "spans",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
+            lambda s: s.withField(
+                "text",
                 F.when(_is_page_kind(s), scaled(s["text"], s["kind"]))
-                .otherwise(s["text"]).alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ),
+                .otherwise(s["text"])),
         ).alias("spans"),
     )
+
+
+def _visible_text(s: Column) -> Column:
+    """A text run whose content is not whitespace-only (the kernel's
+    ``isspace`` rule over ASCII whitespace, kernel/lines.py)."""
+    return (s["kind"] == "text") & (
+        F.btrim(wire_body(s["text"]), F.lit(" \t\n\r\x0b\x0c")) != "")
 
 
 def blank_pages(docs: DataFrame) -> DataFrame:
@@ -1030,16 +947,11 @@ def blank_pages(docs: DataFrame) -> DataFrame:
     n_visible_lines, n_media, is_blank). Pages carrying only rules or
     pagemeta state still enumerate (as blank)."""
     s = F.col("s")
-    is_geo = _is_page_kind(s)
-    page = F.split_part(F.substring_index(s["text"], "\t", 1),
-                        F.lit("|"), F.lit(1)).cast("long")
-    content = F.substring_index(s["text"], "\t", -1)
-    visible = (s["kind"] == "text") & (F.trim(content) != "") \
-        & (F.instr(s["text"], "\t") > 0)
+    visible = _visible_text(s)
     return (
         docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter(is_geo)
-        .groupBy("doc_id", page.alias("page"))
+        .filter(_is_page_kind(s))
+        .groupBy("doc_id", wire_page(s["text"]).alias("page"))
         .agg(
             F.sum(F.when(visible, 1).otherwise(0)).cast("long")
             .alias("n_visible_lines"),
@@ -1048,6 +960,14 @@ def blank_pages(docs: DataFrame) -> DataFrame:
         )
         .withColumn("is_blank", (F.col("n_visible_lines") == 0).cast("int"))
     )
+
+
+def _repaged(s: Column, new_page: Column) -> Column:
+    """The span ``s`` renumbered to ``new_page``; a null page (a
+    non-page span) leaves it as it is."""
+    return s.withField("text", F.when(
+        _is_page_kind(s) & new_page.isNotNull(),
+        wire_repage(s["text"], new_page)).otherwise(s["text"])).alias("s")
 
 
 REARRANGE_MODES = ("REVERSE", "DUPLEX_SORT", "BOOKLET_SORT",
@@ -1088,9 +1008,8 @@ def rearrange_pages(docs: DataFrame, mode: str,
     if mode not in REARRANGE_MODES:
         raise ValueError(f"unknown mode {mode!r}; one of {REARRANGE_MODES}")
     s = F.col("s")
-    header = F.substring_index(s["text"], "\t", 1)
     is_geo = _is_page_kind(s)
-    p = F.split_part(header, F.lit("|"), F.lit(1)).cast("long")
+    p = wire_page(s["text"])
     n = F.col("n")
     h = F.ceil(n / 2).cast("long")
 
@@ -1138,11 +1057,7 @@ def rearrange_pages(docs: DataFrame, mode: str,
                 c = 2
             if c > 100:
                 max_n = (docs.select(F.explode("spans").alias("s"))
-                         .select(F.max(F.when(
-                             _is_page_kind(F.col("s")),
-                             F.split_part(F.substring_index(
-                                 F.col("s")["text"], "\t", 1),
-                                 F.lit("|"), F.lit(1)).cast("long"))))
+                         .select(F.max(F.when(is_geo, p)))
                          .collect()[0][0]) or 0
                 if c > max(100, 3 * int(max_n)):
                     raise ValueError(
@@ -1183,35 +1098,19 @@ def rearrange_pages(docs: DataFrame, mode: str,
         if mode.startswith("REMOVE") or mode == "BOOKLET_SORT":
             keep = keep.filter(~is_geo | F.col("np").isNotNull())
 
-    body = F.substring_index(s["text"], "\t", -1)
-    rest = F.substring_index(header, "|", -4)  # fields 2..5 unchanged
-    new_text = F.when(
-        ~is_geo | F.col("np").isNull(), s["text"]
-    ).when(F.instr(s["text"], "\t") > 0,
-           F.concat(F.col("np").cast("string"), F.lit("|"), rest,
-                    F.lit("\t"), body)
-    ).otherwise(F.concat(F.col("np").cast("string"), F.lit("|"), rest))
+    return _regroup(keep.select("doc_id", _repaged(s, F.col("np"))))
 
+
+def _rewrite_geo(docs: DataFrame, fields: list[Column]) -> DataFrame:
+    """Exploded (doc_id, s) rows with pagemeta dropped and every
+    GEO_KINDS span's header replaced by ``fields``."""
+    s = F.col("s")
+    new_text = F.when(s["kind"].isin(*GEO_KINDS),
+                      wire_text(s["text"], fields)).otherwise(s["text"])
     return (
-        keep.select(
-            "doc_id",
-            F.struct(
-                s["kind"].alias("kind"), new_text.alias("text"),
-                s["media_ref"].alias("media_ref"), s["offset"].alias("offset"),
-            ).alias("s"),
-        )
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct(
-            F.col("s.offset").alias("o"), F.col("s").alias("s")
-        ))).alias("ordered"))
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(ordered, (x, i) -> named_struct("
-                "'kind', x.s.kind, 'text', x.s.text,"
-                "'media_ref', x.s.media_ref, 'offset', CAST(i AS INT)))"
-            ).alias("spans"),
-        )
+        docs.select("doc_id", F.explode("spans").alias("s"))
+        .filter(s["kind"] != "pagemeta")
+        .select("doc_id", s.withField("text", new_text).alias("s"))
     )
 
 
@@ -1237,8 +1136,7 @@ def poster_pages(docs: DataFrame, x_factor: int = 2, y_factor: int = 2,
     off_x = (target_w - cell_w * scale) / 2.0
     off_y = (target_h - cell_h * scale) / 2.0
     s = F.col("s")
-    header = F.substring_index(s["text"], "\t", 1)
-    p = [F.split_part(header, F.lit("|"), F.lit(i + 1)) for i in range(5)]
+    p = wire_fields(s["text"])
     pg = p[0].cast("long")
     x, y = p[1].cast("double"), p[2].cast("double")
     col_i = F.least(F.floor(x / cell_w).cast("int"), F.lit(x_factor - 1))
@@ -1262,26 +1160,9 @@ def poster_pages(docs: DataFrame, x_factor: int = 2, y_factor: int = 2,
         .otherwise(((p[4].cast("double") - row_i * cell_h) * scale + off_y)
                    .cast("string"))                            # rule y2
     )
-    head = F.concat_ws("|", new_pg.cast("string"), nx.cast("string"),
-                       ny.cast("string"), f3, f4)
-    body = F.substring_index(s["text"], "\t", -1)
-    new_text = F.when(
-        ~s["kind"].isin(*GEO_KINDS), s["text"]
-    ).when(F.instr(s["text"], "\t") > 0,
-           F.concat(head, F.lit("\t"), body)).otherwise(head)
-    exploded = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter(s["kind"] != "pagemeta")
-        .select(
-            "doc_id",
-            F.struct(
-                s["kind"].alias("kind"), new_text.alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ).alias("s"),
-        )
-    )
-    return _regroup(exploded)
+    head = [new_pg.cast("string"), nx.cast("string"), ny.cast("string"),
+            f3, f4]
+    return _regroup(_rewrite_geo(docs, head))
 
 
 def rearrange_pages_custom(docs: DataFrame, page_order: str) -> DataFrame:
@@ -1328,8 +1209,7 @@ def _rearrange_by_slots(docs: DataFrame, slots_for_n) -> DataFrame:
     (n, page) -> slot table, joined into the span stream."""
     s = F.col("s")
     is_geo = _is_page_kind(s)
-    header = F.substring_index(s["text"], "\t", 1)
-    p = F.split_part(header, F.lit("|"), F.lit(1)).cast("long")
+    p = wire_page(s["text"])
 
     exploded = docs.select("doc_id", F.explode("spans").alias("s"))
     n_pages = exploded.groupBy("doc_id").agg(
@@ -1355,22 +1235,8 @@ def _rearrange_by_slots(docs: DataFrame, slots_for_n) -> DataFrame:
     passthrough = tagged.filter(~is_geo).select(
         "doc_id", "s", F.lit(None).cast("long").alias("np"))
 
-    body = F.substring_index(s["text"], "\t", -1)
-    rest = F.substring_index(header, "|", -4)
-    new_text = F.when(
-        F.col("np").isNull(), s["text"]
-    ).when(F.instr(s["text"], "\t") > 0,
-           F.concat(F.col("np").cast("string"), F.lit("|"), rest,
-                    F.lit("\t"), body)
-    ).otherwise(F.concat(F.col("np").cast("string"), F.lit("|"), rest))
-    out = geo.unionByName(passthrough).select(
-        "doc_id",
-        F.struct(
-            s["kind"].alias("kind"), new_text.alias("text"),
-            s["media_ref"].alias("media_ref"), s["offset"].alias("offset"),
-        ).alias("s"),
-    )
-    return _regroup(out)
+    out = geo.unionByName(passthrough)
+    return _regroup(out.select("doc_id", _repaged(s, F.col("np"))))
 
 
 def crop_pages(docs: DataFrame, x1: float, y1: float,
@@ -1381,8 +1247,7 @@ def crop_pages(docs: DataFrame, x1: float, y1: float,
     renderer concern, anchor semantics match split_by_sections).
     Non-page spans pass through; pagemeta boxes become the crop box."""
     s = F.col("s")
-    header = F.substring_index(s["text"], "\t", 1)
-    p = [F.split_part(header, F.lit("|"), F.lit(i + 1)) for i in range(5)]
+    p = wire_fields(s["text"])
     ax, ay = p[1].cast("double"), p[2].cast("double")
     geo = s["kind"].isin(*GEO_KINDS)
     inside = (ax >= x1) & (ax < x2) & (ay >= y1) & (ay < y2)
@@ -1390,28 +1255,18 @@ def crop_pages(docs: DataFrame, x1: float, y1: float,
                 (p[3].cast("double") - x1).cast("string")).otherwise(p[3])
     f4 = F.when(s["kind"] == "rule",
                 (p[4].cast("double") - y1).cast("string")).otherwise(p[4])
-    new_header = F.concat_ws(
-        "|", p[0], (ax - x1).cast("string"), (ay - y1).cast("string"), f3, f4)
-    meta_header = F.concat_ws(
-        "|", p[0], F.lit(repr(float(x2 - x1))), F.lit(repr(float(y2 - y1))),
-        p[3], p[4])
-    body = F.substring_index(s["text"], "\t", -1)
     new_text = (
-        F.when(s["kind"] == "pagemeta", meta_header)
-        .when(~geo, s["text"])
-        .when(F.instr(s["text"], "\t") > 0,
-              F.concat(new_header, F.lit("\t"), body))
-        .otherwise(new_header)
+        F.when(s["kind"] == "pagemeta", wire_text(s["text"], [
+            p[0], F.lit(repr(float(x2 - x1))), F.lit(repr(float(y2 - y1))),
+            p[3], p[4]]))
+        .when(geo, wire_text(s["text"], [
+            p[0], (ax - x1).cast("string"), (ay - y1).cast("string"),
+            f3, f4]))
+        .otherwise(s["text"])
     )
     exploded = docs.select("doc_id", F.explode("spans").alias("s")).filter(
         ~geo | inside
-    ).select(
-        "doc_id",
-        F.struct(
-            s["kind"].alias("kind"), new_text.alias("text"),
-            s["media_ref"].alias("media_ref"), s["offset"].alias("offset"),
-        ).alias("s"),
-    )
+    ).select("doc_id", s.withField("text", new_text).alias("s"))
     return _regroup(exploded)
 
 
@@ -1425,30 +1280,23 @@ def to_single_page(docs: DataFrame, page_height: float = 792.0) -> DataFrame:
     h = F.lit(float(page_height))
 
     def shifted(kind: Column, txt: Column) -> Column:
-        header = F.substring_index(txt, "\t", 1)
-        p = [F.split_part(header, F.lit("|"), F.lit(i + 1)) for i in range(5)]
+        p = wire_fields(txt)
         off = (p[0].cast("long") - 1).cast("double") * h
         ny = (p[2].cast("double") + off).cast("string")
         f4 = F.when(kind == "rule",
                     (p[4].cast("double") + off).cast("string")).otherwise(p[4])
-        head = F.concat_ws("|", F.lit("1"), p[1], ny, p[3], f4)
-        body = F.substring_index(txt, "\t", -1)
-        return F.when(F.instr(txt, "\t") > 0,
-                      F.concat(head, F.lit("\t"), body)).otherwise(head)
+        return wire_text(txt, [F.lit("1"), p[1], ny, p[3], f4])
 
     return docs.select(
         "doc_id",
         F.filter(
             F.transform(
                 "spans",
-                lambda sp: F.struct(
-                    sp["kind"].alias("kind"),
+                lambda sp: sp.withField(
+                    "text",
                     F.when(sp["kind"].isin(*GEO_KINDS),
                            shifted(sp["kind"], sp["text"]))
-                    .otherwise(sp["text"]).alias("text"),
-                    sp["media_ref"].alias("media_ref"),
-                    sp["offset"].alias("offset"),
-                ),
+                    .otherwise(sp["text"])),
             ),
             lambda sp: sp["kind"] != "pagemeta",
         ).alias("spans"),
@@ -1466,8 +1314,7 @@ def n_up(docs: DataFrame, cols: int = 2, rows: int = 1,
     k = cols * rows
     cell_w, cell_h = page_w / cols, page_h / rows
     s = F.col("s")
-    header = F.substring_index(s["text"], "\t", 1)
-    p = [F.split_part(header, F.lit("|"), F.lit(i + 1)) for i in range(5)]
+    p = wire_fields(s["text"])
     pg = p[0].cast("long")
     sheet = F.floor((pg - 1) / k) + 1
     idx = (pg - 1) % k
@@ -1489,25 +1336,8 @@ def n_up(docs: DataFrame, cols: int = 2, rows: int = 1,
         .otherwise((p[4].cast("double") / rows + r * cell_h)
                    .cast("string"))                              # rule y2
     )
-    head = F.concat_ws("|", sheet.cast("string"), nx, ny, f3, f4)
-    body = F.substring_index(s["text"], "\t", -1)
-    new_text = F.when(
-        ~s["kind"].isin(*GEO_KINDS), s["text"]
-    ).when(F.instr(s["text"], "\t") > 0,
-           F.concat(head, F.lit("\t"), body)).otherwise(head)
-    exploded = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .filter(s["kind"] != "pagemeta")
-        .select(
-            "doc_id",
-            F.struct(
-                s["kind"].alias("kind"), new_text.alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["offset"].alias("offset"),
-            ).alias("s"),
-        )
-    )
-    return _regroup(exploded)
+    return _regroup(
+        _rewrite_geo(docs, [sheet.cast("string"), nx, ny, f3, f4]))
 
 
 def booklet_impose(docs: DataFrame) -> DataFrame:
@@ -1632,17 +1462,7 @@ def remove_images(docs: DataFrame) -> DataFrame:
     annotations, attachments and metadata pass through untouched. Pure
     nested-array column math, no shuffle."""
     kept = F.filter("spans", lambda s: s["kind"] != "media")
-    return docs.select(
-        "doc_id",
-        F.transform(
-            kept,
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"), s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    return docs.select("doc_id", _repack(kept).alias("spans"))
 
 
 def set_metadata(docs: DataFrame, updates: dict[str, str | None],
@@ -1679,18 +1499,8 @@ def set_metadata(docs: DataFrame, updates: dict[str, str | None],
         for k, v in set_items
     ]) if set_items else F.array().cast(
         "array<struct<kind:string,text:string,media_ref:string,offset:int>>")
-    merged = F.concat(kept, new_spans)
     return docs.select(
-        "doc_id",
-        F.transform(
-            merged,
-            lambda s, i: F.struct(
-                s["kind"].alias("kind"), s["text"].alias("text"),
-                s["media_ref"].alias("media_ref"),
-                i.cast("int").alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+        "doc_id", _repack(F.concat(kept, new_spans)).alias("spans"))
 
 
 def split_into_n_docs(docs: DataFrame, document_count: int) -> DataFrame:
@@ -1743,13 +1553,13 @@ def page_byte_sizes(docs: DataFrame) -> DataFrame:
     ranges are computed over. Every page with any page-kind span gets
     a row (textless pages weigh 0)."""
     s = F.col("s")
-    content = F.substring_index(s["text"], "\t", -1)
     return (
         docs.select("doc_id", F.explode("spans").alias("s"))
         .filter(_is_page_kind(s))
         .groupBy("doc_id", span_page(s).alias("page"))
         .agg(F.sum(
-            F.when(s["kind"] == "text", F.octet_length(content))
+            F.when(s["kind"] == "text",
+                   F.octet_length(wire_body(s["text"])))
             .otherwise(F.lit(0))
         ).cast("long").alias("b"))
     )
@@ -2034,13 +1844,11 @@ def remove_blank_pages(docs: DataFrame) -> DataFrame:
     Non-page spans always survive."""
     s = F.col("s")
     exploded = docs.select("doc_id", F.explode("spans").alias("s"))
-    content = F.substring_index(s["text"], "\t", -1)
     visible = (
         exploded.filter(_is_page_kind(s))
         .groupBy("doc_id", span_page(s).alias("page"))
         .agg(F.max(
-            F.when((s["kind"] == "text")
-                   & (F.trim(content) != ""), 1)
+            F.when(_visible_text(s), 1)
             .when(s["kind"] == "media", 1)
             .otherwise(0)
         ).alias("keep"))
@@ -2058,20 +1866,8 @@ def remove_blank_pages(docs: DataFrame) -> DataFrame:
     # page spans without a keep row are on blank pages -> dropped
     survivors = tagged.filter(
         (~_is_page_kind(s)) | F.col("new_page").isNotNull())
-    renum = F.when(
-        _is_page_kind(s),
-        F.concat(F.col("new_page").cast("string"),
-                 F.expr("substring(s.text, instr(s.text, '|'))")),
-    ).otherwise(s["text"])
-    out = survivors.select(
-        "doc_id",
-        F.struct(
-            s["kind"].alias("kind"), renum.alias("text"),
-            s["media_ref"].alias("media_ref"),
-            s["offset"].alias("offset"),
-        ).alias("s"),
-    )
-    return _regroup(out)
+    return _regroup(
+        survivors.select("doc_id", _repaged(s, F.col("new_page"))))
 
 
 SANITIZE_INFO_KEYS = ("title", "author", "subject", "keywords",
@@ -2108,8 +1904,8 @@ def sanitize_docs(docs: DataFrame, remove_javascript: bool = True,
 
     def keep(sp: Column) -> Column:
         meta_key = F.split_part(sp["text"], F.lit("|"), F.lit(1))
-        body = F.substring_index(sp["text"], "\t", -1)
-        ann_subtype = F.split_part(body, F.lit("|"), F.lit(1))
+        ann_subtype = F.split_part(wire_body(sp["text"]), F.lit("|"),
+                                   F.lit(1))
         drop = F.lit(False)
         if remove_javascript:
             drop = drop | ((sp["kind"] == "meta")
@@ -2123,12 +1919,10 @@ def sanitize_docs(docs: DataFrame, remove_javascript: bool = True,
                            & F.array_contains(info_keys, meta_key))
         return ~drop
 
-    def rewrite(sp: Column, i: Column) -> Column:
+    def rewrite(sp: Column) -> Column:
         text = sp["text"]
         if remove_links:
-            head = F.substring_index(text, "\t", 1)
-            body = F.substring_index(text, "\t", -1)
-            parts = F.split(body, r"\|")
+            parts = F.split(wire_body(text), r"\|")
             # annot body: subtype|contents|author|subject — clear the
             # contents (action/URI) slot of Link annotations only.
             # coalesce each slot: concat_ws silently DROPS null args,
@@ -2142,28 +1936,21 @@ def sanitize_docs(docs: DataFrame, remove_javascript: bool = True,
             text = F.when(
                 (sp["kind"] == "annotation")
                 & (parts[0] == "Link"),
-                F.concat(head, F.lit("\t"), cleared),
+                F.concat(_wire_head(text), F.lit("\t"), cleared),
             ).otherwise(text)
         if remove_fonts:
             # text wire: page|x|y|fs|font\tcontent -> font cleared
-            head = F.substring_index(text, "\t", 1)
-            content = F.substring_index(text, "\t", -1)
-            hp = F.split(head, r"\|")
+            hp = wire_fields(text)
             text = F.when(
                 sp["kind"] == "text",
-                F.concat(F.concat_ws("|", hp[0], hp[1], hp[2], hp[3],
-                                     F.lit("")),
-                         F.lit("\t"), content),
+                wire_text(text, hp[:4] + [F.lit("")]),
             ).otherwise(text)
-        return F.struct(
-            sp["kind"].alias("kind"), text.alias("text"),
-            sp["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        )
+        return sp.withField("text", text)
 
     return docs.select(
         "doc_id",
-        F.transform(F.filter("spans", keep), rewrite).alias("spans"),
+        _repack(F.transform(F.filter("spans", keep), rewrite))
+        .alias("spans"),
     )
 
 
@@ -2335,17 +2122,7 @@ def remove_cert_sign(docs: DataFrame) -> DataFrame:
     filter + reindex, no shuffle."""
     kept = F.filter("spans",
                     lambda sp: ~_is_sig_field(sp) & ~_is_sig_meta(sp))
-    return docs.select(
-        "doc_id",
-        F.transform(
-            kept,
-            lambda sp, i: F.struct(
-                sp["kind"].alias("kind"), sp["text"].alias("text"),
-                sp["media_ref"].alias("media_ref"),
-                i.cast("int").alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    return docs.select("doc_id", _repack(kept).alias("spans"))
 
 
 def validate_signatures(spans_out: DataFrame) -> DataFrame:

@@ -184,14 +184,10 @@ def auto_redact(spans_out: DataFrame, list_of_text: str | list[str],
         "doc_id",
         F.transform(
             "spans",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                F.when(s["kind"] == "text",
-                       mask_matches(s["text"], pat, mask_char))
-                .otherwise(s["text"]).alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["order"].alias("order"),
-            ),
+            lambda s: s.withField(
+                "text", F.when(s["kind"] == "text",
+                               mask_matches(s["text"], pat, mask_char))
+                .otherwise(s["text"])),
         ).alias("spans"),
     )
 
@@ -206,13 +202,9 @@ def redact_spans(spans_out: DataFrame, term: str,
         "doc_id",
         F.transform(
             "spans",
-            lambda s: F.struct(
-                s["kind"].alias("kind"),
-                F.when(s["kind"] == "text",
-                       F.replace(s["text"], F.lit(term), F.lit(mask)))
-                .otherwise(s["text"]).alias("text"),
-                s["media_ref"].alias("media_ref"),
-                s["order"].alias("order"),
-            ),
+            lambda s: s.withField(
+                "text", F.when(s["kind"] == "text",
+                               F.replace(s["text"], F.lit(term), F.lit(mask)))
+                .otherwise(s["text"])),
         ).alias("spans"),
     )

@@ -1485,7 +1485,10 @@ def heavy_hitters(df: DataFrame, threshold_frac: int = 64,
          token stream inside one Arrow stage; pigeonhole guarantees
          any global heavy hitter survives in at least one partition's
          sketch, so the union of per-partition candidates is a
-         superset of the true answer regardless of partitioning;
+         superset of the true answer regardless of partitioning
+         (k counters keep every token with count > N/(k+1), so this
+         needs ``capacity >= threshold_frac``; a smaller one raises
+         ValueError);
       2. exact pass — only the candidate set (bounded:
          partitions x capacity words) is counted exactly and filtered
          against the true threshold.
@@ -1500,6 +1503,10 @@ def heavy_hitters(df: DataFrame, threshold_frac: int = 64,
     from ..runtime.staging import stage
 
     cap = capacity or 2 * threshold_frac
+    if cap < threshold_frac:
+        raise ValueError(
+            f"capacity {cap} < threshold_frac {threshold_frac}: the sketch "
+            "could drop a true heavy hitter")
     # one corpus scan: the token arrays are staged for their three
     # consumers (sketch pass, total count, exact candidate count)
     toks = stage(spread(df).select(words_col(text_col).alias("w")))

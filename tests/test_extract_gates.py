@@ -5,11 +5,13 @@ decoders, perceptual hashes, compare, NFC, EML, WARC, file sources,
 image->PDF, MMR re-ranking over JVM-grouped rows, the HTML sanitizer,
 boilerplate strip and sentence chunker) or the heavy-hitters sketch's
 ``mapInArrow``, and every gate over the global prefix sum
-(``packing.prefix_sums``) or the merge-order window, against its DuckDB
-oracle at the smoke scale factor, through the same comparison as
+(``packing.prefix_sums``) or the merge-order window, and every gate over
+a page, form or attachment operator (``pageops``, ``forms``,
+``attachments``: the raw-span wire codec), against its DuckDB oracle at
+the smoke scale factor, through the same comparison as
 ``scripts/check_queries.py`` — so a plain pytest run catches an oracle
-break in the extraction plan, a per-document Arrow stage or a global
-ordering without the full sweep."""
+break in the extraction plan, a per-document Arrow stage, a global
+ordering or a wire-header rewrite without the full sweep."""
 
 from __future__ import annotations
 
@@ -54,8 +56,21 @@ MAP_ROWS_GATES = [
     "h1_sanitize", "h7_boilerplate", "e24_sentence_chunks",
     "text_heavy_hitters",
 ]
+PAGEOPS_GATES = [
+    "form_fill_unlock", "e19_blank_pages", "s4_split_chapters",
+    "toc_set_outline", "s10_remove_images", "attachment_crud",
+    "s9_page_numbers", "s3_split_doc_count", "s3_split_byte_size",
+    "s11_flatten_forms", "s9_watermark_grid", "remove_blank_pages",
+    "sanitize_pdf", "security_password", "signature_state",
+    "show_javascript", "timestamp_state", "s11_metadata_update",
+    "f6_filter_rotation", "s7_scale_single_extract", "s6_reverse_extract",
+    "s6_side_stitch_extract", "s6_custom_order_extract",
+    "s8_overlay_extract", "s7_poster_extract", "s9_stamp_extract",
+    "e20_auto_split", "s3_split_count", "s2_split_pages",
+    "s5_split_sections_exact", "f4_page_size_wire",
+]
 GATES = ([n for n in QUERIES if n.startswith("extract_")] + MAP_DOCS_GATES
-         + MAP_ROWS_GATES + PREFIX_SUM_GATES)
+         + MAP_ROWS_GATES + PREFIX_SUM_GATES + PAGEOPS_GATES)
 
 
 @pytest.fixture(scope="module")

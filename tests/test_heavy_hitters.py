@@ -3,6 +3,7 @@ integer-lift collocation miner."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stirling_pdf_spark.operators.textstats import (
@@ -68,6 +69,15 @@ def test_heavy_hitters_null_and_blank_text(spark):
         out = heavy_hitters(_docs(spark, rows, 2), threshold_frac=2,
                             capacity=capacity).collect()
         assert [tuple(r) for r in out] == [("hot", 3, 3 * 1_000_000 // 6)]
+
+
+def test_heavy_hitters_rejects_capacity_below_threshold_frac(spark):
+    # one counter cannot hold a token with count >= N/2 through the
+    # sketch's shrink: these rows would silently answer [] at
+    # capacity=1, so the call raises before any Spark work
+    rows = [(0, None), (1, "   "), (2, "hot hot cold"), (3, "hot warm")]
+    with pytest.raises(ValueError, match="capacity 1 < threshold_frac 2"):
+        heavy_hitters(_docs(spark, rows, 2), threshold_frac=2, capacity=1)
 
 
 def test_collocation_lift_closed_form(spark):

@@ -903,3 +903,71 @@ def test_remove_images_drops_only_media(spark):
     out = remove_images(df).collect()[0]["spans"]
     assert [s["kind"] for s in out] == ["text", "attachment", "bookmark"]
     assert [s["offset"] for s in out] == [0, 1, 2]  # re-packed densely
+
+
+# one doc whose bodies hold the separators: a text run with a tab in its
+# content, an annotation with a tab in its contents slot, and pagemeta
+# labels holding a "|" — every page operator must keep each body (all
+# after the first tab) and each label whole
+_SEP_BODIES = {"text": {"A\tB", "two"},
+               "annotation": {"Text|con\ttents|auth|subj"}}
+_SEP_SPANS = [
+    ("pagemeta", "1|612.0|792.0|0|lab|el", "", 0),
+    ("text", "1|72.0|100.0|11.0|Helv\tA\tB", "", 1),
+    ("annotation", "1|100.0|200.0|50.0|20.0\tText|con\ttents|auth|subj",
+     "", 2),
+    ("pagemeta", "2|612.0|792.0|0|lab|el", "", 3),
+    ("text", "2|72.0|300.0|11.0|Helv\ttwo", "", 4),
+]
+
+
+def _sep_op(name):
+    from stirling_pdf_spark.operators import pageops as P
+
+    return {
+        "rotate": P.rotate_pages_90,
+        "scale": lambda d: P.scale_pages(d, 0.5),
+        "crop": lambda d: P.crop_pages(d, 0.0, 0.0, 612.0, 792.0),
+        "to_single_page": P.to_single_page,
+        "n_up": P.n_up,
+        "poster": P.poster_pages,
+        "split_by_sections": P.split_by_sections,
+        "rearrange_reverse": lambda d: P.rearrange_pages(d, "REVERSE"),
+        "rearrange_custom": lambda d: P.rearrange_pages_custom(d, "2,1"),
+        "merge": P.merge_docs,
+        "overlay_multi": lambda d: P.overlay_docs_multi(
+            d.filter(F.col("doc_id") == "d1"),
+            d.filter(F.col("doc_id") == "d2")),
+    }[name]
+
+
+_SEP_KEEPS_PAGEMETA = ("rotate", "scale", "crop", "rearrange_reverse",
+                       "rearrange_custom", "merge", "overlay_multi")
+
+
+@pytest.mark.parametrize("name", [
+    "rotate", "scale", "crop", "to_single_page", "n_up", "poster",
+    "split_by_sections", "rearrange_reverse", "rearrange_custom", "merge",
+    "overlay_multi"])
+def test_page_ops_keep_bodies_after_first_tab(spark, name):
+    df = spark.createDataFrame(
+        [_mkdoc(d, _SEP_SPANS) for d in ("d1", "d2")], _DOCS_SCHEMA)
+    if name not in ("merge", "overlay_multi"):
+        df = df.filter(F.col("doc_id") == "d1")
+    seen = {k: set() for k in _SEP_BODIES}
+    labels = []
+    for row in _sep_op(name)(df).collect():
+        for s in row["spans"]:
+            if s["kind"] == "pagemeta":
+                labels.append(wire.parse_pagemeta(s["text"])[4])
+                continue
+            head, tab, body = s["text"].partition("\t")
+            assert tab and len(head.split("|")) == 5, s["text"]
+            assert body in _SEP_BODIES[s["kind"]], s["text"]
+            if s["kind"] == "text":
+                run = wire.parse_text_run(s["text"])
+                assert (run.font, run.content) == ("Helv", body)
+            seen[s["kind"]].add(body)
+    assert seen == _SEP_BODIES
+    assert all(lb == "lab|el" for lb in labels), labels
+    assert bool(labels) == (name in _SEP_KEEPS_PAGEMETA)
