@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from stirling_pdf_spark.plans import oracles as O  # noqa: E741
 from stirling_pdf_spark.corpus.spark_synth import (
     docs_from_documents_table,
+    docs_media_from_documents,
     synth_docs_df,
 )
 from stirling_pdf_spark.operators import relational as R
@@ -774,6 +775,7 @@ def q_add_comments(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_redact_from_documents,
     )
     from stirling_pdf_spark.operators.comments import add_comments
+    from stirling_pdf_spark.operators.pageops import wire_body, wire_fields
 
     docs = docs_redact_from_documents(spark, sf_dir)
     out = add_comments(docs, [
@@ -787,23 +789,18 @@ def q_add_comments(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = out.select("doc_id", F.explode("spans").alias("sp")) \
         .select("doc_id", F.col("sp.kind").alias("kind"),
                 F.col("sp.text").alias("text"))
-    head = F.substring_index("text", "\t", 1)
-    body = F.substring_index("text", "\t", -1)
+    page, x, y, w, h = wire_fields(F.col("text"))
+    body = wire_body(F.col("text"))
     return s.filter((F.col("kind") == "annotation")
                     & (F.split_part(body, F.lit("|"), F.lit(1))
                        == "Text")).select(
         "doc_id",
         F.split_part(body, F.lit("|"), F.lit(2)).alias("contents"),
-        F.split_part(head, F.lit("|"), F.lit(1)).cast("long")
-        .alias("page"),
-        F.split_part(head, F.lit("|"), F.lit(2)).cast("double")
-        .alias("x"),
-        F.split_part(head, F.lit("|"), F.lit(3)).cast("double")
-        .alias("y"),
-        F.split_part(head, F.lit("|"), F.lit(4)).cast("double")
-        .alias("w"),
-        F.split_part(head, F.lit("|"), F.lit(5)).cast("double")
-        .alias("h"),
+        page.cast("long").alias("page"),
+        x.cast("double").alias("x"),
+        y.cast("double").alias("y"),
+        w.cast("double").alias("w"),
+        h.cast("double").alias("h"),
         F.split_part(body, F.lit("|"), F.lit(3)).alias("author"),
         F.split_part(body, F.lit("|"), F.lit(4)).alias("subject"),
     )
@@ -914,14 +911,12 @@ def q_e19_blank_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     an extra trailing page carrying one whitespace-only run; the
     detector must flag exactly those pages blank and report per-page
     visible-line/media counts for the rest."""
-    from stirling_pdf_spark.operators.pageops import blank_pages
+    from stirling_pdf_spark.operators.pageops import blank_pages, wire_page
 
     docs = docs_from_documents_table(spark, sf_dir)
     pages = F.transform(
         F.filter("spans", lambda s: s["kind"].isin("text", "media")),
-        lambda s: F.split_part(
-            F.substring_index(s["text"], "\t", 1), F.lit("|"), F.lit(1)
-        ).cast("long"),
+        lambda s: wire_page(s["text"]),
     )
     maxp = F.coalesce(F.array_max(pages), F.lit(0).cast("long"))
     blank_span = F.struct(
@@ -1442,15 +1437,15 @@ def q_remove_blank_pages(spark: SparkSession, sf_dir: str,
     np+1 AND a marker page at np+2; removal must drop exactly the
     blank page and RENUMBER the marker to np+1 — per-page text-span
     counts after removal pin both the drop and the dense renumber."""
-    from stirling_pdf_spark.operators.pageops import remove_blank_pages
+    from stirling_pdf_spark.operators.pageops import (
+        remove_blank_pages, wire_page,
+    )
 
     if docs is None:
         docs = docs_from_documents_table(spark, sf_dir)
     pages = F.transform(
         F.filter("spans", lambda s: s["kind"].isin("text", "media")),
-        lambda s: F.split_part(
-            F.substring_index(s["text"], "\t", 1), F.lit("|"), F.lit(1)
-        ).cast("long"),
+        lambda s: wire_page(s["text"]),
     )
     maxp = F.coalesce(F.array_max(pages), F.lit(0).cast("long"))
     blank_span = F.struct(
@@ -1476,9 +1471,7 @@ def q_remove_blank_pages(spark: SparkSession, sf_dir: str,
     s = F.col("s")
     flat = out.select("doc_id", F.explode("spans").alias("s")).filter(
         s["kind"] == "text")
-    page = F.split_part(F.substring_index(s["text"], "\t", 1),
-                        F.lit("|"), F.lit(1)).cast("long")
-    return flat.groupBy("doc_id", page.alias("page")).agg(
+    return flat.groupBy("doc_id", wire_page(s["text"]).alias("page")).agg(
         F.count("*").cast("long").alias("n_text"))
 
 
@@ -1496,7 +1489,7 @@ def q_sanitize_pdf(spark: SparkSession, sf_dir: str,
         docs_analysis_from_documents,
     )
     from stirling_pdf_spark.operators.pageops import (
-        SANITIZE_INFO_KEYS, sanitize_docs,
+        SANITIZE_INFO_KEYS, sanitize_docs, wire_body, wire_fields,
     )
 
     if docs is None:
@@ -1520,11 +1513,10 @@ def q_sanitize_pdf(spark: SparkSession, sf_dir: str,
     s = F.col("s")
     flat = out.select("doc_id", F.explode("spans").alias("s"))
     meta_key = F.split_part(s["text"], F.lit("|"), F.lit(1))
-    body = F.substring_index(s["text"], "\t", -1)
+    body = wire_body(s["text"])
     ann_subtype = F.split_part(body, F.lit("|"), F.lit(1))
     ann_contents = F.split_part(body, F.lit("|"), F.lit(2))
-    font = F.split_part(F.substring_index(s["text"], "\t", 1),
-                        F.lit("|"), F.lit(5))
+    font = wire_fields(s["text"])[4]
     is_meta = s["kind"] == "meta"
     info_keys = F.array(*[F.lit(k) for k in SANITIZE_INFO_KEYS])
     return flat.groupBy("doc_id").agg(
@@ -2234,21 +2226,7 @@ def q_multimodal_decode_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.operators.multimodal import (
         decode_audio, probe_video)
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     tbl = corrupted_media_table(docs)
     audio = decode_audio(
         tbl.filter(F.col("fmt").isin("bad0", "bad1"))
@@ -2269,21 +2247,7 @@ def q_multimodal_probe_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import mp4_table
     from stirling_pdf_spark.operators.multimodal import probe_video
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return probe_video(mp4_table(docs)).select(
         "media_ref", "major_brand", "timescale", "duration_ms",
         "n_tracks", "n_video", "n_audio", "width", "height")
@@ -2299,21 +2263,7 @@ def q_multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import wav_table
     from stirling_pdf_spark.operators.multimodal import decode_audio
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return decode_audio(wav_table(docs)).select(
         "media_ref", "channels", "sample_rate", "n_frames",
         "duration_ms", "peak", "sum_abs")
@@ -2332,21 +2282,7 @@ def q_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_silence_stats,
     )
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return audio_silence_stats(wav_silence_table(docs)).select(
         "media_ref", "n_samples", "lead_silence", "trail_silence",
         "trimmed_ms", "peak", "energy_abs")
@@ -2937,21 +2873,7 @@ def q_dedup_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dup_pairs, image_ahash,
     )
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     hashes = image_ahash(ahash_image_table(docs))
     return dhash_near_dup_pairs(hashes, max_distance=7,
                                 hash_col="ahash")
@@ -2973,21 +2895,7 @@ def q_dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dup_pairs, image_phash,
     )
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     hashes = image_phash(phash_image_table(docs))
     return dhash_near_dup_pairs(hashes, max_distance=6,
                                 hash_col="phash",
@@ -3419,21 +3327,7 @@ def q_image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dup_pairs, image_phash,
     )
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     from stirling_pdf_spark.runtime.staging import stage as _stage
 
     # the hash table feeds BOTH the pair generation and the component
@@ -3491,21 +3385,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import image_table
     from stirling_pdf_spark.operators.multimodal import decode_images
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return decode_images(image_table(docs))
 
 
@@ -3522,21 +3402,7 @@ def q_image_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_quality_stats,
     )
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     media = image_table(docs).filter(F.col("fmt") != "bmp")
     return image_quality_stats(media)
 
@@ -3553,21 +3419,7 @@ def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import jpeg_table
     from stirling_pdf_spark.operators.multimodal import decode_images
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return decode_images(jpeg_table(docs)).select(
         "media_ref", "width", "height", "px_head")
 
@@ -3581,21 +3433,7 @@ def q_multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import gif_table
     from stirling_pdf_spark.operators.multimodal import decode_images
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return decode_images(gif_table(docs)).select(
         "media_ref", "width", "height", "px_head")
 
@@ -3612,21 +3450,7 @@ def q_multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import tiff_table
     from stirling_pdf_spark.operators.multimodal import decode_images
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return decode_images(tiff_table(docs)).select(
         "media_ref", "width", "height", "px_head")
 
@@ -3641,21 +3465,7 @@ def q_multimodal_tiff_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import tiff_multipage_table
     from stirling_pdf_spark.operators.multimodal import tiff_pages
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return tiff_pages(tiff_multipage_table(docs))
 
 
@@ -3707,21 +3517,7 @@ def q_dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dup_pairs, image_dhash,
     )
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     hashes = image_dhash(dhash_image_table(docs))
     return dhash_near_dup_pairs(hashes, max_distance=7)
 
@@ -4225,21 +4021,7 @@ def q_image_size_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_size_filter,
     )
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     decoded = decode_images(image_table(docs))
     return image_size_filter(
         decoded, min_side=O.IMG_MIN_SIDE, max_aspect=O.IMG_MAX_ASPECT)
@@ -4641,21 +4423,7 @@ def q_png_text_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import png_text_table
     from stirling_pdf_spark.operators.multimodal import png_text_chunks
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return png_text_chunks(png_text_table(docs))
 
 
@@ -4688,21 +4456,7 @@ def q_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import wav_table
     from stirling_pdf_spark.operators.multimodal import audio_energy
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return audio_energy(wav_table(docs)).drop("reason")
 
 
@@ -4715,21 +4469,7 @@ def q_audio_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import wav_table
     from stirling_pdf_spark.operators.multimodal import audio_downsample
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return audio_downsample(wav_table(docs)).drop("reason")
 
 
@@ -4922,21 +4662,7 @@ def q_image_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stirling_pdf_spark.corpus.media import exif_jpeg_table
     from stirling_pdf_spark.operators.multimodal import image_exif_meta
 
-    base = read_table(spark, sf_dir, "documents")
-    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
-    docs = base.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
-        .alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("media").alias("kind"),
-                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
-                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
-                .alias("media_ref"),
-                F.lit(0).alias("offset"),
-            ),
-        ).alias("spans"),
-    )
+    docs = docs_media_from_documents(spark, sf_dir)
     return image_exif_meta(exif_jpeg_table(docs)).drop("reason")
 
 

@@ -309,9 +309,14 @@ def main() -> None:
         docs_from_documents_table,
         synth_docs_df,
     )
-    from stirling_pdf_spark.operators.extract_pipeline import extract_spans
+    from stirling_pdf_spark.corpus.synth import synth_from_text
+    from stirling_pdf_spark.operators.extract_pipeline import (
+        extract_spans,
+        map_rows,
+    )
     from stirling_pdf_spark.runtime.staging import release_staged
     from stirling_pdf_spark.session import get_spark
+    from stirling_pdf_spark.sources.tables import DOCS_SCHEMA
 
     spark = get_spark("bench", cores=CPUS, shuffle_partitions=CPUS)
     timings: dict[str, float] = {}
@@ -359,26 +364,12 @@ def main() -> None:
     skew_path = f"/tmp/bench_skew_{N_DOCS}.parquet"
     t0 = time.time()
 
-    def _skew_gen(batches):
-        import pandas as pd
+    def _skew_doc(i):
+        text = (" ".join(f"m{j}" for j in range(400 * 40 * 8))
+                if i == 0 else f"tiny doc {i} body text line")
+        yield synth_from_text(f"skew-{i}", text)
 
-        from stirling_pdf_spark.corpus.spark_synth import _raw_dicts
-        from stirling_pdf_spark.corpus.synth import synth_from_text
-
-        for pdf in batches:
-            out_i, out_s = [], []
-            for i in pdf["id"]:
-                i = int(i)
-                text = (" ".join(f"m{j}" for j in range(400 * 40 * 8))
-                        if i == 0 else f"tiny doc {i} body text line")
-                did, spans = synth_from_text(f"skew-{i}", text)
-                out_i.append(did)
-                out_s.append(_raw_dicts(spans))
-            yield pd.DataFrame({"doc_id": out_i, "spans": out_s})
-
-    from stirling_pdf_spark.sources.tables import DOCS_SCHEMA
-    spark.range(N_DOCS).repartition(CPUS) \
-        .mapInPandas(_skew_gen, DOCS_SCHEMA) \
+    map_rows(spark.range(N_DOCS).repartition(CPUS), _skew_doc, DOCS_SCHEMA) \
         .write.mode("overwrite").parquet(skew_path)
     timings["synth_skew_corpus"] = round(time.time() - t0, 3)
     skew_docs = spark.read.parquet(skew_path)

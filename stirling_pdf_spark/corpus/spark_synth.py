@@ -1,61 +1,26 @@
 """Distributed corpus materialization.
 
-Two sources for the interleaved-docs table (both deterministic, no
+Sources for the interleaved-docs table (all deterministic, no
 external data):
   * ``synth_docs_df`` — archetype corpus from doc indices
-    (spark.range -> mapInArrow(generator)); generation is distributed,
+    (spark.range -> map_rows(synth_doc)); generation is distributed,
     so bench corpora never bottleneck on the driver;
-  * ``docs_from_documents_table`` — derived 1:1 from the driver's
-    read-only ``documents`` parquet via corpus.synth.synth_from_text.
+  * ``docs_from_documents_table`` and the other ``docs_*_from_documents``
+    — derived 1:1 from the driver's read-only ``documents`` parquet
+    (``docs_media_from_documents`` as one JVM projection, the others
+    via a corpus.synth derivation such as synth_from_text).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..kernel import wire
 from ..kernel.model import TextRun
-from ..operators.extract_pipeline import map_rows, pylist, spread
+from ..operators.extract_pipeline import map_rows, spread
 from ..sources.tables import DOCS_SCHEMA, read_table
 from .synth import synth_doc, synth_from_text
-
-_RAW_FIELDS = ("kind", "text", "media_ref", "offset")
-
-
-def _raw_dicts(spans) -> list[dict]:
-    return [dict(zip(_RAW_FIELDS, s)) for s in spans]
-
-
-def _spans_batch(ids: list[str], span_lists: list[list[tuple]]):
-    """Columnar Arrow encode of (doc_id, spans) rows — four flat
-    arrays + one offsets array instead of a Python dict per span (the
-    dict-per-span pandas path was the dominant cost of corpus
-    materialization, not the synthesis itself)."""
-    import pyarrow as pa
-
-    kinds: list[str] = []
-    texts: list[str] = []
-    refs: list[str] = []
-    offs: list[int] = []
-    offsets = [0]
-    for spans in span_lists:
-        for k, t, m, o in spans:
-            kinds.append(k)
-            texts.append(t)
-            refs.append(m)
-            offs.append(o)
-        offsets.append(len(kinds))
-    struct = pa.StructArray.from_arrays(
-        [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
-         pa.array(refs, pa.string()), pa.array(offs, pa.int32())],
-        names=list(_RAW_FIELDS),
-    )
-    return pa.RecordBatch.from_arrays(
-        [pa.array(ids, pa.string()),
-         pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)],
-        names=["doc_id", "spans"],
-    )
-
 
 def synth_docs_df(
     spark: SparkSession,
@@ -67,16 +32,12 @@ def synth_docs_df(
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
 
-    def gen(batches):
-        for rb in batches:
-            rows = [synth_doc(int(i), seed, mega_pages)
-                    for i in pylist(rb.column(0))]
-            yield _spans_batch([r[0] for r in rows], [r[2] for r in rows])
+    def gen(i):
+        doc_id, _, spans = synth_doc(i, seed, mega_pages)
+        yield doc_id, spans
 
-    return (
-        spark.range(0, n_docs, numPartitions=num_partitions)
-        .mapInArrow(gen, DOCS_SCHEMA)
-    )
+    return map_rows(spark.range(0, n_docs, numPartitions=num_partitions),
+                    gen, DOCS_SCHEMA)
 
 
 def twocol_from_text(doc_id: str, text: str):
@@ -124,6 +85,27 @@ def _derive_docs(spark: SparkSession, sf_dir: str, derive) -> DataFrame:
         yield derive(f"doc-{doc_id}", text or "")
 
     return map_rows(docs, gen, DOCS_SCHEMA)
+
+
+def docs_media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One media span per ``documents`` row, ref
+    ``media-<first 8 hex of sha256(text)>``: the raw docs of every
+    media-decode, audio, image-hash and image-metadata gate, as one JVM
+    projection (no Python stage)."""
+    sha = F.lower(F.sha2(F.col("text").cast("binary"), 256))
+    return read_table(spark, sf_dir, "documents").select(
+        F.concat(F.lit("doc-"), F.col("doc_id").cast("string"))
+        .alias("doc_id"),
+        F.array(
+            F.struct(
+                F.lit("media").alias("kind"),
+                F.lit("1|100.0|650.0|200.0|120.0").alias("text"),
+                F.concat(F.lit("media-"), F.substring(sha, 1, 8))
+                .alias("media_ref"),
+                F.lit(0).alias("offset"),
+            ),
+        ).alias("spans"),
+    )
 
 
 def docs_twocol_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

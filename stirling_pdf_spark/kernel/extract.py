@@ -263,7 +263,7 @@ def _extract_each(spans: pa.ListArray, chunk_budget) -> pa.ListArray:
     for doc in spans.to_pylist():
         raw = [(s["kind"], s["text"], s["media_ref"], s["offset"])
                for s in doc or ()]
-        out.append([s._asdict() for s in extract_doc(raw, chunk_budget)])
+        out.append(extract_doc(raw, chunk_budget))
     return pa.array(out, pa.list_(SPAN_TYPE))
 
 

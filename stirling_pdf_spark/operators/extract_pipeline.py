@@ -21,8 +21,9 @@ Shape (SURVEY.md §3.1 "Spark equivalent"), one plan every doc takes:
 The stage body lays out every doc of a slice on Arrow/numpy columns; a
 doc the batch kernel does not take (html, rules, annotations, form
 fields, page state, unknown kinds, or a header Arrow would not parse
-as Python does) is decoded, run through ``extract_doc`` and encoded per
-doc (``_extract_routed``), and its error names its doc_id.
+as Python does) is decoded and run through ``extract_doc``, and the
+slice's routed outputs are encoded by one ``pa.array`` call
+(``_extract_routed``); its error names its doc_id.
 ``runtime.checkpoint`` writes the result and commits its lineage.
 
 Why salting: one 1500-page PDF in a hash-partitioned batch of 1-page
@@ -50,7 +51,7 @@ partition count.
 
 ``map_rows`` is the one row-wise Arrow stage every other per-row or
 per-group Python operator runs through (media decoders, perceptual
-hashes, compare, NFC, file/WARC/EML sources, corpus derivation, the
+hashes, compare, NFC, file/WARC/EML sources, corpus synthesis, the
 HTML sanitizer, boilerplate strip and sentence chunker): read each
 column once per batch, call the operator's per-row function, build the
 output batch column by column. A grouped operator (image->PDF, WARC
@@ -128,21 +129,6 @@ def _decode_span_lists(col: "pa.Array") -> list[list[tuple]]:
     offs = pylist(lst.offsets)
     base = offs[0]
     return [flat[offs[i] - base:offs[i + 1] - base] for i in range(len(offs) - 1)]
-
-
-def _encode_span_lists(span_lists: list[list[tuple]]) -> "pa.ListArray":
-    """Columnar encode of the kernel output back to Arrow."""
-    kinds, texts, refs, orders, offs = [], [], [], [], [0]
-    for spans in span_lists:
-        for k, t, m, o in spans:
-            kinds.append(k); texts.append(t); refs.append(m); orders.append(o)
-        offs.append(len(kinds))
-    struct = pa.StructArray.from_arrays(
-        [pa.array(kinds, pa.string()), pa.array(texts, pa.string()),
-         pa.array(refs, pa.string()), pa.array(orders, pa.int32())],
-        names=["kind", "text", "media_ref", "order"],
-    )
-    return pa.ListArray.from_arrays(pa.array(offs, pa.int32()), struct)
 
 
 def _read_column(col: "pa.Array") -> list:
@@ -263,7 +249,7 @@ def _extract_routed(ids: "pa.Array", spans: "pa.ListArray", chunk_budget):
                 out.append(extract_doc(raw, chunk_budget=chunk_budget))
             except Exception as exc:
                 raise ValueError(f"doc_id {ids[i].as_py()!r}: {exc!r}") from exc
-        return _encode_span_lists(out)
+        return pa.array(out, pa.list_(SPAN_TYPE))
     return run
 
 

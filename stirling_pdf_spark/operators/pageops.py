@@ -153,18 +153,20 @@ def _merge_sort_keys(comparator: str,
                       follow.
 
     Java's sort is stable on input order; here every comparator
-    tie-breaks deterministically by (numeric doc_id, doc_id).
+    tie-breaks deterministically by (numeric doc_id, doc_id). A doc_id
+    with no digit has a null number and a date that is not a number
+    counts as absent, so neither fails the job.
 
     Returns PLAIN value columns (projectable); the direction of key 0
     (date DESC, title NULLS LAST) is re-applied by ``merge_order``."""
     if comparator not in MERGE_COMPARATORS:
         raise ValueError(
             f"unknown comparator {comparator!r}; one of {MERGE_COMPARATORS}")
-    num = F.regexp_extract("doc_id", "([0-9]+)", 1).cast("long")
+    num = F.regexp_extract("doc_id", "([0-9]+)", 1).try_cast("long")
     tie = [num, F.col("doc_id")]
     if comparator in ("byDateModified", "byDateCreated"):
-        ts = F.coalesce(_raw_meta_value("modified").cast("long"),
-                        _raw_meta_value("created").cast("long"), F.lit(0))
+        ts = F.coalesce(_raw_meta_value("modified").try_cast("long"),
+                        _raw_meta_value("created").try_cast("long"), F.lit(0))
         return [ts] + tie
     if comparator == "byPDFTitle":
         return [F.lower(_raw_meta_value("title"))] + tie

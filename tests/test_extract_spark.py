@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stirling_pdf_spark.corpus.spark_synth import synth_docs_df
-from stirling_pdf_spark.corpus.synth import synth_corpus
+from stirling_pdf_spark.corpus.synth import synth_corpus, synth_doc
 from stirling_pdf_spark.kernel.extract import extract_doc
 from stirling_pdf_spark.operators.extract_pipeline import extract_spans, spread
 
@@ -40,6 +40,16 @@ def spark_result(spark):
         ]
         for r in rows
     }
+
+
+def test_synth_docs_df_is_synth_doc(spark):
+    """The distributed generator yields exactly ``synth_doc``'s doc_id
+    and raw spans per index, in index order."""
+    rows = synth_docs_df(spark, 12, seed=3, mega_pages=(5, 8),
+                         num_partitions=3).collect()
+    assert [(r["doc_id"], [tuple(s) for s in r["spans"]]) for r in rows] == [
+        (doc_id, spans) for doc_id, _, spans in
+        (synth_doc(i, 3, (5, 8)) for i in range(12))]
 
 
 def test_all_docs_present(spark_result):

@@ -453,6 +453,31 @@ def test_merge_docs_filename_order_and_page_shift(spark):
     assert sorted(pages) == [1, 2, 3]
 
 
+@pytest.mark.parametrize("comparator,order", [
+    ("byFileName", ["a1", "b1"]),
+    ("byDateModified", ["b1", "a1"]),
+])
+def test_merge_docs_ids_without_digits(spark, comparator, order):
+    """A doc_id with no digit has no numeric tie-break key and a date
+    that is not a number counts as absent (t = 0, sorted last); neither
+    fails the merge."""
+    from stirling_pdf_spark.operators.pageops import merge_docs
+    from stirling_pdf_spark.kernel.model import TextRun
+
+    def mk(doc_id, modified):
+        run = TextRun(1, 72.0, 72.0, 11.0, "F", f"{doc_id}1")
+        return (doc_id, [("meta", f"modified|{modified}", "", 0),
+                         ("text", wire.encode_text_run(run), "", 1)])
+
+    df = spark.createDataFrame(
+        [mk("a", "yesterday"), mk("b", "5")],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    out = extract_spans(merge_docs(df, comparator=comparator)).collect()
+    assert [s["text"] for s in out[0]["spans"] if s["kind"] == "text"] == order
+
+
 def test_overlay_docs_page_wise(spark):
     from stirling_pdf_spark.operators.pageops import overlay_docs
     from stirling_pdf_spark.kernel.model import TextRun
