@@ -375,8 +375,7 @@ def main() -> None:
     skew_docs = spark.read.parquet(skew_path)
 
     def _skew_extract():
-        extract_spans(skew_docs, salt_threshold=500,
-                      pages_per_bucket=8).count()
+        extract_spans(skew_docs, salt_threshold=500).count()
 
     for _ in range(ROUNDS):
         best_of("extract_skew", _skew_extract)

@@ -64,15 +64,11 @@ from .model import (
 )
 
 
-def extract_doc(raw_spans, chunk_budget: int | None = MAX_CHUNKS_PER_DOC) -> list[Span]:
+def extract_doc(raw_spans, chunk_budget: int = MAX_CHUNKS_PER_DOC) -> list[Span]:
     """raw_spans: iterable of (kind, text, media_ref, offset) tuples (or
     objects indexable the same way). Returns extraction-result spans in
-    reading order; ``order`` == list index.
-
-    ``chunk_budget=None`` disables the 2000-text-chunk cap — used by the
-    salted mega-doc path, where the cap is re-applied globally at
-    reassembly (operators/extract_pipeline.py) so that
-    salted == unsalted == oracle."""
+    reading order; ``order`` == list index; at most ``chunk_budget``
+    text chunks."""
     ordered = sorted(raw_spans, key=lambda s: s[3])
 
     runs_by_page: dict[int, list[TextRun]] = defaultdict(list)
@@ -116,7 +112,6 @@ def extract_doc(raw_spans, chunk_budget: int | None = MAX_CHUNKS_PER_DOC) -> lis
         # unknown kinds are ignored (forward compatibility)
 
     out: list[Span] = []
-    budget = float("inf") if chunk_budget is None else chunk_budget
 
     # document metadata first (E15: Info-dict key/value pairs precede
     # content, PdfJsonConversionService.java:2781-2810), then AcroForm
@@ -134,11 +129,11 @@ def extract_doc(raw_spans, chunk_budget: int | None = MAX_CHUNKS_PER_DOC) -> lis
         # then text lines, reading order (zOrder 1_000_000 + i)
         lines = cluster_lines(runs_by_page.get(page, []))
         for line in reading_order(lines):
-            if budget <= 0:
+            if chunk_budget <= 0:
                 break
             text = line.text()[:MAX_CHARS_PER_CHUNK]
             out.append(Span("text", text, "", len(out)))
-            budget -= 1
+            chunk_budget -= 1
         # lattice tables (E14): derived from ruled lines, one span per
         # rule component in (top, left) order, emitted after the page's
         # text (unbudgeted — summary objects, not chunks)
@@ -155,10 +150,10 @@ def extract_doc(raw_spans, chunk_budget: int | None = MAX_CHUNKS_PER_DOC) -> lis
         blocks = (extract_main_blocks(html) if strip_boiler
                   else extract_all_blocks(html))
         for block in blocks:
-            if budget <= 0:
+            if chunk_budget <= 0:
                 break
             out.append(Span("text", block[:MAX_CHARS_PER_CHUNK], "", len(out)))
-            budget -= 1
+            chunk_budget -= 1
 
     # bookmarks: outline-tree walk order == raw offset order (E23,
     # EditTableOfContentsController.java:56-134); depth stays encoded in
@@ -175,14 +170,17 @@ def extract_doc(raw_spans, chunk_budget: int | None = MAX_CHUNKS_PER_DOC) -> lis
 
 # Reading-order segments: the one rule for splitting a document so that
 # extract_doc over the whole equals the concatenation, in ascending
-# segment order, of extract_doc(chunk_budget=None) over each segment's
-# raw spans, with the text-chunk budget then applied across the whole
-# (the salted mega-doc path, operators/extract_pipeline.py). It follows
-# the output order above: metadata; AcroForm fields, which open segment
-# 0; page-scoped kinds by wire page // pages_per_bucket (a kind's page
-# is the first "|" field of its text); html blocks; bookmarks;
-# attachments. Any other kind falls in segment 0.
+# segment order, of extract_doc over each segment's raw spans, with the
+# text-chunk budget then applied again across the whole (the salted
+# mega-doc path, operators/extract_pipeline.py). A segment's text chunks
+# are a run of the document's, so a chunk past a segment's budget is
+# past the document's too. It follows the output order above: metadata;
+# AcroForm fields, which open segment 0; page-scoped kinds by wire
+# page // PAGES_PER_BUCKET (a kind's page is the first "|" field of its
+# text); html blocks; bookmarks; attachments. Any other kind falls in
+# segment 0.
 PAGE_KINDS = ("text", "media", "rule", "pagemeta", "annotation")
+PAGES_PER_BUCKET = 100
 FIXED_SEGMENTS = {
     "meta": -1,
     "html": (1 << 30) - 1,
@@ -192,10 +190,10 @@ FIXED_SEGMENTS = {
 }
 
 
-def segment_of(kind: str, text: str, pages_per_bucket: int) -> int:
+def segment_of(kind: str, text: str) -> int:
     """Reading-order segment of one raw span (see PAGE_KINDS)."""
     if kind in PAGE_KINDS:
-        return int(text.split("|", 1)[0]) // pages_per_bucket
+        return int(text.split("|", 1)[0]) // PAGES_PER_BUCKET
     return FIXED_SEGMENTS.get(kind, 0)
 
 
@@ -219,7 +217,7 @@ class _Unbatchable(Exception):
 
 
 def extract_docs(spans: pa.ListArray,
-                 chunk_budget: int | None = MAX_CHUNKS_PER_DOC,
+                 chunk_budget: int = MAX_CHUNKS_PER_DOC,
                  per_doc=None) -> pa.ListArray:
     """``[extract_doc(doc, chunk_budget) for doc in spans]`` as one
     ``list<SPAN_TYPE>`` array. ``spans`` is a list array of raw span
@@ -340,12 +338,11 @@ def _layout(spans: pa.ListArray, chunk_budget) -> pa.ListArray:
         np.concatenate([p[i] for p in pieces]) for i in range(6))
     perm = np.lexsort((seq, sub, opage, section, odoc))
     odoc, kind = odoc[perm], kind[perm]
-    if chunk_budget is not None:
-        is_line = kind == _TEXT
-        seen = np.cumsum(is_line)
-        start = np.searchsorted(odoc, odoc)  # each doc's first output
-        keep = ~is_line | (seen - seen[start] + is_line[start] <= chunk_budget)
-        perm, odoc, kind = perm[keep], odoc[keep], kind[keep]
+    is_line = kind == _TEXT
+    seen = np.cumsum(is_line)
+    start = np.searchsorted(odoc, odoc)  # each doc's first output
+    keep = ~is_line | (seen - seen[start] + is_line[start] <= chunk_budget)
+    perm, odoc, kind = perm[keep], odoc[keep], kind[keep]
     offsets = np.zeros(n + 1, np.int32)
     np.cumsum(np.bincount(odoc, minlength=n), out=offsets[1:])
     order = np.arange(len(perm), dtype=np.int32) - offsets[odoc]

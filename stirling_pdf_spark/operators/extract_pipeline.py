@@ -10,8 +10,8 @@ Shape (SURVEY.md §3.1 "Spark equivalent"), one plan every doc takes:
               -> spread(doc_id, bucket)
               -> mapInArrow(_extract_sub: the rows of each batch in
                    slices of at most DEFAULT_SALT_THRESHOLD spans, cut at
-                   row boundaries, through kernel.extract.extract_docs;
-                   unsalted rows budgeted, segment rows unbudgeted)
+                   row boundaries, through kernel.extract.extract_docs,
+                   every row under the 2000-chunk budget)
               -> repartition(doc_id)
               -> mapInArrow(_finish_docs: unsalted rows pass through;
                    a salted doc's segment rows, from any batch of the
@@ -33,9 +33,12 @@ straggler partition dominates the stage, so mega-docs are split into
 page-range sub-documents (salt = segment), extracted independently
 (page-local semantics: line clustering and column layout never cross
 pages), and reassembled with the global 2000-text-chunk budget
-re-applied — bit-identical to the unsalted kernel output. The segment
-rule has one owner, ``kernel.extract.segment_of``; the keying below is
-built from its declaration and computes each span's segment once.
+re-applied — bit-identical to the unsalted kernel output. A segment is
+extracted under the same budget as a whole doc: its text chunks are a
+run of the doc's, so the ones the segment's budget drops are past the
+doc's 2000th too. The segment rule has one owner,
+``kernel.extract.segment_of``; the keying below is built from its
+declaration and computes each span's segment once.
 
 All per-document work happens inside Arrow stages (no per-row or
 per-group Spark Python UDFs: each Python call takes a whole Arrow
@@ -75,6 +78,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..kernel import extract as kernel_extract
 from ..kernel.extract import (
     FIXED_SEGMENTS, PAGE_KINDS, SPAN_TYPE, extract_doc, extract_docs)
 from ..kernel.model import MAX_CHUNKS_PER_DOC
@@ -100,7 +104,6 @@ _SUB_SCHEMA = T.StructType([
 # spans-per-doc threshold above which a doc takes the salted path; a
 # mega-doc per FIXTURES.md has >= 3000 raw spans, normal docs < 1200
 DEFAULT_SALT_THRESHOLD = 4000
-PAGES_PER_BUCKET = 100
 
 
 def pylist(col: "pa.Array | pa.ChunkedArray") -> list:
@@ -186,52 +189,51 @@ def map_docs(docs: DataFrame, fn, schema: T.StructType) -> DataFrame:
     return map_rows(spread(docs, "doc_id").select("doc_id", "spans"), fn, schema)
 
 
-def _tag_sql(pages_per_bucket: int) -> str:
-    """The keying's fields of raw span ``s`` as Spark SQL: ``seg``, its
-    ``kernel.extract.segment_of``, and ``ok``, whether its page field
-    reads as the same number here and in segment_of's int(), i.e. casts
-    to BIGINT and back to itself. int() also reads "1_50", " 150",
-    "+150", non-ASCII digits and values past int64, which the cast does
-    not; a doc with such a field is not salted, and the batch kernel's
-    header parse sends it to extract_doc."""
+def _segment_sql() -> str:
+    """``kernel.extract.segment_of`` of raw span ``s`` as Spark SQL, or
+    NULL where its page field would not read here as segment_of's int()
+    reads it, i.e. does not cast to BIGINT and back to itself. int()
+    also reads "1_50", " 150", "+150", non-ASCII digits and values past
+    int64, which the cast does not; a doc with such a field is not
+    salted, and the batch kernel's header parse sends it to
+    extract_doc. Reads ``PAGES_PER_BUCKET`` at call time."""
     is_page = "s.kind IN ({})".format(", ".join(f"'{k}'" for k in PAGE_KINDS))
     text = "substring_index(s.text, '|', 1)"
     page = f"TRY_CAST({text} AS BIGINT)"
     fixed = " ".join(f"WHEN s.kind = '{k}' THEN {seg}"
                      for k, seg in FIXED_SEGMENTS.items())
-    return (f"CASE WHEN {is_page} THEN floor({page} / {pages_per_bucket}) "
-            f"{fixed} ELSE 0 END AS seg, CASE WHEN {is_page} "
-            f"THEN COALESCE(CAST({page} AS STRING) = {text}, false) ELSE true END AS ok")
+    return (f"CASE WHEN {is_page} THEN IF(CAST({page} AS STRING) = {text}, "
+            f"floor({page} / {kernel_extract.PAGES_PER_BUCKET}), NULL) "
+            f"{fixed} ELSE 0 END")
 
 
-def _key(docs: DataFrame, salt_threshold: int, pages_per_bucket: int) -> DataFrame:
+def _key(docs: DataFrame, salt_threshold: int) -> DataFrame:
     """docs -> (doc_id, bucket, salted, spans): a doc at or under the
-    threshold, or with a span that is not ``ok`` (``_tag_sql``), stays
-    one unsalted row in bucket 0; any other doc becomes one salted row
-    per reading-order segment it has spans in. One SQL expression, so
-    planning costs no per-expression driver round trips; ``tagged``
-    (each span with its segment and page check, computed once) is bound
-    as a lambda variable."""
-    tagged = (f"array(transform(spans, s -> struct({_tag_sql(pages_per_bucket)}, "
-              "s AS span)))")
-    segments = ("transform(array_distinct(transform(tagged, x -> x.seg)), "
-                "b -> struct(b AS bucket, true AS salted, "
-                "transform(filter(tagged, x -> x.seg = b), x -> x.span) AS spans))")
+    threshold, or with a span whose segment is NULL (``_segment_sql``),
+    stays one unsalted row in bucket 0; any other doc becomes one salted
+    row per reading-order segment it has spans in. One SQL expression,
+    so planning costs no per-expression driver round trips; ``segs``
+    (each span's segment, computed once) is bound as a lambda variable,
+    and segment ``b`` keeps the spans at the positions where it is
+    ``b``."""
+    segs = f"array(transform(spans, s -> {_segment_sql()}))"
+    segments = ("transform(array_distinct(segs), b -> struct(b AS bucket, "
+                "true AS salted, filter(spans, (s, i) -> segs[i] = b) AS spans))")
     whole = "array(struct(CAST(0 AS BIGINT) AS bucket, false AS salted, spans AS spans))"
     return docs.selectExpr(
         "doc_id",
         f"inline(CASE WHEN size(spans) > {salt_threshold} THEN flatten(transform("
-        f"{tagged}, tagged -> IF(forall(tagged, x -> x.ok), {segments}, {whole}))) "
+        f"{segs}, segs -> IF(forall(segs, x -> x IS NOT NULL), {segments}, {whole}))) "
         f"ELSE {whole} END)")
 
 
-def _slices(lengths: list[int], salted: list[bool]):
+def _slices(lengths: list[int]):
     """(start, stop) row ranges of one batch for the kernel: consecutive
-    rows with the same salted flag and at most DEFAULT_SALT_THRESHOLD
-    spans in all, a larger row alone."""
+    rows with at most DEFAULT_SALT_THRESHOLD spans in all, a larger row
+    alone."""
     start, size = 0, 0
-    for i, (n, s) in enumerate(zip(lengths, salted)):
-        if i > start and (s != salted[start] or size + n > DEFAULT_SALT_THRESHOLD):
+    for i, n in enumerate(lengths):
+        if i > start and size + n > DEFAULT_SALT_THRESHOLD:
             yield start, i
             start, size = i, 0
         size += n
@@ -239,14 +241,14 @@ def _slices(lengths: list[int], salted: list[bool]):
         yield start, len(lengths)
 
 
-def _extract_routed(ids: "pa.Array", spans: "pa.ListArray", chunk_budget):
+def _extract_routed(ids: "pa.Array", spans: "pa.ListArray"):
     """``per_doc`` of ``extract_docs``: the docs at the given positions
     through ``extract_doc``, an error naming the doc_id."""
     def run(docs):
         out = []
         for i, raw in zip(docs.tolist(), _decode_span_lists(spans.take(docs))):
             try:
-                out.append(extract_doc(raw, chunk_budget=chunk_budget))
+                out.append(extract_doc(raw))
             except Exception as exc:
                 raise ValueError(f"doc_id {ids[i].as_py()!r}: {exc!r}") from exc
         return pa.array(out, pa.list_(SPAN_TYPE))
@@ -254,22 +256,18 @@ def _extract_routed(ids: "pa.Array", spans: "pa.ListArray", chunk_budget):
 
 
 def _extract_sub(batches):
-    # salted rows are extracted unbudgeted: the 2000-chunk cap is global
-    # per doc, applied at reassembly (see module docstring)
     for rb in batches:
         names = rb.schema.names
         ids = rb.column(names.index("doc_id"))
-        salted = rb.column(names.index("salted"))
         spans = rb.column(names.index("spans"))
-        flags = pylist(salted)
         out = [pa.array([], pa.list_(SPAN_TYPE))]
-        for a, b in _slices(pylist(pc.list_value_length(spans).fill_null(0)), flags):
-            budget = None if flags[a] else MAX_CHUNKS_PER_DOC
+        for a, b in _slices(pylist(pc.list_value_length(spans).fill_null(0))):
             part = spans.slice(a, b - a)
-            out.append(extract_docs(part, budget, _extract_routed(
-                ids.slice(a, b - a), part, budget)))
+            out.append(extract_docs(part, per_doc=_extract_routed(
+                ids.slice(a, b - a), part)))
         yield pa.RecordBatch.from_arrays(
-            [ids, rb.column(names.index("bucket")), salted, pa.concat_arrays(out)],
+            [ids, rb.column(names.index("bucket")),
+             rb.column(names.index("salted")), pa.concat_arrays(out)],
             names=["doc_id", "bucket", "salted", "spans"],
         )
 
@@ -318,7 +316,6 @@ def _reassemble(group: pa.Table) -> pa.Table:
 def extract_spans(
     docs: DataFrame,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
-    pages_per_bucket: int = PAGES_PER_BUCKET,
 ) -> DataFrame:
     """docs(doc_id, spans: array<raw span struct>) ->
     spans_out(doc_id, spans: array<(kind,text,media_ref,order)>).
@@ -326,7 +323,7 @@ def extract_spans(
     bucket) for the extraction; the regroup's ``repartition("doc_id")``
     has no count on purpose: that stage is cheap, and AQE sizes it."""
     return (
-        spread(_key(docs, salt_threshold, pages_per_bucket), "doc_id", "bucket")
+        spread(_key(docs, salt_threshold), "doc_id", "bucket")
         .mapInArrow(_extract_sub, _SUB_SCHEMA)
         .repartition("doc_id")
         .mapInArrow(_finish_docs, SPANS_OUT_SCHEMA)

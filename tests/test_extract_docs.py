@@ -10,6 +10,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from stirling_pdf_spark.corpus.synth import synth_corpus
+from stirling_pdf_spark.kernel import extract as kx
 from stirling_pdf_spark.kernel import wire
 from stirling_pdf_spark.kernel.extract import extract_doc, extract_docs, segment_of
 from stirling_pdf_spark.kernel.model import MAX_CHUNKS_PER_DOC, MediaDraw, TextRun
@@ -103,7 +104,7 @@ def _docs(other_kinds: bool):
                     min_size=0, max_size=6)
 
 
-_BUDGETS = st.sampled_from((MAX_CHUNKS_PER_DOC, None, 0, 1, 3))
+_BUDGETS = st.sampled_from((MAX_CHUNKS_PER_DOC, 0, 1, 3))
 
 
 @settings(max_examples=300, deadline=None)
@@ -207,7 +208,7 @@ def test_long_multibyte_line_is_cut_at_500_chars():
     run = TextRun(1, 72.0, 72.0, 11.0, "F", "中\U0001F600" * 300)
     docs = [[("text", wire.encode_text_run(run), "", 0),
              ("text", wire.encode_text_run(run._replace(x=72.0 + 3300.0)), "", 1)]]
-    _check(docs, None)
+    _check(docs, MAX_CHUNKS_PER_DOC)
     assert len(_rows(extract_docs(_array(docs)))[0][0][1]) == 500
 
 
@@ -220,8 +221,7 @@ def test_chunk_budget_boundary_with_html_after():
     tail = ("bookmark", "0|end", "", len(lines) + 1)
     docs = [lines + [meta, tail], lines[:MAX_CHUNKS_PER_DOC - 1] + [html, tail],
             lines + [html]]
-    for budget in (MAX_CHUNKS_PER_DOC, None):
-        _check(docs, budget)
+    _check(docs, MAX_CHUNKS_PER_DOC)
 
 
 @pytest.mark.parametrize("field", range(4))
@@ -236,7 +236,7 @@ def test_non_canonical_numerals(field, numeral):
 
 @pytest.mark.parametrize("mega_pages,n_docs,budget", [
     ((300, 400), 700, MAX_CHUNKS_PER_DOC),
-    ((1000, 1500), 250, None),
+    ((1000, 1500), 250, MAX_CHUNKS_PER_DOC),
 ])
 def test_seeded_corpora(mega_pages, n_docs, budget):
     docs = [spans for _, _, spans in synth_corpus(n_docs, seed=11, mega_pages=mega_pages)]
@@ -254,7 +254,7 @@ def _keyed_batch(docs, threshold):
             continue
         segments: dict[int, list] = {}
         for s in spans:
-            segments.setdefault(segment_of(s[0], s[1], ep.PAGES_PER_BUCKET), []).append(s)
+            segments.setdefault(segment_of(s[0], s[1]), []).append(s)
         rows += [(doc_id, b, True, segments[b]) for b in sorted(segments)]
     return pa.RecordBatch.from_arrays(
         [pa.array([r[0] for r in rows]), pa.array([r[1] for r in rows], pa.int64()),
@@ -272,8 +272,7 @@ def test_extract_sub_mixes_routed_batch_and_salted_rows():
     (out,) = ep._extract_sub([batch])
     assert out.column("doc_id").equals(batch.column("doc_id"))
     assert out.column("bucket").equals(batch.column("bucket"))
-    want = [[tuple(s) for s in extract_doc(sp, None if salt else MAX_CHUNKS_PER_DOC)]
-            for _, _, salt, sp in rows]
+    want = [[tuple(s) for s in extract_doc(sp)] for _, _, _, sp in rows]
     assert _rows(out.column("spans")) == want
 
 
@@ -285,9 +284,10 @@ def test_extract_sub_error_names_the_doc():
         list(ep._extract_sub([batch]))
 
 
-def test_key_rows_follow_segment_of(spark):
+def test_key_rows_follow_segment_of(spark, monkeypatch):
     """The SQL keying puts each span where kernel.extract.segment_of
     does; a doc with a page that does not parse stays one unsalted row."""
+    monkeypatch.setattr(kx, "PAGES_PER_BUCKET", 7)
     spans = [("meta", "k|v", "", 0), ("text", "3|1.0|2.0|3.0|F\ta", "", 1),
              ("media", "15|1|2|3|4", "m", 2), ("annotation", "8|1|2|3|4\tx", "", 3),
              ("html", "<p>h</p>", "", 5),
@@ -301,17 +301,17 @@ def test_key_rows_follow_segment_of(spark):
                                    "doc_id string, spans array<struct<kind:string,"
                                    "text:string,media_ref:string,offset:int>>")
         return sorted((r["bucket"], r["salted"], [tuple(s) for s in r["spans"]])
-                      for r in ep._key(df, threshold, 7).collect())
+                      for r in ep._key(df, threshold).collect())
 
     want: dict[int, list] = {}
     for s in spans:
-        want.setdefault(segment_of(s[0], s[1], 7), []).append(s)
+        want.setdefault(segment_of(s[0], s[1]), []).append(s)
     assert keyed(spans, 5) == [(b, True, ss) for b, ss in sorted(want.items())]
     assert keyed(spans, len(spans)) == [(0, False, spans)]
     assert keyed(spans + [bad], 5) == [(0, False, spans + [bad])]
 
 
-def test_malformed_span_names_the_doc_on_both_routes(spark):
+def test_malformed_span_names_the_doc_on_both_routes(spark, monkeypatch):
     """One bad text header fails the job with the doc_id in the error,
     whether its doc takes the unsalted or the salted route. A page that
     does not parse keeps a large doc unsalted, so the salted case has a
@@ -323,10 +323,10 @@ def test_malformed_span_names_the_doc_on_both_routes(spark):
         return doc_id, [dict(zip(FIELDS, s)) for s in spans]
     schema = ("doc_id string, spans array<struct<kind:string,text:string,"
               "media_ref:string,offset:int>>")
+    monkeypatch.setattr(kx, "PAGES_PER_BUCKET", 10)
     for doc_id, pages, header in (("doc-small-bad", 3, "seven|1.0|bad-y|11.0|F"),
                                   ("doc-unsalted-bad", 40, "seven|1.0|bad-y|11.0|F"),
                                   ("doc-salted-bad", 40, "7|1.0|bad-y|11.0|F")):
         df = spark.createDataFrame([doc(doc_id, pages, header), ("doc-ok", [])], schema)
         with pytest.raises(Exception, match=doc_id):
-            ep.extract_spans(df, salt_threshold=20,
-                             pages_per_bucket=10).collect()
+            ep.extract_spans(df, salt_threshold=20).collect()

@@ -1,4 +1,7 @@
-"""Every ``extract_*`` gate of the query registry, every gate whose
+"""Every ``extract_*`` gate of the query registry, every other gate whose
+query runs ``extract_spans`` (full text, redaction, form fields,
+streaming resume, lattice tables, classification, metadata, image
+dedup, has-text, interleaved records, media captions), every gate whose
 query runs a ``map_docs`` stage (exports, tables, search, elements,
 comments, edit-text) plus the text->HTML autolink gate, every gate over another ``map_rows`` stage (media
 decoders, perceptual hashes, compare, NFC, EML, WARC, file sources,
@@ -30,6 +33,12 @@ _spec.loader.exec_module(check_queries)
 
 QUERIES = E.queries()
 ORACLES = E.oracle_sql()
+EXTRACT_SPANS_GATES = [
+    "e1_full_text", "s12_redact_text", "auto_redact", "e16_form_fields",
+    "streaming_ingest_resume", "e14_lattice_tables", "e3_doc_classification",
+    "e15_metadata", "e9_image_dedup", "e10_has_text", "interleave_records",
+    "media_caption_pairs",
+]
 MAP_DOCS_GATES = [
     "e2_page_text", "e13_search_positions", "e14_stream_table",
     "e17_doc_info", "e17_page_info", "e17_full_info", "e18_title_inference",
@@ -69,8 +78,8 @@ PAGEOPS_GATES = [
     "e20_auto_split", "s3_split_count", "s2_split_pages",
     "s5_split_sections_exact", "f4_page_size_wire",
 ]
-GATES = ([n for n in QUERIES if n.startswith("extract_")] + MAP_DOCS_GATES
-         + MAP_ROWS_GATES + PREFIX_SUM_GATES + PAGEOPS_GATES)
+GATES = ([n for n in QUERIES if n.startswith("extract_")] + EXTRACT_SPANS_GATES
+         + MAP_DOCS_GATES + MAP_ROWS_GATES + PREFIX_SUM_GATES + PAGEOPS_GATES)
 
 
 @pytest.fixture(scope="module")

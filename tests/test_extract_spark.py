@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from stirling_pdf_spark.corpus.spark_synth import synth_docs_df
 from stirling_pdf_spark.corpus.synth import synth_corpus, synth_doc
+from stirling_pdf_spark.kernel import extract as kx
 from stirling_pdf_spark.kernel.extract import extract_doc
 from stirling_pdf_spark.operators.extract_pipeline import extract_spans, spread
 
@@ -80,7 +81,7 @@ def test_order_is_array_index(spark_result):
         assert [s[3] for s in spans] == list(range(len(spans)))
 
 
-def test_skew_torture_one_mega_among_tiny(spark):
+def test_skew_torture_one_mega_among_tiny(spark, monkeypatch):
     """The 100x-scale skew shape: ONE ~200-page document among 300
     one-pagers. The salted path must (a) split the mega doc into
     page-range buckets whose sizes stay balanced — no single task ever
@@ -123,9 +124,8 @@ def test_skew_torture_one_mega_among_tiny(spark):
               "text:string,media_ref:string,offset:int>>")
     docs = spark.createDataFrame(rows, schema)
 
-    ppb = 8
-    out = extract_spans(docs, salt_threshold=100,
-                        pages_per_bucket=ppb)
+    monkeypatch.setattr(kx, "PAGES_PER_BUCKET", 8)
+    out = extract_spans(docs, salt_threshold=100)
     got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
                           s["order"]) for s in r["spans"]]
            for r in out.collect()}
@@ -141,7 +141,7 @@ def test_skew_torture_one_mega_among_tiny(spark):
     counts: dict[int, int] = {}
     for k, t, _m, _o in mega_spans:
         if k in PAGE_KINDS:
-            b = segment_of(k, t, ppb)
+            b = segment_of(k, t)
             counts[b] = counts.get(b, 0) + 1
     page_buckets = list(counts.values())
     assert len(page_buckets) >= 16
@@ -149,7 +149,7 @@ def test_skew_torture_one_mega_among_tiny(spark):
 
 
 @pytest.mark.parametrize("page", ["1_50", "\u0661\u0667\u0660", str(1 << 63)])
-def test_salted_keying_agrees_with_segment_of(spark, page):
+def test_salted_keying_agrees_with_segment_of(spark, monkeypatch, page):
     """A page field that Python's int() reads but Spark's BIGINT cast
     does not (a digit separator, Arabic-Indic digits, a value past int64)
     keeps its doc unsalted, so its output still equals extract_doc's; a
@@ -168,15 +168,68 @@ def test_salted_keying_agrees_with_segment_of(spark, page):
         [(did, [dict(kind=k, text=t, media_ref=m, offset=o) for k, t, m, o in spans])
          for did, spans in (("clean", clean), ("odd", odd))], schema)
 
-    rows = _key(docs, 5, 10).groupBy("doc_id").agg(
+    monkeypatch.setattr(kx, "PAGES_PER_BUCKET", 10)
+    rows = _key(docs, 5).groupBy("doc_id").agg(
         F.count("*").alias("n"), F.max("salted").alias("salted")).collect()
     assert {r["doc_id"]: (r["n"] > 1, r["salted"]) for r in rows} == {
         "clean": (True, True), "odd": (False, False)}
-    out = extract_spans(docs, salt_threshold=5, pages_per_bucket=10)
+    out = extract_spans(docs, salt_threshold=5)
     got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
                          for s in r["spans"]] for r in out.collect()}
     assert got == {"clean": [tuple(s) for s in extract_doc(clean)],
                    "odd": [tuple(s) for s in extract_doc(odd)]}
+
+
+def test_salted_segment_over_the_chunk_budget(spark):
+    """Segment rows are extracted under the same 2000-chunk budget as a
+    whole doc. One salted doc whose first segment alone holds 3,000
+    text lines, with media, a ruled table, an annotation and html after
+    the cut, still equals extract_doc: the segment's cut drops only
+    chunks that are past the doc's 2000th too."""
+    from stirling_pdf_spark.kernel import wire
+    from stirling_pdf_spark.kernel.model import MAX_CHUNKS_PER_DOC, MediaDraw, TextRun
+    from stirling_pdf_spark.kernel.tables import Rule, encode_rule
+    from stirling_pdf_spark.operators.extract_pipeline import _key
+
+    def line(page, x, y, text):
+        return ("text", wire.encode_text_run(TextRun(page, x, y, 11.0, "F", text)), "")
+
+    spans = [("meta", "Title|Salted", "")]
+    # pages 1-97: segment 0 holds 3,000 one-run lines
+    spans += [line(1 + i // 31, 72.0, 72.0 + 20.0 * (i % 31), f"line {i}")
+              for i in range(3000)]
+    for page in range(100, 260):
+        if page % 7 == 0:
+            ref = f"media-{page}"
+            spans.append(("media", wire.encode_media(
+                MediaDraw(page, 10.0, 20.0, 30.0, 40.0, ref)), ref))
+        spans += [line(page, 72.0, 72.0, f"p{page} a"),
+                  line(page, 72.0, 100.0, f"p{page} b")]
+    xs, ys = (300.0, 400.0, 500.0, 600.0), (200.0, 220.0, 240.0)
+    spans += [("rule", encode_rule(Rule(150, xs[0], y, xs[-1], y)), "") for y in ys]
+    spans += [("rule", encode_rule(Rule(150, x, ys[0], x, ys[-1])), "") for x in xs]
+    spans.append(line(150, 305.0, 205.0, "cell"))
+    spans.append(("annotation", "210|10.0|20.0|30.0|40.0\tText|note on p210|a|s", ""))
+    spans.append(("html", "<html><body>" + "".join(
+        f"<p>paragraph {i} lorem ipsum dolor sit amet</p>" for i in range(50))
+        + "</body></html>", ""))
+    spans.append(("bookmark", "0|Chapter 1", ""))
+    spans = [s + (i,) for i, s in enumerate(spans)]
+    docs = spark.createDataFrame(
+        [("big", [dict(kind=k, text=t, media_ref=m, offset=o) for k, t, m, o in spans])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>")
+
+    keyed = {r["bucket"]: (r["salted"], len(r["spans"]))
+             for r in _key(docs, 100).collect()}
+    assert len(keyed) == 6 and all(salted for salted, _ in keyed.values())
+    assert keyed[0] == (True, 3000)
+    (row,) = extract_spans(docs, salt_threshold=100).collect()
+    got = [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in row["spans"]]
+    assert got == [tuple(s) for s in extract_doc(spans)]
+    assert len(got) == 2027
+    assert sum(s[0] == "text" for s in got) == MAX_CHUNKS_PER_DOC
+    assert [s[0] for s in got].count("table") == 1
 
 
 def _plan_text(df) -> str:
@@ -209,18 +262,18 @@ def test_regroup_is_one_arrow_batch_stream(spark):
 
 
 @pytest.mark.parametrize("rows_per_batch", [1, 2, 3])
-def test_salted_docs_across_tiny_arrow_batches(spark, rows_per_batch):
+def test_salted_docs_across_tiny_arrow_batches(spark, monkeypatch, rows_per_batch):
     """A salted doc's segment rows straddle the regroup's Arrow batches
     when a batch holds only a few rows; its output still equals the
     unsalted kernel's."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     before = spark.conf.get(key)
     spark.conf.set(key, str(rows_per_batch))
+    monkeypatch.setattr(kx, "PAGES_PER_BUCKET", 4)
     try:
         docs = synth_docs_df(spark, 24, seed=3, mega_pages=(20, 30),
                              num_partitions=2)
-        out = extract_spans(docs, salt_threshold=100,
-                            pages_per_bucket=4)
+        out = extract_spans(docs, salt_threshold=100)
         got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
                               s["order"]) for s in r["spans"]]
                for r in out.collect()}

@@ -32,7 +32,7 @@ def _unsalted(doc_id: str) -> list[dict]:
 
 def _salted(doc_id: str, n_buckets: int, per_bucket: int = 5) -> list[dict]:
     # buckets out of order, as the shuffle may deliver them; per-bucket
-    # order restarts at 0, as the unbudgeted sub-extraction emits it
+    # order restarts at 0, as the sub-extraction emits it
     return [dict(doc_id=doc_id, bucket=b, salted=True,
                  spans=_spans(f"{doc_id}/{b}", per_bucket))
             for b in reversed(range(n_buckets))]
