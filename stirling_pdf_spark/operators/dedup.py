@@ -19,10 +19,11 @@ Scale notes (100 TB):
     mega-groups skew the key — we only aggregate counts/min per key
     (map-side partial agg), never collect members, so a hot key costs
     one reducer a count, not memory.
-  - the Jaccard inverted index explodes on high-document-frequency
-    shingles ("of the" appears everywhere). ``max_df`` drops shingles
-    above a document-frequency cap before the self-join — the standard
-    prefix-filtering trick. Left None where an exact oracle must match.
+  - every pair generator (shingle, band-bucket, fingerprint, term and
+    title-block families here; co-citation, embedding LSH and SemDeDup
+    elsewhere) finds its candidates through ONE shared-key self-join,
+    ``key_pairs``, and each verifies its own pairs. ``key_pairs`` owns
+    the hot-key cap too (see its docstring).
   - MinHash/LSH is the intended scale path: candidate generation is
     linear in (docs x bands), the verify join touches only candidates.
 
@@ -76,12 +77,82 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     )
 
 
-def _shingle_index(index: DataFrame) -> DataFrame:
-    """A caller-built shingle index, checked for the (id, sh) shape."""
-    if index.columns != ["id", "sh"]:
-        raise ValueError(
-            f"index must have columns ['id', 'sh'], got {index.columns}")
-    return index
+def _shingle_index(df: DataFrame, id_col: str, text_col: str, n: int,
+                   index: DataFrame | None = None) -> DataFrame:
+    """The exploded distinct-shingle index (id, sh) of ``df``: one row
+    per distinct word n-gram of each doc. A caller-built ``index`` is
+    returned as it is once its columns are checked to be exactly
+    ``["id", "sh"]`` (ValueError otherwise); it must have been built
+    with this call's ``n`` and text column, which the frame cannot
+    show."""
+    if index is not None:
+        if index.columns != ["id", "sh"]:
+            raise ValueError(
+                f"index must have columns ['id', 'sh'], got {index.columns}")
+        return index
+    # explode_outer + scalar post-filter instead of explode: a plain
+    # explode makes Catalyst infer `size(shingles) > 0` and push it to
+    # the SCAN with the whole shingle expression inlined — the regex
+    # split then re-executes per lambda element on the input split,
+    # before the spread (measured 11s vs 0.5s on sf0.1)
+    return (
+        _shingled(df, id_col, text_col, n)
+        .select("id", F.explode_outer("shingles").alias("sh"))
+        .filter(F.col("sh").isNotNull())
+    )
+
+
+def _sized(pairs: DataFrame, index: DataFrame) -> DataFrame:
+    """``pairs`` with each side's distinct-shingle count from the
+    (id, sh) ``index`` as ``size_a``/``size_b`` (long). Docs with no
+    shingle have no size row, and they can never reach a pair either."""
+    sizes = index.groupBy("id").agg(F.count("*").cast("long").alias("sz"))
+    return (
+        pairs.join(sizes.withColumnRenamed("id", "id_a")
+                   .withColumnRenamed("sz", "size_a"), "id_a")
+        .join(sizes.withColumnRenamed("id", "id_b")
+              .withColumnRenamed("sz", "size_b"), "id_b")
+    )
+
+
+def key_pairs(rows: DataFrame, key: str | list[str],
+              max_df: int | None = None) -> DataFrame:
+    """The one shared-key self-join of the near-duplicate family: every
+    pair of rows with equal ``key`` and ``id_a < id_b``.
+
+    ``rows`` holds ``(id, *key, *payload)``: the first column is the
+    id, ``key`` names the key column(s) and every other column is
+    payload. Output: ``id_a``, ``id_b``, the key columns, then each
+    payload column as ``<col>_a``, ``<col>_b`` — one row per shared
+    key, so a pair sharing k keys appears k times; callers count,
+    collapse or verify the pairs themselves.
+
+    Hot-key cap: a key held by w rows costs w² pair rows, so at corpus
+    scale one boilerplate shingle or fingerprint, a hub source linking
+    half the web or a stopword-led title block must never reach the
+    join. ``max_df`` drops every key held by more than ``max_df`` rows
+    before the join (one partial-agg'd width count joined back on the
+    key) — deterministic, and the dropped mass is exactly the head of
+    the key distribution. Left None (keep every key) where an exact
+    oracle must match."""
+    keys = [key] if isinstance(key, str) else list(key)
+    cols = rows.columns
+    payload = [c for c in cols[1:] if c not in keys]
+    if max_df is not None:
+        width = rows.groupBy(*keys).agg(F.count("*").alias("_width"))
+        rows = (rows.join(width.filter(F.col("_width") <= max_df), keys)
+                .select(*cols))
+
+    def side(s: str) -> DataFrame:
+        return rows.select(F.col(cols[0]).alias(f"id_{s}"), *keys,
+                           *[F.col(c).alias(f"{c}_{s}") for c in payload])
+
+    return (
+        side("a").join(side("b"), keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *keys,
+                *[f"{c}_{s}" for c in payload for s in "ab"])
+    )
 
 
 # ---------------------------------------------------------------- exact
@@ -117,49 +188,17 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     ``index``: optional pre-built (id, sh) exploded distinct-shingle
     index (minhash_quality_report shares ONE staged index between this
     exact path and the LSH path instead of tokenizing + shingling the
-    corpus twice). Sizes then come from a per-id count over the index
-    — identical values, since shingles are distinct per doc, and docs
-    with zero shingles can never reach the inner pair join either way.
-    An index whose columns are not exactly ``["id", "sh"]`` raises
-    ValueError; it must have been built with this call's ``n`` and text
-    column, which the frame cannot show.
+    corpus twice); see ``_shingle_index`` for its check. ``max_df``
+    caps hot shingles (``key_pairs``); sizes count every shingle.
     """
-    if index is not None:
-        inv = _shingle_index(index)
-        sizes = inv.groupBy("id").agg(F.count("*").cast("long")
-                                      .alias("sz"))
-    else:
-        sh = _shingled(df, id_col, text_col, n)
-        sizes = sh.select("id",
-                          F.size("shingles").cast("long").alias("sz"))
-        # explode_outer + scalar post-filter instead of explode: a
-        # plain explode makes Catalyst infer `size(shingles) > 0` and
-        # push it to the SCAN with the whole shingle expression
-        # inlined — the regex split then re-executes per lambda
-        # element on the input split, before the spread (measured 11s vs
-        # 0.5s on sf0.1)
-        inv = (
-            sh.select("id", F.explode_outer("shingles").alias("sh"))
-            .filter(F.col("sh").isNotNull())
-        )
-    if max_df is not None:
-        dfreq = inv.groupBy("sh").agg(F.count("*").alias("df_"))
-        inv = (
-            inv.join(dfreq.filter(F.col("df_") <= max_df), "sh", "inner")
-            .select("id", "sh")
-        )
-    a = inv.alias("a")
-    b = inv.alias("b")
+    inv = _shingle_index(df, id_col, text_col, n, index)
     pairs = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        key_pairs(inv, "sh", max_df)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("common"))
     )
     return (
-        pairs.join(sizes.withColumnRenamed("id", "id_a")
-                   .withColumnRenamed("sz", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("sz", "size_b"), "id_b")
+        _sized(pairs, inv)
         .filter(
             F.col("common") * 100
             >= F.lit(threshold_pct) * (F.col("size_a") + F.col("size_b") - F.col("common"))
@@ -209,10 +248,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
 
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes
-    if index is not None:
-        exploded = _shingle_index(index)
-    else:
-        sh = _shingled(df, id_col, text_col, n)
+    exploded = _shingle_index(df, id_col, text_col, n, index)
+    if index is None:
         # the exploded inverted index feeds FOUR consumers (signatures,
         # sizes, and both sides of the verify join); without staging it
         # the regex tokenization + shingle transform re-runs per
@@ -220,10 +257,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
         # spill-safe. Registered with runtime.staging so long-lived
         # sessions can release it between queries instead of leaking
         # to the ContextCleaner.
-        exploded = stage(
-            sh.select("id", F.explode_outer("shingles").alias("sh"))
-            .filter(F.col("sh").isNotNull())
-        )
+        exploded = stage(exploded)
     sig = exploded.groupBy("id").agg(*minhash_signature_cols(num_hashes))
 
     band_keys = [
@@ -243,13 +277,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
         ).alias("bk"),
     ).select("id", F.col("bk.band_id").alias("band_id"), F.col("bk.key").alias("key"))
 
-    a = buckets.alias("a")
-    b = buckets.alias("b")
     cand = (
-        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        key_pairs(buckets, ["band_id", "key"])
+        .select("id_a", "id_b")
         .distinct()
     )
     # size-ratio prune BEFORE the expensive shingle-join verify:
@@ -258,16 +288,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # dropping them here cuts the verify fan-out (candidates x shingles)
     # without changing the result. Sizes come off the staged index
     # (shingles are distinct per doc), one tiny row per doc.
-    sizes = exploded.groupBy("id").agg(F.count("*").cast("long").alias("sz"))
-    cand_sized = (
-        cand.join(sizes.withColumnRenamed("id", "id_a")
-                  .withColumnRenamed("sz", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("sz", "size_b"), "id_b")
-        .filter(
-            F.least("size_a", "size_b") * 100
-            >= F.lit(threshold_pct) * F.greatest("size_a", "size_b")
-        )
+    cand_sized = _sized(cand, exploded).filter(
+        F.least("size_a", "size_b") * 100
+        >= F.lit(threshold_pct) * F.greatest("size_a", "size_b")
     )
     # verify via the exploded inverted index rather than carrying whole
     # shingle arrays through the join: candidate x shingle fan-out, then
@@ -702,8 +725,7 @@ def dhash_near_dup_pairs(hashes: DataFrame, max_distance: int = 7,
         for i in range(n_bands)
     ])
     banded = src.select("id", "dhash", F.explode(bands).alias("b")) \
-        .select("id", "dhash", "b.band", "b.v")
-    a, b = banded.alias("a"), banded.alias("b")
+        .select("id", "b.band", "b.v", "dhash")
     # A pair colliding in k bands used to surface k times and get
     # collapsed by a distinct() — a shuffle of every (pair x band) row.
     # Both hashes are already on the joined row, so keep only the row
@@ -711,7 +733,7 @@ def dhash_near_dup_pairs(hashes: DataFrame, max_distance: int = 7,
     # that band and a non-zero band below it collides in none): every
     # qualifying pair survives exactly once and the distinct shuffle
     # disappears. Same pair set, one less Exchange.
-    xr = F.col("a.dhash").bitwiseXOR(F.col("b.dhash"))
+    xr = F.col("dhash_a").bitwiseXOR(F.col("dhash_b"))
     first_band = F.array_position(
         F.array(*[
             (F.shiftrightunsigned(xr, band_bits * i)
@@ -720,13 +742,9 @@ def dhash_near_dup_pairs(hashes: DataFrame, max_distance: int = 7,
         ]), True) - 1
     dist = F.bit_count(xr)
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.v") == F.col("b.v"))
-               & (F.col("a.id") < F.col("b.id")))
-        .filter((F.col("a.band") == first_band)
-                & (dist <= max_distance))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                dist.cast("long").alias("distance"))
+        key_pairs(banded, ["band", "v"])
+        .filter((F.col("band") == first_band) & (dist <= max_distance))
+        .select("id_a", "id_b", dist.cast("long").alias("distance"))
     )
 
 
@@ -1010,21 +1028,14 @@ def winnow_match_pairs(df: DataFrame, k: int = 3, w: int = 4,
     the MOSS similarity report. The inverted-index self-join runs on
     the winnowed index (~2/(w+1) the size of the full shingle index,
     the whole point of winnowing at corpus scale); max_df optionally
-    drops fingerprints appearing in more than max_df docs, the same
-    hot-key cap as ngram_jaccard_pairs — at 100 TB a boilerplate
-    fingerprint shared by millions of docs must never reach the join.
-    Output: (id_a, id_b, n_shared), id_a < id_b."""
+    drops fingerprints appearing in more than max_df docs
+    (``key_pairs``' hot-key cap). Output: (id_a, id_b, n_shared),
+    id_a < id_b."""
     fps = winnow_fingerprints(df, k=k, w=w, id_col=id_col,
                               text_col=text_col)
-    if max_df is not None:
-        freq = fps.groupBy("fp").agg(F.count("*").alias("df_"))
-        fps = (fps.join(freq.filter(F.col("df_") <= max_df), "fp")
-               .select("id", "fp"))
-    a, b = fps.alias("a"), fps.alias("b")
     return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp"))
-               & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        key_pairs(fps, "fp", max_df)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -1087,11 +1098,7 @@ def minhash_quality_report(docs: DataFrame, n: int, num_hashes: int,
     """
     from ..runtime.staging import stage
 
-    sh = _shingled(docs, "doc_id", "text", n)
-    index = stage(
-        sh.select("id", F.explode_outer("shingles").alias("sh"))
-        .filter(F.col("sh").isNotNull())
-    )
+    index = stage(_shingle_index(docs, "doc_id", "text", n))
     exact = ngram_jaccard_pairs(docs, n=n, threshold_pct=threshold_pct,
                                 index=index) \
         .select("id_a", "id_b", F.lit(1).alias("e"))
@@ -1275,38 +1282,29 @@ def edit_distance_pairs(df: DataFrame, id_col: str = "doc_id",
     Scale shape: the only corpus-keyed shuffle is the block-key
     repartition; pair work is quadratic strictly WITHIN a block. The
     leading-token key can skew on stopword-led titles ('the ...'), so
-    ``max_block`` (same discipline as ngram_jaccard_pairs' max_df)
-    drops blocks larger than the cap outright — deterministic, and
-    the dropped mass is exactly the un-blockable head. Output:
-    (id_a, id_b, dist) with id_a < id_b."""
+    ``max_block`` drops blocks larger than the cap outright
+    (``key_pairs``' hot-key cap). Output: (id_a, id_b, dist) with
+    id_a < id_b."""
     t = F.col(title_col)
     keyed = df.select(
         F.col(id_col).alias("id"),
-        t.alias("t"),
         F.concat(
             F.lower(F.substring_index(t, " ", 1)),
             F.lit("#"),
             (F.length(t).cast("long") / band).cast("long")
             .cast("string"),
         ).alias("bk"),
+        t.alias("t"),
         F.length(t).cast("long").alias("ln"),
     )
-    if max_block is not None:
-        sizes = keyed.groupBy("bk").agg(F.count("*").alias("bn"))
-        keyed = keyed.join(
-            F.broadcast(sizes.filter(F.col("bn") > max_block)
-                        .select("bk")), "bk", "left_anti")
-    a, b = keyed.alias("a"), keyed.alias("b")
     return (
-        a.join(b, (F.col("a.bk") == F.col("b.bk"))
-               & (F.col("a.id") < F.col("b.id")))
+        key_pairs(keyed, "bk", max_block)
         # |len(a)-len(b)| is a Levenshtein lower bound: prune before
         # the O(len^2) distance kernel runs
-        .filter(F.abs(F.col("a.ln") - F.col("b.ln")) <= max_dist)
+        .filter(F.abs(F.col("ln_a") - F.col("ln_b")) <= max_dist)
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.levenshtein(F.col("a.t"), F.col("b.t")).cast("long")
+            "id_a", "id_b",
+            F.levenshtein(F.col("t_a"), F.col("t_b")).cast("long")
             .alias("dist"),
         )
         .filter(F.col("dist") <= max_dist)
@@ -1331,12 +1329,13 @@ def tfidf_cosine_pairs(df: DataFrame, threshold_pct: int = 75,
     norm_a, norm_b) — the oracle restates the same inequality in
     HUGEINT.
 
-    Scale shape: inverted-index self-join on the term key (linear in
-    postings, never an all-pairs crossJoin); ``max_df`` drops terms
-    with document frequency above the cap BEFORE the join — on
-    Zipfian web corpora that caps the hot-term candidate explosion
-    exactly like dedup_jaccard_maxdf's prefix filter. Per-doc norms
-    are one extra partial-agg'd groupBy, broadcast-joined back."""
+    Scale shape: inverted-index self-join on the term key
+    (``key_pairs``; linear in postings, never an all-pairs crossJoin).
+    ``max_df`` drops terms with document frequency above the cap from
+    the weights themselves, not only from the join: the capped
+    document frequency feeds idf and the norms, so it is applied here
+    and not through ``key_pairs``. Per-doc norms are one extra
+    partial-agg'd groupBy, broadcast-joined back."""
     toks = (
         spread(df, id_col)
         .select(F.col(id_col).cast("long").alias("id"),
@@ -1360,12 +1359,10 @@ def tfidf_cosine_pairs(df: DataFrame, threshold_pct: int = 75,
     w = stage(w)  # consumed by norms and both join sides
     norms = w.groupBy("id").agg(
         F.sum(F.col("w") * F.col("w")).cast("long").alias("norm"))
-    a, b = w.alias("a"), w.alias("b")
     dots = (
-        a.join(b, (F.col("a.term") == F.col("b.term"))
-               & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.sum(F.col("a.w") * F.col("b.w")).cast("long").alias("dot"))
+        key_pairs(w, "term")
+        .groupBy("id_a", "id_b")
+        .agg(F.sum(F.col("w_a") * F.col("w_b")).cast("long").alias("dot"))
     )
     na = norms.select(F.col("id").alias("id_a"),
                       F.col("norm").alias("norm_a"))
@@ -1399,32 +1396,15 @@ def containment_pairs(df: DataFrame, n: int = 2,
 
     Scale shape: identical to ngram_jaccard_pairs — one shingle
     inverted-index self-join (never all-pairs), optional ``max_df``
-    hot-shingle prefix cap, per-doc sizes partial-agg'd and joined
-    back."""
-    sh = _shingled(df, id_col, text_col, n)
-    sizes = sh.select("id", F.size("shingles").cast("long").alias("sz"))
-    inv = (
-        sh.select("id", F.explode_outer("shingles").alias("sh"))
-        .filter(F.col("sh").isNotNull())
-    )
-    if max_df is not None:
-        dfreq = inv.groupBy("sh").agg(F.count("*").alias("df_"))
-        inv = (
-            inv.join(dfreq.filter(F.col("df_") <= max_df), "sh", "inner")
-            .select("id", "sh")
-        )
-    a, b = inv.alias("a"), inv.alias("b")
+    hot-shingle cap, per-doc sizes partial-agg'd and joined back."""
+    inv = _shingle_index(df, id_col, text_col, n)
     pairs = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh"))
-               & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        key_pairs(inv, "sh", max_df)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("common"))
     )
     return (
-        pairs.join(sizes.withColumnRenamed("id", "id_a")
-                   .withColumnRenamed("sz", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("sz", "size_b"), "id_b")
+        _sized(pairs, inv)
         .filter(F.col("common") * 100
                 >= F.lit(threshold_pct)
                 * F.least(F.col("size_a"), F.col("size_b")))

@@ -233,26 +233,21 @@ def cocitation(edges: DataFrame, min_common: int = 2,
     ``min_common`` distinct citing sources, with the shared count.
 
     Scale shape: distinct edges, then ONE self-join keyed on the
-    citing source + a pair groupBy — candidate work is
-    sum(out_degree^2) over sources, so ``max_out`` drops hub sources
-    above an out-degree cap BEFORE the join (the hot-key prune every
-    inverted-index family here uses; a directory page linking half
-    the web carries no similarity signal anyway). All equi-joins, no
-    cartesian. Output: (id_a, id_b, common)."""
-    e = (edges.select(F.col("src").cast("string").alias("src"),
-                      F.col("dst").cast("string").alias("dst"))
+    citing source (``dedup.key_pairs``) + a pair groupBy — candidate
+    work is sum(out_degree^2) over sources, so ``max_out`` drops hub
+    sources above an out-degree cap BEFORE the join (``key_pairs``'
+    hot-key cap; a directory page linking half the web carries no
+    similarity signal anyway). All equi-joins, no cartesian. Output:
+    (id_a, id_b, common)."""
+    from .dedup import key_pairs
+
+    e = (edges.select(F.col("dst").cast("string").alias("dst"),
+                      F.col("src").cast("string").alias("src"))
          .filter(F.col("src") != F.col("dst"))
          .distinct())
-    if max_out is not None:
-        outdeg = e.groupBy("src").agg(F.count("*").alias("od"))
-        e = (e.join(outdeg.filter(F.col("od") <= max_out), "src")
-             .select("src", "dst"))
-    a, b = e.alias("a"), e.alias("b")
     return (
-        a.join(b, (F.col("a.src") == F.col("b.src"))
-               & (F.col("a.dst") < F.col("b.dst")))
-        .groupBy(F.col("a.dst").alias("id_a"),
-                 F.col("b.dst").alias("id_b"))
+        key_pairs(e, "src", max_out)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("common"))
         .filter(F.col("common") >= min_common)
     )

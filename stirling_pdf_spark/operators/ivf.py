@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import cosine_expr
+from .dedup import cosine_expr, key_pairs
 from .extract_pipeline import spread
 
 
@@ -161,15 +161,9 @@ def semdedup_prune(df: DataFrame, centroids: list[list[float]],
         (F.array_position("dists", F.array_min("dists")) - 1)
         .cast("int").alias("cluster"),
     )
-    a = assigned.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
-                        F.col("cluster").alias("cl"))
-    b = assigned.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                        F.col("cluster").alias("cl"))
     pruned = (
-        a.join(b, "cl")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine_expr("va", "vb"))
-        .filter(F.col("cos") >= F.lit(threshold))
+        key_pairs(assigned.select("id", "cluster", "v"), "cluster")
+        .filter(cosine_expr("v_a", "v_b") >= F.lit(threshold))
         .select(F.col("id_b").alias("id"))
         .distinct()
         .withColumn("dup", F.lit(1))

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import cosine_expr
+from .dedup import cosine_expr, key_pairs
 from .extract_pipeline import spread
 
 
@@ -93,14 +93,9 @@ def embedding_near_dup_lsh(df: DataFrame, planes: list[list[float]],
     v = spread(df, id_col).select(F.col(id_col).alias("id"),
                                   F.col(vec_col).alias("v"))
     vb = v.join(lsh_buckets(df, planes, id_col, vec_col), "id")
-    a = vb.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
-                  F.col("bucket").alias("ba"))
-    b = vb.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),
-                  F.col("bucket").alias("bb"))
     return (
-        a.join(b, (F.col("ba") == F.col("bb")) & (F.col("id_a") < F.col("id_b")))
-        .withColumn("cos", cosine_expr("va", "vb"))
-        .filter(F.col("cos") >= F.lit(threshold))
+        key_pairs(vb.select("id", "bucket", "v"), "bucket")
+        .filter(cosine_expr("v_a", "v_b") >= F.lit(threshold))
         .select("id_a", "id_b")
     )
 

@@ -18,9 +18,18 @@ run re-extracts those docs under a new run_id — exactly-once *visible*
 output with at-least-once execution, the same contract Iceberg
 snapshots give.
 
+A run_id names one commit. Re-running a crashed (never committed)
+run_id replaces its orphan span files; re-using a run_id that lineage
+already commits raises ValueError before anything is written, since
+its span directory would be overwritten while lineage still marks its
+docs as done. A run with nothing pending returns before that check, so
+a replayed streaming micro-batch stays a no-op.
+
 Per-partition metrics are not stored: ``read_metrics`` derives them
 from the committed span rows, so they cannot disagree with the output
-and a crashed run never shows up in them.
+and a crashed run never shows up in them. A doc committed by more than
+one run is visible once, under its latest committed run, in both
+readers (``_visible``).
 
 The reference restarts failed jobs from scratch (TaskManager /
 JobExecutorService have no persistence of partial results); this module
@@ -41,15 +50,21 @@ from ..operators.extract_pipeline import extract_spans
 _LINEAGE_KEYS = "doc_id string, partition_id int"
 
 
-def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
-    """The table at ``path``, or None when nothing exists there yet (first
-    run). Asks the path's Hadoop ``FileSystem`` first, so a first run pays
-    no failed read. A path that exists but does not read — e.g. a corrupt
-    lineage file — raises: reading it as "first run" would silently
-    re-extract every doc."""
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop ``FileSystem`` (no
+    Spark job)."""
     sc = spark.sparkContext
     hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    if not hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath):
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath)
+
+
+def _try_read(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table at ``path``, or None when nothing exists there yet (first
+    run). Asks ``_exists`` first, so a first run pays no failed read. A
+    path that exists but does not read — e.g. a corrupt lineage file —
+    raises: reading it as "first run" would silently re-extract every
+    doc."""
+    if not _exists(spark, path):
         return None
     return spark.read.parquet(path)
 
@@ -75,7 +90,10 @@ def run_extract_with_checkpoint(
 ) -> dict:
     """Execute one resumable extraction run. Returns a summary dict
     {run_id, docs_done, spans_done, wall_ms}; the counts are observed
-    on the span write itself."""
+    on the span write itself. Raises ValueError, before writing, when
+    docs are pending and ``run_id`` is already committed under
+    ``out_dir``; lineage is read for that only when the run's span
+    directory exists, so a fresh run_id adds no Spark job."""
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
 
@@ -87,6 +105,14 @@ def run_extract_with_checkpoint(
     if pending is not docs and pending.isEmpty():
         return {"run_id": run_id, "docs_done": 0, "spans_done": 0,
                 "wall_ms": int((time.time() - t0) * 1000)}
+    span_path = f"{out_dir}/spans/run_id={run_id}"
+    if _exists(spark, span_path):
+        lineage = _try_read(spark, f"{out_dir}/lineage")
+        if lineage is not None and not lineage.filter(
+                F.col("run_id") == run_id).isEmpty():
+            raise ValueError(
+                f"run_id {run_id!r} is already committed under {out_dir}; "
+                "re-using it would overwrite its committed spans")
     counts = Observation()
     out = (
         extract_spans(pending, **extract_kwargs)
@@ -94,7 +120,6 @@ def run_extract_with_checkpoint(
         .observe(counts, F.count(F.lit(1)).alias("docs"),
                  F.sum(F.size("spans")).alias("spans"))
     )
-    span_path = f"{out_dir}/spans/run_id={run_id}"
     # overwrite: a crashed attempt under the same run_id left orphan
     # files that lineage never committed — safe to replace
     out.write.mode("overwrite").parquet(span_path)
@@ -121,29 +146,29 @@ def _read_spans(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def read_committed_spans(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Visible output = span rows whose (doc_id, run_id) is committed in
-    lineage. Orphans from crashed runs are excluded; if a doc was
-    committed twice (re-run after a lineage-write race), the latest
-    committed_at wins."""
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
+def _visible(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The visible span rows: each doc's rows under its latest committed
+    run. Orphans from crashed runs are excluded; if a doc was committed
+    twice (re-run after a lineage-write race), the latest committed_at
+    wins."""
     latest = (
-        lineage.groupBy("doc_id")
+        spark.read.parquet(f"{out_dir}/lineage").groupBy("doc_id")
         .agg(F.max_by("run_id", "committed_at").alias("run_id"))
     )
-    return _read_spans(spark, out_dir).join(
-        latest, ["doc_id", "run_id"], "inner").select("doc_id", "spans")
+    return _read_spans(spark, out_dir).join(latest, ["doc_id", "run_id"])
+
+
+def read_committed_spans(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Visible output: (doc_id, spans), one row per committed doc."""
+    return _visible(spark, out_dir).select("doc_id", "spans")
 
 
 def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-(run_id, partition_id) docs, spans and UTF-8 text bytes of the
-    committed span rows: a view, so an uncommitted (crashed) run has no
-    row."""
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
+    visible span rows: a view, so an uncommitted (crashed) run has no
+    row and a doc committed twice counts once, under its latest run."""
     return (
-        _read_spans(spark, out_dir)
-        .join(lineage.select("doc_id", "run_id"), ["doc_id", "run_id"],
-              "left_semi")
+        _visible(spark, out_dir)
         .groupBy("run_id", "partition_id")
         .agg(
             F.count("*").alias("doc_count"),

@@ -1,10 +1,10 @@
 """Table readers.
 
-Parquet is the sandbox storage; production storage is Iceberg (the
-north rule's snapshot/checkpoint source). The Iceberg path is gated
-behind a runtime check because the sandbox image has no Iceberg jars —
-the reader API is identical (``spark.read.format("iceberg")``), so the
-pipeline code is storage-agnostic: it takes DataFrames.
+Parquet is the storage these readers know. The pipeline code is
+storage-agnostic: it takes DataFrames, so a caller with an Iceberg
+table (the north rule's snapshot/checkpoint source in production)
+reads it with ``spark.read.format("iceberg")`` and passes the
+DataFrame in.
 """
 
 from __future__ import annotations
@@ -39,14 +39,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         read_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def read_docs(spark: SparkSession, path: str, storage: str = "parquet") -> DataFrame:
-    """Read the interleaved-docs table (input_hint shape)."""
-    if storage == "iceberg":
-        try:
-            return spark.read.format("iceberg").load(path)
-        except Exception as exc:  # jars absent in the sandbox image
-            raise NotImplementedError(
-                "Iceberg jars not on the classpath in this environment; "
-                "use storage='parquet'"
-            ) from exc
+def read_docs(spark: SparkSession, path: str) -> DataFrame:
+    """Read the interleaved-docs parquet table (input_hint shape)."""
     return spark.read.schema(DOCS_SCHEMA).parquet(path)

@@ -68,6 +68,25 @@ def test_orphan_spans_invisible(spark, docs, tmp_path):
     assert committed.select("doc_id").distinct().count() == 40
 
 
+def test_reused_committed_run_id_raises(spark, docs, tmp_path):
+    """A second run under a committed run_id with docs pending raises
+    before it writes: an overwrite of that run's span directory would
+    drop committed docs that lineage still marks as done. A replay with
+    nothing pending stays a no-op, and a fresh run_id commits the rest."""
+    out = str(tmp_path / "ckpt")
+    first_half = docs.filter(F.xxhash64("doc_id") % 2 == 0)
+    r1 = run_extract_with_checkpoint(spark, first_half, out, run_id="r1")
+    with pytest.raises(ValueError, match="r1"):
+        run_extract_with_checkpoint(spark, docs, out, run_id="r1")
+    assert read_committed_spans(spark, out).count() == r1["docs_done"]
+    replay = run_extract_with_checkpoint(spark, first_half, out, run_id="r1")
+    assert replay["docs_done"] == 0
+
+    r2 = run_extract_with_checkpoint(spark, docs, out, run_id="r2")
+    assert r1["docs_done"] + r2["docs_done"] == 40
+    assert read_committed_spans(spark, out).count() == 40
+
+
 def test_kill_and_resume_recovers_crashed_docs(spark, docs, tmp_path):
     """Kill-and-resume: a run crashes AFTER writing span files but
     BEFORE the lineage commit. Those docs are invisible, and the next
@@ -119,6 +138,31 @@ def test_metrics_account_for_all_docs(spark, docs, tmp_path):
         ("run_id", "string"), ("partition_id", "int"),
         ("doc_count", "bigint"), ("span_count", "bigint"),
         ("text_bytes", "bigint")]
+
+
+def test_metrics_count_a_twice_committed_doc_once(spark, docs, tmp_path):
+    """A doc committed by two runs is visible once, under its latest
+    run, in both readers: the metrics count it there and only there."""
+    out = str(tmp_path / "ckpt")
+    run_extract_with_checkpoint(spark, docs, out, run_id="r1")
+    lineage = spark.read.parquet(f"{out}/lineage")
+    twice = lineage.orderBy("doc_id").first()["doc_id"]
+    # a second run's span row and lineage row for that doc, written by
+    # hand; its committed_at is later than r1's
+    (extract_spans(docs.filter(F.col("doc_id") == twice))
+     .withColumn("partition_id", F.spark_partition_id())
+     .write.parquet(f"{out}/spans/run_id=r2"))
+    (lineage.filter(F.col("doc_id") == twice)
+     .withColumn("run_id", F.lit("r2"))
+     .withColumn("committed_at", F.current_timestamp())
+     .localCheckpoint().write.mode("append").parquet(f"{out}/lineage"))
+
+    committed = read_committed_spans(spark, out)
+    assert committed.count() == 40
+    per_run = {r["run_id"]: r["d"] for r in read_metrics(spark, out)
+               .groupBy("run_id").agg(F.sum("doc_count").alias("d"))
+               .collect()}
+    assert per_run == {"r1": 39, "r2": 1}
 
 
 def test_lineage_file_schema(spark, docs, tmp_path):

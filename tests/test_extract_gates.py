@@ -10,11 +10,15 @@ boilerplate strip and sentence chunker) or the heavy-hitters sketch's
 ``mapInArrow``, and every gate over the global prefix sum
 (``packing.prefix_sums``) or the merge-order window, and every gate over
 a page, form or attachment operator (``pageops``, ``forms``,
-``attachments``: the raw-span wire codec), against its DuckDB oracle at
+``attachments``: the raw-span wire codec), and every gate over the
+shared-key pair join (``dedup.key_pairs``: the shingle, MinHash,
+winnowing, TF-IDF, title, co-citation, embedding-LSH and SemDeDup
+pairs and their component consumers), against its DuckDB oracle at
 the smoke scale factor, through the same comparison as
 ``scripts/check_queries.py`` — so a plain pytest run catches an oracle
 break in the extraction plan, a per-document Arrow stage, a global
-ordering or a wire-header rewrite without the full sweep."""
+ordering, a wire-header rewrite or a pair join without the full
+sweep."""
 
 from __future__ import annotations
 
@@ -78,8 +82,17 @@ PAGEOPS_GATES = [
     "e20_auto_split", "s3_split_count", "s2_split_pages",
     "s5_split_sections_exact", "f4_page_size_wire",
 ]
+PAIR_JOIN_GATES = [
+    "containment_pairs", "dedup_cluster_sizes", "dedup_components",
+    "dedup_incremental_minhash", "dedup_jaccard_maxdf", "dedup_keep_best",
+    "dedup_keep_corpus", "dedup_minhash_lsh", "dedup_minhash_report",
+    "dedup_ngram_jaccard", "dedup_title_levenshtein", "tfidf_cosine_pairs",
+    "web_cocitation", "winnow_match_pairs", "emb_near_dup_lsh",
+    "semdedup_prune",
+]
 GATES = ([n for n in QUERIES if n.startswith("extract_")] + EXTRACT_SPANS_GATES
-         + MAP_DOCS_GATES + MAP_ROWS_GATES + PREFIX_SUM_GATES + PAGEOPS_GATES)
+         + MAP_DOCS_GATES + MAP_ROWS_GATES + PREFIX_SUM_GATES + PAGEOPS_GATES
+         + PAIR_JOIN_GATES)
 
 
 @pytest.fixture(scope="module")

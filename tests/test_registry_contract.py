@@ -16,7 +16,7 @@ import pytest
 
 import __spark_entry__ as E
 import bench
-from test_extract_gates import MAP_DOCS_GATES, MAP_ROWS_GATES, PREFIX_SUM_GATES
+from test_extract_gates import GATES
 
 
 def test_every_gate_has_an_oracle_except_rows_only():
@@ -39,9 +39,7 @@ def test_gate_names_outside_the_registry_are_registered():
         "bench.BENCH_QUERIES": set(bench.BENCH_QUERIES),
         "bench.R3_SHARED": set(bench.R3_SHARED) - {"extract_synth"},
         "bench.SHARED_CORPUS": set(bench.SHARED_CORPUS),
-        "test_extract_gates.MAP_DOCS_GATES": set(MAP_DOCS_GATES),
-        "test_extract_gates.MAP_ROWS_GATES": set(MAP_ROWS_GATES),
-        "test_extract_gates.PREFIX_SUM_GATES": set(PREFIX_SUM_GATES),
+        "test_extract_gates.GATES": set(GATES),
     }
     unknown = {k: sorted(v - registry) for k, v in named.items()
                if v - registry}
